@@ -15,10 +15,13 @@ metrics with ``--trace 1``.  Everything the run writes goes under
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -28,8 +31,11 @@ T0 = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUP_REPS = 3
-TRACED_OPS = 2
+TRACED_OPS = 1
 DRIVER_MEMORY = "3g"
+STOP_GRACE_S = 20.0
+PR_SET_CHILD_SUBREAPER = 36
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def cores() -> int:
@@ -105,6 +111,14 @@ def jvm_peak_rss_mb(spark) -> float:
     raise RuntimeError("no VmHWM in /proc status")
 
 
+def timed(fn, *args) -> tuple[object, float, float]:
+    """fn(*args), its wall seconds and the CPU seconds this process tree
+    used meanwhile."""
+    t0, c0 = time.perf_counter(), tree_cpu_s()
+    out = fn(*args)
+    return out, time.perf_counter() - t0, tree_cpu_s() - c0
+
+
 class Loop:
     """Closed loop, one client: the next operation starts when the previous
     one has returned.  An exception or a failed output check counts the
@@ -112,57 +126,53 @@ class Loop:
 
     def __init__(self):
         self.times: list[float] = []
-        self.items = 0
+        self.cpu: list[float] = []
         self.attempted = 0
         self.failed = 0
 
     def step(self, wl, spark) -> None:
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), tree_cpu_s()
         try:
-            n, ok = wl.op(spark)
+            ok = wl.op(spark)
         except Exception as e:  # noqa: BLE001 - the loop must keep running
             traceback.print_exc()
             wl.failures.append(repr(e))
-            n, ok = 0, False
+            ok = False
         self.times.append(time.perf_counter() - t0)
+        self.cpu.append(tree_cpu_s() - c0)
         self.attempted += 1
-        if ok:
-            self.items += n
-        else:
-            self.failed += 1
+        self.failed += not ok
 
 
-def timed(fn, *args) -> tuple[object, float]:
-    t0 = time.perf_counter()
-    out = fn(*args)
-    return out, time.perf_counter() - t0
-
-
-def set_up(wl, work: str, event_log: str | None = None, warm: bool = True):
+def set_up(wl, work: str):
     """Session start, then the inputs built SETUP_REPS times (median
-    taken), then the workload's warm-up operations.  Returns the session
-    and the three timings."""
-    spark, start_s = timed(start_session, work, None, event_log)
-    gen_s = median([timed(wl.setup, spark)[1] for _ in range(SETUP_REPS)])
-    warm_s = timed(wl.warm_up, spark)[1] if warm else 0.0
-    log(f"set-up: session {start_s:.2f} s, inputs {gen_s:.2f} s, warm-up {warm_s:.2f} s")
-    return spark, start_s, gen_s, warm_s
+    taken), then the workload's warm-up operations.  Returns the session,
+    the wall seconds of session start and of an input build, and the CPU
+    seconds of the whole set-up."""
+    spark, start_s, start_cpu = timed(start_session, work)
+    gens = [timed(wl.setup, spark)[1:] for _ in range(SETUP_REPS)]
+    gen_s, gen_cpu = median([w for w, _ in gens]), median([c for _, c in gens])
+    _, warm_s, warm_cpu = timed(wl.warm_up, spark)
+    cpu = start_cpu + gen_cpu + warm_cpu
+    log(
+        f"set-up: session {start_s:.2f} s, inputs {gen_s:.2f} s, warm-up {warm_s:.2f} s;"
+        f" {cpu:.2f} CPU s"
+    )
+    return spark, start_s, gen_s, cpu
 
 
 def run_untraced(wl_cls, seed: int, seconds: float, scale: float, work: str) -> dict:
     wl = wl_cls(seed, scale, work)
-    spark, start_s, gen_s, warm_s = set_up(wl, work)
+    spark, _, _, setup_cpu = set_up(wl, work)
     loop = Loop()
     t_start = time.perf_counter()
     while time.perf_counter() - t_start < seconds or loop.attempted < wl.MIN_OPS:
         loop.step(wl, spark)
-        log(f"op {loop.attempted}: {loop.times[-1]:.2f} s")
-    wall = time.perf_counter() - t_start
+        log(f"op {loop.attempted}: {loop.times[-1]:.2f} s, {loop.cpu[-1]:.2f} CPU s")
     checks_ok = _finish(wl, spark)
     metrics = {
-        "setup_s": start_s + gen_s + warm_s,
-        "op_p50_s": median(loop.times),
-        "items_per_s": loop.items / wall,
+        "setup_s": setup_cpu,
+        "op_cpu_s": median(loop.cpu),
         "peak_rss_mb": jvm_peak_rss_mb(spark),
     }
     spark.stop()
@@ -280,7 +290,8 @@ def run_traced(wl_cls, seed: int, scale: float, work: str) -> dict:
 
     log_dir = os.path.join(work, "eventlog")
     # same JVM as the untraced phase, so its code is already warm
-    spark, *_ = set_up(wl, work, log_dir, warm=False)
+    spark = start_session(work, event_log=log_dir)
+    wl.setup(spark)
     tr = Tracer(spark, wl.name)
     wl.trace(spark, tr, out)
     traced = Loop()
@@ -294,7 +305,7 @@ def run_traced(wl_cls, seed: int, scale: float, work: str) -> dict:
 
     if corpus and scale_4n > scale_n:
         spark = start_session(work, master=f"local[{scale_n}]")
-        t_n = _construct_seconds(spark, corpus)
+        t_n = _construct_seconds(spark, corpus, warm=False)
         spark.stop()
         out["pipeline.scaling_eff"] = (t_n * scale_n) / (t_4n * scale_4n)
 
@@ -306,14 +317,16 @@ def run_traced(wl_cls, seed: int, scale: float, work: str) -> dict:
     return _result(loop, checks_ok, out, metric_units("per_layer"))
 
 
-def _construct_seconds(spark, corpus: str) -> float:
-    """One construct_kg pass over the corpus, timed after a warm-up pass."""
+def _construct_seconds(spark, corpus: str, warm: bool = True) -> float:
+    """One construct_kg pass over the corpus, timed after a warm-up pass
+    unless the JVM's code is warm already."""
     from workloads import noop
 
     from nexus_forge_spark.plans import pipeline
 
     docs = spark.read.parquet(corpus)
-    noop(pipeline.construct_kg(docs))
+    if warm:
+        noop(pipeline.construct_kg(docs))
     return timed(noop, pipeline.construct_kg(docs))[1]
 
 
@@ -337,6 +350,109 @@ def run(workload: str, seed: int, seconds: float, trace: bool, scale: float = 1.
         shutil.rmtree(work, ignore_errors=True)
 
 
+def adopt_orphans() -> None:
+    """Become the reaper of this process's orphaned descendants (Linux), so
+    a process the JVM starts, such as PySpark's worker daemon, stays in
+    this process's tree after the JVM exits."""
+    try:
+        prctl = ctypes.CDLL(None, use_errno=True).prctl
+    except (OSError, AttributeError):
+        return
+    prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    prctl.restype = ctypes.c_int
+    if prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        log(f"cannot become the child subreaper: {os.strerror(ctypes.get_errno())}")
+
+
+def proc_stats() -> dict[int, list[str]]:
+    """pid -> the fields of /proc/<pid>/stat after the command name, so
+    field k of proc(5) is at index k - 3."""
+    stats = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat", encoding="utf-8", errors="replace") as f:
+                stats[int(d)] = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+    return stats
+
+
+def descendants(stats: dict[int, list[str]] | None = None) -> list[int]:
+    """Pids of every live or unreaped descendant of this process."""
+    children: dict[int, list[int]] = {}
+    for pid, fields in (stats or proc_stats()).items():
+        children.setdefault(int(fields[1]), []).append(pid)
+    out, todo = [], [os.getpid()]
+    while todo:
+        kids = children.get(todo.pop(), [])
+        out += kids
+        todo += kids
+    return out
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants (the
+    JVM, PySpark's worker daemon and workers), including what the
+    children they have reaped used."""
+    stats = proc_stats()
+    t = os.times()
+    ticks = sum(int(x) for pid in descendants(stats) for x in stats[pid][11:15])
+    return t.user + t.system + ticks / CLK_TCK
+
+
+def reap() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_processes() -> None:
+    """Stop Spark and its JVM, then every other process they started, and
+    wait for each, so that nothing this run started outlives it."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        try:
+            SparkContext._active_spark_context.stop()
+        except Exception:  # noqa: BLE001 - the JVM is stopped below anyway
+            traceback.print_exc()
+    proc = getattr(SparkContext._gateway, "proc", None)
+    SparkContext._gateway = SparkContext._jvm = None
+    if proc is not None:
+        proc.stdin.close()  # the gateway JVM exits at EOF on its stdin
+        try:
+            proc.wait(STOP_GRACE_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    deadline = time.monotonic() + STOP_GRACE_S
+    sent: set[int] = set()
+    while True:
+        reap()
+        pids = descendants()
+        if not pids:
+            return
+        late = time.monotonic() > deadline
+        for pid in pids:
+            if late or pid not in sent:
+                try:
+                    os.kill(pid, signal.SIGKILL if late else signal.SIGTERM)
+                except ProcessLookupError:
+                    pass
+                sent.add(pid)
+        time.sleep(0.05)
+
+
+def _terminate(signum, _frame) -> None:
+    raise SystemExit(128 + signum)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=["ingest", "closure"])
@@ -353,7 +469,12 @@ def main(argv: list[str] | None = None) -> int:
     if not os.path.exists(os.path.join(ROOT, "BENCHMARK.json")):
         print("perfbench: BENCHMARK.json not found next to perfbench/", file=sys.stderr)
         return 2
-    result = run(args.workload, args.seed, args.seconds, bool(args.trace))
+    adopt_orphans()
+    signal.signal(signal.SIGTERM, _terminate)
+    try:
+        result = run(args.workload, args.seed, args.seconds, bool(args.trace))
+    finally:
+        stop_processes()
     log(f"done after {time.perf_counter() - T0:.2f} s")
     print(json.dumps(result))
     return 0

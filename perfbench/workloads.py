@@ -218,7 +218,7 @@ class Ingest:
     mix: retrieve by sampled ids, a search filter, one SPARQL SELECT."""
 
     name = "ingest"
-    MIN_OPS = 4  # > COMPACT_EVERY: every run crosses one auto-compaction
+    MIN_OPS = 3  # = COMPACT_EVERY: every run crosses one auto-compaction
     BATCH_DOCS = 2000
     BATCH_RECORDS = 200
     BATCHES = 8
@@ -298,7 +298,7 @@ class Ingest:
         )
 
     # -- the closed-loop operation: one batch plus its read mix
-    def op(self, spark: SparkSession) -> tuple[int, bool]:
+    def op(self, spark: SparkSession) -> bool:
         if self.next_batch == self.BATCHES:
             self.reset(spark)  # start a new cycle on empty stores
         b = self.next_batch
@@ -316,7 +316,7 @@ class Ingest:
         ok &= self._expect(f"batch {b} violations", int(obs.get["bad"] or 0), bad)
         ok &= self._expect(f"batch {b} records registered", reg["succeeded"], len(recs) - bad)
         self._note_registered(b)
-        return self.batch_docs, ok & self.read_mix(spark, b)
+        return ok & self.read_mix(spark, b)
 
     def _note_registered(self, b: int) -> None:
         """The client's own record of what batch b registered: the ids it
@@ -510,7 +510,7 @@ class Closure:
     closure, incremental closure under a delta batch, and coreness."""
 
     name = "closure"
-    MIN_OPS = 2
+    MIN_OPS = 1
     KEYS = 1500
     CUSTOMERS = 1500
     PARTS = 400
@@ -567,7 +567,7 @@ class Closure:
             "coreness": content_hash(core, ["node", "coreness"]),
         }
 
-    def op(self, spark: SparkSession) -> tuple[int, bool]:
+    def op(self, spark: SparkSession) -> bool:
         got = self._outputs(spark)
         ok = True
         if got["closure"] != got["closure_incremental"]:
@@ -579,7 +579,7 @@ class Closure:
         elif got != want:
             self.failures.append(f"closure outputs {got} != expected {want}")
             ok = False
-        return len(self.chains) + len(self.bip), ok
+        return ok
 
     def _duckdb_outputs(self) -> tuple[list, list]:
         """The closure and the core numbers from DuckDB running the
