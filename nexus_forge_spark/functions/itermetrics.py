@@ -10,11 +10,11 @@ stream long before the wall clock does.
 
 ``RoundMetrics`` is the opt-in collector: operators accept
 ``metrics: RoundMetrics | None = None`` and, when given one, record one
-row per round.  The counts come from frames the loops ALREADY
-materialize with ``localCheckpoint(eager=True)`` — a count() over a
-checkpointed frame is a cheap cached scan, not a recompute — and with
-``metrics=None`` (the default) the operators are byte-for-byte the plans
-they were before: zero cost unless asked for.
+row per round.  Where a loop converges on an aggregate (a pair count, a
+sum of values), :func:`checkpoint_observed` computes that aggregate in
+the SAME job that eagerly checkpoints the round — an ``Observation``
+rides the ``localCheckpoint(eager=True)`` scan — so the convergence test
+and its metrics cost no job of their own, with or without a collector.
 
 On a production cluster the same rows feed whatever metrics sink the
 deployment uses (StreamingQueryListener-style emission, a metrics table,
@@ -25,6 +25,8 @@ notebooks.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+from pyspark.sql import Column, DataFrame, Observation
 
 
 @dataclass
@@ -52,3 +54,12 @@ class RoundMetrics:
         return spark.createDataFrame(
             long_rows, "op string, round int, metric string, value long"
         )
+
+
+def checkpoint_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint(eager=True)`` plus ``aggs`` (name -> aggregate
+    column) evaluated over its rows by that one checkpoint job.  An
+    Observation fires once, so each call makes a fresh one."""
+    obs = Observation()
+    cp = df.observe(obs, *[col.alias(k) for k, col in aggs.items()])
+    return cp.localCheckpoint(eager=True), obs.get

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import checkpoint_observed
+
 PPM = 1_000_000
 
 
@@ -3192,7 +3194,7 @@ def coreness(
     rounds: int = 24,
     a: str = "a",
     b: str = "b",
-    check_converged: bool = True,
+    metrics=None,
 ) -> DataFrame:
     """Full core decomposition — EVERY node's core number, not just
     membership at one k (the kcore operator's upgrade) — via the h-index
@@ -3202,12 +3204,16 @@ def coreness(
         c_{t+1}(v) = H({c_t(u) : u ~ v})
 
     where H is the h-index (the largest h with >= h neighbours of value
-    >= h).  The sequence is monotone non-increasing and its fixpoint is
-    exactly the coreness, so a FIXED round count keeps both engines
-    bit-identical (rounds past convergence are no-ops — the sssp/kcore
-    oracle discipline); ``check_converged`` raises if the last round
-    still changed anything (the honesty contract of the iterative
-    family).
+    >= h).  The sequence is pointwise non-increasing (H of a node's
+    neighbours is at most its degree, and H is monotone) over a node set
+    that never changes, and its fixpoint is exactly the coreness.  So
+    each round's checkpoint job also observes sum(c): an unchanged sum
+    is an unchanged vector, i.e. the fixpoint, and the loop returns at
+    that first no-op round.  Rounds past the fixpoint are no-ops, so the
+    result equals ``sql_coreness``'s fixed ``rounds`` unrolling whenever
+    the fixpoint falls inside the budget; otherwise this raises (the
+    honesty contract of the iterative family) — it never returns a
+    still-changing vector.  ``metrics`` records ``sum_c`` per round.
 
     Per round H is computed over the neighbour-value HISTOGRAM — never a
     per-node sort of the adjacency, so a 10^6-degree hub never funnels
@@ -3231,27 +3237,27 @@ def coreness(
     sym = und.unionByName(
         und.select(F.col("q").alias("p"), F.col("p").alias("q"))
     ).localCheckpoint(eager=True)
-    c = sym.groupBy(F.col("p").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=True)
-    prev = None
-    for _ in range(rounds):
-        prev = c
-        c = _hindex_round(sym, c).localCheckpoint(eager=True)
-    if check_converged:
-        changed = (
-            c.join(
-                prev.select(F.col("node"), F.col("c").alias("c_prev")), "node"
-            )
-            .where(F.col("c") != F.col("c_prev"))
-            .count()
+
+    def settle(df: DataFrame) -> tuple[DataFrame, int]:
+        cp, obs = checkpoint_observed(df, sum_c=F.coalesce(F.sum("c"), F.lit(0)))
+        return cp, obs["sum_c"]
+
+    c, total = settle(
+        sym.groupBy(F.col("p").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("c")
         )
-        if changed:
-            raise RuntimeError(
-                f"coreness: {changed} nodes still changing after {rounds} "
-                "rounds — raise `rounds`"
-            )
-    return c.select("node", F.col("c").alias("coreness"))
+    )
+    for it in range(rounds):
+        c, nxt = settle(_hindex_round(sym, c))
+        if metrics is not None:
+            metrics.record("coreness", it, sum_c=nxt)
+        if nxt == total:
+            return c.select("node", F.col("c").alias("coreness"))
+        total = nxt
+    raise RuntimeError(
+        f"coreness: still changing after {rounds} rounds (sum of core "
+        f"values fell to {total}) — raise `rounds`"
+    )
 
 
 def sql_coreness(edges_sql: str, rounds: int = 24) -> str:

@@ -15,10 +15,14 @@ reassembly.
 Scale design: both closures are ITERATIVE-DOUBLING joins — depth-d
 hierarchies and length-L lists converge in ceil(log2) rounds, not d/L
 rounds; each round is one shuffle keyed on the hop node, with
-``localCheckpoint`` truncating lineage.  Ontology class universes are
-10^2..10^6 rows (always broadcastable against a 10^12-instance fact
-side), and rdf lists cost O(L log L) rows via Wyllie list ranking —
-never an O(L^2) pair closure.
+``localCheckpoint`` truncating lineage.  The pair closures
+(:func:`transitive_closure`, :func:`transitive_closure_incremental`,
+:func:`owl_transitive_entail`) share one doubling loop,
+:func:`_close_by_doubling`, whose fixpoint test is the pair count the
+checkpoint job itself observes — no round pays a separate count job.
+Ontology class universes are 10^2..10^6 rows (always broadcastable
+against a 10^12-instance fact side), and rdf lists cost O(L log L) rows
+via Wyllie list ranking — never an O(L^2) pair closure.
 """
 
 from __future__ import annotations
@@ -26,9 +30,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import checkpoint_observed
+
 
 class ClosureError(RuntimeError):
     """Transitive closure did not converge within max_rounds."""
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager local checkpoint of ``df`` and its row count, one job."""
+    cp, obs = checkpoint_observed(df, rows=F.count(F.lit(1)))
+    return cp, obs["rows"]
+
+
+def _close_by_doubling(
+    seed: DataFrame,
+    op: str,
+    max_rounds: int,
+    metrics=None,
+    src: str = "node",
+    dst: str = "anc",
+    keys: tuple[str, ...] = (),
+    irreflexive: bool = True,
+) -> DataFrame:
+    """Iterative doubling reach_{k+1} = reach_k UNION (reach_k JOIN
+    reach_k ON (keys, dst = src)) from ``seed``'s (src, keys, dst) pairs,
+    dropping src = dst pairs when ``irreflexive``.  Each round is one
+    checkpoint job that also observes the pair count; reach only grows
+    under union+distinct, so an unchanged count is an unchanged set and
+    the loop returns there.  Raises ClosureError past max_rounds."""
+
+    def settle(df: DataFrame) -> tuple[DataFrame, int]:
+        if irreflexive:
+            df = df.where(F.col(src) != F.col(dst))
+        return _counted(df.distinct())
+
+    reach, n = settle(seed)
+    for it in range(max_rounds):
+        hop = reach.select(*keys, F.col(src).alias("_j"), dst)
+        step = reach.select(*keys, src, F.col(dst).alias("_j")).join(
+            hop, [*keys, "_j"]
+        )
+        nxt, n2 = settle(reach.unionByName(step.select(src, *keys, dst)))
+        if metrics is not None:
+            metrics.record(op, it, pairs=n2, new_pairs=n2 - n)
+        if n2 == n:
+            return nxt
+        reach, n = nxt, n2
+    raise ClosureError(f"{op}: not converged in {max_rounds} rounds")
 
 
 def transitive_closure(
@@ -47,33 +96,10 @@ def transitive_closure(
     and surfaces as mutual (a, b)/(b, a) ancestor pairs the caller can
     detect.  Raises ClosureError past max_rounds.
     """
-    reach = (
-        edges.select(F.col(child_col).alias("node"), F.col(parent_col).alias("anc"))
-        .where(F.col("node") != F.col("anc"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    seed = edges.select(
+        F.col(child_col).alias("node"), F.col(parent_col).alias("anc")
     )
-    n = reach.count()
-    for _it in range(max_rounds):
-        hop = reach.select(F.col("node").alias("_j"), F.col("anc"))
-        step = (
-            reach.select("node", F.col("anc").alias("_j"))
-            .join(hop, "_j")
-            .select("node", "anc")
-        )
-        nxt = (
-            reach.unionByName(step)
-            .where(F.col("node") != F.col("anc"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n2 = nxt.count()
-        if metrics is not None:
-            metrics.record("transitive_closure", _it, pairs=n2, new_pairs=n2 - n)
-        if n2 == n:
-            return nxt
-        reach, n = nxt, n2
-    raise ClosureError(f"transitive_closure: not converged in {max_rounds} rounds")
+    return _close_by_doubling(seed, "transitive_closure", max_rounds, metrics)
 
 
 def class_rollup(
@@ -326,20 +352,20 @@ def flatten_rdf_lists(
     heads = cells.join(
         rest.select(F.col("dst").alias("src")).distinct(), "src", "left_anti"
     )
-    known = heads.select(
-        F.col("src").alias("head"),
-        F.col("src").alias("node"),
-        F.lit(0).alias("pos"),
-    ).localCheckpoint(eager=True)
-    n = known.count()
+    known, n = _counted(
+        heads.select(
+            F.col("src").alias("head"),
+            F.col("src").alias("node"),
+            F.lit(0).alias("pos"),
+        )
+    )
     for _ in range(max_rounds):
         shifted = known.join(
             jump.select(F.col("src").alias("node"), "j", "d"), "node"
         ).select(
             "head", F.col("j").alias("node"), (F.col("pos") + F.col("d")).alias("pos")
         )
-        nxt = known.unionByName(shifted).distinct().localCheckpoint(eager=True)
-        n2 = nxt.count()
+        nxt, n2 = _counted(known.unionByName(shifted).distinct())
         if n2 == n:
             break
         sq = jump.select(F.col("src").alias("j"), F.col("j").alias("j2"), F.col("d").alias("d2"))
@@ -1040,28 +1066,13 @@ def owl_transitive_entail(
     chain is inherently O(L^2) pairs; callers bound L by construction
     (provenance chains, containment hierarchies), not the operator.
     """
-    reach = (
-        triples.where(F.col("pred").isin(list(trans_preds)))
-        .select("subj", "pred", "obj")
-        .distinct()
-        .localCheckpoint(eager=True)
+    seed = triples.where(F.col("pred").isin(list(trans_preds))).select(
+        "subj", "pred", "obj"
     )
-    n = reach.count()
-    for _ in range(max_rounds):
-        hop = reach.select(
-            F.col("pred").alias("_p"), F.col("subj").alias("_j"), F.col("obj")
-        )
-        step = (
-            reach.select("subj", F.col("pred").alias("_p"), F.col("obj").alias("_j"))
-            .join(hop, ["_p", "_j"])
-            .select("subj", F.col("_p").alias("pred"), "obj")
-        )
-        nxt = reach.unionByName(step).distinct().localCheckpoint(eager=True)
-        n2 = nxt.count()
-        if n2 == n:
-            return nxt
-        reach, n = nxt, n2
-    raise ClosureError(f"owl_transitive_entail: not converged in {max_rounds} rounds")
+    return _close_by_doubling(
+        seed, "owl_transitive_entail", max_rounds,
+        src="subj", dst="obj", keys=("pred",), irreflexive=False,
+    )
 
 
 def sql_owl_transitive_entail(triples_sql: str, trans_preds: list[str]) -> str:
@@ -1215,6 +1226,7 @@ def transitive_closure_incremental(
     child_col: str = "child",
     parent_col: str = "parent",
     max_rounds: int = 20,
+    metrics=None,
 ) -> DataFrame:
     """Maintain a transitive closure under edge INSERTS without
     recomputing from the base edges: seed the iterative-doubling loop
@@ -1228,7 +1240,7 @@ def transitive_closure_incremental(
     recompute is the graded invariant (the resumable-pipeline contract
     this repo's incremental family shares).
     """
-    reach = (
+    seed = (
         closure_old.select(
             F.col("node") if "node" in closure_old.columns else F.col(child_col),
             F.col("anc") if "anc" in closure_old.columns else F.col(parent_col),
@@ -1239,30 +1251,9 @@ def transitive_closure_incremental(
                 F.col(child_col).alias("node"), F.col(parent_col).alias("anc")
             )
         )
-        .where(F.col("node") != F.col("anc"))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = reach.count()
-    for _ in range(max_rounds):
-        hop = reach.select(F.col("node").alias("_j"), F.col("anc"))
-        step = (
-            reach.select("node", F.col("anc").alias("_j"))
-            .join(hop, "_j")
-            .select("node", "anc")
-        )
-        nxt = (
-            reach.unionByName(step)
-            .where(F.col("node") != F.col("anc"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n2 = nxt.count()
-        if n2 == n:
-            return nxt
-        reach, n = nxt, n2
-    raise ClosureError(
-        f"transitive_closure_incremental: not converged in {max_rounds} rounds"
+    return _close_by_doubling(
+        seed, "transitive_closure_incremental", max_rounds, metrics
     )
 
 

@@ -958,8 +958,11 @@ def test_iterative_round_metrics(spark):
     RoundMetrics collector — and are metric-free (identical plans) by
     default."""
     from nexus_forge_spark.functions.itermetrics import RoundMetrics
-    from nexus_forge_spark.operators.graph import kcore, pagerank, sssp
-    from nexus_forge_spark.operators.ontology import transitive_closure
+    from nexus_forge_spark.operators.graph import coreness, kcore, pagerank, sssp
+    from nexus_forge_spark.operators.ontology import (
+        transitive_closure,
+        transitive_closure_incremental,
+    )
 
     m = RoundMetrics()
     edges = spark.createDataFrame(
@@ -996,24 +999,39 @@ def test_iterative_round_metrics(spark):
     assert tc[-1]["new_pairs"] == 0
     assert tc[-1]["pairs"] == 9 * 8 // 2  # full chain closure
 
+    # the old closure covers 0..4; the delta edges extend it to 8
+    old = transitive_closure(chain.where("child < 4"))
+    transitive_closure_incremental(old, chain.where("child >= 4"), metrics=m)
+    inc = m.for_op("transitive_closure_incremental")
+    assert [r["round"] for r in inc] == list(range(len(inc)))
+    assert inc[0]["new_pairs"] > 0 and inc[-1]["new_pairs"] == 0
+    assert inc[-1]["pairs"] == 9 * 8 // 2
+
+    # triangle 1-2-3 plus pendant 4: degree sum 8, core sum 2+2+2+1 = 7
+    coreness(und, metrics=m)
+    cc = m.for_op("coreness")
+    assert [r["sum_c"] for r in cc] == [7, 7]  # the fixpoint round ends it
+
     mdf = m.df(spark)
     assert mdf.columns == ["op", "round", "metric", "value"]
     assert mdf.count() == sum(len(r) - 2 for r in m.rows)
 
 
+# a 4-clique (coreness 3) with a pendant path (1) and a triangle bridge (2)
+_HAND_CORE_EDGES = [(i, j) for i in range(4) for j in range(i + 1, 4)] + [
+    (3, 10), (10, 11), (11, 12), (0, 20), (1, 20),
+]
+_HAND_CORENESS = {0: 3, 1: 3, 2: 3, 3: 3, 10: 1, 11: 1, 12: 1, 20: 2}
+
+
 def test_coreness_matches_peeling_definition(spark):
-    """Hand graph: a 4-clique (coreness 3) with a pendant path (1) and a
-    triangle bridge (2); h-index iteration must land on the exact
-    peeling core numbers, and agree with kcore membership at every k."""
+    """Hand graph: h-index iteration must land on the exact peeling core
+    numbers, and agree with kcore membership at every k."""
     from nexus_forge_spark.operators.graph import coreness, kcore
 
-    clique = [(i, j) for i in range(4) for j in range(i + 1, 4)]
-    extra = [(3, 10), (10, 11), (11, 12), (0, 20), (1, 20)]  # path + triangle
-    edges = spark.createDataFrame(clique + extra, "a long, b long")
+    edges = spark.createDataFrame(_HAND_CORE_EDGES, "a long, b long")
     got = {r.node: r.coreness for r in coreness(edges).collect()}
-    assert {k: got[k] for k in range(4)} == {0: 3, 1: 3, 2: 3, 3: 3}
-    assert got[20] == 2  # triangle with 0,1
-    assert got[10] == got[11] == got[12] == 1
+    assert got == _HAND_CORENESS
     for k in (1, 2, 3):
         members = {r.node for r in kcore(edges, k=k).collect()}
         assert members == {n for n, c in got.items() if c >= k}
@@ -1021,6 +1039,74 @@ def test_coreness_matches_peeling_definition(spark):
 
     with pytest.raises(RuntimeError, match="still changing"):
         coreness(edges, rounds=1)
+
+
+def _hindex_changing_rounds(edges) -> int:
+    """Rounds of the h-index iteration from the degree vector that still
+    change some value (pure python)."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+
+    def h(vals):
+        vals = sorted(vals, reverse=True)
+        return max((min(v, i + 1) for i, v in enumerate(vals)), default=0)
+
+    c, r = {v: len(ns) for v, ns in adj.items()}, 0
+    while True:
+        nxt = {v: h([c[u] for u in ns]) for v, ns in adj.items()}
+        if nxt == c:
+            return r
+        c, r = nxt, r + 1
+
+
+def test_coreness_convergence_boundary(spark):
+    """The early exit keeps the fixed-budget boundary: with r changing
+    rounds, rounds=r raises and rounds=r+1 returns the peeling answer."""
+    import pytest
+
+    from nexus_forge_spark.operators.graph import coreness
+
+    r = _hindex_changing_rounds(_HAND_CORE_EDGES)
+    assert r >= 1
+    edges = spark.createDataFrame(_HAND_CORE_EDGES, "a long, b long")
+    with pytest.raises(RuntimeError, match="still changing"):
+        coreness(edges, rounds=r)
+    got = {row.node: row.coreness for row in coreness(edges, rounds=r + 1).collect()}
+    assert got == _HAND_CORENESS
+
+
+def test_closure_incremental_convergence_boundary(spark):
+    """Same boundary for the incremental closure: with r changing
+    doubling rounds, max_rounds=r raises and max_rounds=r+1 returns the
+    full closure."""
+    import pytest
+
+    from nexus_forge_spark.operators.ontology import (
+        ClosureError,
+        transitive_closure,
+        transitive_closure_incremental,
+    )
+
+    chain = [(i, i + 1) for i in range(12)]
+    old_edges, delta_edges = chain[:3], chain[3:]
+    reach = {(a, c) for a, b in old_edges for c in range(b, 4)} | set(delta_edges)
+    r = 0
+    while True:
+        nxt = reach | {(a, d) for a, b in reach for c, d in reach if b == c}
+        if nxt == reach:
+            break
+        reach, r = nxt, r + 1
+    assert r >= 2 and len(reach) == 13 * 12 // 2
+
+    schema = "child long, parent long"
+    old = transitive_closure(spark.createDataFrame(old_edges, schema))
+    delta = spark.createDataFrame(delta_edges, schema)
+    with pytest.raises(ClosureError, match="not converged"):
+        transitive_closure_incremental(old, delta, max_rounds=r)
+    got = transitive_closure_incremental(old, delta, max_rounds=r + 1)
+    assert {(row.node, row.anc) for row in got.collect()} == reach
 
 
 def test_disparity_backbone_keeps_planted_edge(spark):

@@ -951,3 +951,42 @@ def test_ladder_salted_no_cartesian_no_single_partition(spark, sf01):
     plan = plan_of(QUERIES["kg_ladder_salted"][0](spark, sf01))
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
+
+
+def test_round_budget_costs_no_jobs(spark, monkeypatch):
+    """Convergence is observed by each round's checkpoint job: past the
+    fixpoint a larger round budget launches no job at all, and a closure
+    round runs no count() job beside its checkpoint."""
+    import uuid
+
+    from nexus_forge_spark.operators.graph import coreness
+    from nexus_forge_spark.operators.ontology import transitive_closure
+
+    sc = spark.sparkContext
+
+    def jobs_of(fn) -> int:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # triangle plus pendant: one changing round, the second is the fixpoint
+    und = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)], "a long, b long")
+    assert jobs_of(lambda: coreness(und, rounds=24)) == jobs_of(
+        lambda: coreness(und, rounds=6)
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "child long, parent long"
+    )
+
+    def no_count(self):
+        raise AssertionError("closure round ran a separate count()")
+
+    monkeypatch.setattr(type(chain), "count", no_count)
+    assert jobs_of(lambda: transitive_closure(chain, max_rounds=20)) == jobs_of(
+        lambda: transitive_closure(chain, max_rounds=4)
+    )
