@@ -12,11 +12,22 @@ and case folding.
 Dimensions are small (ontologies: 10^2..10^6 rows) → always the broadcast
 side of resolver joins.  ``sql_values`` renders the same rows as a DuckDB
 ``VALUES`` clause so oracle SQL sees an identical dictionary.
+
+Every dictionary frame is a ``LocalRelation`` built from an Arrow table
+(:func:`local_frame`).  ``createDataFrame`` over a Python list makes a
+``LogicalRDD`` over a Python RDD instead, and every job that scans it starts
+Python-worker tasks: a 20-row scan measured 1.2-1.6 CPU s that way against
+0.06-0.2 CPU s as a ``LocalRelation`` (local[4], 4-vCPU host).  One
+``construct_kg`` call scans its dictionary three times and a mapping's
+``forge.resolve`` site twice more.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nexus_forge_spark import schemas
 
@@ -79,17 +90,25 @@ AGENT_MATCH_PROPS = ["name", "givenName", "familyName", "alternateName"]
 DEMO_MATCH_PROPS = ["label", "acronym"]
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Python rows -> an Arrow-backed ``LocalRelation`` with exactly
+    ``schema`` (nullability included).  The Arrow table is typed from the
+    schema, so a column that is null in every row keeps its declared type."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def ontology_terms(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ONTOLOGY_ROWS, schemas.ONTOLOGY_TERMS)
+    return local_frame(spark, ONTOLOGY_ROWS, schemas.ONTOLOGY_TERMS)
 
 
 def agents(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(AGENT_ROWS, schemas.AGENTS)
+    return local_frame(spark, AGENT_ROWS, schemas.AGENTS)
 
 
 def _with_idx_schema(base):
-    from pyspark.sql import types as T
-
     return T.StructType([T.StructField("dict_idx", T.IntegerType(), False)] + list(base))
 
 
@@ -98,12 +117,12 @@ def ontology_terms_idx(spark: SparkSession) -> DataFrame:
     ``sorted()`` is stable w.r.t. dictionary file order (demo_resolver.py:72),
     so dict_idx is the deterministic tiebreak for equal fuzzy scores."""
     rows = [(i, *r) for i, r in enumerate(ONTOLOGY_ROWS)]
-    return spark.createDataFrame(rows, _with_idx_schema(schemas.ONTOLOGY_TERMS))
+    return local_frame(spark, rows, _with_idx_schema(schemas.ONTOLOGY_TERMS))
 
 
 def agents_idx(spark: SparkSession) -> DataFrame:
     rows = [(i, *r) for i, r in enumerate(AGENT_ROWS)]
-    return spark.createDataFrame(rows, _with_idx_schema(schemas.AGENTS))
+    return local_frame(spark, rows, _with_idx_schema(schemas.AGENTS))
 
 
 def _sql_lit(v) -> str:

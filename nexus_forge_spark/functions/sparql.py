@@ -1389,6 +1389,12 @@ class SparqlToSql:
                 )
             finally:
                 self._graph_ctx = None
+            if not gbind:
+                raise QueryingError(
+                    "a GRAPH block that binds no variable is an existence "
+                    "test, which this engine does not compile: bind at least "
+                    "one variable inside the block"
+                )
             alias = f"gph{gi}"
             gcols = ", ".join(f"{ref} AS {v}" for v, ref in gbind.items())
             derived = f"(SELECT {gcols} {gsql})"
@@ -1435,6 +1441,12 @@ class SparqlToSql:
                 )
             finally:
                 self.table, self.graph_col, self._graph_ctx = save
+            if not fbind:
+                raise QueryingError(
+                    f"SERVICE <{ep}> block binds no variable: a variable-free "
+                    "block is an existence test, which this engine does not "
+                    "compile — bind at least one variable inside the block"
+                )
             alias = f"svc{fi}"
             fcols = ", ".join(f"{ref} AS {v}" for v, ref in fbind.items())
             derived = f"(SELECT {fcols} {fsql})"

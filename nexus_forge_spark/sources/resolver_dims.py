@@ -6,8 +6,14 @@ heterogeneous (e.g. structure_layer.json rows carry only label+id).  The
 loader normalizes to a fixed schema with dict_idx = file order (the
 stable-sort tiebreak) and null for absent fields.
 
-Files are small ontology dictionaries — parsed on the driver, shipped via
-createDataFrame, always the broadcast side of resolver joins.
+Files are small ontology dictionaries — parsed in Python, always the
+broadcast side of resolver joins.  They become an Arrow-backed
+``LocalRelation`` (``dims.local_frame``), not a ``createDataFrame(<list>)``
+over a Python RDD: scanning the latter starts Python-worker tasks on every
+job (a 20-row scan measured 1.2-1.6 CPU s against 0.06-0.2 CPU s as a
+``LocalRelation``, local[4]), and a resolve pass scans its dictionary
+several times.  The Arrow table is typed from the declared schema, so a
+match prop absent from every record stays a string column.
 """
 
 from __future__ import annotations
@@ -16,6 +22,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from nexus_forge_spark.dims import local_frame
 
 BASE_FIELDS = ["id", "type", "label"]
 
@@ -38,4 +46,4 @@ def load_resolver_dim(
         + [T.StructField(p, T.StringType()) for p in props]
         + [T.StructField("deprecated", T.BooleanType())]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -990,3 +990,67 @@ def test_round_budget_costs_no_jobs(spark, monkeypatch):
     assert jobs_of(lambda: transitive_closure(chain, max_rounds=20)) == jobs_of(
         lambda: transitive_closure(chain, max_rounds=4)
     )
+
+
+def test_resolver_dictionaries_are_local_relations(spark, tmp_path):
+    """Every resolver dictionary is an Arrow-built LocalRelation with its
+    declared schema and rows in source order: a list-built frame is a
+    LogicalRDD whose every scan starts Python-worker tasks."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from nexus_forge_spark import dims, schemas
+    from nexus_forge_spark.sources.resolver_dims import load_resolver_dim
+
+    def indexed(rows):
+        return [(i, *r) for i, r in enumerate(rows)]
+
+    built = [
+        (dims.ontology_terms(spark), schemas.ONTOLOGY_TERMS, dims.ONTOLOGY_ROWS),
+        (dims.agents(spark), schemas.AGENTS, dims.AGENT_ROWS),
+        (
+            dims.ontology_terms_idx(spark),
+            dims._with_idx_schema(schemas.ONTOLOGY_TERMS),
+            indexed(dims.ONTOLOGY_ROWS),
+        ),
+        (
+            dims.agents_idx(spark),
+            dims._with_idx_schema(schemas.AGENTS),
+            indexed(dims.AGENT_ROWS),
+        ),
+    ]
+    # "notation" is absent from every record: its column must stay a string
+    records = [
+        {"id": "t:a", "type": "Class", "label": "alpha", "deprecated": True},
+        {"id": "t:b", "label": "beta"},
+    ]
+    path = tmp_path / "dim.json"
+    path.write_text(json.dumps(records), encoding="utf-8")
+    loaded_schema = T.StructType(
+        [T.StructField("dict_idx", T.IntegerType(), False)]
+        + [T.StructField(c, T.StringType()) for c in ("id", "type", "label", "notation")]
+        + [T.StructField("deprecated", T.BooleanType())]
+    )
+    built.append(
+        (
+            load_resolver_dim(spark, str(path), ["label", "notation"]),
+            loaded_schema,
+            [(0, "t:a", "Class", "alpha", None, True), (1, "t:b", None, "beta", None, False)],
+        )
+    )
+    for df, schema, rows in built:
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert analyzed.getClass().getSimpleName() == "LocalRelation"
+        assert df.schema == schema
+        assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_construct_kg_scans_no_python_rdd(spark, sf_dir):
+    from nexus_forge_spark.plans.pipeline import construct_kg
+    from nexus_forge_spark.sources import flat_to_interleaved, load_table
+
+    docs = flat_to_interleaved(load_table(spark, "documents", sf_dir).limit(50))
+    plan = plan_of(construct_kg(docs), execute=True)
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan

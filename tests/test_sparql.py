@@ -1405,6 +1405,30 @@ def test_service_silent_bound_still_joins():
     assert rows == [("doc:1", "one"), ("doc:2", "two")]
 
 
+def test_service_variable_free_block_raises_named_error():
+    # no variable inside the block: compiling it used to emit
+    # "SELECT  FROM ..." and fail in the SQL parser
+    with pytest.raises(QueryingError, match="SERVICE <urn:svc:ont> block binds no variable"):
+        sparql_to_sql(
+            "SELECT ?d WHERE { ?d nsg:hasBody ?e . "
+            'SERVICE <urn:svc:ont> { <e1> rdfs:label "one" } }',
+            table="triples",
+            dialect="duckdb",
+            services=SVC,
+        )
+
+
+def test_graph_variable_free_block_raises_named_error():
+    with pytest.raises(QueryingError, match="GRAPH block that binds no variable"):
+        sparql_to_sql(
+            "SELECT ?d WHERE { ?d nsg:hasBody ?e . "
+            "GRAPH <urn:g1> { <d2> nsg:hasBody <e2> } }",
+            table="quads",
+            dialect="duckdb",
+            graph_col="g",
+        )
+
+
 def test_service_var_endpoint_raises():
     with pytest.raises(QueryingError, match="SERVICE .var"):
         _fq(

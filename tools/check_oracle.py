@@ -5,9 +5,11 @@ column names, and an order-insensitive value hash."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# import the package from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -72,6 +74,10 @@ def main(only: list[str] | None = None, tz: str | None = None,
     oracles = entry_mod.oracle_sql()
     failures = 0
     results: dict[str, dict] = {}
+    for name in sorted(set(only or ()) - set(qs)):
+        print(f"FAIL {name}: no such contract query")
+        failures += 1
+        results[name] = {"err": "unknown query name"}
     for name, fn in qs.items():
         if only and name not in only:
             continue
