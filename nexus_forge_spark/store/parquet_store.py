@@ -19,9 +19,14 @@ O(table); this one is Iceberg-honest):
 
 * every mutation writes ONLY its affected rows as delta ``d<seq>`` —
   mutation cost is O(batch), independent of table size;
-* snapshot N = merge-on-read over deltas with seq<=N: latest row per id
-  wins (one row_number window on id — exactly Iceberg's MOR equality-
-  delete resolution).  Reads prune to deltas AFTER the last compaction;
+* snapshot N reads the deltas with seq<=N since the last compaction.
+  While every one of them after the first is a ``register`` append (the
+  log records ``append`` per delta), their ids are disjoint by
+  construction, so the snapshot is a plain scan of their union — an
+  Iceberg append snapshot, with no deletes to resolve.  Only when an
+  update/deprecate delta is live does the read resolve merge-on-read:
+  latest row per id wins (one row_number window on id — exactly
+  Iceberg's MOR equality-delete resolution);
 * ``compact()`` materializes the resolved view as a full base delta
   (Iceberg rewrite_data_files), bounding read amplification; callers run
   it on whatever cadence fits their mutation rate;
@@ -43,7 +48,7 @@ where vanilla Spark covers the syntax — with this table as the spec):
 | tag(name)          | ``ALTER TABLE t CREATE TAG name`` (snapshot ref); retrieve(version=tag) = ``VERSION AS OF`` |
 | retrieve(id, v)    | ``SELECT ... VERSION AS OF <snapshot/tag>`` point lookup (metadata time travel replaces the _seq<=N filter) |
 | compact()          | ``CALL system.rewrite_data_files(t)`` + ``rewrite_position_delete_files`` — bounds MOR read amplification exactly like the base-delta rewrite here |
-| _read() MOR view   | free: Iceberg readers resolve equality deletes natively; drop the row_number window |
+| _read() view       | append-only snapshots are already a plain scan; MOR (update/deprecate live) is free: Iceberg readers resolve equality deletes natively; drop the row_number window |
 | observe() counts   | snapshot summary metrics (added-records, total-records) from the commit, same zero-extra-pass property |
 
 Bookkeeping columns (the reference's _store_metadata, resource.py:34):
@@ -102,8 +107,12 @@ class ParquetStore:
         return {"current": 0, "tags": {}, "deltas": []}
 
     def _save_meta(self, meta: dict) -> None:
-        with open(self._meta_path, "w", encoding="utf-8") as f:
+        """Commit the log atomically: a failed write leaves the previous
+        meta.json (and so the previous snapshot) intact."""
+        tmp = self._meta_path + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
             json.dump(meta, f)
+        os.replace(tmp, self._meta_path)
 
     def current_version(self) -> int:
         return self._meta()["current"]
@@ -117,10 +126,15 @@ class ParquetStore:
         observation: Observation | None = None,
         full: bool = False,
         commit_metric: str | None = None,
+        append: bool = False,
     ) -> tuple[int, dict]:
         """Write ONE delta (the mutation's affected rows only) and commit it
         to the log.  The returned metrics come out of the write job itself
         (df.observe) — a mutation is exactly one Spark job.
+
+        append marks a delta whose ids are disjoint from the snapshot it
+        extends (register's anti-join guarantees it): it replaces no row,
+        so reads need not resolve it against earlier deltas.
 
         commit_metric names an observation that must be non-zero for the
         commit to happen; otherwise the write is aborted (dir removed, no
@@ -137,7 +151,7 @@ class ParquetStore:
             shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
             return 0, metrics
         meta["current"] = seq
-        meta["deltas"].append({"seq": seq, "full": full})
+        meta["deltas"].append({"seq": seq, "full": full, "append": append})
         self._save_meta(meta)
         if not full and self.auto_compact_deltas is not None:
             since_base = 0
@@ -152,8 +166,11 @@ class ParquetStore:
     # ------------------------------------------------------------ read view
 
     def _read(self, version: int | None = None) -> DataFrame:
-        """Merge-on-read at snapshot `version`: scan the deltas since the
-        last full base <= version, latest _seq per id wins."""
+        """Snapshot `version`: scan the deltas since the last full base
+        <= version.  Latest _seq per id wins, resolved by a window only if
+        a delta after the first can replace an earlier row (it is not an
+        append); an append-only snapshot is the plain union.  Log entries
+        without ``append`` count as replacing, so they always resolve."""
         meta = self._meta()
         v = meta["current"] if version is None else version
         if v == 0:
@@ -169,7 +186,7 @@ class ParquetStore:
             live = live[base_idx:]
         paths = [self._delta_dir(d["seq"]) for d in live]
         df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        if len(paths) == 1:
+        if all(d.get("append", False) for d in live[1:]):
             return df.drop("_seq")
         w = Window.partitionBy(self.id_col).orderBy(F.desc("_seq"))
         return (
@@ -192,7 +209,14 @@ class ParquetStore:
         rejected per-row (RegistrationError semantics) and reported in the
         Actions-style counter (commons/actions.py:46-59).  Writes only the
         accepted batch — existing data is read (id column only), never
-        rewritten."""
+        rewritten.
+
+        Precondition: one row per id within the batch (not checked — that
+        would cost a shuffle per register).  A batch that repeats an id
+        stores every copy, and reads show all of them while the snapshot
+        is append-only; once an update or deprecate since the last base is
+        live, the read keeps one arbitrary copy (and compact() then
+        materializes that choice)."""
         obs = Observation()
         incoming = (
             df.withColumn("_rev", F.lit(1))
@@ -201,7 +225,7 @@ class ParquetStore:
         )
         meta = self._meta()
         if meta["current"] == 0:
-            _, m = self._append_delta(incoming, obs)
+            _, m = self._append_delta(incoming, obs, append=True)
             n = int(m["n_in"])
             return {"action": "register", "succeeded": n, "failed": 0}
         ids = self._read().select(self.id_col)
@@ -211,7 +235,7 @@ class ParquetStore:
         )
         # an all-conflict register creates no new version (demo_store.py
         # register path; matched by the fuzz model) -> abort empty commits
-        _, m = self._append_delta(ok, obs_ok, commit_metric="n_ok")
+        _, m = self._append_delta(ok, obs_ok, commit_metric="n_ok", append=True)
         n_ok = int(m["n_ok"])
         n_in = int(obs.get["n_in"])
         return {"action": "register", "succeeded": n_ok, "failed": n_in - n_ok}
@@ -219,7 +243,11 @@ class ParquetStore:
     def update(self, df: DataFrame) -> dict:
         """MERGE by id: matched rows get the new payload with _rev+1;
         updating a non-existent id is a per-row failure (demo_store.py:249).
-        Only the matched rows are written (MERGE INTO delta)."""
+        Only the matched rows are written (MERGE INTO delta).
+
+        Precondition: one row per id within the batch (not checked).  A
+        repeated id matches once per copy, every copy counts as succeeded,
+        and the snapshot keeps one arbitrary copy."""
         existing = self._read()
         data_cols = [c for c in existing.columns if c not in META_COLS]
         obs = Observation()

@@ -1,8 +1,10 @@
 """Randomized store-lifecycle differential: sequences of register / update /
-deprecate / tag operations applied to the ParquetStore AND to a plain-Python
+deprecate / compact / tag operations applied to the ParquetStore AND to a plain-Python
 model of the reference's DemoStore semantics (demo_store.py:141-326: archive
 per version, per-row conflicts, rev bumps, soft-delete).  After every step
-the store's full state and each archived snapshot must match the model."""
+the store's full state and each archived snapshot must match the model.
+Sequences cross both read shapes: append-only snapshots (plain scan) and
+snapshots with a live update/deprecate delta (merge-on-read)."""
 
 from __future__ import annotations
 
@@ -65,6 +67,9 @@ class ModelStore:
         self._commit(state)
         return ok
 
+    def compact(self):
+        self._commit(dict(self.cur))
+
     def tag(self, name):
         self.tags[name] = len(self.versions)
 
@@ -75,7 +80,7 @@ def _state_of(df) -> dict:
     }
 
 
-@pytest.mark.parametrize("seed", [5, 23])
+@pytest.mark.parametrize("seed", [5, 23, 11])
 def test_random_lifecycle_matches_model(spark, seed):
     rnd = random.Random(seed)
     d = tempfile.mkdtemp()
@@ -103,7 +108,7 @@ def test_random_lifecycle_matches_model(spark, seed):
         model.register(list({r[0]: r for r in first}.values()))
 
         for step in range(8):
-            op = rnd.choice(["register", "update", "deprecate", "tag"])
+            op = rnd.choice(["register", "update", "deprecate", "compact", "tag"])
             if op == "register":
                 batch = rows(rnd.randint(1, 3))
                 res = store.register(df_of(batch))
@@ -119,6 +124,9 @@ def test_random_lifecycle_matches_model(spark, seed):
                 res = store.deprecate(ids)
                 ok = model.deprecate(ids)
                 assert res["succeeded"] == ok, f"step {step} deprecate"
+            elif op == "compact":
+                store.compact()
+                model.compact()
             else:
                 name = f"t{step}"
                 store.tag(name)

@@ -3,6 +3,8 @@ and the Filter DSL."""
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 
 from nexus_forge_spark.operators.search import apply_filters, paths
 from nexus_forge_spark.store import ParquetStore
+from nexus_forge_spark.store import parquet_store
 
 
 @pytest.fixture()
@@ -74,6 +77,71 @@ def test_freeze_rewrites_ids(spark, store):
     refs = spark.createDataFrame([("p1",), ("unknown",)], "id string")
     out = {r.id for r in store.freeze(refs).collect()}
     assert out == {"p1?_version=2", "unknown"}
+
+
+def _read_shape(df) -> tuple[bool, bool]:
+    """(Window in the optimized plan, Exchange in the physical plan)."""
+    qe = df._jdf.queryExecution()
+    return "Window" in qe.optimizedPlan().toString(), "Exchange" in qe.executedPlan().toString()
+
+
+def test_append_only_snapshots_read_without_window(spark, store):
+    """register deltas extend the snapshot with disjoint ids, so the read is
+    a plain scan; only a live update/deprecate delta needs the window."""
+    for i in range(3):
+        store.register(_people(spark, [(f"p{i}", "N", i)]))
+    assert _read_shape(store.retrieve()) == (False, False)
+    store.compact()
+    store.register(_people(spark, [("p3", "N", 3)]))
+    assert _read_shape(store.retrieve()) == (False, False)
+    v_append = store.current_version()
+    store.update(_people(spark, [("p0", "M", 9)]))
+    assert _read_shape(store.retrieve()) == (True, True)
+    assert _read_shape(store.retrieve(version=v_append)) == (False, False)
+    store.register(_people(spark, [("p4", "N", 4)]))
+    assert _read_shape(store.retrieve())[0]  # the update is still live
+    store.compact()
+    store.deprecate(["p1"])
+    assert _read_shape(store.retrieve())[0]
+
+
+def test_legacy_meta_without_append_keeps_window(spark, store):
+    store.register(_people(spark, [("p1", "Jane", 40)]))
+    store.register(_people(spark, [("p2", "John", 30)]))
+    with open(os.path.join(store.base_dir, "meta.json"), "w", encoding="utf-8") as f:
+        json.dump(
+            {"current": 2, "tags": {}, "deltas": [{"seq": 1, "full": False}, {"seq": 2, "full": False}]},
+            f,
+        )
+    df = store.retrieve()
+    assert _read_shape(df)[0]
+    assert sorted(r.id for r in df.collect()) == ["p1", "p2"]
+
+
+def test_duplicate_ids_in_one_batch_stay_while_append_only(spark, store):
+    """Documented precondition breach: every copy of a repeated id is kept
+    by every append-only snapshot (not one arbitrary copy)."""
+    store.register(_people(spark, [("a", "x", 1), ("a", "y", 2)]))
+    store.register(_people(spark, [("b", "z", 3)]))
+    for v in (1, 2):
+        a_rows = sorted(
+            (r.name, r.age) for r in store.retrieve("a", version=v).collect()
+        )
+        assert a_rows == [("x", 1), ("y", 2)], f"v{v}"
+
+
+def test_failed_meta_commit_keeps_previous_snapshot(spark, store, monkeypatch):
+    store.register(_people(spark, [("p1", "Jane", 40)]))
+
+    def boom(*_a, **_k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(parquet_store.json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        store.register(_people(spark, [("p2", "John", 30)]))
+    monkeypatch.undo()
+    assert store.current_version() == 1
+    assert [tuple(r) for r in store.retrieve().collect()] == [("p1", "Jane", 40, 1, False)]
 
 
 def test_filter_dsl(spark):
