@@ -52,7 +52,7 @@ is ours, driven by the driver's DuckDB differential gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 Q30 = 1_073_741_824  # 2^30
 Q31 = 2_147_483_648  # 2^31
@@ -169,10 +169,6 @@ def ln_micro_col(a: str, b: str) -> Column:
 
 def q30_div_col(a: str, b: str) -> Column:
     return F.expr(q30_div_sql(a, b, "spark"))
-
-
-def with_lnq30(df: DataFrame, x: str, out: str) -> DataFrame:
-    return df.withColumn(out, lnq30_col(x))
 
 
 # ----------------------------------------------------------- Python reference

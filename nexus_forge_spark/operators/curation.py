@@ -542,7 +542,6 @@ def curate_corpus(
     text_col: str = "text",
     id_col: str = "doc_id",
     quality: dict | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """The composed Dolma-style cleaning pipeline: Gopher quality filter ->
     PII redaction -> corpus-level duplicate-paragraph removal, emitting a
@@ -554,7 +553,7 @@ def curate_corpus(
     feeds the audit n_pii column AND the paragraph dedup, which itself
     scans its input three times for election/totals/rebuild).  Without a
     barrier Catalyst would re-execute the regex/tokenize lineage once per
-    consumer — measured 4x wall time at sf0.1 — so ``materialize=True``
+    consumer — measured 4x wall time at sf0.1 — so this
     localCheckpoints the two reused stage outputs (the same measured
     pattern as dedup.py's signature checkpoint; at production scale this
     is where plans/checkpoint.py's durable stage boundary goes instead).
@@ -565,13 +564,9 @@ def curate_corpus(
     """
     q = gopher_quality_filter(df, text_col=text_col, **(quality or {})).select(
         id_col, text_col, "keep", "n_tokens"
-    )
-    if materialize:
-        q = q.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     kept = q.where(F.col("keep")).select(id_col, text_col)
-    red = redact_pii(kept, text_col, id_col)
-    if materialize:
-        red = red.localCheckpoint(eager=True)
+    red = redact_pii(kept, text_col, id_col).localCheckpoint(eager=True)
     para = remove_duplicate_paragraphs(red, text_col, id_col)
     final_toks = (
         F.when(
@@ -840,7 +835,6 @@ def prepare_training_corpus(
     splits: dict[str, float] | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """The FULL training-corpus assembly in one composed plan — the
     five-stage Dolma/RefinedWeb loop end to end: Gopher quality filter ->
@@ -859,8 +853,8 @@ def prepare_training_corpus(
     Columns); the paragraph election and span election are each ONE hash
     aggregate with map-side combine; the split label is one md5.  The two
     corpus-rewrite stages each scan their input several times
-    (election/totals/rebuild), so ``materialize=True`` localCheckpoints
-    the stage boundaries — at production scale these are
+    (election/totals/rebuild), so the stage boundaries are
+    localCheckpointed — at production scale these are
     plans/checkpoint.py durable stage boundaries instead.
     """
     from nexus_forge_spark.operators.dedup import remove_duplicated_spans
@@ -868,12 +862,10 @@ def prepare_training_corpus(
     q = gopher_quality_filter(df, text_col=text_col, **(quality or {}))
     kept = q.where(F.col("keep")).select(id_col, text_col)
     red = redact_pii(kept, text_col, id_col).select(id_col, text_col)
-    if materialize:
-        red = red.localCheckpoint(eager=True)
+    red = red.localCheckpoint(eager=True)
     para = remove_duplicate_paragraphs(red, text_col, id_col)
     base = para.where(F.col(text_col) != "").select(id_col, text_col)
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    base = base.localCheckpoint(eager=True)
     spans = remove_duplicated_spans(base, k=k, text_col=text_col, id_col=id_col)
     survivors = spans.where(F.col("clean_text") != "")
     return hash_split(survivors, splits, id_col=id_col).select(

@@ -420,37 +420,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over normalized tokens.
-
-    Per token: 60-bit integer from the first 15 hex chars of md5; each bit
-    votes +1/-1; signature bit b = majority vote.  conv() keeps it portable
-    and branch-free; Hamming distance = bit_count(a XOR b).
-    """
-    toks = normalized_tokens(text)
-    # per-token 60-bit integer; single fold accumulates per-bit +1/-1 votes
-    # with pure integer bitwiseAND against a literal powers array (a per-bit
-    # aggregate, or per-bit string ops, re-inline/re-hash 60x — codegen and
-    # md5 blow-up)
-    tok_hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(60)])
-
-    def step(acc: Column, h: Column) -> Column:
-        bits = F.transform(
-            powers, lambda p: F.when(h.bitwiseAND(p) != 0, 1).otherwise(-1)
-        )
-        return F.zip_with(acc, bits, lambda a, b: a + b)
-
-    votes = F.aggregate(tok_hashes, F.array_repeat(F.lit(0), 60), step)
-    return F.aggregate(
-        F.zip_with(votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-doc SimHash via explode + 60 codegen'd vote sums (same rationale
     as minhash_signatures: HOF folds are interpreted; aggregates are not)."""
@@ -517,21 +486,6 @@ def simhash_pairs(
     return pairs.select("a", "b", dist.cast("int").alias("hamming")).where(
         F.col("hamming") <= max_distance
     )
-
-
-def window_keys(text: Column, k: int) -> Column:
-    """All consecutive k-token windows of the normalized token stream, each
-    keyed by md5 of the space-joined window (engine-portable: DuckDB md5 of
-    the same string is identical).  Empty array when the doc has < k tokens."""
-    toks = normalized_tokens(text)
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.md5(F.array_join(F.slice(toks, i + 1, k), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def duplicated_window_stats(

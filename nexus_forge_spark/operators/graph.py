@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nexus_forge_spark.functions.itermetrics import checkpoint_observed
+from nexus_forge_spark.functions.itermetrics import (
+    checkpoint_observed,
+    emptied,
+    iterate,
+    unchanged,
+)
 
 PPM = 1_000_000
 
@@ -66,53 +71,63 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     ranks = nodes.select("node", F.lit(PPM // n).cast("long").alias("rank_micro"))
-    for it in range(iterations):
-        prev = ranks
-        contribs = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_micro div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
+
+    def propagate(ranks: DataFrame, rnd) -> DataFrame:
+        contribs = _rank_inflow(e, deg, ranks)
+        # the previous ranks cover the node set, so they drive the join and,
+        # when a collector reads them, ride along: `changed` stalling at a
+        # high plateau = oscillation/skew, `mass_micro` decaying = dangling
+        # drain growing
+        prev = [F.col("rank_micro").alias("prev_micro")] if rnd.observe else []
+        return rnd.checkpoint(
+            ranks.join(contribs, "node", "left").select(
                 "node",
                 (
                     F.lit(base)
                     + F.expr(f"{damping_pct} * coalesce(s, 0) div 100")
                 ).cast("long").alias("rank_micro"),
-            )
-            .localCheckpoint(eager=True)
+                *prev,
+            ),
+            changed=F.sum((F.col("rank_micro") != F.col("prev_micro")).cast("long")),
+            mass_micro=F.sum("rank_micro"),
         )
-        if metrics is not None:
-            # both frames are checkpointed -> cached scans, no recompute;
-            # `changed` stalling at a high plateau = oscillation/skew,
-            # `mass_micro` decaying = dangling drain growing
-            agg = (
-                ranks.join(
-                    prev.withColumnRenamed("rank_micro", "prev_micro"), "node"
-                )
-                .agg(
-                    F.sum(
-                        (F.col("rank_micro") != F.col("prev_micro")).cast("long")
-                    ).alias("changed"),
-                    F.sum("rank_micro").alias("mass"),
-                )
-                .collect()[0]
-            )
-            metrics.record(
-                "pagerank",
-                it,
-                changed=int(agg["changed"] or 0),
-                mass_micro=int(agg["mass"] or 0),
-                nodes=n,
-            )
-    return ranks
+
+    return iterate(
+        propagate, ranks, iterations, metrics=metrics, op="pagerank",
+        report=lambda _, cur: {**cur, "nodes": n},
+    ).select("node", "rank_micro")
+
+
+def _rank_inflow(e: DataFrame, deg: DataFrame, ranks: DataFrame) -> DataFrame:
+    """(node, s): one iteration's rank inflow of :func:`pagerank` and
+    :func:`personalized_pagerank`, the sum over a node's in-edges of
+    ``rank_micro div outdeg`` of the source."""
+    return (
+        e.join(ranks.select(F.col("node").alias("src"), "rank_micro"), "src")
+        .join(deg, "src")
+        .select(
+            F.col("dst").alias("node"),
+            F.expr("rank_micro div outdeg").alias("c"),
+        )
+        .groupBy("node")
+        .agg(F.sum("c").alias("s"))
+    )
+
+
+def _undirected(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct undirected edges (p, q) with p = greatest(a, b) > q;
+    self-loops dropped."""
+    return (
+        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
+        .where(F.col(a) != F.col(b))
+        .select(F.greatest("x", "y").alias("p"), F.least("x", "y").alias("q"))
+        .distinct()
+    )
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    """(p, q) edges plus their (q, p) mirror images."""
+    return und.unionByName(und.select(F.col("q").alias("p"), F.col("p").alias("q")))
 
 
 def oriented_edges(
@@ -128,18 +143,8 @@ def oriented_edges(
     # the normalized edge set feeds the degree count AND both sides of the
     # orientation join; checkpoint so an expensive upstream edge producer
     # (e.g. a MinHash near-dup join) runs once, not once per branch
-    und = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .where(F.col(a) != F.col(b))
-        .select(
-            F.greatest("x", "y").alias("p"), F.least("x", "y").alias("q")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(
-        und.select(F.col("q").alias("p"), F.col("p").alias("q"))
-    )
+    und = _undirected(edges, a, b).localCheckpoint(eager=True)
+    sym = _symmetric(und)
     deg = sym.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("d"))
     ranked = (
         sym.join(deg, "p")
@@ -210,27 +215,40 @@ def khop_distances(
     exactly once no matter how many paths reach it — the work per hop is
     O(edges touched), never O(paths).  localCheckpoint per hop truncates
     the growing lineage (the round-N plan would otherwise re-derive every
-    earlier frontier).  Fixed ``max_hops`` keeps the driver loop free of
-    per-iteration count() actions.
+    earlier frontier), and that checkpoint job also counts the new
+    frontier: the loop returns at the first empty one, since every later
+    hop would add nothing.
     """
     frontier = seeds.select(F.col(node).alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("int")
     )
-    visited = frontier.localCheckpoint(eager=True)
-    frontier = visited
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    for hop in range(1, max_hops + 1):
-        nxt = (
+    return _bfs(frontier.localCheckpoint(eager=True), e, max_hops)
+
+
+def _bfs(
+    start: DataFrame, e: DataFrame, max_hops: int, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The level-synchronous BFS of :func:`khop_distances` and
+    :func:`harmonic_centrality`: from the checkpointed ``start`` rows
+    (*keys, node, dist=0) over ``e`` (src, dst), every (*keys, node)
+    reached within ``max_hops`` with its minimum dist.  Each hop's
+    checkpoint job counts the new frontier, and the loop returns at the
+    first empty one."""
+
+    def hop(state: tuple, rnd) -> tuple:
+        frontier, visited = state
+        nxt = rnd.checkpoint(
             frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+            .select(*keys, F.col("dst").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(hop).cast("int"))
-            .localCheckpoint(eager=True)
+            .join(visited.select(*keys, "node"), [*keys, "node"], "left_anti")
+            .withColumn("dist", F.lit(rnd.index + 1).cast("int")),
+            new=F.count(F.lit(1)),
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+        return nxt, rnd.checkpoint(visited.unionByName(nxt))
+
+    return iterate(hop, (start, start), max_hops, until=emptied("new"))[1]
 
 
 def label_propagation(
@@ -269,25 +287,17 @@ def label_propagation(
     (``materialize=False`` keeps the plan declarative, e.g. for plan
     inspection or when a caller manages its own stage boundaries).
     """
-    und = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .where(F.col(a) != F.col(b))
-        .select(F.greatest("x", "y").alias("p"), F.least("x", "y").alias("q"))
-        .distinct()
-    )
+    und = _undirected(edges, a, b)
     if materialize:
         und = und.localCheckpoint(eager=True)
-    sym = und.unionByName(
-        und.select(F.col("q").alias("p"), F.col("p").alias("q"))
-    ).select(F.col("p").alias("node"), F.col("q").alias("nbr"))
+    sym = _symmetric(und).select(F.col("p").alias("node"), F.col("q").alias("nbr"))
     labels = (
         sym.select("node")
         .distinct()
         .select("node", F.col("node").alias("community"))
     )
-    if materialize:
-        labels = labels.localCheckpoint(eager=True)
-    for _ in range(iterations):
+
+    def vote(labels: DataFrame) -> DataFrame:
         ballots = (
             sym.join(
                 labels.select(
@@ -298,14 +308,19 @@ def label_propagation(
             .groupBy("node", "lbl")
             .agg(F.count(F.lit(1)).cast("long").alias("votes"))
         )
-        labels = ballots.groupBy("node").agg(
+        return ballots.groupBy("node").agg(
             F.min_by(
                 "lbl", F.struct((-F.col("votes")).alias("nv"), F.col("lbl"))
             ).alias("community")
         )
-        if materialize:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    return iterate(
+        lambda labels, rnd: (
+            rnd.checkpoint(vote(labels)) if materialize else vote(labels)
+        ),
+        labels.localCheckpoint(eager=True) if materialize else labels,
+        iterations,
+    )
 
 
 def cooccurrence_edges(
@@ -400,7 +415,6 @@ def kcore(
     a: str = "a",
     b: str = "b",
     max_iter: int = 16,
-    materialize: bool = True,
     metrics=None,
 ) -> DataFrame:
     """The k-core of an undirected graph: iteratively peel nodes of degree
@@ -418,57 +432,41 @@ def kcore(
     semi-join of edges against surviving nodes (AQE turns the node-set
     side into a broadcast once it shrinks below threshold).  The edge set
     only ever shrinks; ``localCheckpoint`` pins each round so lineage
-    stays flat (``materialize=False`` keeps the plan declarative for
-    inspection).  Converges in O(degeneracy) rounds; raises if
-    ``max_iter`` is exhausted first (same honesty contract as
+    stays flat, and that job also counts the surviving edges: an
+    unchanged count is the fixpoint.  Converges in O(degeneracy) rounds;
+    raises if ``max_iter`` is exhausted first (same honesty contract as
     canonicalize.connected_components).
 
     Returns (node, degree) for nodes in the k-core, with their in-core
     degree.
     """
-    und = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .where(F.col(a) != F.col(b))
-        .select(F.greatest("x", "y").alias("p"), F.least("x", "y").alias("q"))
-        .distinct()
-    )
-    if materialize:
-        und = und.localCheckpoint(eager=True)
-    n_edges = und.count()  # one action per round total (not two): the
-    # previous round's count is remembered, never recomputed
-    for _it in range(max_iter):
-        sym = und.unionByName(
-            und.select(F.col("q").alias("p"), F.col("p").alias("q"))
-        )
-        deg = sym.groupBy("p").agg(F.count(F.lit(1)).alias("deg"))
+    und, seen = checkpoint_observed(_undirected(edges, a, b), edges=F.count(F.lit(1)))
+
+    def peel(und: DataFrame, rnd) -> DataFrame:
+        deg = _symmetric(und).groupBy("p").agg(F.count(F.lit(1)).alias("deg"))
         survivors = deg.where(F.col("deg") >= k).select("p")
-        pruned = (
+        return rnd.checkpoint(
             und.join(survivors.select(F.col("p").alias("_sp")),
                      F.col("p") == F.col("_sp"), "left_semi")
             .join(survivors.select(F.col("p").alias("_sq")),
-                  F.col("q") == F.col("_sq"), "left_semi")
+                  F.col("q") == F.col("_sq"), "left_semi"),
+            edges=F.count(F.lit(1)),
         )
-        if materialize:
-            pruned = pruned.localCheckpoint(eager=True)
-        n_pruned = pruned.count()
-        if metrics is not None:
-            metrics.record(
-                "kcore", _it, edges=n_pruned, peeled=n_edges - n_pruned
-            )
-        und = pruned
-        # fixpoint: no edge was dropped this round
-        if n_pruned == n_edges:
-            break
-        n_edges = n_pruned
-    else:
-        raise RuntimeError(
+
+    # fixpoint: no edge was dropped this round
+    und = iterate(
+        peel, und, max_iter, prev=seen,
+        until=unchanged("edges"),
+        error=lambda _: RuntimeError(
             f"kcore did not converge in {max_iter} peeling rounds; "
             "raise max_iter (expected O(degeneracy) rounds)"
-        )
-    sym = und.unionByName(
-        und.select(F.col("q").alias("p"), F.col("p").alias("q"))
+        ),
+        metrics=metrics, op="kcore",
+        report=lambda prev, cur: {
+            "edges": cur["edges"], "peeled": prev["edges"] - cur["edges"]
+        },
     )
-    return sym.groupBy(F.col("p").alias("node")).agg(
+    return _symmetric(und).groupBy(F.col("p").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
 
@@ -481,7 +479,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "w",
     node: str = "node",
-    materialize: bool = True,
     metrics=None,
 ) -> DataFrame:
     """Multi-seed single-source shortest paths over positively-weighted
@@ -518,33 +515,26 @@ def sssp(
     dist = seeds.select(F.col(node).alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
-    if materialize:
-        dist = dist.localCheckpoint(eager=True)
-    prev_n = None
-    for it in range(rounds):
+
+    def relax(dist: DataFrame, rnd) -> DataFrame:
         relaxed = dist.join(e, dist["node"] == e["src"]).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+        return rnd.checkpoint(
+            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist")),
+            reached=F.count(F.lit(1)),
         )
-        if materialize:
-            dist = dist.localCheckpoint(eager=True)
-        if metrics is not None:
-            # reached-set growth per round: a frontier that stops growing
-            # while rounds remain = converged (later rounds no-op); a
-            # round whose growth stalls without converging = skew signal
-            cur_n = dist.count()
-            metrics.record(
-                "sssp",
-                it,
-                reached=cur_n,
-                grew=cur_n - (prev_n if prev_n is not None else 0),
-            )
-            prev_n = cur_n
-    return dist
+
+    # reached-set growth per round: a frontier that stops growing while
+    # rounds remain = converged (later rounds no-op); a round whose growth
+    # stalls without converging = skew signal
+    return iterate(
+        relax, dist.localCheckpoint(eager=True), rounds, metrics=metrics, op="sssp",
+        report=lambda prev, cur: {
+            "reached": cur["reached"],
+            "grew": cur["reached"] - prev.get("reached", 0),
+        },
+    )
 
 
 def sql_sssp(edges_sql: str, seeds_sql: str, rounds: int) -> str:
@@ -667,7 +657,6 @@ def random_walks(
     src: str = "src",
     dst: str = "dst",
     starts: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Deterministic random-walk corpus generation (the DeepWalk /
     node2vec p=q=1 sampling stage): ``num_walks`` walks of up to
@@ -700,9 +689,8 @@ def random_walks(
         .distinct()
         .groupBy("node")
         .agg(F.sort_array(F.collect_set("nbr")).alias("nbrs"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        adj = adj.localCheckpoint(eager=True)
     base = starts if starts is not None else edges.select(
         F.col(src).alias("node")
     ).distinct()
@@ -713,18 +701,17 @@ def random_walks(
     )
     out = cur.select(
         "start", "rep", F.lit(0).cast("int").alias("step"), "node"
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        cur = cur.localCheckpoint(eager=True)
-    for step in range(1, walk_length + 1):
+    ).localCheckpoint(eager=True)
+
+    def walk(state: tuple, rnd) -> tuple:
+        cur, out = state
+        step = rnd.index + 1
         draw = hash60(
             F.concat_ws("\x1f", F.col("start"), F.col("rep"), F.lit(step)),
             salt,
         )
-        stepped = (
-            cur.join(adj, "node")
-            .select(
+        stepped = rnd.checkpoint(
+            cur.join(adj, "node").select(
                 "start",
                 "rep",
                 F.element_at(
@@ -732,15 +719,13 @@ def random_walks(
                 ).alias("node"),
             )
         )
-        if materialize:
-            stepped = stepped.localCheckpoint(eager=True)
-        out = out.unionByName(
+        return stepped, out.unionByName(
             stepped.select(
                 "start", "rep", F.lit(step).cast("int").alias("step"), "node"
             )
         )
-        cur = stepped
-    return out
+
+    return iterate(walk, (cur.localCheckpoint(eager=True), out), walk_length)[1]
 
 
 def sql_random_walks(
@@ -849,18 +834,10 @@ def personalized_pagerank(
             .alias("rank_micro"),
         )
     )
-    for _ in range(iterations):
-        contribs = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_micro div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
+
+    def propagate(ranks: DataFrame, rnd) -> DataFrame:
+        contribs = _rank_inflow(e, deg, ranks)
+        return rnd.checkpoint(
             nodes.join(contribs, "node", "left")
             .join(F.broadcast(seed_mark), "node", "left")
             .select(
@@ -872,9 +849,9 @@ def personalized_pagerank(
                     + F.expr(f"{damping_pct} * coalesce(s, 0) div 100")
                 ).cast("long").alias("rank_micro"),
             )
-            .localCheckpoint(eager=True)
         )
-    return ranks
+
+    return iterate(propagate, ranks, iterations)
 
 
 def harmonic_centrality(
@@ -903,7 +880,8 @@ def harmonic_centrality(
     key — per hop one frontier-onto-edges shuffle join plus one
     (seed, node) anti-join against the visited set, so state is
     O(reached pairs), work per hop O(edges touched x seeds reaching
-    them); localCheckpoint per hop keeps lineage flat.  Seeds scale the
+    them); localCheckpoint per hop keeps lineage flat, and the loop
+    returns at the first hop that reaches no new pair.  Seeds scale the
     cost linearly — that is the sampling dial.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -913,18 +891,7 @@ def harmonic_centrality(
         .select("seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    visited = frontier
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    visited = _bfs(frontier, e, max_hops, keys=("seed",))
     return (
         visited.where(F.col("dist") > 0)
         .groupBy("node")
@@ -976,7 +943,6 @@ def ktruss(
     a: str = "a",
     b: str = "b",
     max_iter: int = 16,
-    materialize: bool = True,
 ) -> DataFrame:
     """The k-truss of an undirected graph: iteratively drop edges in
     fewer than k-2 triangles until every surviving edge has >= k-2
@@ -996,7 +962,8 @@ def ktruss(
     Scale posture: per round, one self-join pair for triangles (equi
     keys, AQE-skew-handled), one edge-keyed support aggregate
     (map-side-combined), one filter; the edge set only shrinks and each
-    round is pinned with localCheckpoint so lineage stays flat.
+    round is pinned with localCheckpoint so lineage stays flat; that job
+    also counts the surviving edges, the fixpoint test.
     Converges in O(peeling depth) rounds; raises on max_iter exhaustion
     (the kcore/connected_components honesty contract).
 
@@ -1019,38 +986,31 @@ def ktruss(
         .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
         .distinct()
     )
-    if materialize:
-        und = und.localCheckpoint(eager=True)
-    n_edges = und.count()
-    sup = None
-    for _ in range(max_iter):
+    und, seen = checkpoint_observed(und, edges=F.count(F.lit(1)))
+
+    def peel(und: DataFrame, rnd) -> DataFrame:
         e12 = und.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
         e23 = und.select(F.col("lo").alias("v"), F.col("hi").alias("w"))
         e13 = und.select(F.col("lo").alias("u"), F.col("hi").alias("w"))
         tris = e12.join(e23, "v").join(e13, ["u", "w"])
-        sup = (
+        return rnd.checkpoint(
             tris.select(F.col("u").alias("lo"), F.col("v").alias("hi"))
             .unionAll(tris.select(F.col("v").alias("lo"), F.col("w").alias("hi")))
             .unionAll(tris.select(F.col("u").alias("lo"), F.col("w").alias("hi")))
             .groupBy("lo", "hi")
             .agg(F.count(F.lit(1)).cast("long").alias("support"))
-            .where(F.col("support") >= k - 2)
+            .where(F.col("support") >= k - 2),
+            edges=F.count(F.lit(1)),
         )
-        if materialize:
-            sup = sup.localCheckpoint(eager=True)
-        n_pruned = sup.count()
-        und = sup.select("lo", "hi")
-        if n_pruned == n_edges:
-            break
-        n_edges = n_pruned
-        if n_pruned == 0:
-            break
-    else:
-        raise RuntimeError(
+
+    return iterate(
+        peel, und, max_iter, prev=seen,
+        until=lambda prev, cur: cur["edges"] in (prev["edges"], 0),
+        error=lambda _: RuntimeError(
             f"ktruss did not converge in {max_iter} peeling rounds; "
             "raise max_iter (expected O(peeling depth) rounds)"
-        )
-    return sup
+        ),
+    )
 
 
 def boruvka_msf(
@@ -1104,8 +1064,25 @@ def boruvka_msf(
         .select("node", F.col("node").alias("comp"))
         .localCheckpoint(eager=True)
     )
-    msf = None
-    for _ in range(max_iter):
+
+    def merge_and_elect(state: tuple, rnd) -> tuple:
+        comp, sel, msf = state
+        if sel is not None:  # merge the components last round elected
+            picked = sel.select("lo", "hi", "w")
+            msf = picked if msf is None else rnd.checkpoint(msf.unionByName(picked))
+            mapping = connected_components(
+                sel.select(F.col("cl").alias("a"), F.col("ch").alias("b"))
+            )
+            comp = rnd.checkpoint(
+                comp.join(
+                    mapping.select(
+                        F.col("entity_id").alias("comp"),
+                        F.col("canonical_id").alias("__new"),
+                    ),
+                    "comp",
+                    "left",
+                ).select("node", F.coalesce("__new", "comp").alias("comp"))
+            )
         ec = (
             e.join(
                 comp.select(F.col("node").alias("lo"), F.col("comp").alias("cl")),
@@ -1121,41 +1098,20 @@ def boruvka_msf(
         cand = ec.select(F.col("cl").alias("c"), key.alias("k")).unionAll(
             ec.select(F.col("ch").alias("c"), key.alias("k"))
         )
-        sel = (
-            cand.groupBy("c")
-            .agg(F.min("k").alias("k"))
-            .select("k.*")
-            .distinct()
-            .localCheckpoint(eager=True)
+        sel = rnd.checkpoint(
+            cand.groupBy("c").agg(F.min("k").alias("k")).select("k.*").distinct(),
+            elected=F.count(F.lit(1)),
         )
-        if sel.isEmpty():
-            break
-        picked = sel.select("lo", "hi", "w")
-        msf = (
-            picked
-            if msf is None
-            else msf.unionByName(picked).localCheckpoint(eager=True)
-        )
-        mapping = connected_components(
-            sel.select(F.col("cl").alias("a"), F.col("ch").alias("b"))
-        )
-        comp = (
-            comp.join(
-                mapping.select(
-                    F.col("entity_id").alias("comp"),
-                    F.col("canonical_id").alias("__new"),
-                ),
-                "comp",
-                "left",
-            )
-            .select("node", F.coalesce("__new", "comp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        raise RuntimeError(
+        return comp, sel, msf
+
+    _, _, msf = iterate(
+        merge_and_elect, (comp, None, None), max_iter,
+        until=emptied("elected"),
+        error=lambda _: RuntimeError(
             f"boruvka_msf did not converge in {max_iter} rounds; "
             "raise max_iter (components at least halve per round)"
-        )
+        ),
+    )
     if msf is None:
         return e.where(F.lit(False)).select("lo", "hi", "w")
     return msf
@@ -1222,8 +1178,9 @@ def fastrp_embeddings(
         .cast("long")
         .alias("v"),
     ).localCheckpoint(eager=True)
-    acc = None
-    for t in range(rounds):
+
+    def mean_step(state: tuple, rnd) -> tuple:
+        x, acc = state
         nbsum = (
             e.join(x.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "dim")
@@ -1232,13 +1189,16 @@ def fastrp_embeddings(
             .select("node", "dim", F.expr("s DIV deg").alias("v"))
         )
         # nodes without out-neighbors: value 0 this iterate
-        x = (
+        x = rnd.checkpoint(
             init.join(nbsum, ["node", "dim"], "left")
             .select("node", "dim", F.coalesce("v", F.lit(0)).cast("long").alias("v"))
-            .localCheckpoint(eager=True)
         )
-        contrib = x.select("node", "dim", (F.col("v") * F.lit(weights[t])).alias("c"))
-        acc = contrib if acc is None else acc.unionByName(contrib)
+        contrib = x.select(
+            "node", "dim", (F.col("v") * F.lit(weights[rnd.index])).alias("c")
+        )
+        return x, contrib if acc is None else acc.unionByName(contrib)
+
+    _, acc = iterate(mean_step, (x, None), rounds)
     return (
         acc.groupBy("node", "dim")
         .agg(F.sum("c").cast("long").alias("val"))
@@ -1331,20 +1291,23 @@ def hits_scores(
         .localCheckpoint(eager=True)
     )
     h = nodes.select("node", F.lit(scale).cast("long").alias("v"))
-    a = None
-    for _ in range(rounds):
+
+    def hub_auth(state: tuple, rnd) -> tuple:
+        h, _ = state
         a_raw = (
             e.join(h.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("v").alias("raw"))
         )
-        a = _max_normalize(a_raw, scale).localCheckpoint(eager=True)
+        a = rnd.checkpoint(_max_normalize(a_raw, scale))
         h_raw = (
             e.join(a.withColumnRenamed("node", "dst").withColumnRenamed("v", "av"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("av").alias("raw"))
         )
-        h = _max_normalize(h_raw, scale).localCheckpoint(eager=True)
+        return rnd.checkpoint(_max_normalize(h_raw, scale)), a
+
+    h, a = iterate(hub_auth, (h, None), rounds)
     return (
         nodes.join(h.withColumnRenamed("v", "hub_ppm"), "node", "left")
         .join(a.withColumnRenamed("v", "auth_ppm"), "node", "left")
@@ -1448,8 +1411,9 @@ def betweenness_sampled(
 
     Scale: forward = one frontier-edges shuffle + one (seed, node)
     aggregate + one anti-join per hop (the harmonic_centrality shape
-    plus the sigma sum); backward = one join per LEVEL (max_hops of
-    them), each touching only that level's pairs.  Seeds dial cost
+    plus the sigma sum), returning at the first hop that reaches no new
+    pair; backward = one join per LEVEL the forward pass produced, each
+    touching only that level's pairs.  Seeds dial cost
     linearly.  Output: (node, betweenness_ppm, n_seed_paths).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -1463,25 +1427,31 @@ def betweenness_sampled(
         )
         .localCheckpoint(eager=True)
     )
-    visited = frontier.select("seed", "node")
-    levels = [frontier]
-    for _hop in range(1, max_hops + 1):
-        nxt = (
+
+    def forward(state: tuple, rnd) -> tuple:
+        levels, visited = state
+        nxt = rnd.checkpoint(
             levels[-1]
             .join(e, levels[-1]["node"] == e["src"])
             .select("seed", F.col("dst").alias("node"), "sigma")
             .join(visited, ["seed", "node"], "left_anti")
             .groupBy("seed", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("sigma").alias("sigma")),
+            new=F.count(F.lit(1)),
         )
-        visited = visited.unionByName(nxt.select("seed", "node")).localCheckpoint(
-            eager=True
+        return [*levels, nxt], rnd.checkpoint(
+            visited.unionByName(nxt.select("seed", "node"))
         )
-        levels.append(nxt)
-    delta = None  # (seed, node, delta_ppm) at the level below the cursor
-    acc = None
-    for lvl in range(len(levels) - 1, 0, -1):
+
+    levels, _ = iterate(
+        forward, ([frontier], frontier.select("seed", "node")), max_hops,
+        until=emptied("new"),
+    )
+
+    def backward(state: tuple, rnd) -> tuple:
+        # delta: (seed, node, delta_ppm) at the level below the cursor
+        delta, acc = state
+        lvl = len(levels) - 1 - rnd.index
         down = levels[lvl].select(
             "seed", F.col("node").alias("w"), F.col("sigma").alias("sigma_w")
         )
@@ -1506,13 +1476,15 @@ def betweenness_sampled(
                 ).alias("c"),
             )
         )
-        delta = (
+        delta = rnd.checkpoint(
             contrib.groupBy("seed", "node")
             .agg(F.sum("c").cast("long").alias("delta_ppm"))
-            .localCheckpoint(eager=True)
         )
         if lvl - 1 > 0:
             acc = delta if acc is None else acc.unionByName(delta)
+        return delta, acc
+
+    _, acc = iterate(backward, (None, None), len(levels) - 1)
     if acc is None:
         return frontier.select(
             F.col("node"),
@@ -1741,7 +1713,8 @@ def earliest_arrival(
     known arrival (anti-join by comparison), so each round's frontier
     carries only improved labels and the loop is monotone — at most
     ``max_hops`` rounds, each one shuffle join + one aggregate +
-    one improvement join, state localCheckpointed.  All epoch-micros
+    one improvement join, state localCheckpointed; the loop returns at
+    the first round that improves no label.  All epoch-micros
     BIGINT, no calendar functions (no TZ hazard by construction).
 
     Output: (seed, node, arrival_micros, hops) — hops = round that
@@ -1763,30 +1736,31 @@ def earliest_arrival(
         )
         .localCheckpoint(eager=True)
     )
-    frontier = best
-    for hop in range(1, max_hops + 1):
+
+    def relax(state: tuple, rnd) -> tuple:
+        frontier, best = state
         cand = (
             frontier.join(e, frontier["node"] == e["src"])
             .where(F.col("ts") >= F.col("arr"))
             .groupBy("seed", F.col("dst").alias("node"))
             .agg(F.min("ts").alias("arr"))
         )
-        improved = (
+        improved = rnd.checkpoint(
             cand.join(
                 best.select("seed", "node", F.col("arr").alias("old_arr")),
                 ["seed", "node"],
                 "left",
             )
             .where(F.col("old_arr").isNull() | (F.col("arr") < F.col("old_arr")))
-            .select("seed", "node", "arr", F.lit(hop).cast("int").alias("hops"))
-            .localCheckpoint(eager=True)
+            .select("seed", "node", "arr", F.lit(rnd.index + 1).cast("int").alias("hops")),
+            new=F.count(F.lit(1)),
         )
-        best = (
+        return improved, rnd.checkpoint(
             best.join(improved.select("seed", "node"), ["seed", "node"], "left_anti")
             .unionByName(improved)
-            .localCheckpoint(eager=True)
         )
-        frontier = improved
+
+    _, best = iterate(relax, (best, best), max_hops, until=emptied("new"))
     return best.where(F.col("hops") > 0).select(
         "seed", "node", F.col("arr").alias("arrival_micros"), "hops"
     )
@@ -1977,7 +1951,8 @@ def louvain_moves(
     comm = deg.select("node", F.col("node").alias("community")).localCheckpoint(
         eager=True
     )
-    for rnd in range(rounds):
+
+    def move(comm: DataFrame, rnd) -> DataFrame:
         cu = comm.select(F.col("node").alias("y"), F.col("community").alias("c_u"))
         evc = (
             und.join(cu, "y")
@@ -2029,8 +2004,8 @@ def louvain_moves(
             .groupBy("node", "s")
             .agg(F.min("cand").alias("community"))
         )
-        eligible = (hash60(F.col("node"), "lv") % 2) == (rnd % 2)
-        comm = (
+        eligible = (hash60(F.col("node"), "lv") % 2) == (rnd.index % 2)
+        return rnd.checkpoint(
             best.select("node", F.col("community").alias("new_c"))
             .join(comm.select("node", F.col("community").alias("old_c")), "node")
             .select(
@@ -2039,9 +2014,9 @@ def louvain_moves(
                     "community"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-    return comm
+
+    return iterate(move, comm, rounds)
 
 
 def sql_louvain_moves(edges_sql: str, rounds: int = 3) -> str:
@@ -2142,6 +2117,36 @@ def hyperball_nf(
     the reference's graph surface is SPARQL passthrough
     (kgforge/core/archetypes/read_only_store.py:212-245).
     """
+    out = _hyperball_rounds(
+        edges, rounds, precision, salt, src_col, dst_col,
+        lambda sketch, est, t: sketch.select(
+            F.round(est).cast("long").alias("est")
+        ).agg(
+            F.lit(t).cast("int").alias("t"),
+            F.sum("est").cast("long").alias("ball_sum"),
+        ),
+    )
+    fin = out.where(F.col("t") == rounds).select(F.col("ball_sum").alias("fin"))
+    return out.crossJoin(F.broadcast(fin)).select(
+        "t",
+        "ball_sum",
+        F.expr("ball_sum * 1000000 DIV fin").cast("long").alias("pct_ppm"),
+    )
+
+
+def _hyperball_rounds(
+    edges: DataFrame,
+    rounds: int,
+    precision: int,
+    salt: str,
+    src_col: str,
+    dst_col: str,
+    per_round,
+) -> DataFrame:
+    """The HyperBall round loop shared by :func:`hyperball_nf` and
+    :func:`hyperball_closeness`: the union over t in [0, rounds] of
+    ``per_round(sketch, est, t)``, where ``sketch`` holds the round-t
+    (node, regs) counters and ``est`` is the per-node estimate column."""
     from nexus_forge_spark.operators.sketches import HASH_BITS, hash60
 
     m = 1 << precision
@@ -2193,33 +2198,20 @@ def hyperball_nf(
         / est_num.cast("double")
     )
 
-    def ball_sum(sketch: DataFrame, t: int) -> DataFrame:
-        return sketch.select(F.round(est).cast("long").alias("est")).agg(
-            F.lit(t).cast("int").alias("t"),
-            F.sum("est").cast("long").alias("ball_sum"),
-        )
-
     merge_aggs = [F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)]
     pack = F.array(*[F.col(f"_r{i}") for i in range(m)]).alias("regs")
-    out = ball_sum(sk, 0)
-    for t in range(1, rounds + 1):
+
+    def merge(state: tuple, rnd) -> tuple:
+        sk, out = state
         prop = e.join(sk.withColumnRenamed("node", "dst"), "dst").select(
             F.col("src").alias("node"), "regs"
         )
-        sk = (
-            sk.unionByName(prop)
-            .groupBy("node")
-            .agg(*merge_aggs)
-            .select("node", pack)
-            .localCheckpoint(eager=True)
+        sk = rnd.checkpoint(
+            sk.unionByName(prop).groupBy("node").agg(*merge_aggs).select("node", pack)
         )
-        out = out.unionByName(ball_sum(sk, t))
-    fin = out.where(F.col("t") == rounds).select(F.col("ball_sum").alias("fin"))
-    return out.crossJoin(F.broadcast(fin)).select(
-        "t",
-        "ball_sum",
-        F.expr("ball_sum * 1000000 DIV fin").cast("long").alias("pct_ppm"),
-    )
+        return sk, out.unionByName(per_round(sk, est, rnd.index + 1))
+
+    return iterate(merge, (sk, per_round(sk, est, 0)), rounds)[1]
 
 
 def sql_hyperball_nf(
@@ -2620,14 +2612,15 @@ def jp_coloring(
         e.select(F.col("y").alias("x"), F.col("x").alias("y"))
     ).localCheckpoint(eager=True)
     nodes = sym.select(F.col("x").alias("node")).distinct()
-    pri = nodes.select(
-        "node", hash60(F.col("node"), salt).alias("h")
-    ).localCheckpoint(eager=True)
-    uncolored = pri
-    colored = None
-    for _ in range(max_iter):
-        if uncolored.isEmpty():
-            break
+    pri, seen = checkpoint_observed(
+        nodes.select("node", hash60(F.col("node"), salt).alias("h")),
+        uncolored=F.count(F.lit(1)),
+    )
+    if seen["uncolored"] == 0:
+        return nodes.select("node", F.lit(0).cast("int").alias("color"))
+
+    def color(state: tuple, rnd) -> tuple:
+        uncolored, colored = state
         ux = uncolored.select(F.col("node").alias("x"), F.col("h").alias("hx"))
         uy = uncolored.select(F.col("node").alias("y"), F.col("h").alias("hy"))
         blocked = (
@@ -2640,9 +2633,7 @@ def jp_coloring(
             .select(F.col("x").alias("node"))
             .distinct()
         )
-        winners = uncolored.join(blocked, "node", "leftanti").localCheckpoint(
-            eager=True
-        )
+        winners = rnd.checkpoint(uncolored.join(blocked, "node", "leftanti"))
         if colored is None:
             ncolors = winners.select(
                 "node", F.array().cast("array<int>").alias("cs")
@@ -2672,17 +2663,20 @@ def jp_coloring(
                 " CASE WHEN c = acc THEN acc + 1 ELSE acc END)"
             ).cast("int").alias("color"),
         )
-        colored = (
+        colored = rnd.checkpoint(
             newc if colored is None else colored.unionByName(newc)
-        ).localCheckpoint(eager=True)
-        uncolored = uncolored.join(winners, "node", "leftanti").localCheckpoint(
-            eager=True
         )
-    if not uncolored.isEmpty():
-        raise ColoringError(f"uncolored nodes remain after {max_iter} rounds")
-    return colored if colored is not None else nodes.select(
-        "node", F.lit(0).cast("int").alias("color")
+        return rnd.checkpoint(
+            uncolored.join(winners, "node", "leftanti"),
+            uncolored=F.count(F.lit(1)),
+        ), colored
+
+    _, colored = iterate(
+        color, (pri, None), max_iter,
+        until=emptied("uncolored"),
+        error=lambda _: ColoringError(f"uncolored nodes remain after {max_iter} rounds"),
     )
+    return colored
 
 
 def sql_jp_coloring(edges_sql: str, rounds: int = 20, salt: str = "jp") -> str:
@@ -2766,71 +2760,14 @@ def hyperball_closeness(
     estimate, dist_sum the estimated within-R distance sum (the
     closeness denominator; 0 for isolated-in-R nodes).
     """
-    from nexus_forge_spark.operators.sketches import HASH_BITS, hash60
-
-    m = 1 << precision
-    rho_max = HASH_BITS - precision + 1
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    h = hash60(F.col("node"), salt)
-    wq = F.shiftright(h, precision)
-    tz = F.round(F.log2(wq.bitwiseAND(-wq))).cast("int")
-    rho = F.when(wq == 0, F.lit(rho_max)).otherwise(tz + F.lit(1))
-    sk = nodes.select(
-        "node",
-        F.pmod(h, F.lit(m)).cast("int").alias("reg"),
-        rho.alias("rho"),
-    ).select(
-        "node",
-        F.expr(
-            f"transform(sequence(0, {m - 1}),"
-            " i -> CAST(CASE WHEN i = reg THEN rho ELSE 0 END AS INT))"
-        ).alias("regs"),
-    ).localCheckpoint(eager=True)
-    est_num = F.expr(
-        f"aggregate(regs, CAST(0 AS BIGINT),"
-        f" (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), {rho_max} - r))"
-    )
-    est = (
-        F.lit(alpha)
-        * F.lit(float(m))
-        * F.lit(float(m))
-        * F.lit(float(1 << rho_max))
-        / est_num.cast("double")
-    )
-
-    def est_frame(sketch: DataFrame, t: int) -> DataFrame:
-        return sketch.select(
+    ests = _hyperball_rounds(
+        edges, rounds, precision, salt, src_col, dst_col,
+        lambda sketch, est, t: sketch.select(
             "node",
             F.lit(t).cast("int").alias("t"),
             F.round(est).cast("long").alias("est"),
-        )
-
-    merge_aggs = [F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)]
-    pack = F.array(*[F.col(f"_r{i}") for i in range(m)]).alias("regs")
-    ests = est_frame(sk, 0)
-    for t in range(1, rounds + 1):
-        prop = e.join(sk.withColumnRenamed("node", "dst"), "dst").select(
-            F.col("src").alias("node"), "regs"
-        )
-        sk = (
-            sk.unionByName(prop)
-            .groupBy("node")
-            .agg(*merge_aggs)
-            .select("node", pack)
-            .localCheckpoint(eager=True)
-        )
-        ests = ests.unionByName(est_frame(sk, t))
+        ),
+    )
     return ests.groupBy("node").agg(
         F.max(F.when(F.col("t") == rounds, F.col("est"))).alias("ball_final"),
         F.sum(
@@ -2931,32 +2868,45 @@ def densest_subgraph(
     argmax needs cross-round pairwise cross-multiplication; at 10^12
     scale the quantized argmax is the contract).  Per round: one
     degree aggregate, one threshold filter, two semi-joins to shrink
-    the edge set, state localCheckpoint-pinned; round stats are two
-    1-row collects.
+    the edge set, state localCheckpoint-pinned; the round stats (n, m)
+    are counted by the checkpoint jobs that pin the alive node and edge
+    sets, and the loop ends when no node is left.
 
     Output: (node, leave_round, in_densest, best_n, best_m) for every
     node of the input graph (leave_round = the round the node was
     peeled; survivors of the final round get the last round index).
     """
-    e = (
+    # n = alive nodes and m = alive edges entering each round are counted
+    # by the checkpoint jobs that pin them (the edge set only keeps edges
+    # between alive nodes, so m is also half the alive degree sum)
+    e, seen = checkpoint_observed(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("x"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        m=F.count(F.lit(1)),
     )
-    alive_n = (
+    alive_n, seen_n = checkpoint_observed(
         e.select(F.col("x").alias("node"))
         .unionByName(e.select(F.col("y").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    alive_e = e
-    labeled = None
+    if seen_n["n"] == 0:
+        return alive_n.select(
+            "node", F.lit(0).cast("int").alias("leave_round"),
+            F.lit(False).alias("in_densest"),
+            F.lit(0).cast("long").alias("best_n"),
+            F.lit(0).cast("long").alias("best_m"),
+        )
     stats: list[tuple[int, int, int]] = []  # (round, n, m)
-    for r in range(max_iter):
+
+    def peel(state: tuple, rnd) -> tuple:
+        alive_n, alive_e, labeled = state
+        n, m = rnd.prev["n"], rnd.prev["m"]
+        stats.append((rnd.index, n, m))
         und = alive_e.unionByName(
             alive_e.select(F.col("y").alias("x"), F.col("x").alias("y"))
         )
@@ -2969,47 +2919,30 @@ def densest_subgraph(
             "node",
             "left",
         ).select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-        nm = deg.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("deg").alias("m2")
-        ).collect()[0]
-        n = int(nm["n"])
-        if n == 0:
-            break
-        m = int(nm["m2"] or 0) // 2
-        stats.append((r, n, m))
         removed = deg.where(
             F.col("deg") * F.lit(n) * F.lit(eps_den)
             <= F.lit(2 * m) * F.lit(eps_num)
-        ).select("node", F.lit(r).cast("int").alias("leave_round"))
-        labeled = (
+        ).select("node", F.lit(rnd.index).cast("int").alias("leave_round"))
+        labeled = rnd.checkpoint(
             removed if labeled is None else labeled.unionByName(removed)
-        ).localCheckpoint(eager=True)
-        alive_n = alive_n.join(removed, "node", "leftanti").localCheckpoint(
-            eager=True
         )
-        alive_e = (
-            alive_e.join(
-                alive_n.withColumnRenamed("node", "x"), "x", "leftsemi"
-            )
-            .join(alive_n.withColumnRenamed("node", "y"), "y", "leftsemi")
-            .localCheckpoint(eager=True)
+        alive_n = rnd.checkpoint(
+            alive_n.join(removed, "node", "leftanti"), n=F.count(F.lit(1))
         )
-    else:
-        if not alive_n.isEmpty():
-            raise DensestError(
-                f"graph not exhausted after {max_iter} peel rounds"
-            )
-    if labeled is None:
-        labeled = alive_n.select(
-            "node", F.lit(0).cast("int").alias("leave_round")
+        alive_e = rnd.checkpoint(
+            alive_e.join(alive_n.withColumnRenamed("node", "x"), "x", "leftsemi")
+            .join(alive_n.withColumnRenamed("node", "y"), "y", "leftsemi"),
+            m=F.count(F.lit(1)),
         )
-    if not stats:
-        return labeled.select(
-            "node", "leave_round",
-            F.lit(False).alias("in_densest"),
-            F.lit(0).cast("long").alias("best_n"),
-            F.lit(0).cast("long").alias("best_m"),
-        )
+        return alive_n, alive_e, labeled
+
+    _, _, labeled = iterate(
+        peel, (alive_n, e, None), max_iter, prev={**seen, **seen_n},
+        until=emptied("n"),
+        error=lambda _: DensestError(
+            f"graph not exhausted after {max_iter} peel rounds"
+        ),
+    )
     best_r, best_n, best_m = max(
         stats, key=lambda s: (s[2] * 10**12 // s[1], -s[0])
     )
@@ -3228,36 +3161,26 @@ def coreness(
 
     Output: (node, coreness BIGINT).
     """
-    und = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .where(F.col(a) != F.col(b))
-        .select(F.greatest("x", "y").alias("p"), F.least("x", "y").alias("q"))
-        .distinct()
-    )
-    sym = und.unionByName(
-        und.select(F.col("q").alias("p"), F.col("p").alias("q"))
-    ).localCheckpoint(eager=True)
+    und = _undirected(edges, a, b)
+    sym = _symmetric(und).localCheckpoint(eager=True)
 
-    def settle(df: DataFrame) -> tuple[DataFrame, int]:
-        cp, obs = checkpoint_observed(df, sum_c=F.coalesce(F.sum("c"), F.lit(0)))
-        return cp, obs["sum_c"]
-
-    c, total = settle(
+    sum_c = F.coalesce(F.sum("c"), F.lit(0))
+    c, seen = checkpoint_observed(
         sym.groupBy(F.col("p").alias("node")).agg(
             F.count(F.lit(1)).cast("long").alias("c")
-        )
+        ),
+        sum_c=sum_c,
     )
-    for it in range(rounds):
-        c, nxt = settle(_hindex_round(sym, c))
-        if metrics is not None:
-            metrics.record("coreness", it, sum_c=nxt)
-        if nxt == total:
-            return c.select("node", F.col("c").alias("coreness"))
-        total = nxt
-    raise RuntimeError(
-        f"coreness: still changing after {rounds} rounds (sum of core "
-        f"values fell to {total}) — raise `rounds`"
+    c = iterate(
+        lambda c, rnd: rnd.checkpoint(_hindex_round(sym, c), sum_c=sum_c),
+        c, rounds, prev=seen, until=unchanged("sum_c"),
+        error=lambda last: RuntimeError(
+            f"coreness: still changing after {rounds} rounds (sum of core "
+            f"values fell to {last['sum_c']}) — raise `rounds`"
+        ),
+        metrics=metrics, op="coreness",
     )
+    return c.select("node", F.col("c").alias("coreness"))
 
 
 def sql_coreness(edges_sql: str, rounds: int = 24) -> str:

@@ -30,17 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nexus_forge_spark.functions.itermetrics import checkpoint_observed
+from nexus_forge_spark.functions.itermetrics import (
+    checkpoint_observed,
+    iterate,
+    unchanged,
+)
 
 
 class ClosureError(RuntimeError):
     """Transitive closure did not converge within max_rounds."""
-
-
-def _counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """Eager local checkpoint of ``df`` and its row count, one job."""
-    cp, obs = checkpoint_observed(df, rows=F.count(F.lit(1)))
-    return cp, obs["rows"]
 
 
 def _close_by_doubling(
@@ -59,25 +57,30 @@ def _close_by_doubling(
     checkpoint job that also observes the pair count; reach only grows
     under union+distinct, so an unchanged count is an unchanged set and
     the loop returns there.  Raises ClosureError past max_rounds."""
+    pairs = F.count(F.lit(1))
 
-    def settle(df: DataFrame) -> tuple[DataFrame, int]:
-        if irreflexive:
-            df = df.where(F.col(src) != F.col(dst))
-        return _counted(df.distinct())
+    def distinct_pairs(df: DataFrame) -> DataFrame:
+        return (df.where(F.col(src) != F.col(dst)) if irreflexive else df).distinct()
 
-    reach, n = settle(seed)
-    for it in range(max_rounds):
+    def double(reach: DataFrame, rnd) -> DataFrame:
         hop = reach.select(*keys, F.col(src).alias("_j"), dst)
         step = reach.select(*keys, src, F.col(dst).alias("_j")).join(
             hop, [*keys, "_j"]
         )
-        nxt, n2 = settle(reach.unionByName(step.select(src, *keys, dst)))
-        if metrics is not None:
-            metrics.record(op, it, pairs=n2, new_pairs=n2 - n)
-        if n2 == n:
-            return nxt
-        reach, n = nxt, n2
-    raise ClosureError(f"{op}: not converged in {max_rounds} rounds")
+        return rnd.checkpoint(
+            distinct_pairs(reach.unionByName(step.select(src, *keys, dst))),
+            pairs=pairs,
+        )
+
+    reach, seen = checkpoint_observed(distinct_pairs(seed), pairs=pairs)
+    return iterate(
+        double, reach, max_rounds, prev=seen, until=unchanged("pairs"),
+        error=lambda _: ClosureError(f"{op}: not converged in {max_rounds} rounds"),
+        metrics=metrics, op=op,
+        report=lambda prev, cur: {
+            "pairs": cur["pairs"], "new_pairs": cur["pairs"] - prev["pairs"]
+        },
+    )
 
 
 def transitive_closure(
@@ -352,31 +355,37 @@ def flatten_rdf_lists(
     heads = cells.join(
         rest.select(F.col("dst").alias("src")).distinct(), "src", "left_anti"
     )
-    known, n = _counted(
+    rows = F.count(F.lit(1))
+    known, seen = checkpoint_observed(
         heads.select(
             F.col("src").alias("head"),
             F.col("src").alias("node"),
             F.lit(0).alias("pos"),
-        )
+        ),
+        rows=rows,
     )
-    for _ in range(max_rounds):
+
+    def extend(state: tuple, rnd) -> tuple:
+        known, jump = state
+        if rnd.index:  # square the jump table the previous round used
+            sq = jump.select(F.col("src").alias("j"), F.col("j").alias("j2"), F.col("d").alias("d2"))
+            jump = rnd.checkpoint(
+                jump.join(sq, "j")
+                .select("src", F.col("j2").alias("j"), (F.col("d") + F.col("d2")).alias("d"))
+            )
         shifted = known.join(
             jump.select(F.col("src").alias("node"), "j", "d"), "node"
         ).select(
             "head", F.col("j").alias("node"), (F.col("pos") + F.col("d")).alias("pos")
         )
-        nxt, n2 = _counted(known.unionByName(shifted).distinct())
-        if n2 == n:
-            break
-        sq = jump.select(F.col("src").alias("j"), F.col("j").alias("j2"), F.col("d").alias("d2"))
-        jump = (
-            jump.join(sq, "j")
-            .select("src", F.col("j2").alias("j"), (F.col("d") + F.col("d2")).alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        known, n = nxt, n2
-    else:
-        raise ClosureError(f"flatten_rdf_lists: not converged in {max_rounds} rounds")
+        return rnd.checkpoint(known.unionByName(shifted).distinct(), rows=rows), jump
+
+    known, _ = iterate(
+        extend, (known, jump), max_rounds, prev=seen, until=unchanged("rows"),
+        error=lambda _: ClosureError(
+            f"flatten_rdf_lists: not converged in {max_rounds} rounds"
+        ),
+    )
 
     return known.join(first, known.node == first.cell).select(
         F.col("head"), F.col("pos").cast("long").alias("pos"), F.col("item")

@@ -104,13 +104,6 @@ def cosine_pairs(
     return out
 
 
-def _hash_unit(seed: int, plane: int, dim: int) -> float:
-    """Deterministic pseudo-random plane component in [-1, 1) from a hash —
-    no RNG state, identical on every executor."""
-    h = hash((seed, plane, dim)) & 0xFFFFFFFF
-    return (h / 0x80000000) - 1.0
-
-
 def hyperplane_signature(
     vec: Column, dim: int, num_planes: int = 16, seed: int = 42
 ) -> Column:

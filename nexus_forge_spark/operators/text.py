@@ -33,17 +33,6 @@ def regex_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), 0)).cast("int")
 
 
-def language_scores(text: Column) -> Column:
-    """struct of per-language stopword-hit counts."""
-    toks = tokens(text)
-    return F.struct(
-        *[
-            F.size(F.filter(toks, _isin(words))).alias(lang)
-            for lang, words in LANG_PROFILES.items()
-        ]
-    )
-
-
 def _isin(words: list[str]):
     # closure factory: a two-param lambda would be treated by F.filter as the
     # (element, index) form

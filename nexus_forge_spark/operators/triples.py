@@ -61,12 +61,6 @@ def media_to_triples(documents: DataFrame, dedup: bool = False) -> DataFrame:
     )
 
 
-def dedup_triples(triples: DataFrame) -> DataFrame:
-    """Graph set semantics: one row per (subj, pred, obj).  This is the one
-    required shuffle of the materialize stage; AQE coalesces the output."""
-    return triples.dropDuplicates(["subj", "pred", "obj"])
-
-
 def triple_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot delta between two KG triple sets: which (subj, pred, obj)
     facts were added / removed between snapshot *old* and snapshot *new*.

@@ -1109,6 +1109,69 @@ def test_closure_incremental_convergence_boundary(spark):
     assert {(row.node, row.anc) for row in got.collect()} == reach
 
 
+def _peeling_changing_rounds(edges, keep) -> tuple[int, set]:
+    """Peel an undirected edge set to its fixpoint (pure python): returns
+    the number of rounds that still drop an edge and the surviving
+    (lo, hi) pairs.  ``keep(adj, a, b)`` is the per-round survival test
+    of edge (a, b) over the current adjacency."""
+    und = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    r = 0
+    while und:
+        adj = {}
+        for a, b in und:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        nxt = {(a, b) for a, b in und if keep(adj, a, b)}
+        if nxt == und:
+            break
+        und, r = nxt, r + 1
+    return r, und
+
+
+def test_kcore_convergence_boundary(spark):
+    """kcore keeps its budget on iterate(): with r peeling rounds
+    that still drop an edge, max_iter=r raises and max_iter=r+1 returns
+    the peeling answer (the pendant path 3-10-11-12 peels one node per
+    round at k=2)."""
+    import pytest
+
+    from nexus_forge_spark.operators.graph import kcore
+
+    r, core = _peeling_changing_rounds(
+        _HAND_CORE_EDGES, lambda adj, a, b: min(len(adj[a]), len(adj[b])) >= 2
+    )
+    assert r >= 2 and core
+    want = {}
+    for a, b in core:
+        want[a], want[b] = want.get(a, 0) + 1, want.get(b, 0) + 1
+    edges = spark.createDataFrame(_HAND_CORE_EDGES, "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kcore(edges, k=2, max_iter=r)
+    got = kcore(edges, k=2, max_iter=r + 1).collect()
+    assert {row.node: row.degree for row in got} == want
+
+
+def test_ktruss_convergence_boundary(spark):
+    """Same boundary for ktruss: the hand graph plus a triangle strip,
+    whose k=4 peel drops the strip's chords first and its rails next
+    while the 4-clique survives."""
+    import pytest
+
+    from nexus_forge_spark.operators.graph import ktruss
+
+    strip = [(i, i + 1) for i in range(30, 37)] + [(i, i + 2) for i in range(30, 36)]
+    rows = _HAND_CORE_EDGES + strip
+    r, truss = _peeling_changing_rounds(
+        rows, lambda adj, a, b: len(adj[a] & adj[b]) >= 2
+    )
+    assert r >= 2 and truss
+    edges = spark.createDataFrame(rows, "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        ktruss(edges, k=4, max_iter=r)
+    got = ktruss(edges, k=4, max_iter=r + 1).collect()
+    assert {(row.lo, row.hi) for row in got} == truss
+
+
 def test_disparity_backbone_keeps_planted_edge(spark):
     """A hub with 20 weight-1 edges plus ONE weight-30 edge: the heavy
     edge is statistically surprising from the hub's side and must be the

@@ -955,11 +955,12 @@ def test_ladder_salted_no_cartesian_no_single_partition(spark, sf01):
 
 def test_round_budget_costs_no_jobs(spark, monkeypatch):
     """Convergence is observed by each round's checkpoint job: past the
-    fixpoint a larger round budget launches no job at all, and a closure
-    round runs no count() job beside its checkpoint."""
+    fixpoint a larger round budget launches no job at all, a closure or
+    k-core round runs no count() job beside its checkpoint, and a BFS
+    stops at its first empty frontier."""
     import uuid
 
-    from nexus_forge_spark.operators.graph import coreness
+    from nexus_forge_spark.operators.graph import coreness, kcore, khop_distances
     from nexus_forge_spark.operators.ontology import transitive_closure
 
     sc = spark.sparkContext
@@ -990,6 +991,53 @@ def test_round_budget_costs_no_jobs(spark, monkeypatch):
     assert jobs_of(lambda: transitive_closure(chain, max_rounds=20)) == jobs_of(
         lambda: transitive_closure(chain, max_rounds=4)
     )
+
+    # kcore peels the pendant edge, then its second round is the fixpoint;
+    # the peel test is observed by the checkpoint job, count() never runs
+    assert jobs_of(lambda: kcore(und, k=2, max_iter=16)) == jobs_of(
+        lambda: kcore(und, k=2, max_iter=4)
+    )
+
+    # the BFS frontier of 1 -> 2 empties at hop 2: no later hop runs
+    edge = spark.createDataFrame([(1, 2)], "src long, dst long")
+    seed = spark.createDataFrame([(1,)], "node long")
+    assert jobs_of(lambda: khop_distances(edge, seed, max_hops=10)) == jobs_of(
+        lambda: khop_distances(edge, seed, max_hops=3)
+    )
+
+
+def test_round_loops_go_through_iterate():
+    """Round checkpoints, counts and metrics go through
+    itermetrics.iterate(): no for/while body in operators/graph.py, or in
+    the ontology closure/list loops, calls localCheckpoint, count(),
+    isEmpty, checkpoint_observed or RoundMetrics.record itself.
+    Checkpoints of loop-invariant inputs outside loops stay allowed."""
+    import ast
+    import inspect
+
+    from nexus_forge_spark.operators import graph, ontology
+
+    banned = {"localCheckpoint", "isEmpty", "checkpoint_observed", "record"}
+    sources = {
+        "graph": inspect.getsource(graph),
+        "_close_by_doubling": inspect.getsource(ontology._close_by_doubling),
+        "flatten_rdf_lists": inspect.getsource(ontology.flatten_rdf_lists),
+    }
+    hits = []
+    for where, src in sources.items():
+        for loop in ast.walk(ast.parse(src)):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for stmt in loop.body + loop.orelse:
+                for call in ast.walk(stmt):
+                    if not isinstance(call, ast.Call):
+                        continue
+                    fn = call.func
+                    name = getattr(fn, "attr", getattr(fn, "id", None))
+                    # DataFrame.count() takes no argument; F.count(col) does
+                    if name in banned or (name == "count" and not call.args):
+                        hits.append(f"{where}:{call.lineno} {name}")
+    assert hits == []
 
 
 def test_resolver_dictionaries_are_local_relations(spark, tmp_path):
