@@ -1,18 +1,20 @@
 """The shared round loop of the iterative operator family, and its
 per-round convergence metrics.
 
-:func:`iterate` is the one round loop of the iterative operators in
-operators/graph.py and of the ontology closures.  Every frame a round
-pins goes through :meth:`Round.checkpoint`: an eager ``localCheckpoint``
-whose job also evaluates the aggregates the operator names (an
-``Observation`` rides the checkpoint scan), so a stop test or a metrics
-row costs no job of its own.  Three loop shapes share it: a fixpoint
-(kcore, coreness, the closure doubling, ...) stops when ``until`` holds
-and raises the operator's own error if its budget runs out first, so it
-never returns a still-changing answer; a frontier (khop, harmonic, ...)
-stops at the first hop that reaches nothing new, or silently at its
-radius; a fixed-round loop (pagerank, sssp, ...) runs exactly the rounds
-its unrolled SQL oracle replays.
+:func:`iterate` is the loop of every iterative operator in operators/.
+Every frame a round pins goes through :meth:`Round.checkpoint`: an eager
+``localCheckpoint`` whose job also evaluates the aggregates the operator
+names (an ``Observation`` rides the checkpoint scan), so a stop test or a
+metrics row costs no job of its own.  A stop test that is no aggregate
+(connected_components' exact edge-set difference, bpe_train's exhausted
+pair supply) is written into ``Round.seen`` by the step.  Three loop
+shapes share it: a fixpoint (kcore, coreness, the closure doubling,
+connected components, ...) stops when ``until`` holds and raises the
+operator's own error if its budget runs out first, so it never returns a
+still-changing answer; a frontier (khop, harmonic, ...) stops at the
+first hop that reaches nothing new, or silently at its radius; a
+fixed-round loop (pagerank, sssp, dawid_skene_labels, ...) runs exactly
+the rounds its unrolled SQL oracle replays.
 
 ``RoundMetrics`` is the opt-in collector an operator's ``metrics``
 argument hands to :func:`iterate`: one row per round.  On a production

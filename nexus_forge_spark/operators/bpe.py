@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import iterate
+
 END_OF_WORD = "</w>"
 
 
@@ -53,16 +55,28 @@ def _replacement_quote(s: str) -> str:
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over whitespace-lowercase tokenization — THE one
     corpus-wide shuffle of BPE training."""
-    return (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-                "word"
-            )
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    return _words(docs, text_col).groupBy("word").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
     )
+
+
+def _words(docs: DataFrame, text_col: str, *keys: str) -> DataFrame:
+    """(keys..., word) per whitespace-lowercase token of ``text_col``."""
+    return docs.select(
+        *keys,
+        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word"),
+    ).where(F.col("word") != "")
+
+
+def _per_word(
+    docs: DataFrame, text_col: str, key_col: str, n: Column, broadcast: bool = True
+) -> DataFrame:
+    """(key, word, n) per word occurrence: the expression ``n`` over the
+    ``word`` column runs once per DISTINCT word, then a (broadcast) join
+    fans it back out to the occurrences."""
+    words = _words(docs, text_col, key_col)
+    vocab = words.select("word").distinct().select("word", n.alias("n"))
+    return words.join(F.broadcast(vocab) if broadcast else vocab, "word")
 
 
 def spaced_symbols(word: Column) -> Column:
@@ -133,7 +147,6 @@ def bpe_train(
     import os
 
     merges: list[tuple[str, str, int]] = []
-    exhausted = False
     done_file = (
         os.path.join(checkpoint_path, "merges.json") if checkpoint_path else None
     )
@@ -148,7 +161,7 @@ def bpe_train(
         if state.get("exhausted") or len(merges) >= num_merges:
             return merges
 
-    def _journal() -> None:
+    def _journal(exhausted: bool = False) -> None:
         if not done_file:
             return
         os.makedirs(checkpoint_path, exist_ok=True)
@@ -160,18 +173,23 @@ def bpe_train(
     cur = words.select(
         apply_merges(spaced_symbols(F.col("word")), merges).alias("s"), "cnt"
     ).localCheckpoint(eager=True)
-    while len(merges) < num_merges:
+
+    def learn(cur: DataFrame, rnd) -> DataFrame:
         top = _top_pair(cur)
-        if top is None or top["freq"] < min_freq:
-            exhausted = True
-            break
+        rnd.seen["exhausted"] = top is None or top["freq"] < min_freq
+        if rnd.seen["exhausted"]:
+            return cur
         left, right, freq = top["l"], top["r"], int(top["freq"])
         merges.append((left, right, freq))
         _journal()
-        cur = cur.select(
-            merge_expr(F.col("s"), left, right).alias("s"), "cnt"
-        ).localCheckpoint(eager=True)
-    _journal()
+        return rnd.checkpoint(
+            cur.select(merge_expr(F.col("s"), left, right).alias("s"), "cnt")
+        )
+
+    iterate(
+        learn, cur, num_merges - len(merges), until=lambda _, now: now["exhausted"]
+    )
+    _journal(exhausted=len(merges) < num_merges)
     return merges
 
 
@@ -198,22 +216,9 @@ def bpe_token_counts(
     """Per-document BPE token counts via distinct-word factoring: the merge
     chain runs once per *distinct* word, never per occurrence, then a
     (broadcast by default) join fans counts back out to occurrences."""
-    words = docs.select(
-        id_col,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word"),
-    ).where(F.col("word") != "")
-    vocab = (
-        words.select("word")
-        .distinct()
-        .select("word", F.size(bpe_tokens(F.col("word"), merges)).alias("n_toks"))
-    )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    return (
-        words.join(vocab, "word")
-        .groupBy(id_col)
-        .agg(F.sum("n_toks").cast("long").alias("n_bpe_tokens"))
-    )
+    n = F.size(bpe_tokens(F.col("word"), merges))
+    toks = _per_word(docs, text_col, id_col, n, broadcast_vocab)
+    return toks.groupBy(id_col).agg(F.sum("n").cast("long").alias("n_bpe_tokens"))
 
 
 def bpe_fertility(
@@ -233,25 +238,13 @@ def bpe_fertility(
     runs once per DISTINCT word; the per-slice rollup is one hash
     aggregate.  fertility_milli = tokens * 1000 div words (BIGINT).
     """
-    words = docs.select(
-        group_col,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "word"
-        ),
-    ).where(F.col("word") != "")
-    vocab = (
-        words.select("word")
-        .distinct()
-        .select("word", F.size(bpe_tokens(F.col("word"), merges)).alias("n_toks"))
-    )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
+    n = F.size(bpe_tokens(F.col("word"), merges))
     return (
-        words.join(vocab, "word")
+        _per_word(docs, text_col, group_col, n, broadcast_vocab)
         .groupBy(group_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_toks").cast("long").alias("n_bpe_tokens"),
+            F.sum("n").cast("long").alias("n_bpe_tokens"),
         )
         .withColumn(
             "fertility_milli",
@@ -308,7 +301,9 @@ def _viterbi_segment_udf(cost_map: dict, max_piece_len: int):
     cost(word[j:i]); ties broken by SMALLEST j (prefer the longer final
     piece) — the same (total, j) lexicographic rule the oracle's
     row_number renders.  cost_map is vocab-sized (broadcast in the
-    closure); single chars are always present, so every word segments."""
+    closure); a trained vocab keeps every single char it saw, but a word
+    with a char outside it has no segmentation and raises ValueError
+    naming the word, rather than emit a piece the vocab lacks."""
     from pyspark.sql import types as T
 
     L = max_piece_len
@@ -331,6 +326,8 @@ def _viterbi_segment_udf(cost_map: dict, max_piece_len: int):
                     if t < best:
                         best, bestj = t, j
                 dp[i], bj[i] = best, bestj
+            if dp[n] >= INF:
+                raise ValueError(f"unigram vocab cannot segment word {w!r}")
             ps, i = [], n
             while i > 0:
                 j = bj[i]
@@ -380,8 +377,8 @@ def unigram_lm_train(
     vocab = unigram_seed_vocab(
         w, max_piece_len, vocab_size, "word", "freq"
     ).localCheckpoint(eager=True)
-    spark = words.sparkSession
-    for _ in range(rounds):
+
+    def em_round(vocab: DataFrame, rnd) -> DataFrame:
         tot = vocab.agg(F.sum("cnt").cast("long").alias("tot"))
         costs = vocab.crossJoin(F.broadcast(tot)).select(
             "piece", ln_micro_col("tot", "cnt").alias("cost")
@@ -394,12 +391,13 @@ def unigram_lm_train(
             .agg(F.sum("freq").cast("long").alias("cnt"))
         )
         charset = vocab.where(F.length("piece") == 1).select("piece")
-        vocab = (
+        return rnd.checkpoint(
             charset.join(used, "piece", "left")
             .select("piece", F.coalesce("cnt", F.lit(1)).cast("long").alias("cnt"))
             .unionByName(used.where(F.length("piece") > 1))
-            .localCheckpoint(eager=True)
         )
+
+    vocab = iterate(em_round, vocab, rounds)
     tot = vocab.agg(F.sum("cnt").cast("long").alias("tot"))
     return (
         vocab.crossJoin(F.broadcast(tot))
@@ -434,23 +432,12 @@ def unigram_fertility(
         r["piece"]: int(r["cost_micro"]) for r in vocab.collect()
     }
     seg = _viterbi_segment_udf(cost_map, max_piece_len)
-    words = docs.select(
-        group_col,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "word"
-        ),
-    ).where(F.col("word") != "")
-    per_word = (
-        words.select("word")
-        .distinct()
-        .select("word", F.size(seg(F.col("word"))).cast("long").alias("n_p"))
-    )
     return (
-        words.join(F.broadcast(per_word), "word")
+        _per_word(docs, text_col, group_col, F.size(seg(F.col("word"))).cast("long"))
         .groupBy(F.col(group_col).alias("grp"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_p").cast("long").alias("n_pieces"),
+            F.sum("n").cast("long").alias("n_pieces"),
         )
         .withColumn(
             "fertility_milli",

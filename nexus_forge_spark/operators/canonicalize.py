@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import emptied, iterate
+
 
 def sameas_edges(alias_table: DataFrame) -> DataFrame:
     """Entities sharing an alias string -> symmetric (a, b) edge set."""
@@ -56,7 +58,8 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+
+    def star(e: DataFrame, rnd) -> DataFrame:
         # ---- large-star over the symmetric closure
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = sym.groupBy("a").agg(F.min("b").alias("m"))
@@ -73,30 +76,30 @@ def connected_components(
         mins2 = o.groupBy("a").agg(F.min("b").alias("m"))
         to_min = o.join(mins2, "a").select(F.col("b").alias("a"), F.col("m").alias("b"))
         self_min = mins2.select(F.col("a"), F.col("m").alias("b"))
-        e2 = (
+        e2 = rnd.checkpoint(
             to_min.unionByName(self_min)
             .where(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # ONE Spark action per round: symmetric difference, stop at first row
+        # exact stop test, a job of its own (a count or hash could miss a
+        # change): the symmetric difference, stopped at its first row
         # (both sets are distinct-normalized so exceptAll == except)
-        changed = not (
-            e2.exceptAll(e).unionByName(e.exceptAll(e2)).isEmpty()
-        )
-        e = e2
-        if not changed:
-            break
-    else:
-        # max_iter exhausted without the converged break: labels derived from
-        # a non-fixpoint edge set are NOT a star decomposition — canonical
-        # ids could be wrong with no signal, so fail loudly instead
-        raise RuntimeError(
+        rnd.seen["settled"] = e2.exceptAll(e).unionByName(e.exceptAll(e2)).isEmpty()
+        return e2
+
+    # a spent budget raises: labels derived from a non-fixpoint edge set
+    # are NOT a star decomposition, so canonical ids could be wrong with
+    # no signal
+    e = iterate(
+        star, e, max_iter,
+        until=lambda _, cur: cur["settled"],
+        error=lambda _: RuntimeError(
             f"connected_components did not converge in {max_iter} "
             "large-star/small-star rounds; raise max_iter (expected "
             "O(log^2 n) rounds)"
-        )
+        ),
+    )
     # fixpoint edges form stars: (member, component_min)
     labels = e.select(F.col("a").alias("entity_id"), F.col("b").alias("canonical_id"))
     roots = e.select(F.col("b").alias("entity_id")).distinct().select(
@@ -119,9 +122,10 @@ def connected_components_propagation(
     Min-label propagation: comp(v) starts at v; each round takes the min of
     the neighbourhood's current labels; stops when no label changes.  Kept
     as the differential oracle for connected_components (and the better
-    plan for tiny/low-diameter graphs: one shuffle per round).
+    plan for tiny/low-diameter graphs: one shuffle per round).  Each node
+    keeps its old label beside the new one, so the round's checkpoint job
+    counts the labels that moved; a spent budget raises.
     """
-    spark = edges.sparkSession
     sym = edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.distinct().localCheckpoint(eager=True)
 
@@ -130,29 +134,29 @@ def connected_components_propagation(
     labels = nodes.select("entity_id", F.col("entity_id").alias("canonical_id"))
     labels = labels.localCheckpoint(eager=True)
 
-    for _ in range(max_iter):
+    def propagate(labels: DataFrame, rnd) -> DataFrame:
         # candidate label for each node = min(own, min over neighbours' labels)
         nbr = (
             sym.join(labels, sym["b"] == labels["entity_id"])
-            .select(F.col("a").alias("entity_id"), "canonical_id")
+            .select(F.col("a").alias("entity_id"), "canonical_id", F.lit(None).alias("old"))
         )
-        new_labels = (
-            labels.unionByName(nbr)
+        return rnd.checkpoint(
+            labels.select("entity_id", "canonical_id", F.col("canonical_id").alias("old"))
+            .unionByName(nbr)
             .groupBy("entity_id")
-            .agg(F.min("canonical_id").alias("canonical_id"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("canonical_id").alias("canonical_id"), F.min("old").alias("old")),
+            moved=F.count_if(~F.col("canonical_id").eqNullSafe(F.col("old"))),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "entity_id")
-            .where(F.col("n.canonical_id") != F.col("o.canonical_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+
+    labels = iterate(
+        propagate, labels, max_iter,
+        until=emptied("moved"),
+        error=lambda _: RuntimeError(
+            f"connected_components_propagation did not converge in {max_iter} "
+            "rounds; raise max_iter (expected O(diameter) rounds)"
+        ),
+    )
+    return labels.select("entity_id", "canonical_id")
 
 
 def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nexus_forge_spark.functions.itermetrics import checkpoint_observed, iterate
+
 KMEANS_SCALE = 1000
 KMEANS_SHIFT = 2.0
 
@@ -208,18 +210,16 @@ def kcenter_select(
 
     Scale posture: the running min-dist is localCheckpointed each round,
     so round r is ONE map-side projection against the single newest
-    center (never a k-way cross join or a rescan of all centers) plus a
-    1-row TakeOrdered argmax — O(k) linear passes, distances unrolled
-    per-dim into one codegen expression.
+    center (never a k-way cross join or a rescan of all centers), and
+    that checkpoint job also observes the next center as a
+    ``max(struct(dmin, -vid, vid, qv))`` aggregate: one job per round,
+    no collect — O(k) linear passes, distances unrolled per-dim into one
+    codegen expression.  Rounds stop once every point sits on a center:
+    each later pick repeats the seed.
 
     Returns (selected vids in order, assignment DF (vid, center_vid,
     dist)).
     """
-    pts = points.localCheckpoint(eager=True)
-    seed = pts.orderBy("vid").limit(1).collect()
-    if not seed:
-        raise ValueError("kcenter_select: empty input")
-
     def sqdist(c: list[int]):
         terms = None
         for d in range(dim):
@@ -229,28 +229,41 @@ def kcenter_select(
             terms = t if terms is None else terms + t
         return terms.cast("long")
 
-    selected = [int(seed[0]["vid"])]
-    cur = pts.select(
-        "vid",
-        "qv",
-        sqdist(list(seed[0]["qv"])).alias("dmin"),
-        F.lit(selected[0]).cast("long").alias("cvid"),
-    ).localCheckpoint(eager=True)
-    for _ in range(k - 1):
-        far = cur.orderBy(F.col("dmin").desc(), "vid").limit(1).collect()[0]
-        c_vid = int(far["vid"])
-        selected.append(c_vid)
-        dnew = sqdist(list(far["qv"]))
-        cur = cur.select(
+    far = F.max(F.struct("dmin", (-F.col("vid")).alias("neg_vid"), "vid", "qv"))
+    cur, seen = checkpoint_observed(
+        points.select(
             "vid",
             "qv",
-            F.when(dnew < F.col("dmin"), dnew)
-            .otherwise(F.col("dmin"))
-            .alias("dmin"),
-            F.when(dnew < F.col("dmin"), F.lit(c_vid).cast("long"))
-            .otherwise(F.col("cvid"))
-            .alias("cvid"),
-        ).localCheckpoint(eager=True)
+            F.lit((1 << 63) - 1).cast("long").alias("dmin"),
+            F.lit(None).cast("long").alias("cvid"),
+        ),
+        far=far,
+    )
+    if seen["far"] is None:
+        raise ValueError("kcenter_select: empty input")
+    selected: list[int] = []
+
+    def pick(cur: DataFrame, rnd) -> DataFrame:
+        c = rnd.prev["far"]
+        selected.append(int(c["vid"]))
+        dnew = sqdist(list(c["qv"]))
+        closer = dnew < F.col("dmin")
+        return rnd.checkpoint(
+            cur.select(
+                "vid",
+                "qv",
+                F.when(closer, dnew).otherwise(F.col("dmin")).alias("dmin"),
+                F.when(closer, F.lit(int(c["vid"])).cast("long"))
+                .otherwise(F.col("cvid"))
+                .alias("cvid"),
+            ),
+            far=far,
+        )
+
+    cur = iterate(
+        pick, cur, k, prev=seen, until=lambda _, now: now["far"]["dmin"] == 0
+    )
+    selected += selected[:1] * (k - len(selected))
     return selected, cur.select("vid", F.col("cvid").alias("center_vid"), F.col("dmin").alias("dist"))
 
 

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nexus_forge_spark.functions.itermetrics import iterate
+
 PPM = 1_000_000
 
 
@@ -1320,7 +1322,8 @@ def domain_reweight(
             "AS BIGINT)"
         ).alias("w")
     )
-    for _ in range(rounds):
+
+    def reweight(w: DataFrame, rnd) -> DataFrame:
         raw = w.join(base.select("domain", "excess_micro"), "domain").select(
             "domain",
             F.expr(
@@ -1337,7 +1340,12 @@ def domain_reweight(
         )
         wr = Window.orderBy(F.desc("rem"), F.asc("domain"))
         tot_flo = flo.agg(F.sum("flo").cast("long").alias("tf"))
-        w = (
+        # k-row frame, but each round nests aggregates OF aggregates
+        # (s, tot_flo) — without a per-round pin the final plan
+        # re-executes the chain ~3^rounds times (the markov lesson:
+        # the growing plan tree dominates the tiny job; measured
+        # 85 s -> ~2 s at sf0.1)
+        return rnd.checkpoint(
             flo.crossJoin(F.broadcast(tot_flo))
             .select(
                 "domain",
@@ -1349,13 +1357,9 @@ def domain_reweight(
                     ).cast("long")
                 ).alias("w"),
             )
-            # k-row frame, but each round nests aggregates OF aggregates
-            # (s, tot_flo) — without a per-round pin the final plan
-            # re-executes the chain ~3^rounds times (the markov lesson:
-            # the growing plan tree dominates the tiny job; measured
-            # 85 s -> ~2 s at sf0.1)
-            .localCheckpoint(eager=True)
         )
+
+    w = iterate(reweight, w, rounds)
     return (
         base.join(w, "domain")
         .select(
@@ -2095,7 +2099,8 @@ def mondrian_partition(
     cur = df.select(
         F.lit(1).cast("long").alias("pid"), id_col, *qi_cols
     ).localCheckpoint(eager=True)
-    for _ in range(depth):
+
+    def split(cur: DataFrame, rnd) -> DataFrame:
         aggs = [F.count(F.lit(1)).alias("_n")]
         for c in qi_cols:
             aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
@@ -2130,9 +2135,11 @@ def mondrian_partition(
             F.when(F.col("_rn") <= F.expr("_n DIV 2"), F.col("pid") * 2)
             .otherwise(F.col("pid") * 2 + 1)
         )
-        cur = ranked.select(
-            new_pid.cast("long").alias("pid"), id_col, *qi_cols
-        ).localCheckpoint(eager=True)
+        return rnd.checkpoint(
+            ranked.select(new_pid.cast("long").alias("pid"), id_col, *qi_cols)
+        )
+
+    cur = iterate(split, cur, depth)
     out_aggs = [F.count(F.lit(1)).cast("long").alias("n")]
     for c in qi_cols:
         out_aggs += [
@@ -2299,7 +2306,8 @@ def dawid_skene_labels(
     est = lab.groupBy("i").agg(
         (F.sum("l") * 2 >= F.count(F.lit(1))).cast("int").alias("e")
     )
-    for _ in range(rounds):
+
+    def em_round(est: DataFrame, rnd) -> DataFrame:
         joined = lab.join(est, "i")
         conf = joined.groupBy("wk").agg(
             F.sum(F.expr("CASE WHEN e = 1 AND l = 1 THEN 1 ELSE 0 END")).alias("n11"),
@@ -2335,7 +2343,7 @@ def dawid_skene_labels(
                 .alias("w_micro"),
             )
         )
-        est = (
+        return rnd.checkpoint(
             weighted.groupBy("i")
             .agg(F.sum("w_micro").alias("s"), F.count(F.lit(1)).alias("n"))
             .crossJoin(F.broadcast(prior))
@@ -2350,8 +2358,9 @@ def dawid_skene_labels(
                 "lo",
                 (F.col("lo") >= 0).cast("int").alias("e"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    est = iterate(em_round, est, rounds)
     return est.select(
         F.col("i").alias("item"),
         F.col("e").cast("int").alias("label_est"),

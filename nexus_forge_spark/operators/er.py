@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import checkpoint_observed, emptied, iterate
+
 
 def fs_classify(
     pairs: DataFrame,
@@ -657,14 +659,20 @@ def one_to_one_matching(
 
     Output: (a, b, score, round) for locked pairs, round 1-based.
     """
-    e = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b"),
-        F.col(score_col).cast("long").alias("score"),
-    ).localCheckpoint(eager=True)
-    matched = None
-    for r in range(1, rounds + 1):
-        if e.isEmpty():
-            break
+    rows = F.count(F.lit(1))
+    e, seen = checkpoint_observed(
+        edges.select(
+            F.col(a_col).alias("a"), F.col(b_col).alias("b"),
+            F.col(score_col).cast("long").alias("score"),
+        ),
+        rows=rows,
+    )
+    none = e.select("a", "b", "score", F.lit(1).alias("round")).where(F.lit(False))
+    if seen["rows"] == 0:
+        return none
+
+    def lock(state, rnd):
+        e, matched = state
         best_a = (
             e.groupBy("a").agg(F.max("score").alias("score"))
             .join(e, ["a", "score"])
@@ -675,19 +683,21 @@ def one_to_one_matching(
             .join(e, ["b", "score"])
             .groupBy("b", "score").agg(F.min("a").alias("a"))
         )
-        locked = best_a.join(best_b, ["a", "b", "score"]).select(
-            "a", "b", "score", F.lit(r).alias("round")
-        ).localCheckpoint(eager=True)
-        matched = locked if matched is None else matched.unionByName(locked)
-        e = (
+        locked = rnd.checkpoint(
+            best_a.join(best_b, ["a", "b", "score"]).select(
+                "a", "b", "score", F.lit(rnd.index + 1).alias("round")
+            )
+        )
+        # the remaining-edge checkpoint counts its rows: none left ends
+        # the rounds early
+        return rnd.checkpoint(
             e.join(locked.select("a"), "a", "left_anti")
             .join(locked.select("b"), "b", "left_anti")
-            .select("a", "b", "score")
-            .localCheckpoint(eager=True)
-        )
-    if matched is None:
-        return e.select("a", "b", "score", F.lit(1).alias("round")).where(F.lit(False))
-    return matched.select("a", "b", "score", F.col("round").cast("int").alias("round"))
+            .select("a", "b", "score"),
+            rows=rows,
+        ), matched.unionByName(locked)
+
+    return iterate(lock, (e, none), rounds, until=emptied("rows"))[1]
 
 
 def sql_one_to_one_matching(edges_sql: str, rounds: int = 4) -> str:

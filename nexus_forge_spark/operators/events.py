@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nexus_forge_spark.functions.itermetrics import emptied, iterate
+
 
 def sessionize(
     df: DataFrame,
@@ -306,9 +308,10 @@ def funnel(
     buffers, so no SortAggregate fallback — verified in plan tests) and
     one equi-join back on the user key — every shuffle in the plan
     hashes on ``user_col`` or its (user, ts) refinement, no windows, no
-    sorts over the event stream, no driver loop over users.  The per-user state is one (ts, id) pair per step.  Step
-    counts are k single-row aggs unioned at the end — the only tiny
-    frames in the plan.
+    sorts over the event stream, no driver loop over users.  The per-user
+    state is one (ts, id) pair per step.  Each step's user count is
+    observed by that step's checkpoint job, so counting costs no job; a
+    step nobody reaches ends the steps, and every later count is 0.
     """
     base = events.select(
         F.col(user_col).alias("u"),
@@ -316,10 +319,10 @@ def funnel(
         F.col(ts_col).alias("ts"),
         F.col(order_col).alias("oid"),
     ).where(F.col(type_col).isin(steps))
-    reached: list[DataFrame] = []
-    prev = None
-    for step in steps:
-        cand = base.where(F.col("t") == step)
+    counts: list[int] = []
+
+    def reach(prev: DataFrame | None, rnd) -> DataFrame:
+        cand = base.where(F.col("t") == steps[rnd.index])
         if prev is not None:
             p = prev.select(
                 F.col("u"), F.col("ts").alias("pts"), F.col("oid").alias("poid")
@@ -333,16 +336,19 @@ def funnel(
         # sorts); two chained HASH aggregates stay sort-free — (u, ts)
         # collapses ties to one oid, then (u) picks the earliest ts and
         # min_by with a SCALAR ordering key is hash-aggregable
-        cur = (
+        cur = rnd.checkpoint(
             cand.groupBy("u", "ts")
             .agg(F.min("oid").alias("oid"))
             .groupBy("u")
-            .agg(F.min("ts").alias("ts"), F.min_by("oid", "ts").alias("oid"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("ts").alias("ts"), F.min_by("oid", "ts").alias("oid")),
+            n=F.count(F.lit(1)),
         )
-        reached.append(cur)
-        prev = cur
-    counts = [df.count() for df in reached]
+        counts.append(rnd.seen["n"])
+        return cur
+
+    # nobody reaches a step after one that nobody reached
+    iterate(reach, None, len(steps), until=emptied("n"))
+    counts += [0] * (len(steps) - len(counts))
     spark = events.sparkSession
     rows = []
     for i, (step, n) in enumerate(zip(steps, counts)):
@@ -1338,7 +1344,8 @@ def markov_attribution(
     # lineage pin (measured best among {sparse checkpoints, coalesce(1),
     # per-round} — the tiny per-round job beats a growing plan tree)
     v = vframe.select("variant", "state", F.lit(0).cast("long").alias("v"))
-    for _r in range(rounds):
+
+    def value_round(v: DataFrame, rnd) -> DataFrame:
         # value of destination d under a variant: CONV=Q30, NULL=0,
         # removed channel=0, else current v
         dst = v.select(
@@ -1365,7 +1372,7 @@ def markov_attribution(
                 .alias("dval"),
             )
         )
-        v = (
+        return rnd.checkpoint(
             step.groupBy("variant", "state")
             .agg(
                 F.expr(f"CAST(sum(p * dval) div {q30} AS BIGINT)").alias("v")
@@ -1378,8 +1385,9 @@ def markov_attribution(
                 .otherwise(F.col("v"))
                 .alias("v"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    v = iterate(value_round, v, rounds)
     start_v = v.where(F.col("state") == "START").select(
         "variant", F.col("v").alias("p_conv")
     )

@@ -13,7 +13,8 @@ bit-for-bit).
 
 Scale shape: every round is two hash aggregates (per-source agreement,
 per-(entity,value) weight sum) + one argmax — all map-side combinable,
-keyed on source resp. entity, no windows, no driver collection.  Claims
+keyed on source resp. entity, no windows, no driver collection — and
+one eager checkpoint job that pins the round's consensus.  Claims
 are first reduced to distinct (source, entity, value), so repeated
 assertions by one source count once (a spammy source cannot vote twice).
 """
@@ -22,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nexus_forge_spark.functions.itermetrics import iterate
 
 PPM = 1_000_000
 
@@ -60,11 +63,9 @@ def truth_discovery(claims: DataFrame, rounds: int = 2) -> DataFrame:
     votes0 = c.groupBy("entity", "value").agg(
         (F.count(F.lit(1)) * PPM).alias("w")
     )
-    consensus = _consensus(votes0).localCheckpoint(eager=False)
-    majority0 = consensus.select(
-        "entity", F.col("value").alias("maj_value")
-    )
-    for _ in range(rounds):
+    consensus0 = _consensus(votes0).localCheckpoint(eager=False)
+
+    def reweigh(consensus: DataFrame, rnd) -> DataFrame:
         agree = (
             c.join(
                 consensus.select("entity", F.col("value").alias("win")), "entity"
@@ -88,14 +89,16 @@ def truth_discovery(claims: DataFrame, rounds: int = 2) -> DataFrame:
             .groupBy("entity", "value")
             .agg(F.sum("rel_ppm").alias("w"))
         )
-        consensus = _consensus(weighted).localCheckpoint(eager=False)
+        return rnd.checkpoint(_consensus(weighted))
+
+    consensus = iterate(reweigh, consensus0, rounds)
     stats = c.groupBy("entity").agg(
         F.countDistinct("source").alias("n_sources"),
         F.countDistinct("value").alias("n_values"),
     )
     return (
         consensus.join(stats, "entity")
-        .join(majority0, "entity")
+        .join(consensus0.select("entity", F.col("value").alias("maj_value")), "entity")
         .select(
             "entity",
             "value",

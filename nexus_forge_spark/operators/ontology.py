@@ -27,7 +27,7 @@ via Wyllie list ranking — never an O(L^2) pair closure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexus_forge_spark.functions.itermetrics import (
@@ -157,17 +157,22 @@ def class_rollup(
     )
 
 
+# the recursive ancestor closure of a CTE ``edges(child, parent)``, shared by
+# the closure oracles (WITH RECURSIVE)
+_SQL_REACH = """reach(node, anc) AS (
+  SELECT child, parent FROM edges WHERE child <> parent
+  UNION
+  SELECT r.node, e.parent FROM reach r JOIN edges e ON r.anc = e.child
+  WHERE r.node <> e.parent
+)"""
+
+
 def sql_class_rollup(edges_sql: str, inst_sql: str) -> str:
     """DuckDB oracle: recursive-CTE ancestor closure + the same two
     aggregates.  edges_sql -> (child, parent); inst_sql -> (instance, cls)."""
     return f"""WITH RECURSIVE edges AS MATERIALIZED ({edges_sql}),
 inst AS MATERIALIZED ({inst_sql}),
-reach(node, anc) AS (
-  SELECT child, parent FROM edges WHERE child <> parent
-  UNION
-  SELECT r.node, e.parent FROM reach r JOIN edges e ON r.anc = e.child
-  WHERE r.node <> e.parent
-),
+{_SQL_REACH},
 direct AS (SELECT cls, count(*) AS direct_cnt FROM inst GROUP BY cls),
 universe AS (
   -- DISTINCT over UNION ALL, not bare UNION: inside a WITH RECURSIVE
@@ -278,12 +283,7 @@ def sql_class_similarity(edges_sql: str, pairs_sql: str) -> str:
     closure, identical depth/lca/ppm algebra."""
     return f"""WITH RECURSIVE edges AS MATERIALIZED ({edges_sql}),
 pairs AS MATERIALIZED ({pairs_sql}),
-reach(node, anc) AS (
-  SELECT child, parent FROM edges WHERE child <> parent
-  UNION
-  SELECT r.node, e.parent FROM reach r JOIN edges e ON r.anc = e.child
-  WHERE r.node <> e.parent
-),
+{_SQL_REACH},
 universe AS (
   SELECT DISTINCT node FROM (
     SELECT child AS node FROM edges UNION ALL SELECT parent FROM edges
@@ -515,12 +515,7 @@ def sql_disjoint_violations(
     parent); disjoint_sql -> (a, b)."""
     return f"""WITH RECURSIVE edges AS MATERIALIZED ({edges_sql}),
 types_t AS MATERIALIZED ({types_sql}),
-reach(node, anc) AS (
-  SELECT child, parent FROM edges WHERE child <> parent
-  UNION
-  SELECT r.node, e.parent FROM reach r JOIN edges e ON r.anc = e.child
-  WHERE r.node <> e.parent
-),
+{_SQL_REACH},
 entailed AS (
   SELECT DISTINCT instance, cls FROM (
     SELECT instance, cls FROM types_t
@@ -536,6 +531,64 @@ SELECT DISTINCT l.instance, p.cls_a, p.cls_b
 FROM pairs p
 JOIN entailed l ON l.cls = p.cls_a
 JOIN entailed r ON r.cls = p.cls_b AND r.instance = l.instance"""
+
+
+def _refine_colors(
+    t: DataFrame,
+    init: Column,
+    edges: DataFrame,
+    rounds: int,
+    salt: str,
+    refines: Column | None = None,
+) -> DataFrame:
+    """``rounds`` rounds of multiset color refinement, the shared loop of
+    :func:`wl_colors` and :func:`bisim_summary`: every subj/obj node of
+    ``t`` starts at color ``init``, and each round's new color is
+    md5(color # deg:esum) over the node's ``edges(node, label, nbr)``
+    rows, with esum the exact DECIMAL sum of hash60(label|nbr color).
+    Nodes where ``refines`` is false keep their color.  One join, one
+    hash aggregate and one checkpoint job per round."""
+    from nexus_forge_spark.operators.sketches import hash60
+
+    color = (
+        t.select(F.col("subj").alias("node"))
+        .unionByName(t.select(F.col("obj").alias("node")))
+        .distinct()
+        .select("node", init.alias("color"))
+        .localCheckpoint(eager=False)
+    )
+
+    def refine(color: DataFrame, rnd) -> DataFrame:
+        nbr_color = color.select(
+            F.col("node").alias("nbr"), F.col("color").alias("nbr_color")
+        )
+        msig = (
+            edges.join(nbr_color, "nbr")
+            .select(
+                "node",
+                hash60(F.concat_ws("|", F.col("label"), F.col("nbr_color")), salt)
+                .cast("decimal(38,0)")
+                .alias("esig"),
+            )
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"), F.sum("esig").alias("esum"))
+            .select(
+                "node",
+                F.concat_ws(
+                    ":", F.col("deg").cast("string"), F.col("esum").cast("string")
+                ).alias("msig"),
+            )
+        )
+        refined = F.md5(
+            F.concat(F.col("color"), F.lit("#"), F.coalesce("msig", F.lit("")))
+        )
+        if refines is not None:
+            refined = F.when(refines, refined).otherwise(F.col("color"))
+        return rnd.checkpoint(
+            color.join(msig, "node", "left").select("node", refined.alias("color"))
+        )
+
+    return iterate(refine, color, rounds)
 
 
 def wl_colors(
@@ -576,34 +629,21 @@ def wl_colors(
     sorted-concat multiset would collect_list a multi-GB string on one
     executor.  The sum is exact DECIMAL(38,0)/HUGEINT (no float, no
     overflow below 10^20 edges per node x 2^60).  rounds is a small
-    constant (diameter of the bnode islands, 2-4 in practice), lineage
-    truncated per round.  No windows, no driver state.
+    constant (diameter of the bnode islands, 2-4 in practice), and each
+    round's colors are pinned by one eager checkpoint job
+    (:func:`_refine_colors`).  No windows, no driver state.
     """
-    from nexus_forge_spark.operators.sketches import hash60
     t = triples.select("subj", "pred", "obj")
-    nodes = (
-        t.select(F.col("subj").alias("node"))
-        .unionByName(t.select(F.col("obj").alias("node")))
-        .distinct()
-    )
-    color = nodes.select(
-        "node",
-        F.when(
-            F.col("node").startswith(bnode_prefix), F.md5(F.lit(""))
-        )
-        .otherwise(F.md5(F.col("node")))
-        .alias("color"),
-    ).localCheckpoint(eager=False)
+    bnode = F.col("node").startswith(bnode_prefix)
+    # label = dir|pred: the hashed label|nbr_color is dir|pred|nbr_color
     edges = t.select(
         F.col("subj").alias("node"),
-        F.lit("o").alias("dir"),
-        "pred",
+        F.concat_ws("|", F.lit("o"), "pred").alias("label"),
         F.col("obj").alias("nbr"),
     ).unionByName(
         t.select(
             F.col("obj").alias("node"),
-            F.lit("i").alias("dir"),
-            "pred",
+            F.concat_ws("|", F.lit("i"), "pred").alias("label"),
             F.col("subj").alias("nbr"),
         )
     )
@@ -612,48 +652,15 @@ def wl_colors(
         # contributions up front: the 10^5-degree named hub (st:F,
         # part:4711) costs ZERO aggregate work per round instead of
         # re-summing its whole neighborhood for a color that can't change
-        edges = edges.where(F.col("node").startswith(bnode_prefix))
-    edges = edges.localCheckpoint(eager=False)
-    for _ in range(rounds):
-        nbr_color = color.select(
-            F.col("node").alias("nbr"), F.col("color").alias("nbr_color")
-        )
-        msig = (
-            edges.join(nbr_color, "nbr")
-            .select(
-                "node",
-                hash60(
-                    F.concat_ws("|", F.col("dir"), F.col("pred"), F.col("nbr_color")),
-                    "wl",
-                )
-                .cast("decimal(38,0)")
-                .alias("esig"),
-            )
-            .groupBy("node")
-            .agg(
-                F.count(F.lit(1)).alias("deg"),
-                F.sum("esig").alias("esum"),
-            )
-            .select(
-                "node",
-                F.concat_ws(
-                    ":", F.col("deg").cast("string"), F.col("esum").cast("string")
-                ).alias("msig"),
-            )
-        )
-        refined = F.md5(
-            F.concat(F.col("color"), F.lit("#"), F.coalesce("msig", F.lit("")))
-        )
-        if freeze_named:
-            refined = F.when(
-                F.col("node").startswith(bnode_prefix), refined
-            ).otherwise(F.col("color"))
-        color = (
-            color.join(msig, "node", "left")
-            .select("node", refined.alias("color"))
-            .localCheckpoint(eager=False)
-        )
-    return color
+        edges = edges.where(bnode)
+    return _refine_colors(
+        t,
+        F.when(bnode, F.md5(F.lit(""))).otherwise(F.md5(F.col("node"))),
+        edges.localCheckpoint(eager=False),
+        rounds,
+        "wl",
+        bnode if freeze_named else None,
+    )
 
 
 def skolemize_bnodes(
@@ -675,6 +682,40 @@ def skolemize_bnodes(
     )
 
 
+def _sql_refine_colors(
+    init: str, edges: str, rounds: int, salt: str, refines: str | None = None
+) -> str:
+    """DuckDB twin of :func:`_refine_colors`: CTEs ``nodes``, ``c0`` (color
+    ``init`` of every subj/obj of a CTE ``t``) and the ``rounds`` refined
+    colorings c1..c{rounds} over the (node, label, nbr) relation ``edges``."""
+    from nexus_forge_spark.operators.sketches import sql_hash60
+
+    esig = sql_hash60("e.label || '|' || c.color", salt)
+    refined = "md5(p.color || '#' || coalesce(a.msig, ''))"
+    if refines is not None:
+        refined = f"CASE WHEN {refines} THEN {refined} ELSE p.color END"
+    ctes = [
+        """nodes AS (
+  SELECT DISTINCT node FROM (
+    SELECT subj AS node FROM t UNION ALL SELECT obj FROM t
+  )
+)""",
+        f"c0 AS (SELECT node, {init} AS color FROM nodes)",
+    ]
+    for k in range(rounds):
+        ctes.append(f"""c{k + 1} AS MATERIALIZED (
+  SELECT p.node, {refined} AS color
+  FROM c{k} p LEFT JOIN (
+    SELECT e.node,
+           CAST(count(*) AS VARCHAR) || ':' ||
+           CAST(sum(CAST({esig} AS HUGEINT)) AS VARCHAR) AS msig
+    FROM {edges} e JOIN c{k} c ON e.nbr = c.node
+    GROUP BY e.node
+  ) a ON p.node = a.node
+)""")
+    return ",\n".join(ctes)
+
+
 def sql_wl_colors(
     triples_sql: str,
     rounds: int = 3,
@@ -683,50 +724,23 @@ def sql_wl_colors(
 ) -> str:
     """DuckDB oracle: the identical refinement unrolled to ``rounds``
     chained CTEs ((count, hash-sum) multiset combine)."""
-    prologue = f"""WITH t AS MATERIALIZED (SELECT subj, pred, obj FROM ({triples_sql})),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT subj AS node FROM t UNION ALL SELECT obj FROM t
-  )
-),
+    bnode = f"starts_with(node, '{bnode_prefix}')"
+    return f"""WITH t AS MATERIALIZED (SELECT subj, pred, obj FROM ({triples_sql})),
 edges AS MATERIALIZED (
   SELECT * FROM (
-    SELECT subj AS node, 'o' AS dir, pred, obj AS nbr FROM t
+    SELECT subj AS node, 'o|' || pred AS label, obj AS nbr FROM t
     UNION ALL
-    SELECT obj, 'i', pred, subj FROM t
-  ) {"WHERE starts_with(node, '" + bnode_prefix + "')" if freeze_named else ""}
+    SELECT obj, 'i|' || pred, subj FROM t
+  ) {"WHERE " + bnode if freeze_named else ""}
 ),
-c0 AS (
-  SELECT node,
-         CASE WHEN starts_with(node, '{bnode_prefix}') THEN md5('')
-              ELSE md5(node) END AS color
-  FROM nodes
-)"""
-    rounds_sql = []
-    for k in range(rounds):
-        prev, cur = f"c{k}", f"c{k + 1}"
-        esig = (
-            "('0x' || substr(md5(e.dir || '|' || e.pred || '|' || c.color"
-            " || ':wl'), 1, 15))::BIGINT"
-        )
-        refined = "md5(p.color || '#' || coalesce(a.msig, ''))"
-        if freeze_named:
-            refined = (
-                f"CASE WHEN starts_with(p.node, '{bnode_prefix}') "
-                f"THEN {refined} ELSE p.color END"
-            )
-        rounds_sql.append(f""",
-{cur} AS MATERIALIZED (
-  SELECT p.node, {refined} AS color
-  FROM {prev} p LEFT JOIN (
-    SELECT e.node,
-           CAST(count(*) AS VARCHAR) || ':' ||
-           CAST(sum(CAST({esig} AS HUGEINT)) AS VARCHAR) AS msig
-    FROM edges e JOIN {prev} c ON e.nbr = c.node
-    GROUP BY e.node
-  ) a ON p.node = a.node
-)""")
-    return prologue + "".join(rounds_sql) + f"\nSELECT node, color FROM c{rounds}"
+{_sql_refine_colors(
+    f"CASE WHEN {bnode} THEN md5('') ELSE md5(node) END",
+    "edges",
+    rounds,
+    "wl",
+    "starts_with(p.node, '" + bnode_prefix + "')" if freeze_named else None,
+)}
+SELECT node, color FROM c{rounds}"""
 
 
 def mine_disjointness(
@@ -1281,55 +1295,20 @@ def bisim_summary(triples: DataFrame, rounds: int = 2, salt: str = "bs") -> Data
     (count, exact DECIMAL(38,0)/HUGEINT hash60-sum) accumulator —
     map-side partial-aggregable, one join + one hash aggregate per
     round, hub-safe (a 10^8-degree node costs one accumulator, not a
-    collected list), lineage truncated per round.  Forward-only edges
+    collected list), one eager checkpoint job per round — the same
+    :func:`_refine_colors` loop.  Forward-only edges
     (bisimulation is directional; wl_colors is the symmetric variant).
 
     Output: one row per quotient edge — (src_color, pred, dst_color,
     n_triples, src_block_size, dst_block_size).
     """
-    from nexus_forge_spark.operators.sketches import hash60
-
     t = triples.select("subj", "pred", "obj")
-    nodes = (
-        t.select(F.col("subj").alias("node"))
-        .unionByName(t.select(F.col("obj").alias("node")))
-        .distinct()
-    )
-    color = nodes.select(
-        "node", F.md5(F.substring_index(F.col("node"), ":", 1)).alias("color")
-    ).localCheckpoint(eager=False)
     out_e = t.select(
-        F.col("subj").alias("node"), "pred", F.col("obj").alias("nbr")
+        F.col("subj").alias("node"), F.col("pred").alias("label"), F.col("obj").alias("nbr")
     ).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        nbrc = color.select(F.col("node").alias("nbr"), F.col("color").alias("nc"))
-        msig = (
-            out_e.join(nbrc, "nbr")
-            .select(
-                "node",
-                hash60(F.concat_ws("|", F.col("pred"), F.col("nc")), salt)
-                .cast("decimal(38,0)")
-                .alias("esig"),
-            )
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"), F.sum("esig").alias("esum"))
-            .select(
-                "node",
-                F.concat_ws(
-                    ":", F.col("deg").cast("string"), F.col("esum").cast("string")
-                ).alias("msig"),
-            )
-        )
-        color = (
-            color.join(msig, "node", "left")
-            .select(
-                "node",
-                F.md5(
-                    F.concat(F.col("color"), F.lit("#"), F.coalesce("msig", F.lit("")))
-                ).alias("color"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    color = _refine_colors(
+        t, F.md5(F.substring_index(F.col("node"), ":", 1)), out_e, rounds, salt
+    )
     blocks = color.groupBy("color").agg(F.count(F.lit(1)).alias("n_nodes"))
     qe = (
         t.join(color.select(F.col("node").alias("subj"), F.col("color").alias("src_color")), "subj")
@@ -1360,33 +1339,15 @@ def bisim_summary(triples: DataFrame, rounds: int = 2, salt: str = "bs") -> Data
 def sql_bisim_summary(triples_sql: str, rounds: int = 2, salt: str = "bs") -> str:
     """DuckDB oracle for :func:`bisim_summary`: identical refinement
     unrolled."""
-    from nexus_forge_spark.operators.sketches import sql_hash60
-
     parts = [
         f"t AS MATERIALIZED (SELECT subj, pred, obj FROM ({triples_sql}))",
-        """nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT subj AS node FROM t UNION ALL SELECT obj FROM t
-  )
-)""",
-        "c0 AS (SELECT node, md5(split_part(node, ':', 1)) AS color FROM nodes)",
+        _sql_refine_colors(
+            "md5(split_part(node, ':', 1))",
+            "(SELECT subj AS node, pred AS label, obj AS nbr FROM t)",
+            rounds,
+            salt,
+        ),
     ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        esig = sql_hash60("e.pred || '|' || nc.color", salt)
-        parts.append(
-            f"""m{r} AS (
-  SELECT e.subj AS node,
-         CAST(count(*) AS VARCHAR) || ':' ||
-         CAST(sum(CAST({esig} AS HUGEINT)) AS VARCHAR) AS msig
-  FROM t e JOIN c{p} nc ON nc.node = e.obj
-  GROUP BY e.subj)"""
-        )
-        parts.append(
-            f"""c{r} AS (
-  SELECT c.node, md5(c.color || '#' || coalesce(m.msig, '')) AS color
-  FROM c{p} c LEFT JOIN m{r} m ON m.node = c.node)"""
-        )
     parts.append(
         f"blocks AS (SELECT color, CAST(count(*) AS BIGINT) AS n_nodes "
         f"FROM c{rounds} GROUP BY color)"

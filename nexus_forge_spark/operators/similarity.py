@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nexus_forge_spark.functions.itermetrics import iterate
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -846,11 +848,11 @@ def mmr_select(
     products over quantized vectors, lam is ppm, ties break (score desc,
     id asc) — engines agree exactly.
 
-    Scale posture: k driver rounds (k is small), each ONE query-keyed
-    argmax aggregate over ALL queries simultaneously plus a broadcast
-    join of the per-query picks to fold the new similarity into each
-    survivor's running max (the kcenter running-min pattern);
-    per-round state is localCheckpoint-pinned.
+    Scale posture: k rounds (k is small), each ONE query-keyed argmax
+    aggregate over ALL queries simultaneously plus a broadcast join of
+    the per-query picks to fold the new similarity into each survivor's
+    running max (the kcenter running-min pattern); a round is two
+    checkpoint jobs, one pinning the picks and one the survivors.
     """
     state = cand.select(
         F.col(query_col).alias("__q"),
@@ -860,13 +862,13 @@ def mmr_select(
         F.lit(0).cast("long").alias("__maxsim"),
     ).localCheckpoint(eager=True)
     lam = int(lam_ppm)
-    picked = None
-    for rnd in range(1, int(k) + 1):
-        score = (
-            F.lit(lam) * F.col("__rel")
-            - F.lit(1_000_000 - lam) * F.col("__maxsim")
-        )
-        pick = (
+    score = (
+        F.lit(lam) * F.col("__rel") - F.lit(1_000_000 - lam) * F.col("__maxsim")
+    )
+
+    def pick_next(carry, rnd):
+        state, picked = carry
+        pick = rnd.checkpoint(
             state.select(
                 "__q",
                 F.struct(
@@ -886,19 +888,16 @@ def mmr_select(
                 F.col("__k.rel").alias("__prel"),
                 F.col("__k.v").alias("__pv"),
             )
-            .localCheckpoint(eager=True)
         )
         out_rows = pick.select(
             F.col("__q").alias(query_col),
             F.col("__pd").alias(id_col),
             F.col("__prel").alias("rel"),
             F.col("__ps").alias("mmr_score"),
-            F.lit(rnd).cast("int").alias("rank"),
+            F.lit(rnd.index + 1).cast("int").alias("rank"),
         )
-        picked = (
-            out_rows if picked is None else picked.unionByName(out_rows)
-        )
-        state = (
+        picked = out_rows if picked is None else picked.unionByName(out_rows)
+        state = rnd.checkpoint(
             state.join(F.broadcast(pick), "__q")
             .where(F.col("__d") != F.col("__pd"))
             .select(
@@ -910,6 +909,7 @@ def mmr_select(
                     F.col("__maxsim"), intdot(F.col("__v"), F.col("__pv"))
                 ).alias("__maxsim"),
             )
-            .localCheckpoint(eager=True)
         )
-    return picked
+        return state, picked
+
+    return iterate(pick_next, (state, None), int(k))[1]

@@ -304,3 +304,17 @@ def test_unigram_viterbi_matches_bruteforce_enumeration(spark):
         bt, bp = brute(w)
         assert sum(cost_map[p] for p in got[w]) == bt, (w, got[w], bp)
         assert "".join(got[w]) == w
+
+
+def test_unigram_fertility_rejects_a_word_the_vocab_cannot_segment(spark):
+    """'ab' with only 'a' in the vocab has no segmentation: the Viterbi
+    backtrace must name the word instead of emitting a piece 'b' the
+    vocab lacks (which would read as a plausible fertility)."""
+    from pyspark.errors import PythonException
+
+    from nexus_forge_spark.operators.bpe import unigram_fertility
+
+    vocab = spark.createDataFrame([("a", 1000)], "piece string, cost_micro long")
+    docs = spark.createDataFrame([("s1", "a ab")], "source string, text string")
+    with pytest.raises(PythonException, match="cannot segment word 'ab'"):
+        unigram_fertility(docs, vocab).collect()

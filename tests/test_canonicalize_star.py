@@ -198,3 +198,61 @@ def test_refine_sameas_matches_duckdb(spark):
     )
     want = sorted(tuple(r) for r in duckdb.connect().execute(sql).fetchall())
     assert got == want
+
+
+# a scrambled path 5-3-8-1-9-2-7-4-6 plus a separate edge 11-10
+_HAND_EDGES = [(5, 3), (3, 8), (8, 1), (1, 9), (9, 2), (2, 7), (7, 4), (4, 6), (11, 10)]
+_HAND_MIN_IDS = {v: 1 for v in range(1, 10)} | {10: 10, 11: 10}
+
+
+def _changing_rounds(step, state) -> int:
+    """Rounds of ``step`` that still change ``state`` before its fixpoint."""
+    r = 0
+    while (nxt := step(state)) != state:
+        state, r = nxt, r + 1
+    return r
+
+
+def _propagation_round(labels: dict) -> dict:
+    new = dict(labels)
+    for a, b in _HAND_EDGES:
+        new[a] = min(new[a], labels[b])
+        new[b] = min(new[b], labels[a])
+    return new
+
+
+def _star_round(e: frozenset) -> frozenset:
+    """One large-star + small-star round over (larger, smaller) edges."""
+    sym = e | {(b, a) for a, b in e}
+    m = {}
+    for a, b in sym:
+        m[a] = min(m.get(a, a), b)
+    e1 = {(b, m[a]) for a, b in sym if b > a and b != m[a]}
+    o = {(max(a, b), min(a, b)) for a, b in e1}
+    m2 = {}
+    for a, b in o:
+        m2[a] = min(m2.get(a, b), b)
+    out = {(b, m2[a]) for a, b in o} | set(m2.items())
+    return frozenset((max(a, b), min(a, b)) for a, b in out if a != b)
+
+
+def test_propagation_raises_until_its_budget_reaches_the_fixpoint(spark):
+    e = spark.createDataFrame(_HAND_EDGES, "a long, b long")
+    r = _changing_rounds(_propagation_round, {v: v for v in _HAND_MIN_IDS})
+    assert r >= 3
+    with pytest.raises(RuntimeError, match="did not converge"):
+        CC.connected_components_propagation(e, max_iter=r)
+    got = CC.connected_components_propagation(e, max_iter=r + 1)
+    assert dict(_labels(got)) == _HAND_MIN_IDS
+
+
+def test_star_raises_until_its_budget_reaches_the_fixpoint(spark):
+    e = spark.createDataFrame(_HAND_EDGES, "a long, b long")
+    r = _changing_rounds(
+        _star_round, frozenset((max(a, b), min(a, b)) for a, b in _HAND_EDGES)
+    )
+    assert r >= 2
+    with pytest.raises(RuntimeError, match="did not converge"):
+        CC.connected_components(e, max_iter=r)
+    got = CC.connected_components(e, max_iter=r + 1)
+    assert dict(_labels(got)) == _HAND_MIN_IDS
