@@ -617,7 +617,16 @@ def map_dataframe(
     forge.resolve sites become pre-joined columns: distinct argument values
     are resolved once via the broadcast alias join, then joined back —
     the plan the reference *wishes* it had (SURVEY.md §3.1).
+
+    A ``rules`` that is not a dict raises ``RuleCompileError`` naming its
+    type and value: ``load_mapping`` reads a path to a missing file as raw
+    hjson text, which parses to that path string.
     """
+    if not isinstance(rules, dict):
+        raise RuleCompileError(
+            f"mapping must be a dict of top-level rules, got {type(rules).__name__}: "
+            f"{str(rules)[:120]!r}"
+        )
     ctx = ctx or ForgeContext()
     na_list = None if na is None else (na if isinstance(na, list) else [na])
     compiler = RuleCompiler(df.schema, ctx, na=na_list)

@@ -8,12 +8,14 @@ from __future__ import annotations
 
 import datetime
 import glob
+import os
 import random
 
 import pytest
 
-REF = "/root/reference"
-COMMONS = f"{REF}/tests/data/shacl-model/commons"
+COMMONS = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data", "shacl-model", "commons"
+)
 
 GENDERS = ["female", "male", "other", None]
 TYPES = ["Person", "Patient", "Alien", None]

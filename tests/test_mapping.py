@@ -3,15 +3,19 @@
 Expected values derived from the reference semantics
 (specializations/mappers/dictionaries.py:31-62 eval loop) applied by hand to
 the fixture rules; fixture mapping files + resolver dictionaries are read
-from /root/reference/tests|examples (data, not code)."""
+from /root/reference/tests|examples (data, not code).  The tests that read
+them are skipped where that checkout is absent."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from nexus_forge_spark.functions import hjson
 from nexus_forge_spark.operators.mapping import (
     ForgeContext,
+    RuleCompileError,
     map_dataframe,
     load_mapping,
 )
@@ -19,6 +23,21 @@ from nexus_forge_spark.sources.resolver_dims import load_resolver_dim
 
 REF = "/root/reference"
 DEMO_RESOLVER = f"{REF}/tests/data/demo-resolver"
+SUBJECT_MAPPING = (
+    f"{REF}/examples/mappings/allen-cell-types-database/mappings/DictionaryMapping/Subject.hjson"
+)
+ASSOCIATION_MAPPING = (
+    f"{REF}/examples/mappings/scientists-database/DictionaryMapping/Association.hjson"
+)
+NEURONMORPHOLOGY_MAPPING = (
+    f"{REF}/examples/mappings/allen-cell-types-database/mappings/DictionaryMapping/"
+    "NeuronMorphology.hjson"
+)
+EXAMPLE_MAPPING = f"{REF}/examples/mappings/DemoDB/mappings/DictionaryMappings/Example.hjson"
+CONTRIBUTION_MAPPING = (
+    f"{REF}/tests/data/demo-model/mappings/scientists-database/"
+    "DictionaryMapping/Contribution.hjson"
+)
 FORMATTERS = {"identifier": "https://kg.example.ch/{}/{}"}
 
 INLINE_MAPPING = """
@@ -32,6 +51,14 @@ INLINE_MAPPING = """
     encodingFormat: x.p2
 }
 """
+
+
+def _needs_reference(*paths):
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing),
+        reason=f"needs the nexus-forge reference checkout at /root/reference: {missing}",
+    )
 
 
 def _ctx(spark) -> ForgeContext:
@@ -106,6 +133,7 @@ def test_literal_fallbacks(spark):
     assert row.name == "n"
 
 
+@_needs_reference(SUBJECT_MAPPING, DEMO_RESOLVER)
 def test_subject_mapping_with_resolve(spark):
     # examples/mappings/allen-cell-types-database/.../Subject.hjson
     rules = load_mapping(
@@ -127,6 +155,7 @@ def test_subject_mapping_with_resolve(spark):
     assert row.species.label == "Mus musculus"
 
 
+@_needs_reference(DEMO_RESOLVER)
 def test_unresolved_mention_is_null(spark):
     rules = hjson.loads('{\n sex: forge.resolve(x.s, scope="terms", target="sex")\n}')
     df = spark.createDataFrame([("male",), ("unknown-xyz",)], "s string")
@@ -135,6 +164,7 @@ def test_unresolved_mention_is_null(spark):
     assert None in rows
 
 
+@_needs_reference(ASSOCIATION_MAPPING, DEMO_RESOLVER)
 def test_association_attach_and_strmethods(spark):
     # scientists-database Association.hjson: attach path via
     # '_'.join(x.name.lower().split())
@@ -155,6 +185,7 @@ def test_association_attach_and_strmethods(spark):
     assert row.distribution.contentUrl == "../../data/scientists-database/jane_mid_doe.txt"
 
 
+@_needs_reference(NEURONMORPHOLOGY_MAPPING, DEMO_RESOLVER)
 def test_neuronmorphology_full(spark):
     # allen NeuronMorphology.hjson: nested structs, derivation list, f-string
     # id, attach with content_type, resolve on f-string arg
@@ -226,6 +257,7 @@ def test_eval_fallback_missing_attr_raises(spark):
     assert "no attribute" in str(exc.value)
 
 
+@_needs_reference(EXAMPLE_MAPPING, DEMO_RESOLVER)
 def test_heterogeneous_ternary_struct_unification(spark):
     # DemoDB Example.hjson: resolve-result struct vs literal dict with fewer
     # fields — branches unify to the field union (missing -> null)
@@ -254,6 +286,7 @@ def test_heterogeneous_ternary_struct_unification(spark):
     assert miss.label == "nosuchterm" and miss.id is None and miss.type is None
 
 
+@_needs_reference(EXAMPLE_MAPPING, DEMO_RESOLVER)
 def test_duplicate_resolve_sites_share_one_prejoin(spark):
     # `resolve(t) if resolve(t) is not None else ...` must register ONE site
     from nexus_forge_spark.operators.mapping import RuleCompiler
@@ -281,6 +314,7 @@ def test_duplicate_resolve_sites_share_one_prejoin(spark):
     assert len(compiler.sites) == 1
 
 
+@_needs_reference(CONTRIBUTION_MAPPING)
 def test_load_mapping_url_autodetect():
     # Mapping.load URL branch (mapping.py:57-103) via a file:// URL
     path = (
@@ -290,3 +324,16 @@ def test_load_mapping_url_autodetect():
     rules = load_mapping(f"file://{path}")
     assert rules["type"] == "Contribution"
     assert load_mapping(path) == rules  # file-path branch agrees
+
+
+def test_non_dict_mapping_raises_rule_compile_error(spark):
+    # a path to a missing file loads as raw hjson text (load_mapping's last
+    # branch); mapping it must name the value, not fail inside the compiler
+    from nexus_forge_spark.forge import SparkForge, SparkForgeConfig
+
+    forge = SparkForge(spark, SparkForgeConfig())
+    with pytest.raises(RuleCompileError, match="/no/such/mapping.hjson"):
+        forge.map({"id": 1, "name": "n"}, "/no/such/mapping.hjson")
+    df = spark.createDataFrame([("n",)], "a string")
+    with pytest.raises(RuleCompileError, match="list"):
+        map_dataframe(df, ["x.a"])

@@ -5,6 +5,7 @@ tests/data/shacl-model/commons/shapes-{1,2,3}.json)."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +16,9 @@ from nexus_forge_spark.operators.validate import (
     load_subclass_closure,
 )
 
-COMMONS = "/root/repo/tests/data/shacl-model/commons"
+COMMONS = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data", "shacl-model", "commons"
+)
 
 
 @pytest.fixture(scope="module")
