@@ -16,16 +16,19 @@ first hop that reaches nothing new, or silently at its radius; a
 fixed-round loop (pagerank, sssp, dawid_skene_labels, ...) runs exactly
 the rounds its unrolled SQL oracle replays.
 
-``RoundMetrics`` is the opt-in collector an operator's ``metrics``
-argument hands to :func:`iterate`: one row per round.  On a production
-cluster the same rows feed whatever metrics sink the deployment uses;
-here they are a plain list plus a DataFrame view for tests and notebooks.
+Inside a :func:`recording` block (per thread or task) each :func:`iterate`
+round appends one ``RoundMetrics`` row labelled with its operator; outside
+one no aggregate is evaluated for metrics.  On a cluster the rows feed the
+deployment's metrics sink; here they are a list plus a DataFrame view.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from numbers import Number
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
 
@@ -45,16 +48,30 @@ class RoundMetrics:
 
     def df(self, spark):
         """Metrics as a DataFrame (op, round, metric, value) — long form
-        so heterogeneous operators share one sink schema."""
+        so heterogeneous operators share one sink schema.  Bools are 0/1,
+        ``None`` null; non-numeric ones (kcenter_select's ``far``) stay in ``rows``."""
         long_rows = [
-            (r["op"], r["round"], k, int(v))
+            (r["op"], r["round"], k, None if v is None else int(v))
             for r in self.rows
             for k, v in r.items()
-            if k not in ("op", "round")
+            if k not in ("op", "round") and (v is None or isinstance(v, Number))
         ]
         return spark.createDataFrame(
             long_rows, "op string, round int, metric string, value long"
         )
+
+
+_recorder: ContextVar[RoundMetrics | None] = ContextVar("round_recorder", default=None)
+
+
+@contextmanager
+def recording() -> Iterator[RoundMetrics]:
+    """Yield the ``RoundMetrics`` every :func:`iterate` round in the block records to."""
+    token = _recorder.set(RoundMetrics())
+    try:
+        yield _recorder.get()
+    finally:
+        _recorder.reset(token)
 
 
 def checkpoint_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
@@ -71,7 +88,7 @@ class Round:
     """One round of :func:`iterate`: its 0-based ``index``, the previous
     round's observations ``prev``, and the checkpoint each frame the
     round pins goes through.  Aggregates are only evaluated when a stop
-    test or a metrics collector reads them (``observe``)."""
+    test or a :func:`recording` block reads them (``observe``)."""
 
     index: int
     prev: dict
@@ -105,16 +122,17 @@ def iterate(
     prev: dict | None = None,
     until: Callable[[dict, dict], bool] | None = None,
     error: Callable[[dict], Exception] | None = None,
-    metrics: RoundMetrics | None = None,
     op: str = "",
     report: Callable[[dict, dict], dict] | None = None,
 ) -> Any:
-    """Run ``state = step(state, round)`` for at most ``rounds`` rounds.
-    ``prev`` is round 0's ``prev``: the observations of ``state``.  After
-    each round ``metrics`` records ``report(prev, cur)`` (default ``cur``)
-    under ``op``, and the loop returns once ``until(prev, cur)`` holds; a
-    spent budget raises ``error(last observations)`` if given."""
+    """Run ``state = step(state, round)`` for at most ``rounds`` rounds;
+    ``prev`` holds the observations of ``state``.  In a :func:`recording`
+    block each round records ``report(prev, cur)`` (default ``cur``) under
+    ``op`` (default: the function defining ``step``).  Returns once
+    ``until(prev, cur)`` holds; a spent budget raises ``error(last seen)``."""
+    metrics = _recorder.get()
     observe = until is not None or metrics is not None
+    op = op or step.__qualname__.split(".<locals>")[0]
     prev = prev or {}
     for i in range(rounds):
         rnd = Round(i, prev, observe)

@@ -32,7 +32,6 @@ def pagerank(
     damping_pct: int = 85,
     src: str = "src",
     dst: str = "dst",
-    metrics=None,
 ) -> DataFrame:
     """Fixed-iteration PageRank in integer micro-probabilities.
 
@@ -75,7 +74,7 @@ def pagerank(
     def propagate(ranks: DataFrame, rnd) -> DataFrame:
         contribs = _rank_inflow(e, deg, ranks)
         # the previous ranks cover the node set, so they drive the join and,
-        # when a collector reads them, ride along: `changed` stalling at a
+        # when a recording() block reads them, ride along: `changed` stalling at a
         # high plateau = oscillation/skew, `mass_micro` decaying = dangling
         # drain growing
         prev = [F.col("rank_micro").alias("prev_micro")] if rnd.observe else []
@@ -93,8 +92,7 @@ def pagerank(
         )
 
     return iterate(
-        propagate, ranks, iterations, metrics=metrics, op="pagerank",
-        report=lambda _, cur: {**cur, "nodes": n},
+        propagate, ranks, iterations, report=lambda _, cur: {**cur, "nodes": n},
     ).select("node", "rank_micro")
 
 
@@ -415,7 +413,6 @@ def kcore(
     a: str = "a",
     b: str = "b",
     max_iter: int = 16,
-    metrics=None,
 ) -> DataFrame:
     """The k-core of an undirected graph: iteratively peel nodes of degree
     < k until every surviving node has >= k surviving neighbours.  The
@@ -461,7 +458,6 @@ def kcore(
             f"kcore did not converge in {max_iter} peeling rounds; "
             "raise max_iter (expected O(degeneracy) rounds)"
         ),
-        metrics=metrics, op="kcore",
         report=lambda prev, cur: {
             "edges": cur["edges"], "peeled": prev["edges"] - cur["edges"]
         },
@@ -479,7 +475,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "w",
     node: str = "node",
-    metrics=None,
 ) -> DataFrame:
     """Multi-seed single-source shortest paths over positively-weighted
     edges by synchronous Bellman-Ford relaxation — hop-weighted
@@ -529,7 +524,7 @@ def sssp(
     # rounds remain = converged (later rounds no-op); a round whose growth
     # stalls without converging = skew signal
     return iterate(
-        relax, dist.localCheckpoint(eager=True), rounds, metrics=metrics, op="sssp",
+        relax, dist.localCheckpoint(eager=True), rounds,
         report=lambda prev, cur: {
             "reached": cur["reached"],
             "grew": cur["reached"] - prev.get("reached", 0),
@@ -3127,7 +3122,6 @@ def coreness(
     rounds: int = 24,
     a: str = "a",
     b: str = "b",
-    metrics=None,
 ) -> DataFrame:
     """Full core decomposition — EVERY node's core number, not just
     membership at one k (the kcore operator's upgrade) — via the h-index
@@ -3146,7 +3140,7 @@ def coreness(
     result equals ``sql_coreness``'s fixed ``rounds`` unrolling whenever
     the fixpoint falls inside the budget; otherwise this raises (the
     honesty contract of the iterative family) — it never returns a
-    still-changing vector.  ``metrics`` records ``sum_c`` per round.
+    still-changing vector.
 
     Per round H is computed over the neighbour-value HISTOGRAM — never a
     per-node sort of the adjacency, so a 10^6-degree hub never funnels
@@ -3178,7 +3172,6 @@ def coreness(
             f"coreness: still changing after {rounds} rounds (sum of core "
             f"values fell to {last['sum_c']}) — raise `rounds`"
         ),
-        metrics=metrics, op="coreness",
     )
     return c.select("node", F.col("c").alias("coreness"))
 

@@ -45,7 +45,6 @@ def _close_by_doubling(
     seed: DataFrame,
     op: str,
     max_rounds: int,
-    metrics=None,
     src: str = "node",
     dst: str = "anc",
     keys: tuple[str, ...] = (),
@@ -76,8 +75,7 @@ def _close_by_doubling(
     return iterate(
         double, reach, max_rounds, prev=seen, until=unchanged("pairs"),
         error=lambda _: ClosureError(f"{op}: not converged in {max_rounds} rounds"),
-        metrics=metrics, op=op,
-        report=lambda prev, cur: {
+        op=op, report=lambda prev, cur: {
             "pairs": cur["pairs"], "new_pairs": cur["pairs"] - prev["pairs"]
         },
     )
@@ -88,7 +86,6 @@ def transitive_closure(
     child_col: str = "child",
     parent_col: str = "parent",
     max_rounds: int = 20,
-    metrics=None,
 ) -> DataFrame:
     """(child, parent) edges -> all (node, ancestor) pairs, node <> ancestor.
 
@@ -102,7 +99,7 @@ def transitive_closure(
     seed = edges.select(
         F.col(child_col).alias("node"), F.col(parent_col).alias("anc")
     )
-    return _close_by_doubling(seed, "transitive_closure", max_rounds, metrics)
+    return _close_by_doubling(seed, "transitive_closure", max_rounds)
 
 
 def class_rollup(
@@ -539,6 +536,7 @@ def _refine_colors(
     edges: DataFrame,
     rounds: int,
     salt: str,
+    op: str,
     refines: Column | None = None,
 ) -> DataFrame:
     """``rounds`` rounds of multiset color refinement, the shared loop of
@@ -547,7 +545,7 @@ def _refine_colors(
     md5(color # deg:esum) over the node's ``edges(node, label, nbr)``
     rows, with esum the exact DECIMAL sum of hash60(label|nbr color).
     Nodes where ``refines`` is false keep their color.  One join, one
-    hash aggregate and one checkpoint job per round."""
+    hash aggregate and one checkpoint job per round; rounds record as ``op``."""
     from nexus_forge_spark.operators.sketches import hash60
 
     color = (
@@ -588,7 +586,7 @@ def _refine_colors(
             color.join(msig, "node", "left").select("node", refined.alias("color"))
         )
 
-    return iterate(refine, color, rounds)
+    return iterate(refine, color, rounds, op=op)
 
 
 def wl_colors(
@@ -659,6 +657,7 @@ def wl_colors(
         edges.localCheckpoint(eager=False),
         rounds,
         "wl",
+        "wl_colors",
         bnode if freeze_named else None,
     )
 
@@ -1249,7 +1248,6 @@ def transitive_closure_incremental(
     child_col: str = "child",
     parent_col: str = "parent",
     max_rounds: int = 20,
-    metrics=None,
 ) -> DataFrame:
     """Maintain a transitive closure under edge INSERTS without
     recomputing from the base edges: seed the iterative-doubling loop
@@ -1275,9 +1273,7 @@ def transitive_closure_incremental(
             )
         )
     )
-    return _close_by_doubling(
-        seed, "transitive_closure_incremental", max_rounds, metrics
-    )
+    return _close_by_doubling(seed, "transitive_closure_incremental", max_rounds)
 
 
 def bisim_summary(triples: DataFrame, rounds: int = 2, salt: str = "bs") -> DataFrame:
@@ -1307,7 +1303,8 @@ def bisim_summary(triples: DataFrame, rounds: int = 2, salt: str = "bs") -> Data
         F.col("subj").alias("node"), F.col("pred").alias("label"), F.col("obj").alias("nbr")
     ).localCheckpoint(eager=False)
     color = _refine_colors(
-        t, F.md5(F.substring_index(F.col("node"), ":", 1)), out_e, rounds, salt
+        t, F.md5(F.substring_index(F.col("node"), ":", 1)), out_e, rounds, salt,
+        "bisim_summary",
     )
     blocks = color.groupBy("color").agg(F.count(F.lit(1)).alias("n_nodes"))
     qe = (

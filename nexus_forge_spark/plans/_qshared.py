@@ -425,6 +425,8 @@ def _negation_media_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media spans as schema:distribution triples with subjects normalized
     to the annotation-triple style ('doc:<n>') so both halves of the view
     join on the same subject key."""
+    from nexus_forge_spark.plans.queries_kg import q_media_refs
+
     refs = q_media_refs(spark, sf_dir)
     return refs.select(
         F.concat(
@@ -458,6 +460,8 @@ SPARQL_TRANSITIVE_TEXT = """SELECT ?doc ?root WHERE {
 def _subclass_enriched_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG triples + the ontology dim's subclass edges + the query-local
     deepening levels — the view the closure-path contract queries run on."""
+    from nexus_forge_spark.plans.queries_kg import q_kg_triples
+
     dim = dims.ontology_terms_idx(spark)
     sub = dim.where(F.col("subClassOf").isNotNull()).select(
         F.col("id").alias("subj"),

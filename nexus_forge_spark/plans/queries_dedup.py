@@ -1,7 +1,5 @@
-"""Auto-split from the former single-module driver_queries.py (round-4
-hygiene): the dedup query family.  Cross-family call-time references resolve through the
-namespace injection the aggregator (driver_queries.py) performs after
-importing every family module — no cross-module imports, no cycles."""
+"""The dedup contract-query family, registered by driver_queries.py.  The
+other families import its queries by name, so it imports none of theirs."""
 
 from nexus_forge_spark.plans._qshared import *  # noqa: F401,F403
 

@@ -1,9 +1,10 @@
-"""Auto-split from the former single-module driver_queries.py (round-4
-hygiene): the kg query family.  Cross-family call-time references resolve through the
-namespace injection the aggregator (driver_queries.py) performs after
-importing every family module — no cross-module imports, no cycles."""
+"""The kg contract-query family (``q_*`` Spark plans, ``sql_*`` DuckDB
+oracles), registered by driver_queries.py."""
 
 from nexus_forge_spark.plans._qshared import *  # noqa: F401,F403
+from nexus_forge_spark.plans.queries_dedup import (
+    q_dedup_minhash, sql_dedup_components, sql_dedup_minhash,
+)
 
 
 

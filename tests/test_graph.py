@@ -954,67 +954,149 @@ def test_clustering_coefficients_triangle_vs_star(spark):
 
 def test_iterative_round_metrics(spark):
     """Round-3 VERDICT ask #7: iterative operators emit per-round
-    convergence metrics (frontier size, delta count) when handed a
-    RoundMetrics collector — and are metric-free (identical plans) by
+    convergence metrics (frontier size, delta count) when run inside a
+    recording() block — and are metric-free (identical plans) by
     default."""
-    from nexus_forge_spark.functions.itermetrics import RoundMetrics
+    from nexus_forge_spark.functions.itermetrics import recording
     from nexus_forge_spark.operators.graph import coreness, kcore, pagerank, sssp
     from nexus_forge_spark.operators.ontology import (
         transitive_closure,
         transitive_closure_incremental,
     )
 
-    m = RoundMetrics()
+    with recording() as m:
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
+        )
+        pagerank(edges, iterations=3)
+        pr = m.for_op("pagerank")
+        assert [r["round"] for r in pr] == [0, 1, 2]
+        assert all(r["nodes"] == 5 for r in pr)
+        assert all(r["mass_micro"] > 0 for r in pr)
+
+        seeds = spark.createDataFrame([(1,)], "node long")
+        w = edges.withColumn("w", F.lit(1))
+        sssp(w, seeds, rounds=5)
+        ss = m.for_op("sssp")
+        assert [r["round"] for r in ss] == [0, 1, 2, 3, 4]
+        assert ss[-1]["reached"] == 5
+        assert ss[-1]["grew"] == 0  # converged before the final round
+
+        und = spark.createDataFrame(
+            [(1, 2), (2, 3), (1, 3), (3, 4)], "a long, b long"
+        )
+        kcore(und, k=2)
+        kc = m.for_op("kcore")
+        assert kc and kc[0]["peeled"] == 1  # the 3-4 pendant edge peels
+        assert kc[-1]["peeled"] == 0  # fixpoint round
+
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(8)], "child long, parent long"
+        )
+        transitive_closure(chain)
+        tc = m.for_op("transitive_closure")
+        assert len(tc) >= 3  # depth 8 -> ceil(log2)+1 doubling rounds
+        assert tc[-1]["new_pairs"] == 0
+        assert tc[-1]["pairs"] == 9 * 8 // 2  # full chain closure
+
+        # the old closure covers 0..4; the delta edges extend it to 8
+        old = transitive_closure(chain.where("child < 4"))
+        transitive_closure_incremental(old, chain.where("child >= 4"))
+        inc = m.for_op("transitive_closure_incremental")
+        assert [r["round"] for r in inc] == list(range(len(inc)))
+        assert inc[0]["new_pairs"] > 0 and inc[-1]["new_pairs"] == 0
+        assert inc[-1]["pairs"] == 9 * 8 // 2
+
+        # triangle 1-2-3 plus pendant 4: degree sum 8, core sum 2+2+2+1 = 7
+        coreness(und)
+        cc = m.for_op("coreness")
+        assert [r["sum_c"] for r in cc] == [7, 7]  # the fixpoint round ends it
+
+        mdf = m.df(spark)
+        assert mdf.columns == ["op", "round", "metric", "value"]
+        assert mdf.count() == sum(len(r) - 2 for r in m.rows)
+
+
+def test_round_metrics_default_path_observes_nothing(spark, monkeypatch):
+    """Outside a recording() block a loop evaluates no aggregate for
+    metrics: with the observing checkpoint made to raise, pagerank still
+    returns the recorded run's ranks, and the exited block's recorder
+    gets no further rows."""
+    from nexus_forge_spark.functions import itermetrics
+    from nexus_forge_spark.operators.graph import pagerank
+
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
     )
-    pagerank(edges, iterations=3, metrics=m)
-    pr = m.for_op("pagerank")
-    assert [r["round"] for r in pr] == [0, 1, 2]
-    assert all(r["nodes"] == 5 for r in pr)
-    assert all(r["mass_micro"] > 0 for r in pr)
+    with itermetrics.recording() as m:
+        want = sorted(pagerank(edges, iterations=3).collect())
+    assert [r["round"] for r in m.for_op("pagerank")] == [0, 1, 2]
 
-    seeds = spark.createDataFrame([(1,)], "node long")
-    w = edges.withColumn("w", F.lit(1))
-    sssp(w, seeds, rounds=5, metrics=m)
-    ss = m.for_op("sssp")
-    assert [r["round"] for r in ss] == [0, 1, 2, 3, 4]
-    assert ss[-1]["reached"] == 5
-    assert ss[-1]["grew"] == 0  # converged before the final round
+    def boom(*_a, **_k):
+        raise AssertionError("observed outside a recording() block")
 
-    und = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "a long, b long"
+    monkeypatch.setattr(itermetrics, "checkpoint_observed", boom)
+    assert sorted(pagerank(edges, iterations=3).collect()) == want
+    assert len(m.rows) == 3
+
+
+def test_recording_nests_and_labels_by_enclosing_function():
+    from nexus_forge_spark.functions.itermetrics import iterate, recording
+
+    def count_up(n, rnd):
+        rnd.seen["n"] = n
+        return n + 1
+
+    with recording() as outer:
+        iterate(count_up, 0, 1)
+        with recording() as inner:
+            iterate(lambda n, rnd: count_up(n, rnd), 5, 2)
+        iterate(count_up, 9, 1, op="named")
+    assert outer.rows == [
+        {"op": "test_recording_nests_and_labels_by_enclosing_function", "round": 0, "n": 0},
+        {"op": "named", "round": 0, "n": 9},
+    ]
+    assert inner.rows == [
+        {"op": "test_recording_nests_and_labels_by_enclosing_function", "round": i, "n": 5 + i}
+        for i in range(2)
+    ]
+
+
+def test_round_metrics_df_skips_non_numeric_observations(spark):
+    """Every loop records inside a block, so df() must take the
+    observations that are no integer: kcenter_select's `far` row (kept in
+    rows only), bpe_train's bool `exhausted` (0/1) and a sum over no rows
+    (a null value)."""
+    from nexus_forge_spark.functions.itermetrics import RoundMetrics, recording
+    from nexus_forge_spark.operators.bpe import bpe_train
+    from nexus_forge_spark.operators.clustering import kcenter_select
+    from nexus_forge_spark.operators.ontology import wl_colors
+
+    pts = spark.createDataFrame(
+        [(1, [0, 0]), (2, [1, 0]), (3, [10, 0])], "vid long, qv array<long>"
     )
-    kcore(und, k=2, metrics=m)
-    kc = m.for_op("kcore")
-    assert kc and kc[0]["peeled"] == 1  # the 3-4 pendant edge peels
-    assert kc[-1]["peeled"] == 0  # fixpoint round
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "child long, parent long"
+    words = spark.createDataFrame([("low", 5), ("lower", 2)], "word string, cnt long")
+    triples = spark.createDataFrame(
+        [("_:a", "p", "n:1"), ("_:b", "p", "_:a")], "subj string, pred string, obj string"
     )
-    transitive_closure(chain, metrics=m)
-    tc = m.for_op("transitive_closure")
-    assert len(tc) >= 3  # depth 8 -> ceil(log2)+1 doubling rounds
-    assert tc[-1]["new_pairs"] == 0
-    assert tc[-1]["pairs"] == 9 * 8 // 2  # full chain closure
+    with recording() as m:
+        kcenter_select(pts, k=2, dim=2)
+        bpe_train(words, 2)
+        wl_colors(triples, rounds=2)
+    assert m.for_op("kcenter_select") and m.for_op("bpe_train")
+    assert [r["round"] for r in m.for_op("wl_colors")] == [0, 1]
+    long_form = m.df(spark).collect()
+    got = {(r.op, r.metric) for r in long_form}
+    assert ("bpe_train", "exhausted") in got
+    assert not any(r.metric == "far" for r in long_form)
+    assert {r.value for r in long_form if r.metric == "exhausted"} <= {0, 1}
 
-    # the old closure covers 0..4; the delta edges extend it to 8
-    old = transitive_closure(chain.where("child < 4"))
-    transitive_closure_incremental(old, chain.where("child >= 4"), metrics=m)
-    inc = m.for_op("transitive_closure_incremental")
-    assert [r["round"] for r in inc] == list(range(len(inc)))
-    assert inc[0]["new_pairs"] > 0 and inc[-1]["new_pairs"] == 0
-    assert inc[-1]["pairs"] == 9 * 8 // 2
-
-    # triangle 1-2-3 plus pendant 4: degree sum 8, core sum 2+2+2+1 = 7
-    coreness(und, metrics=m)
-    cc = m.for_op("coreness")
-    assert [r["sum_c"] for r in cc] == [7, 7]  # the fixpoint round ends it
-
-    mdf = m.df(spark)
-    assert mdf.columns == ["op", "round", "metric", "value"]
-    assert mdf.count() == sum(len(r) - 2 for r in m.rows)
+    hand = RoundMetrics()
+    hand.record("pagerank", 0, changed=None, settled=True)
+    assert sorted(hand.df(spark).collect(), key=lambda r: r.metric) == [
+        ("pagerank", 0, "changed", None),
+        ("pagerank", 0, "settled", 1),
+    ]
 
 
 # a 4-clique (coreness 3) with a pendant path (1) and a triangle bridge (2)

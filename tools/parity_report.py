@@ -17,7 +17,10 @@ independent pure-Python interpreter of the reference's documented semantics
   (tests/specializations/models/test_rdf_model.py:79-174) as hand facts.
 
 The ACTUAL side is this engine (Spark): map_dataframe, resolve, and
-ShapeCompiler over the very same fixture files under /root/reference.
+ShapeCompiler over the very same fixture files: the resolver dictionaries
+and mappings of a nexus-forge checkout at ``REF``, and the SHACL shapes
+vendored in tests/data/shacl-model/commons.  A missing fixture ends the
+run with exit status 2 and a list of the absent paths.
 
 Every case's output is flattened to (case, path, value) facts;
   precision = |actual ∩ expected| / |actual|
@@ -32,11 +35,13 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 REF = "/root/reference"
 DEMO_RESOLVER = f"{REF}/tests/data/demo-resolver"
-COMMONS = f"{REF}/tests/data/shacl-model/commons"
+RESOLVER_DICTS = ("sex", "species", "cell_types", "agents", "structure_layer")
+COMMONS = os.path.join(ROOT, "tests", "data", "shacl-model", "commons")
 FORMATTERS = {"identifier": "https://kg.example.ch/{}/{}"}
 
 
@@ -185,7 +190,7 @@ def run(spark):  # noqa: C901 — linear report script
 
     dict_rows = {
         name: json.load(open(f"{DEMO_RESOLVER}/{name}.json", encoding="utf-8"))
-        for name in ("sex", "species", "cell_types", "agents", "structure_layer")
+        for name in RESOLVER_DICTS
     }
     py_dicts = {
         ("terms", None): dict_rows["sex"],
@@ -367,8 +372,7 @@ def run(spark):  # noqa: C901 — linear report script
         "",
         f"Target (BASELINE.json): P/R >= 0.95. Measured: P={P:.4f}, R={Rr:.4f}.",
     ]
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "PARITY.md"), "w", encoding="utf-8") as f:
+    with open(os.path.join(ROOT, "PARITY.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n")
     summary = {"metric": "parity_pr", "precision": round(P, 4), "recall": round(Rr, 4),
                "families": result}
@@ -376,7 +380,22 @@ def run(spark):  # noqa: C901 — linear report script
     return 0 if P >= 0.95 and Rr >= 0.95 else 1
 
 
+def missing_inputs() -> list[str]:
+    """The fixture files and directories this report reads that are absent."""
+    paths = [f"{DEMO_RESOLVER}/{name}.json" for name in RESOLVER_DICTS]
+    paths += [path for path, _records in MAPPING_CASES] + [COMMONS]
+    return [p for p in paths if not os.path.exists(p)]
+
+
 def main() -> int:
+    missing = missing_inputs()
+    if missing:
+        print(
+            f"parity_report: {len(missing)} fixture path(s) missing (the resolver "
+            f"dictionaries and mappings come from a nexus-forge checkout at {REF}):",
+            *missing, sep="\n  ", file=sys.stderr,
+        )
+        return 2
     from nexus_forge_spark.session import get_spark
 
     spark = get_spark("parity-report")
