@@ -13,13 +13,18 @@ ancestor closure (rdfs11 subClassOf transitivity) and ordered list
 reassembly.
 
 Scale design: both closures are ITERATIVE-DOUBLING joins — depth-d
-hierarchies and length-L lists converge in ceil(log2) rounds, not d/L
-rounds; each round is one shuffle keyed on the hop node, with
-``localCheckpoint`` truncating lineage.  The pair closures
-(:func:`transitive_closure`, :func:`transitive_closure_incremental`,
-:func:`owl_transitive_entail`) share one doubling loop,
-:func:`_close_by_doubling`, whose fixpoint test is the pair count the
-checkpoint job itself observes — no round pays a separate count job.
+hierarchies and length-L lists converge in O(log) rounds, not d/L
+rounds; each round joins on the hop node, with ``localCheckpoint``
+truncating lineage.  The pair closures (:func:`transitive_closure`,
+:func:`transitive_closure_incremental`, :func:`owl_transitive_entail`)
+share one doubling loop, :func:`_close_by_doubling`.  Each pair carries
+its shortest hop count, and the loop stops once the longest one falls
+short of twice the previous round's: floor(log2 d) + 1 rounds, with no
+trailing round that adds nothing unless d is a power of two.  The
+checkpoint job itself observes that bound, the pair count and the
+state's bytes, so no round pays a separate count job, and a state that
+fits the broadcast threshold is broadcast as the next round's hop side
+instead of shuffling both join sides.
 Ontology class universes are 10^2..10^6 rows (always broadcastable
 against a 10^12-instance fact side), and rdf lists cost O(L log L) rows
 via Wyllie list ranking — never an O(L^2) pair closure.
@@ -41,6 +46,19 @@ class ClosureError(RuntimeError):
     """Transitive closure did not converge within max_rounds."""
 
 
+def _row_bytes(df: DataFrame) -> Column:
+    """A row's payload bytes: ``octet_length`` of each string or binary
+    column, the type's fixed width for the others."""
+    fixed, var = 0, []
+    for f in df._jdf.schema().fields():
+        t = f.dataType()
+        if t.typeName().startswith("string") or t.typeName() == "binary":
+            var.append(F.coalesce(F.octet_length(F.col(f.name())), F.lit(0)))
+        else:
+            fixed += t.defaultSize()
+    return sum(var, F.lit(fixed))
+
+
 def _close_by_doubling(
     seed: DataFrame,
     op: str,
@@ -52,33 +70,58 @@ def _close_by_doubling(
 ) -> DataFrame:
     """Iterative doubling reach_{k+1} = reach_k UNION (reach_k JOIN
     reach_k ON (keys, dst = src)) from ``seed``'s (src, keys, dst) pairs,
-    dropping src = dst pairs when ``irreflexive``.  Each round is one
-    checkpoint job that also observes the pair count; reach only grows
-    under union+distinct, so an unchanged count is an unchanged set and
-    the loop returns there.  Raises ClosureError past max_rounds."""
-    pairs = F.count(F.lit(1))
+    dropping src = dst pairs when ``irreflexive``.
 
-    def distinct_pairs(df: DataFrame) -> DataFrame:
-        return (df.where(F.col(src) != F.col(dst)) if irreflexive else df).distinct()
+    Each pair carries ``_d``, the fewest seed pairs found to chain it
+    (``min`` in place of ``distinct``), so after round i reach holds
+    exactly the pairs at most 2^(i+1) seed hops apart, each with its
+    shortest hop count.  A prefix of a shortest path is a shortest path,
+    so a pair farther apart implies one exactly 2^(i+1) apart: once the
+    longest ``_d`` falls short of twice the previous round's, reach is
+    closed (per key, and for cycles too).  A depth-L input so stops after
+    floor(log2 L) + 1 rounds; an unchanged pair count (empty input) also
+    stops.  Each round is one checkpoint job that also observes the pair
+    count, the longest ``_d`` and the state's payload bytes; the next
+    round broadcasts its hop side when those bytes fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (a checkpoint's size
+    estimate is that of its lazy plan, a self-join's product, so the
+    planner alone would shuffle both sides).  Raises ClosureError past
+    max_rounds."""
+    limit = seed.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    cols = [src, *keys, dst]
+
+    def shortest(df: DataFrame) -> DataFrame:
+        df = df.where(F.col(src) != F.col(dst)) if irreflexive else df
+        return df.groupBy(*cols).agg(F.min("_d").alias("_d"))
+
+    start = shortest(seed.select(*cols, F.lit(1).alias("_d")))
+    seen_aggs = {
+        "pairs": F.count(F.lit(1)),
+        "longest": F.max("_d"),
+        "bytes": F.sum(_row_bytes(start)),
+    }
 
     def double(reach: DataFrame, rnd) -> DataFrame:
-        hop = reach.select(*keys, F.col(src).alias("_j"), dst)
-        step = reach.select(*keys, src, F.col(dst).alias("_j")).join(
+        hop = reach.select(*keys, F.col(src).alias("_j"), dst, F.col("_d").alias("_h"))
+        if (rnd.prev["bytes"] or 0) <= limit:  # -1: never
+            hop = F.broadcast(hop)
+        step = reach.select(*keys, src, F.col(dst).alias("_j"), "_d").join(
             hop, [*keys, "_j"]
         )
-        return rnd.checkpoint(
-            distinct_pairs(reach.unionByName(step.select(src, *keys, dst))),
-            pairs=pairs,
-        )
+        step = step.select(*cols, (F.col("_d") + F.col("_h")).alias("_d"))
+        return rnd.checkpoint(shortest(reach.unionByName(step)), **seen_aggs)
 
-    reach, seen = checkpoint_observed(distinct_pairs(seed), pairs=pairs)
+    reach, seen = checkpoint_observed(start, **seen_aggs)
     return iterate(
-        double, reach, max_rounds, prev=seen, until=unchanged("pairs"),
+        double, reach, max_rounds, prev=seen,
+        until=lambda prev, cur: cur["pairs"] == prev["pairs"]
+        or cur["longest"] < 2 * prev["longest"],
         error=lambda _: ClosureError(f"{op}: not converged in {max_rounds} rounds"),
         op=op, report=lambda prev, cur: {
-            "pairs": cur["pairs"], "new_pairs": cur["pairs"] - prev["pairs"]
+            "pairs": cur["pairs"], "new_pairs": cur["pairs"] - prev["pairs"],
+            "longest": cur["longest"],
         },
-    )
+    ).drop("_d")
 
 
 def transitive_closure(
@@ -90,8 +133,9 @@ def transitive_closure(
     """(child, parent) edges -> all (node, ancestor) pairs, node <> ancestor.
 
     Iterative doubling: reach_{k+1} = reach_k UNION (reach_k JOIN reach_k),
-    so a depth-d DAG converges in ceil(log2 d) joins (2^20-deep hierarchies
-    at the default).  Convergence is detected by a stable pair count; a
+    so a depth-d DAG closes in floor(log2 d) + 1 rounds: the loop stops
+    once the longest shortest path found falls short of twice the previous
+    round's, so the default ``max_rounds=20`` covers depth <= 2^20 - 1.  A
     cyclic input still converges (the closure of a finite graph is finite)
     and surfaces as mutual (a, b)/(b, a) ancestor pairs the caller can
     detect.  Raises ClosureError past max_rounds.
@@ -1082,8 +1126,8 @@ def owl_transitive_entail(
 
     ALL listed predicates close in ONE plan: the pred is part of the
     join key, so iterative doubling reach_{k+1} = reach_k UNION
-    (reach_k JOIN reach_k ON (pred, node)) converges in ceil(log2 d)
-    shuffle rounds where d is the DEEPEST chain across all preds —
+    (reach_k JOIN reach_k ON (pred, node)) converges in floor(log2 d) + 1
+    rounds where d is the longest shortest path across all preds —
     shallow predicates ride along at no extra rounds.  The closure of a
     chain is inherently O(L^2) pairs; callers bound L by construction
     (provenance chains, containment hierarchies), not the operator.
@@ -1253,10 +1297,12 @@ def transitive_closure_incremental(
     recomputing from the base edges: seed the iterative-doubling loop
     with (old closure UNION delta edges).  The old side is already
     closed, so every genuinely new pair threads through at least one
-    delta edge and the loop converges in ceil(log2(k + 1)) rounds where
-    k is the MAXIMUM number of delta edges on any new path — O(1)
-    rounds for a typical ingest batch, versus ceil(log2 depth) for the
-    full rebuild.  Same output contract as :func:`transitive_closure`
+    delta edge, and its shortest chain over the seed pairs alternates old
+    pairs and delta edges: at most 2k + 1 pairs, where k is the MAXIMUM
+    number of delta edges on any new path.  The loop so stops within
+    floor(log2(2k + 1)) + 1 rounds — O(1) rounds for a typical ingest
+    batch, versus floor(log2 depth) + 1 for the full rebuild.  Same
+    output contract as :func:`transitive_closure`
     (all (node, anc) pairs, node <> anc); equality with the full
     recompute is the graded invariant (the resumable-pipeline contract
     this repo's incremental family shares).

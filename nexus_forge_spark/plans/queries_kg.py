@@ -3204,9 +3204,9 @@ def q_kg_closure_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental transitive-closure maintenance (operators/ontology.py
     transitive_closure_incremental): 1-in-8 chain edges arrive as a
     delta batch; the old closure (built from the other 7/8) is seeded
-    with the delta and re-doubled — converging in ceil(log2(k+1))
-    rounds for k delta edges per path instead of log(depth) from
-    scratch.  Graded against the full-recompute oracle (recursive CTE
+    with the delta and re-doubled — converging in floor(log2(2k+1)) + 1
+    rounds for k delta edges per path instead of floor(log2 depth) + 1
+    from scratch.  Graded against the full-recompute oracle (recursive CTE
     over ALL edges): hash equality IS the fold==recompute invariant
     this repo's incremental family shares."""
     from nexus_forge_spark.operators.ontology import (

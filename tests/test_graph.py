@@ -995,7 +995,9 @@ def test_iterative_round_metrics(spark):
         )
         transitive_closure(chain)
         tc = m.for_op("transitive_closure")
-        assert len(tc) >= 3  # depth 8 -> ceil(log2)+1 doubling rounds
+        # depth 8 -> floor(log2 8) + 1 doubling rounds; the last one shows
+        # no pair lies 16 hops apart, so it adds none
+        assert [r["round"] for r in tc] == [0, 1, 2, 3]
         assert tc[-1]["new_pairs"] == 0
         assert tc[-1]["pairs"] == 9 * 8 // 2  # full chain closure
 
@@ -1003,8 +1005,12 @@ def test_iterative_round_metrics(spark):
         old = transitive_closure(chain.where("child < 4"))
         transitive_closure_incremental(old, chain.where("child >= 4"))
         inc = m.for_op("transitive_closure_incremental")
-        assert [r["round"] for r in inc] == list(range(len(inc)))
-        assert inc[0]["new_pairs"] > 0 and inc[-1]["new_pairs"] == 0
+        # over the old closure's pairs plus the delta edges the longest
+        # shortest path is 0 -> 4 -> 5 -> 6 -> 7 -> 8, 5 hops: floor(log2 5)
+        # + 1 = 3 rounds, and the last still adds the 5-hop pairs
+        assert [r["round"] for r in inc] == [0, 1, 2]
+        assert [r["longest"] for r in inc] == [2, 4, 5]
+        assert inc[0]["new_pairs"] > 0 and inc[-1]["new_pairs"] > 0
         assert inc[-1]["pairs"] == 9 * 8 // 2
 
         # triangle 1-2-3 plus pendant 4: degree sum 8, core sum 2+2+2+1 = 7
@@ -1160,9 +1166,12 @@ def test_coreness_convergence_boundary(spark):
 
 
 def test_closure_incremental_convergence_boundary(spark):
-    """Same boundary for the incremental closure: with r changing
-    doubling rounds, max_rounds=r raises and max_rounds=r+1 returns the
-    full closure."""
+    """Same boundary for the incremental closure under its stop rule.  The
+    seed pairs (old closure plus delta edges) chain 0 -> 3 -> 4 -> ... -> 12,
+    a longest shortest path of L = 10 pairs, so the doubling stops after
+    floor(log2 L) + 1 rounds, which for an L that is no power of two are
+    exactly the r rounds that still add pairs: max_rounds=r-1 raises and
+    max_rounds=r returns the full closure."""
     import pytest
 
     from nexus_forge_spark.operators.ontology import (
@@ -1174,6 +1183,7 @@ def test_closure_incremental_convergence_boundary(spark):
     chain = [(i, i + 1) for i in range(12)]
     old_edges, delta_edges = chain[:3], chain[3:]
     reach = {(a, c) for a, b in old_edges for c in range(b, 4)} | set(delta_edges)
+    seed = set(reach)
     r = 0
     while True:
         nxt = reach | {(a, d) for a, b in reach for c, d in reach if b == c}
@@ -1182,12 +1192,23 @@ def test_closure_incremental_convergence_boundary(spark):
         reach, r = nxt, r + 1
     assert r >= 2 and len(reach) == 13 * 12 // 2
 
+    def farthest(a: int) -> int:  # BFS levels over the seed pairs
+        seen, frontier, level = {a}, {a}, 0
+        while True:
+            frontier = {d for c, d in seed if c in frontier} - seen
+            if not frontier:
+                return level
+            seen, level = seen | frontier, level + 1
+
+    longest = max(farthest(a) for a, _ in seed)
+    assert longest == 10 and longest.bit_length() == r
+
     schema = "child long, parent long"
     old = transitive_closure(spark.createDataFrame(old_edges, schema))
     delta = spark.createDataFrame(delta_edges, schema)
     with pytest.raises(ClosureError, match="not converged"):
-        transitive_closure_incremental(old, delta, max_rounds=r)
-    got = transitive_closure_incremental(old, delta, max_rounds=r + 1)
+        transitive_closure_incremental(old, delta, max_rounds=r - 1)
+    got = transitive_closure_incremental(old, delta, max_rounds=r)
     assert {(row.node, row.anc) for row in got.collect()} == reach
 
 

@@ -8,8 +8,10 @@ from nexus_forge_spark.operators.ontology import (
     class_rollup,
     flatten_rdf_lists,
     sql_class_rollup,
+    owl_transitive_entail,
     sql_flatten_rdf_lists,
     transitive_closure,
+    transitive_closure_incremental,
 )
 
 
@@ -40,6 +42,92 @@ def test_closure_nonconvergence_raises(spark):
     )
     with pytest.raises(ClosureError):
         transitive_closure(edges, max_rounds=2)
+
+
+def _chain(spark, depth):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(depth)], "child long, parent long"
+    )
+
+
+@pytest.mark.parametrize("depth", [8, 12])
+def test_closure_stops_on_shortest_path_bound(spark, depth):
+    """A chain whose longest path is L stops after floor(log2 L) + 1
+    rounds, 4 for both L = 8 and L = 12.  At L = 8 the fourth round is the
+    one that shows no pair lies 16 hops apart, so it adds no pair."""
+    from nexus_forge_spark.functions.itermetrics import recording
+
+    with recording() as m:
+        out = transitive_closure(_chain(spark, depth))
+    rows = m.for_op("transitive_closure")
+    assert [r["round"] for r in rows] == [0, 1, 2, 3]
+    assert [r["longest"] for r in rows] == [2, 4, 8, depth]
+    assert rows[-1]["pairs"] == depth * (depth + 1) // 2
+    assert (rows[-1]["new_pairs"] == 0) == (depth == 8)
+    assert out.columns == ["node", "anc"]
+    assert {(r.node, r.anc) for r in out.collect()} == {
+        (a, b) for a in range(depth + 1) for b in range(a + 1, depth + 1)
+    }
+
+
+def _py_closure(pairs):
+    reach = set(pairs)
+    while True:
+        nxt = reach | {(a, d) for a, b in reach for c, d in reach if b == c}
+        if nxt == reach:
+            return reach
+        reach = nxt
+
+
+def test_owl_transitive_cycles_match_python_closure(spark):
+    """Cycles of several lengths, a reflexive seed pair and a tail off a
+    cycle, per predicate: every pair of the pure-Python closure, the
+    self-loops the cycles entail included, and nothing else."""
+    ring = ["a", "b", "c", "d", "e"]
+    t = [(ring[i], ring[(i + 1) % 5]) for i in range(5)]
+    t += [("e", "f"), ("f", "g"), ("g", "h"), ("h", "h"), ("x", "a")]
+    u = [("p", "q"), ("q", "p"), ("q", "r"), ("r", "s"), ("s", "t"), ("t", "u")]
+    rows = [(s, "t", o) for s, o in t] + [(s, "u", o) for s, o in u]
+    got = {
+        (r.subj, r.pred, r.obj)
+        for r in owl_transitive_entail(_trips(spark, rows), ["t", "u"]).collect()
+    }
+    want = {(s, "t", o) for s, o in _py_closure(t)}
+    want |= {(s, "u", o) for s, o in _py_closure(u)}
+    assert ("a", "t", "a") in want and ("h", "t", "h") in want
+    assert got == want
+
+
+def test_closures_of_empty_input_are_empty(spark):
+    empty = spark.createDataFrame([], "child long, parent long")
+    assert transitive_closure(empty).collect() == []
+    assert transitive_closure_incremental(transitive_closure(empty), empty).collect() == []
+    assert owl_transitive_entail(_trips(spark, []), ["t"]).collect() == []
+
+
+def test_closure_broadcasts_hop_side_only_under_threshold(spark, monkeypatch):
+    """With broadcast joins switched off (threshold -1) no round asks for
+    a broadcast and the pairs are unchanged; at the session's threshold a
+    small chain's hop side is broadcast."""
+    from nexus_forge_spark.operators import ontology
+
+    chain = _chain(spark, 12)
+    want = {(r.node, r.anc) for r in transitive_closure(chain).collect()}
+
+    def no_broadcast(df):
+        raise AssertionError("hop side broadcast")
+
+    monkeypatch.setattr(ontology.F, "broadcast", no_broadcast)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = {(r.node, r.anc) for r in transitive_closure(chain).collect()}
+    finally:
+        spark.conf.set(key, threshold)
+    assert got == want
+    with pytest.raises(AssertionError, match="hop side broadcast"):
+        transitive_closure(chain)
 
 
 def test_class_rollup_diamond_no_double_count(spark):

@@ -1158,3 +1158,73 @@ def test_construct_kg_scans_no_python_rdd(spark, sf_dir):
     plan = plan_of(construct_kg(docs), execute=True)
     assert "ExistingRDD" not in plan
     assert "LocalTableScan" in plan
+
+
+def test_same_shape_ingest_batch_compiles_no_new_classes(spark, sf_dir, tmp_path):
+    """Generated code stays compiled across same-shape calls: the session's
+    codegen cache holds an ingest batch's classes, so a second batch over
+    the same docs and records, on fresh stores, compiles at most 2 classes
+    in Janino (Spark's default 100-entry cache recompiles dozens)."""
+    import json
+
+    from nexus_forge_spark import dims
+    from nexus_forge_spark.forge import SparkForge, SparkForgeConfig
+    from nexus_forge_spark.plans.pipeline import construct_kg
+    from nexus_forge_spark.sources import flat_to_interleaved, load_table
+    from nexus_forge_spark.store import ParquetStore
+
+    docs_path = str(tmp_path / "docs")
+    load_table(spark, "documents", sf_dir).orderBy("doc_id").limit(50).write.parquet(
+        docs_path
+    )
+    records = [
+        {"rid": i, "name": None if i % 7 == 3 else f"dataset {i}",
+         "topic": ["HashJoin", "Spark", "nothing"][i % 3], "n": i * 37,
+         "status": ["active", "retired", "unknown"][i % 3 if i % 5 == 0 else 0],
+         "size": i * 11 - 20}
+        for i in range(20)
+    ]
+    records_path = tmp_path / "records.json"
+    records_path.write_text(json.dumps(records), encoding="utf-8")
+    shape_path = tmp_path / "shape.json"
+    shape_path.write_text(json.dumps({"shapes": [{
+        "@id": "t:DatasetShape", "@type": "sh:NodeShape", "targetClass": "t:Dataset",
+        "property": [
+            {"path": "t:name", "minCount": 1, "datatype": "xsd:string"},
+            {"path": "t:status", "minCount": 1, "in": ["active", "retired"]},
+            {"path": "t:size", "minCount": 1, "minInclusive": 0},
+        ],
+    }]}), encoding="utf-8")
+    mapping = """{
+      id: forge.format("identifier", "datasets", x.rid)
+      type: Dataset
+      name: x.name
+      about: forge.resolve(x.topic, scope="ontology")
+      code: str(x.n).zfill(6)
+      status: x.status
+      size: x.size
+    }"""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def batch(run: int) -> tuple[int, int]:
+        base = tmp_path / f"stores{run}"
+        triples = construct_kg(flat_to_interleaved(spark.read.parquet(docs_path)))
+        got = ParquetStore(spark, str(base / "triples")).register(
+            triples.withColumn("id", F.concat_ws("|", "subj", "pred", "obj"))
+        )
+        forge = SparkForge(spark, SparkForgeConfig(
+            formatters={"identifier": "https://t.example.org/{}/{}"},
+            resolver_dims={
+                ("ontology", None): (dims.ontology_terms_idx(spark), dims.ONTOLOGY_MATCH_PROPS)
+            },
+            shape_files=[str(shape_path)],
+            store_dir=str(base / "records"),
+        ))
+        v = forge.validate(forge.map(str(records_path), mapping), "Dataset")
+        reg = forge.register(v.where("validated").drop("validated", "violations"))
+        return got["succeeded"], reg["succeeded"]
+
+    first = batch(0)
+    before = compiled.getCount()
+    assert batch(1) == first and first[0] > 0 and first[1] > 0
+    assert compiled.getCount() - before <= 2
