@@ -221,18 +221,22 @@ def khop_distances(
         "dist", F.lit(0).cast("int")
     )
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    return _bfs(frontier.localCheckpoint(eager=True), e, max_hops)
+    return _bfs(frontier.localCheckpoint(eager=True), e, max_hops, "khop_distances")
 
 
 def _bfs(
-    start: DataFrame, e: DataFrame, max_hops: int, keys: tuple[str, ...] = ()
+    start: DataFrame,
+    e: DataFrame,
+    max_hops: int,
+    op: str,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """The level-synchronous BFS of :func:`khop_distances` and
     :func:`harmonic_centrality`: from the checkpointed ``start`` rows
     (*keys, node, dist=0) over ``e`` (src, dst), every (*keys, node)
     reached within ``max_hops`` with its minimum dist.  Each hop's
     checkpoint job counts the new frontier, and the loop returns at the
-    first empty one."""
+    first empty one; rounds record under the caller's name ``op``."""
 
     def hop(state: tuple, rnd) -> tuple:
         frontier, visited = state
@@ -246,7 +250,7 @@ def _bfs(
         )
         return nxt, rnd.checkpoint(visited.unionByName(nxt))
 
-    return iterate(hop, (start, start), max_hops, until=emptied("new"))[1]
+    return iterate(hop, (start, start), max_hops, until=emptied("new"), op=op)[1]
 
 
 def label_propagation(
@@ -886,7 +890,7 @@ def harmonic_centrality(
         .select("seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    visited = _bfs(frontier, e, max_hops, keys=("seed",))
+    visited = _bfs(frontier, e, max_hops, "harmonic_centrality", keys=("seed",))
     return (
         visited.where(F.col("dist") > 0)
         .groupBy("node")
@@ -2113,7 +2117,7 @@ def hyperball_nf(
     (kgforge/core/archetypes/read_only_store.py:212-245).
     """
     out = _hyperball_rounds(
-        edges, rounds, precision, salt, src_col, dst_col,
+        edges, rounds, precision, salt, src_col, dst_col, "hyperball_nf",
         lambda sketch, est, t: sketch.select(
             F.round(est).cast("long").alias("est")
         ).agg(
@@ -2136,12 +2140,14 @@ def _hyperball_rounds(
     salt: str,
     src_col: str,
     dst_col: str,
+    op: str,
     per_round,
 ) -> DataFrame:
     """The HyperBall round loop shared by :func:`hyperball_nf` and
     :func:`hyperball_closeness`: the union over t in [0, rounds] of
     ``per_round(sketch, est, t)``, where ``sketch`` holds the round-t
-    (node, regs) counters and ``est`` is the per-node estimate column."""
+    (node, regs) counters and ``est`` is the per-node estimate column.
+    Rounds record under the caller's name ``op``."""
     from nexus_forge_spark.operators.sketches import HASH_BITS, hash60
 
     m = 1 << precision
@@ -2206,7 +2212,7 @@ def _hyperball_rounds(
         )
         return sk, out.unionByName(per_round(sk, est, rnd.index + 1))
 
-    return iterate(merge, (sk, per_round(sk, est, 0)), rounds)[1]
+    return iterate(merge, (sk, per_round(sk, est, 0)), rounds, op=op)[1]
 
 
 def sql_hyperball_nf(
@@ -2756,7 +2762,7 @@ def hyperball_closeness(
     closeness denominator; 0 for isolated-in-R nodes).
     """
     ests = _hyperball_rounds(
-        edges, rounds, precision, salt, src_col, dst_col,
+        edges, rounds, precision, salt, src_col, dst_col, "hyperball_closeness",
         lambda sketch, est, t: sketch.select(
             "node",
             F.lit(t).cast("int").alias("t"),

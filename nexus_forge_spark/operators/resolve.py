@@ -86,7 +86,6 @@ def resolve(
     limit: int = 10,
     threshold: float | None = None,
     keys: list[str] | None = None,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """mentions(keys..., mention) ⋈ alias_table -> resolved candidates.
 
@@ -95,8 +94,7 @@ def resolve(
     limit=10, threshold applied as score <= threshold for distance scores).
     """
     keys = keys or MENTION_KEYS
-    a0 = alias_table.alias("a")
-    a = F.broadcast(a0) if use_broadcast else a0
+    a = F.broadcast(alias_table.alias("a"))
     m = mentions.alias("m")
     mention = F.col("m.mention")
     al = F.col("a.alias")
@@ -158,18 +156,16 @@ def resolve(
 
 
 def _join_back(
-    mentions: DataFrame,
-    resolved_vocab: DataFrame,
-    keys: list[str],
-    use_broadcast: bool = True,
+    mentions: DataFrame, resolved_vocab: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """Equi-join per-vocabulary resolution results back onto occurrences.
-
-    use_broadcast=False when the distinct vocabulary itself is too big to
-    ship (then it is a shuffle join on the string key — still skew-free)."""
+    """Broadcast equi-join of per-vocabulary resolution results back onto
+    occurrences."""
     out_cols = [c for c in resolved_vocab.columns if c != "mention"]
-    r = F.broadcast(resolved_vocab) if use_broadcast else resolved_vocab
-    return mentions.select(*keys).join(r, "mention").select(*keys, *out_cols)
+    return (
+        mentions.select(*keys)
+        .join(F.broadcast(resolved_vocab), "mention")
+        .select(*keys, *out_cols)
+    )
 
 
 def resolve_distinct(
@@ -179,7 +175,6 @@ def resolve_distinct(
     limit: int = 10,
     threshold: float | None = None,
     keys: list[str] | None = None,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """`resolve` factored through the distinct mention vocabulary.
 
@@ -193,11 +188,8 @@ def resolve_distinct(
     """
     keys = keys or MENTION_KEYS
     vocab = mentions.select("mention").distinct()
-    resolved = resolve(
-        vocab, alias_table, strategy, limit, threshold, keys=["mention"],
-        use_broadcast=use_broadcast,
-    )
-    return _join_back(mentions, resolved, keys, use_broadcast)
+    resolved = resolve(vocab, alias_table, strategy, limit, threshold, keys=["mention"])
+    return _join_back(mentions, resolved, keys)
 
 
 def mention_prefilter(
@@ -272,7 +264,6 @@ def resolve_ladder_distinct(
     mentions: DataFrame,
     alias_table: DataFrame,
     keys: list[str] | None = None,
-    use_broadcast: bool = True,
     prefilter: bool = False,
 ) -> DataFrame:
     """`resolve_ladder` factored through the distinct mention vocabulary
@@ -285,8 +276,8 @@ def resolve_ladder_distinct(
     if prefilter:
         mentions = mention_prefilter(mentions, alias_table)
     vocab = mentions.select("mention").distinct()
-    resolved = resolve_ladder(vocab, alias_table, keys=["mention"], use_broadcast=use_broadcast)
-    return _join_back(mentions, resolved, keys, use_broadcast)
+    resolved = resolve_ladder(vocab, alias_table, keys=["mention"])
+    return _join_back(mentions, resolved, keys)
 
 
 def alias_substring_index(alias_table: DataFrame) -> DataFrame:
@@ -579,7 +570,6 @@ def resolve_ladder(
     mentions: DataFrame,
     alias_table: DataFrame,
     keys: list[str] | None = None,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """Single-pass strategy ladder: EXACT_MATCH preferred, BEST_MATCH fallback.
 
@@ -592,8 +582,7 @@ def resolve_ladder(
     pass over the corpus and three.
     """
     keys = keys or MENTION_KEYS
-    a0 = alias_table.alias("a")
-    a = F.broadcast(a0) if use_broadcast else a0
+    a = F.broadcast(alias_table.alias("a"))
     m = mentions.alias("m")
     mention = F.col("m.mention")
     al = F.col("a.alias")

@@ -2,11 +2,11 @@
 triples, the Spark re-expression of the reference's
 map -> resolve -> validate -> register loop (SURVEY.md §3).
 
-Two resolve passes, mirroring the reference's strategy ladder:
-exact pass first (cheapest predicate), then the fuzzy pass only over
-mentions the exact pass missed (left-anti join) — the set-oriented version
-of "try EXACT_MATCH, fall back to BEST_MATCH" rules seen in fixture
-mappings (e.g. Example.hjson ternary with resolve fallback).
+Mentions resolve through the reference's strategy ladder, "try
+EXACT_MATCH, fall back to BEST_MATCH" (e.g. the Example.hjson ternary with
+resolve fallback), in ONE scan of the corpus: ``resolve_ladder_inline``
+joins the occurrence stream against a broadcast index that already holds
+each key's best exact and best fuzzy candidate.
 """
 
 from __future__ import annotations
@@ -23,8 +23,6 @@ from nexus_forge_spark.operators import triples as T
 def construct_kg(
     documents: DataFrame,
     alias_table: DataFrame | None = None,
-    fuzzy: bool = True,
-    limit: int = 10,
 ) -> DataFrame:
     """Interleaved documents -> deduplicated annotation + media triples."""
     spark = documents.sparkSession
@@ -47,24 +45,18 @@ def construct_kg(
     # (doc_id, entity_id), so token/span positions are dead columns — the
     # string-only extractor halves the bytes materialized per exploded row
     # (no position structs, concat_ws n-grams instead of slice+array_join,
-    # per-span array_distinct before the explode).  Both passes over the
-    # corpus (vocab branch + join-back branch) get cheaper.
+    # per-span array_distinct before the explode).
     occ = M.extract_mention_occurrences(documents)
-    if fuzzy:
-        # ONE corpus scan, ZERO corpus-side aggregation: the ladder argmin
-        # is pre-reduced into the broadcast index (fuzzy-best per substring
-        # key, exact-best per verbatim alias), so the corpus side is two
-        # broadcast hash joins + a projection (resolve_ladder_inline).
-        # Replaces the round-1 shape (distinct-vocab branch + NLJ ladder +
-        # join-back, 2x corpus scans) and the mid-round-2 packed-min
-        # per-(doc,mention) aggregate (~20s reduce time at 1M docs).  The
-        # dim here is broadcast-sized; at a 10^6-term dictionary switch to
-        # resolve_ladder_blocked (trigram blocking).
-        resolved = R.resolve_ladder_inline(occ, alias_table, keys=["doc_id", "mention"])
-    else:
-        resolved = R.resolve_distinct(
-            occ, alias_table, R.EXACT_MATCH, keys=["doc_id", "mention"]
-        )
+    # ONE corpus scan, ZERO corpus-side aggregation: the ladder argmin
+    # is pre-reduced into the broadcast index (fuzzy-best per substring
+    # key, exact-best per verbatim alias), so the corpus side is two
+    # broadcast hash joins + a projection (resolve_ladder_inline).
+    # Replaces the round-1 shape (distinct-vocab branch + NLJ ladder +
+    # join-back, 2x corpus scans) and the mid-round-2 packed-min
+    # per-(doc,mention) aggregate (~20s reduce time at 1M docs).  The
+    # dim here is broadcast-sized; at a 10^6-term dictionary switch to
+    # resolve_ladder_blocked (trigram blocking).
+    resolved = R.resolve_ladder_inline(occ, alias_table, keys=["doc_id", "mention"])
 
     # graph set semantics, enforced BEFORE string materialization: the two
     # stages emit disjoint predicates, and within a stage (subj,pred,obj) is

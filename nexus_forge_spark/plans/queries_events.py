@@ -284,6 +284,20 @@ sig AS (
 SELECT sig, min(doc_id) AS doc_id FROM sig GROUP BY sig"""
 
 
+def _write_micro_batches(frames: list[DataFrame], in_dir: str) -> None:
+    """Append each frame to ``in_dir`` as one parquet file whose mtime is
+    pinned to the frame's position: FileStreamSource orders files by
+    modification time, so frame i is always micro-batch i."""
+    import os
+
+    for i, frame in enumerate(frames):
+        frame.coalesce(1).write.mode("append").parquet(in_dir)
+        for f in os.listdir(in_dir):
+            p = os.path.join(in_dir, f)
+            if f.endswith(".parquet") and os.path.getmtime(p) > 1_000_000_000 + i:
+                os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+
+
 def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KG canonicalization: the near-dup sameAs edges arrive as
     file micro-batches (maxFilesPerTrigger=1) and each batch folds into
@@ -296,6 +310,7 @@ def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from nexus_forge_spark.streaming.stream_pipeline import (
+        latest_snapshot,
         stream_incremental_canonical,
     )
 
@@ -304,23 +319,18 @@ def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     base = tempfile.mkdtemp(prefix="stream_inc_")
     in_dir = os.path.join(base, "edges")
-    for i in range(2):
-        pairs.where(F.pmod(F.xxhash64("a", "b"), F.lit(2)) == i).coalesce(
-            1
-        ).write.mode("append").parquet(in_dir)
+    _write_micro_batches(
+        [pairs.where(F.pmod(F.xxhash64("a", "b"), F.lit(2)) == i) for i in range(2)],
+        in_dir,
+    )
     mapping_dir = os.path.join(base, "mapping")
     q = stream_incremental_canonical(
         spark, in_dir, mapping_dir, os.path.join(base, "ckpt")
     )
     q.awaitTermination()
-    snaps = (
-        sorted(d for d in os.listdir(mapping_dir) if d.startswith("snap_"))
-        if os.path.isdir(mapping_dir)
-        else []
-    )
-    if not snaps:  # no micro-batch carried edges -> empty mapping
+    out = latest_snapshot(spark, mapping_dir)
+    if out is None:  # no micro-batch carried edges -> empty mapping
         return spark.createDataFrame([], "doc_id long, canonical_id long")
-    out = spark.read.parquet(os.path.join(mapping_dir, snaps[-1]))
     return out.select(
         F.col("entity_id").cast("long").alias("doc_id"),
         F.col("canonical_id").cast("long").alias("canonical_id"),
@@ -613,7 +623,10 @@ def q_stream_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from nexus_forge_spark.streaming.stream_pipeline import stream_scd2
+    from nexus_forge_spark.streaming.stream_pipeline import (
+        latest_snapshot,
+        stream_scd2,
+    )
 
     orders = load_table(spark, "orders", sf_dir).select(
         "o_custkey", "o_orderdate", "o_orderpriority"
@@ -621,19 +634,13 @@ def q_stream_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit(_SCD2_CUTOFF).cast("timestamp")
     base = tempfile.mkdtemp(prefix="stream_scd2_")
     in_dir = os.path.join(base, "events")
-    for i, batch in enumerate(
+    _write_micro_batches(
         [
             orders.where(F.col("o_orderdate") < cutoff),
             orders.where(F.col("o_orderdate") >= cutoff),
-        ]
-    ):
-        batch.coalesce(1).write.mode("append").parquet(in_dir)
-        # FileStreamSource orders files by modification time: pin it so
-        # the earlier-dated batch is always micro-batch 0
-        for f in os.listdir(in_dir):
-            p = os.path.join(in_dir, f)
-            if f.endswith(".parquet") and os.path.getmtime(p) > 1_000_000_000 + i:
-                os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+        ],
+        in_dir,
+    )
     dim_dir = os.path.join(base, "dim")
     q = stream_scd2(
         spark,
@@ -646,9 +653,7 @@ def q_stream_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         attr_cols=["o_orderpriority"],
     )
     q.awaitTermination()
-    snaps = sorted(d for d in os.listdir(dim_dir) if d.startswith("snap_"))
-    out = spark.read.parquet(os.path.join(dim_dir, snaps[-1]))
-    return out.select(
+    return latest_snapshot(spark, dim_dir).select(
         "o_custkey", "o_orderpriority", "version",
         "valid_from", "valid_to", "is_current",
     )
@@ -1111,17 +1116,14 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.parquet(ref_path)
     lo, hi = daily.agg(F.min("day"), F.max("day")).collect()[0]
     cut1, cut2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
-    batches = [
-        daily.where(F.col("day") <= cut1),
-        daily.where((F.col("day") > cut1) & (F.col("day") <= cut2)),
-        daily.where(F.col("day") > cut2),
-    ]
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("append").parquet(in_dir)
-        for f in os.listdir(in_dir):
-            p = os.path.join(in_dir, f)
-            if f.endswith(".parquet") and os.path.getmtime(p) > 1_000_000_000 + i:
-                os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    _write_micro_batches(
+        [
+            daily.where(F.col("day") <= cut1),
+            daily.where((F.col("day") > cut1) & (F.col("day") <= cut2)),
+            daily.where(F.col("day") > cut2),
+        ],
+        in_dir,
+    )
     q = stream_cusum(
         spark,
         in_dir,
@@ -1171,14 +1173,9 @@ def q_stream_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select("event_id", "ts")
     base = tempfile.mkdtemp(prefix="stream_late_")
     in_dir = os.path.join(base, "in")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        for f in os.listdir(in_dir):
-            p = os.path.join(in_dir, f)
-            if f.endswith(".parquet") and os.path.getmtime(p) > 1_000_000_000 + i:
-                os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    _write_micro_batches(
+        [ev.where(F.col("event_id") % 3 == i) for i in range(3)], in_dir
+    )
     q = stream_lateness_audit(
         spark,
         in_dir,
@@ -1367,22 +1364,19 @@ def q_stream_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from nexus_forge_spark.operators.sketches import hdr_quantiles
-    from nexus_forge_spark.streaming.stream_pipeline import stream_hdr_sketch
+    from nexus_forge_spark.streaming.stream_pipeline import (
+        latest_snapshot,
+        stream_hdr_sketch,
+    )
 
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
     base = tempfile.mkdtemp(prefix="stream_hdr_")
     in_dir = os.path.join(base, "in")
-    batches = [
-        docs.where(F.col("doc_id") % 3 == i) for i in range(3)
-    ]
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("append").parquet(in_dir)
-        for f in os.listdir(in_dir):
-            p = os.path.join(in_dir, f)
-            if f.endswith(".parquet") and os.path.getmtime(p) > 1_000_000_000 + i:
-                os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    _write_micro_batches(
+        [docs.where(F.col("doc_id") % 3 == i) for i in range(3)], in_dir
+    )
     state_dir = os.path.join(base, "state")
     q = stream_hdr_sketch(
         spark,
@@ -1394,8 +1388,7 @@ def q_stream_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["source"],
     )
     q.awaitTermination()
-    snaps = sorted(d for d in os.listdir(state_dir) if d.startswith("snap_"))
-    final = spark.read.parquet(os.path.join(state_dir, snaps[-1]))
+    final = latest_snapshot(spark, state_dir)
     return hdr_quantiles(final, HDR_QS_PPM, ["source"]).select(
         "source",
         F.col("q_ppm").cast("long").alias("q_ppm"),

@@ -4,8 +4,9 @@ Scale posture (designed for a 1000-executor cluster, tested on local[N]):
 * AQE on — runtime coalescing of the many small post-join partitions and
   automatic skew-join splitting for hot ontology terms.
 * Arrow on — every pandas UDF is an Arrow batch transfer, never per-row.
-* shuffle.partitions sized from the cores available; on a real cluster this
-  is overridden by --conf at spark-submit time.
+* ``local[N]`` with N the CPUs this process may run on
+  (``SPARK_GRAFT_CPUS`` overrides it), and shuffle.partitions sized from N;
+  on a real cluster these are overridden by --conf at spark-submit time.
 * Driver heap a quarter of the host's memory, clamped to 2g..8g, so two
   local sessions can share one machine; ``SPARK_GRAFT_DRIVER_MEM`` (e.g.
   ``8g``) overrides it.
@@ -26,7 +27,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
 CODEGEN_CACHE_ENTRIES = 8192
 
 
@@ -42,7 +42,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))

@@ -1,25 +1,88 @@
 """Structured Streaming front-end for the KG pipeline.
 
-The reference is strictly batch (SURVEY.md §2.8); this module adds the
-streaming ingestion path a production deployment needs:
+The reference is strictly batch (SURVEY.md §2.8).  This module adds the
+streaming paths a production deployment needs, in two kinds:
 
-* ``stream_construct_kg`` — file-source stream of interleaved documents ->
-  ``foreachBatch`` applying the SAME batch ``construct_kg`` plan per
-  micro-batch with exactly-once parquet appends + checkpointing.  foreachBatch
-  is the honest architecture here: the resolve ladder uses a window
-  (unsupported in continuous aggregation), and per-micro-batch batch
-  semantics preserve result parity with the batch pipeline by construction.
-* ``streaming_event_counts`` — a genuine stateful streaming aggregation:
-  watermarked event-time tumbling-window counts over the events table shape
-  (late data handled by the watermark).
+* Stateful streaming aggregations return a streaming DataFrame:
+  ``streaming_event_counts``, ``streaming_sliding_counts``,
+  ``streaming_user_sessions``, ``streaming_view_purchase_join`` and
+  ``streaming_first_seen_dedup``; ``min_watermark_delay`` is the batch
+  inverse of the lateness audit.
+* File-source drivers start and return an ``availableNow`` foreachBatch
+  query over the parquet files in ``in_path``, skipping empty
+  micro-batches.  ``stream_construct_kg`` runs the SAME batch
+  ``construct_kg`` plan over one micro-batch of every available file (the
+  resolve ladder's window is unsupported in continuous aggregation, and
+  batch semantics keep parity by construction).
+  ``stream_incremental_canonical``, ``stream_scd2``, ``stream_cusum``,
+  ``stream_lateness_audit`` and ``stream_hdr_sketch`` read one file per
+  micro-batch and hand it to their ``fold_*_batch``.
+
+The fold contract: batch N writes its state to ``snapshot_path(state_dir,
+N)`` and folds from the newest snapshot of a LOWER batch id
+(``latest_snapshot(spark, state_dir, before=N)``), never its own, which a
+failed attempt may have half-written and which Spark will not overwrite
+while reading it.  Snapshots and per-batch outputs are written with
+overwrite, so a retried batch refolds to the identical result.  A
+production deployment would bind the chain to Iceberg snapshot refs.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nexus_forge_spark import schemas
+
+
+def snapshot_path(state_dir: str, batch_id: int) -> str:
+    """Where batch ``batch_id`` writes its snapshot; the zero-padded id
+    makes names sort in batch order."""
+    return os.path.join(state_dir, f"snap_{batch_id:010d}")
+
+
+def latest_snapshot(
+    spark: SparkSession, state_dir: str, before: int | None = None
+) -> DataFrame | None:
+    """The snapshot of the highest batch id below ``before`` (of any id
+    when None), or None when there is none.  Ids compare as numbers."""
+    names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
+    ids = [int(d[5:]) for d in names if d.startswith("snap_")]
+    ids = [i for i in ids if before is None or i < before]
+    return spark.read.parquet(snapshot_path(state_dir, max(ids))) if ids else None
+
+
+def _run_file_stream(
+    spark: SparkSession,
+    in_path: str,
+    schema: str | StructType,
+    checkpoint_path: str,
+    fold: Callable[[DataFrame, int], None],
+    one_file_per_batch: bool = True,
+):
+    """Start the ``availableNow`` foreachBatch query that calls
+    ``fold(batch_df, batch_id)`` on each non-empty micro-batch of the
+    parquet files in ``in_path``: one file per micro-batch, or every
+    available file in one."""
+    reader = spark.readStream.schema(schema)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", 1)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            fold(batch_df, batch_id)
+
+    return (
+        reader.parquet(in_path)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -31,28 +94,22 @@ def stream_construct_kg(
     in_path: str,
     out_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ):
-    """Streaming documents -> triples with per-micro-batch batch semantics.
-    Returns the started StreamingQuery (caller awaits termination)."""
+    """Streaming documents -> triples with per-micro-batch batch semantics,
+    each batch's triples appended to ``out_path`` with its ``_batch_id``."""
     from nexus_forge_spark.plans.pipeline import construct_kg
 
-    docs = stream_documents(spark, in_path)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        construct_kg(batch_df).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
+    return _run_file_stream(
+        spark,
+        in_path,
+        schemas.DOCUMENTS,
+        checkpoint_path,
+        lambda batch_df, batch_id: construct_kg(batch_df)
+        .withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("append")
+        .parquet(out_path),
+        one_file_per_batch=False,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_event_counts(
@@ -109,38 +166,16 @@ def streaming_user_sessions(
 
 def fold_edge_batch(batch_df: DataFrame, batch_id: int, mapping_dir: str) -> None:
     """One incremental-canonicalization fold: merge a batch of (a, b)
-    sameAs edges into the latest snapshot from a STRICTLY EARLIER batch
-    and write snap_<batch_id>.
-
-    The strict `< batch_id` filter is the retry-safety contract: a retry
-    of batch N must not take snap_N as its input — Spark refuses to
-    overwrite a path its own plan reads, and a partially-written snap_N
-    may be unreadable.  Re-folding from snap_{N-1} instead is a semantic
-    no-op for already-merged edges, so retries are exactly-once in effect
-    (pinned by test_streaming_incremental's retry test).
-    """
-    import os
-
+    sameAs edges into the (entity_id, canonical_id) mapping.  Re-folding
+    already-merged edges is a no-op."""
     from nexus_forge_spark.operators.canonicalize import incremental_components
 
     sp = batch_df.sparkSession
-    snaps = (
-        sorted(
-            d
-            for d in os.listdir(mapping_dir)
-            if d.startswith("snap_") and int(d[5:]) < batch_id
-        )
-        if os.path.isdir(mapping_dir)
-        else []
-    )
-    if snaps:
-        prev = sp.read.parquet(os.path.join(mapping_dir, snaps[-1]))
-    else:
+    prev = latest_snapshot(sp, mapping_dir, before=batch_id)
+    if prev is None:
         prev = sp.createDataFrame([], "entity_id long, canonical_id long")
     out = incremental_components(prev, batch_df.select("a", "b"))
-    out.write.mode("overwrite").parquet(
-        os.path.join(mapping_dir, f"snap_{batch_id:010d}")
-    )
+    out.write.mode("overwrite").parquet(snapshot_path(mapping_dir, batch_id))
 
 
 def stream_incremental_canonical(
@@ -148,8 +183,6 @@ def stream_incremental_canonical(
     in_path: str,
     mapping_dir: str,
     checkpoint_path: str,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Streaming sameAs edges -> continuously maintained canonical mapping.
 
@@ -159,31 +192,14 @@ def stream_incremental_canonical(
     re-solve, so per-batch cost tracks the batch's neighbourhood, never
     the accumulated graph — the property that makes nightly-scale
     canonicalization streamable at 10^12-document scale.
-
-    Snapshots are written per batch id (``snap_<batch_id>``); retry
-    safety (a re-run of batch N folds from snap_{N-1}, never from its own
-    half-written snap_N) lives in ``fold_edge_batch``.  A production
-    deployment would bind the snapshot chain to Iceberg snapshot refs;
-    the directory-per-batch model keeps the same commit semantics
-    locally.
     """
-    edges = (
-        spark.readStream.schema("a long, b long")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_path)
+    return _run_file_stream(
+        spark,
+        in_path,
+        "a long, b long",
+        checkpoint_path,
+        lambda batch_df, batch_id: fold_edge_batch(batch_df, batch_id, mapping_dir),
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_edge_batch(batch_df, batch_id, mapping_dir)
-
-    writer = edges.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_first_seen_dedup(
@@ -259,33 +275,15 @@ def fold_scd2_batch(
     attr_cols: list[str],
 ) -> None:
     """One streaming SCD2 fold: merge a micro-batch of change events into
-    the latest dimension snapshot from a STRICTLY EARLIER batch and write
-    snap_<batch_id> — the same retry-safety contract as fold_edge_batch
-    (a retry of batch N re-folds from snap_{N-1}; re-merging the same
-    events is a semantic no-op, so retries are exactly-once in effect).
-    """
-    import os
-
+    the dimension.  Re-merging the same events is a no-op."""
     from nexus_forge_spark.operators.history import scd2_history, scd2_merge
 
-    sp = batch_df.sparkSession
-    snaps = (
-        sorted(
-            d
-            for d in os.listdir(dim_dir)
-            if d.startswith("snap_") and int(d[5:]) < batch_id
-        )
-        if os.path.isdir(dim_dir)
-        else []
-    )
-    if snaps:
-        prev = sp.read.parquet(os.path.join(dim_dir, snaps[-1]))
-        out = scd2_merge(prev, batch_df, key_cols, ts_col, attr_cols)
-    else:
+    prev = latest_snapshot(batch_df.sparkSession, dim_dir, before=batch_id)
+    if prev is None:
         out = scd2_history(batch_df, key_cols, ts_col, attr_cols)
-    out.write.mode("overwrite").parquet(
-        os.path.join(dim_dir, f"snap_{batch_id:010d}")
-    )
+    else:
+        out = scd2_merge(prev, batch_df, key_cols, ts_col, attr_cols)
+    out.write.mode("overwrite").parquet(snapshot_path(dim_dir, batch_id))
 
 
 def stream_scd2(
@@ -297,8 +295,6 @@ def stream_scd2(
     key_cols: list[str],
     ts_col: str,
     attr_cols: list[str],
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Streaming SCD2 dimension maintenance: change events arrive as file
     micro-batches and each batch folds into the persisted dimension with
@@ -307,27 +303,17 @@ def stream_scd2(
     so per-batch cost tracks the batch, never the accumulated dimension.
     For time-ordered (append-only) feeds the fold chain equals a full
     recompute over the entire event history — exactly what the
-    stream_scd2_orders contract query grades.  Snapshot-per-batch commit
-    semantics identical to stream_incremental_canonical (Iceberg snapshot
-    refs in a production deployment).
+    stream_scd2_orders contract query grades.
     """
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_path)
+    return _run_file_stream(
+        spark,
+        in_path,
+        schema,
+        checkpoint_path,
+        lambda batch_df, batch_id: fold_scd2_batch(
+            batch_df, batch_id, dim_dir, key_cols, ts_col, attr_cols
+        ),
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_scd2_batch(batch_df, batch_id, dim_dir, key_cols, ts_col, attr_cols)
-
-    writer = events.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_view_purchase_join(
@@ -424,9 +410,8 @@ def fold_cusum_batch(
     detector needs per key is the running drift sum P and the running
     prefix-min M — each micro-batch computes its local prefix windows,
     offsets them by the carried (P, M), emits per-row statistics to
-    out_dir/batch_<id> (overwrite -> retry-idempotent), and writes
-    snap_<batch_id> with the advanced state, untouched keys carried
-    through an anti-join (the fold_scd2_batch contract).
+    out_dir/batch_<id>, and snapshots the advanced state, untouched keys
+    carried through an anti-join.
 
     The reference level comes from ``ref_path`` (key, mu_micro) — a
     FIXED per-key target, the standard SPC setup; when it equals the
@@ -434,26 +419,13 @@ def fold_cusum_batch(
     operator exactly (the stream_cusum_events contract query grades
     this).
     """
-    import os
-
     sp = batch_df.sparkSession
     ref = sp.read.parquet(ref_path)
-    snaps = (
-        sorted(
-            d
-            for d in os.listdir(state_dir)
-            if d.startswith("snap_") and int(d[5:]) < batch_id
+    prev = latest_snapshot(sp, state_dir, before=batch_id)
+    if prev is None:
+        prev = sp.createDataFrame(
+            [], f"{key_col} string, p_up long, m_up long, p_dn long, m_dn long"
         )
-        if os.path.isdir(state_dir)
-        else []
-    )
-    state_schema = (
-        f"{key_col} string, p_up long, m_up long, p_dn long, m_dn long"
-    )
-    if snaps:
-        prev = sp.read.parquet(os.path.join(state_dir, snaps[-1]))
-    else:
-        prev = sp.createDataFrame([], state_schema)
 
     a = int(allowance_micro)
     run_w = Window.partitionBy(key_col).orderBy(seq_col).rowsBetween(
@@ -517,7 +489,7 @@ def fold_cusum_batch(
     )
     carried = prev.join(touched.select(key_col), key_col, "left_anti")
     touched.unionByName(carried).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"snap_{batch_id:010d}")
+        snapshot_path(state_dir, batch_id)
     )
 
 
@@ -534,8 +506,6 @@ def stream_cusum(
     value_col: str,
     allowance_micro: int,
     threshold_micro: int,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Streaming two-sided CUSUM change-point detector over file
     micro-batches: per-key state is TWO BIGINTs per direction (running
@@ -543,17 +513,12 @@ def stream_cusum(
     and the emitted statistics equal the batch Lindley-reflection
     operator whenever the reference level matches (graded by the
     stream_cusum_events contract query)."""
-
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_path)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_cusum_batch(
+    return _run_file_stream(
+        spark,
+        in_path,
+        schema,
+        checkpoint_path,
+        lambda batch_df, batch_id: fold_cusum_batch(
             batch_df,
             batch_id,
             state_dir,
@@ -564,14 +529,8 @@ def stream_cusum(
             value_col,
             allowance_micro,
             threshold_micro,
-        )
-
-    writer = events.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def fold_lateness_batch(
@@ -586,29 +545,16 @@ def fold_lateness_batch(
     ``max event time seen in STRICTLY EARLIER batches - delay`` (Spark's
     own global-watermark rule); events below it are the ones a
     watermarked stateful operator would drop.  Emits one audit row per
-    batch (overwrite -> retry-idempotent) and advances the single-row
-    max-ts state snapshot (the fold_cusum_batch contract).
+    batch to out_dir/batch_<id> and advances the single-row max-ts state
+    snapshot.
 
     This quantifies the real cost of a delay setting BEFORE a pipeline
     silently sheds data — the ops-telemetry side of every watermarked
     operator in this package.
     """
-    import os
-
     sp = batch_df.sparkSession
-    snaps = (
-        sorted(
-            d
-            for d in os.listdir(state_dir)
-            if d.startswith("snap_") and int(d[5:]) < batch_id
-        )
-        if os.path.isdir(state_dir)
-        else []
-    )
-    prev_max = None
-    if snaps:
-        row = sp.read.parquet(os.path.join(state_dir, snaps[-1])).collect()[0]
-        prev_max = row["max_ts_us"]
+    prev = latest_snapshot(sp, state_dir, before=batch_id)
+    prev_max = None if prev is None else prev.collect()[0]["max_ts_us"]
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     wm = None if prev_max is None else int(prev_max) - int(delay_us)
     late = (
@@ -645,7 +591,7 @@ def fold_lateness_batch(
     )
     sp.createDataFrame([(new_max,)], "max_ts_us long").write.mode(
         "overwrite"
-    ).parquet(os.path.join(state_dir, f"snap_{batch_id:010d}"))
+    ).parquet(snapshot_path(state_dir, batch_id))
 
 
 def stream_lateness_audit(
@@ -657,33 +603,20 @@ def stream_lateness_audit(
     checkpoint_path: str,
     ts_col: str,
     delay_us: int,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Watermark-lateness audit over file micro-batches: per batch, how
     many events arrive below the watermark the stream would be running
     (max prior event time - delay) — integer ppm, retry-idempotent
     per-batch rows (graded by the stream_lateness contract query)."""
-
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_path)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_lateness_batch(
+    return _run_file_stream(
+        spark,
+        in_path,
+        schema,
+        checkpoint_path,
+        lambda batch_df, batch_id: fold_lateness_batch(
             batch_df, batch_id, state_dir, out_dir, ts_col, delay_us
-        )
-
-    writer = events.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def min_watermark_delay(
@@ -791,33 +724,14 @@ def fold_hdr_batch(
     """One streaming HDR-quantile-sketch fold: bucket counts are ADDITIVE,
     so the whole streaming operator is hdr_merge(carried state, batch
     sketch) — the mergeable-sketch property that makes HLL/CMS/HDR the
-    streaming-native summaries.  snap_<batch_id> is derived only from
-    snapshots with id < batch_id and written with overwrite, so a
-    replayed batch refolds to the identical snapshot (the fold_scd2 /
-    fold_cusum retry contract)."""
-    import os
-
+    streaming-native summaries."""
     from nexus_forge_spark.operators.sketches import hdr_merge, hdr_sketch
 
-    sp = batch_df.sparkSession
-    snaps = (
-        sorted(
-            d
-            for d in os.listdir(state_dir)
-            if d.startswith("snap_") and int(d[5:]) < batch_id
-        )
-        if os.path.isdir(state_dir)
-        else []
-    )
-    batch_sketch = hdr_sketch(batch_df, value_col, group_cols)
-    if snaps:
-        prev = sp.read.parquet(os.path.join(state_dir, snaps[-1]))
-        cur = hdr_merge(prev.unionByName(batch_sketch), group_cols)
-    else:
-        cur = batch_sketch
-    cur.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"snap_{batch_id}")
-    )
+    prev = latest_snapshot(batch_df.sparkSession, state_dir, before=batch_id)
+    cur = hdr_sketch(batch_df, value_col, group_cols)
+    if prev is not None:
+        cur = hdr_merge(prev.unionByName(cur), group_cols)
+    cur.write.mode("overwrite").parquet(snapshot_path(state_dir, batch_id))
 
 
 def stream_hdr_sketch(
@@ -828,8 +742,6 @@ def stream_hdr_sketch(
     checkpoint_path: str,
     value_col: str,
     group_cols: list[str],
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Streaming quantile monitoring over file micro-batches: the state
     is the (group, bucket, count) HDR sketch — vocab-of-buckets sized
@@ -839,20 +751,12 @@ def stream_hdr_sketch(
     quantiles against the DIRECT whole-data sketch oracle: hash equality
     proves fold == batch (count addition is associative+commutative, so
     batch boundaries cannot matter)."""
-    rows = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_path)
+    return _run_file_stream(
+        spark,
+        in_path,
+        schema,
+        checkpoint_path,
+        lambda batch_df, batch_id: fold_hdr_batch(
+            batch_df, batch_id, state_dir, value_col, group_cols
+        ),
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_hdr_batch(batch_df, batch_id, state_dir, value_col, group_cols)
-
-    writer = rows.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

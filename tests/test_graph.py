@@ -958,7 +958,16 @@ def test_iterative_round_metrics(spark):
     recording() block — and are metric-free (identical plans) by
     default."""
     from nexus_forge_spark.functions.itermetrics import recording
-    from nexus_forge_spark.operators.graph import coreness, kcore, pagerank, sssp
+    from nexus_forge_spark.operators.graph import (
+        coreness,
+        harmonic_centrality,
+        hyperball_closeness,
+        hyperball_nf,
+        khop_distances,
+        kcore,
+        pagerank,
+        sssp,
+    )
     from nexus_forge_spark.operators.ontology import (
         transitive_closure,
         transitive_closure_incremental,
@@ -1017,6 +1026,19 @@ def test_iterative_round_metrics(spark):
         coreness(und)
         cc = m.for_op("coreness")
         assert [r["sum_c"] for r in cc] == [7, 7]  # the fixpoint round ends it
+
+        # the shared BFS and HyperBall loops record under their public
+        # callers, not under the private helpers
+        path = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
+        khop_distances(path, seeds, max_hops=5)
+        harmonic_centrality(path, seeds, max_hops=5)
+        for op in ("khop_distances", "harmonic_centrality"):
+            assert [r["new"] for r in m.for_op(op)] == [1, 1, 1, 0]
+        hyperball_nf(path, rounds=2)
+        hyperball_closeness(path, rounds=2)
+        for op in ("hyperball_nf", "hyperball_closeness"):
+            assert [r["round"] for r in m.for_op(op)] == [0, 1]
+        assert not m.for_op("_bfs") and not m.for_op("_hyperball_rounds")
 
         mdf = m.df(spark)
         assert mdf.columns == ["op", "round", "metric", "value"]

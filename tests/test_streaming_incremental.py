@@ -8,6 +8,7 @@ import os
 
 from nexus_forge_spark.operators.canonicalize import connected_components
 from nexus_forge_spark.streaming.stream_pipeline import (
+    snapshot_path,
     stream_incremental_canonical,
 )
 
@@ -143,16 +144,38 @@ def test_fold_hdr_batch_retry_and_equals_direct(spark, tmp_path):
     # RETRY batch 1: must refold from snap_0 and overwrite snap_1 with the
     # identical sketch (the fold_scd2/fold_cusum retry contract)
     snap1 = sorted(
-        tuple(r) for r in spark.read.parquet(state + "/snap_1").collect()
+        tuple(r) for r in spark.read.parquet(snapshot_path(state, 1)).collect()
     )
     fold_hdr_batch(b1, 1, state, "v", ["source"])
     snap1b = sorted(
-        tuple(r) for r in spark.read.parquet(state + "/snap_1").collect()
+        tuple(r) for r in spark.read.parquet(snapshot_path(state, 1)).collect()
     )
     assert snap1 == snap1b
     fold_hdr_batch(b2, 2, state, "v", ["source"])
     final = sorted(
-        tuple(r) for r in spark.read.parquet(state + "/snap_2").collect()
+        tuple(r) for r in spark.read.parquet(snapshot_path(state, 2)).collect()
     )
     direct = sorted(tuple(r) for r in hdr_sketch(df, "v", ["source"]).collect())
     assert final == direct
+
+
+def test_fold_hdr_batch_chain_past_ten_batches(spark, tmp_path):
+    """Batch ids of two digits still fold from their predecessor: after
+    twelve folds the newest snapshot, by name as a reader sorts them and
+    by batch id, is the sketch of all twelve batches."""
+    from nexus_forge_spark.operators.sketches import hdr_sketch
+    from nexus_forge_spark.streaming.stream_pipeline import fold_hdr_batch
+
+    rows = [(i, "s%d" % (i % 2), (i * 13) % 500 + 1) for i in range(1200)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, v long")
+    state = str(tmp_path / "state")
+    for b in range(12):
+        fold_hdr_batch(df.where(f"doc_id div 100 = {b}"), b, state, "v", ["source"])
+    direct = sorted(tuple(r) for r in hdr_sketch(df, "v", ["source"]).collect())
+    by_id = max(os.listdir(state), key=lambda d: int(d[5:]))
+    by_name = sorted(os.listdir(state))[-1]
+    for name in (by_id, by_name):
+        snap = sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(state, name)).collect()
+        )
+        assert snap == direct, name
