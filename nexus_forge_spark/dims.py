@@ -17,9 +17,11 @@ Every dictionary frame is a ``LocalRelation`` built from an Arrow table
 (:func:`local_frame`).  ``createDataFrame`` over a Python list makes a
 ``LogicalRDD`` over a Python RDD instead, and every job that scans it starts
 Python-worker tasks: a 20-row scan measured 1.2-1.6 CPU s that way against
-0.06-0.2 CPU s as a ``LocalRelation`` (local[4], 4-vCPU host).  One
-``construct_kg`` call scans its dictionary three times and a mapping's
-``forge.resolve`` site twice more.
+0.06-0.2 CPU s as a ``LocalRelation`` (local[4], 4-vCPU host).  The first
+``construct_kg`` call of a session scans its dictionary three times to
+build the ladder index, which later calls reuse (it is frozen into
+``LocalRelation``s too), and a mapping's ``forge.resolve`` site scans it
+twice per call.
 """
 
 from __future__ import annotations

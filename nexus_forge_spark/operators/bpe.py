@@ -427,6 +427,11 @@ def unigram_fertility(
     Same distinct-word factoring as bpe_fertility: the Viterbi UDF runs
     once per DISTINCT word (costs broadcast in the closure), then one
     broadcast join back to word occurrences + one hash agg per group.
+
+    Every corpus word counts in ``n_words``, whatever its length; a word
+    the vocab cannot segment raises (the Viterbi UDF names it), as does
+    the DuckDB twin, so no engine drops a word and reports a plausible
+    fertility without it.
     """
     cost_map = {
         r["piece"]: int(r["cost_micro"]) for r in vocab.collect()
@@ -607,7 +612,13 @@ def sql_unigram_fertility(
     trained vocab (same chain as sql_unigram_lm), then one MORE
     DP/backtrace chain with the FINAL costs over the corpus word list,
     rolled up per group.  corpus_sql -> (grp, word, n) with n = how many
-    times the word occurs in the group."""
+    times the word occurs in the group.
+
+    The DP is unrolled to ``max_word_len`` positions, so a corpus word
+    longer than that has no segmentation here: the query raises a named
+    ``error()`` for it, and for a word the vocab cannot segment, where
+    :func:`unigram_fertility` would segment or name it (never dropping
+    it from ``n_words``)."""
     from nexus_forge_spark.functions.intlog import ln_micro_sql
 
     L, M = max_piece_len, max_word_len
@@ -639,11 +650,17 @@ def sql_unigram_fertility(
     return (
         "WITH "
         + ",\n".join(parts)
-        + """
+        + f"""
 SELECT c.grp, CAST(sum(c.n) AS BIGINT) AS n_words,
   CAST(sum(c.n * np.n_pieces) AS BIGINT) AS n_pieces,
   CAST(sum(c.n * np.n_pieces) * 1000 // sum(c.n) AS BIGINT)
     AS fertility_milli
-FROM corpus c JOIN np USING (word)
+FROM corpus c LEFT JOIN np USING (word)
+WHERE CASE
+  WHEN length(c.word) > {M} THEN error(
+    'corpus word "' || c.word || '" is longer than max_word_len {M}')
+  WHEN np.n_pieces IS NULL THEN error(
+    'unigram vocab cannot segment word "' || c.word || '"')
+  ELSE TRUE END
 GROUP BY c.grp ORDER BY c.grp"""
     )

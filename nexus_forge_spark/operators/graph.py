@@ -1477,13 +1477,16 @@ def betweenness_sampled(
         )
         delta = rnd.checkpoint(
             contrib.groupBy("seed", "node")
-            .agg(F.sum("c").cast("long").alias("delta_ppm"))
+            .agg(F.sum("c").cast("long").alias("delta_ppm")),
+            rows=F.count(F.lit(1)),
         )
         if lvl - 1 > 0:
             acc = delta if acc is None else acc.unionByName(delta)
         return delta, acc
 
-    _, acc = iterate(backward, (None, None), len(levels) - 1)
+    _, acc = iterate(
+        backward, (None, None), len(levels) - 1, op="betweenness_sampled.backward"
+    )
     if acc is None:
         return frontier.select(
             F.col("node"),

@@ -6,7 +6,10 @@ Mentions resolve through the reference's strategy ladder, "try
 EXACT_MATCH, fall back to BEST_MATCH" (e.g. the Example.hjson ternary with
 resolve fallback), in ONE scan of the corpus: ``resolve_ladder_inline``
 joins the occurrence stream against a broadcast index that already holds
-each key's best exact and best fuzzy candidate.
+each key's best exact and best fuzzy candidate.  The index over an
+in-memory dictionary (the default ontology alias table is one) is frozen:
+built once per session and dictionary into ``LocalRelation``s, so a
+repeated call broadcasts it without re-running its aggregations.
 """
 
 from __future__ import annotations

@@ -19,6 +19,10 @@ O(table); this one is Iceberg-honest):
 
 * every mutation writes ONLY its affected rows as delta ``d<seq>`` —
   mutation cost is O(batch), independent of table size;
+* the log (``meta.json``) records each delta's schema, so a snapshot
+  read scans with their merge (the schema ``mergeSchema`` would infer)
+  and runs no footer-inference job; an entry without one, from a store
+  written before the log carried schemas, is read by inference;
 * snapshot N reads the deltas with seq<=N since the last compaction.
   While every one of them after the first is a ``register`` append (the
   log records ``append`` per delta), their ids are disjoint by
@@ -48,7 +52,7 @@ where vanilla Spark covers the syntax — with this table as the spec):
 | tag(name)          | ``ALTER TABLE t CREATE TAG name`` (snapshot ref); retrieve(version=tag) = ``VERSION AS OF`` |
 | retrieve(id, v)    | ``SELECT ... VERSION AS OF <snapshot/tag>`` point lookup (metadata time travel replaces the _seq<=N filter) |
 | compact()          | ``CALL system.rewrite_data_files(t)`` + ``rewrite_position_delete_files`` — bounds MOR read amplification exactly like the base-delta rewrite here |
-| _read() view       | append-only snapshots are already a plain scan; MOR (update/deprecate live) is free: Iceberg readers resolve equality deletes natively; drop the row_number window |
+| _read() view       | append-only snapshots are already a plain scan; MOR (update/deprecate live) is free: Iceberg readers resolve equality deletes natively; drop the row_number window.  The per-delta schemas in the log are Iceberg's schema-in-metadata: the table schema is read from the snapshot's metadata, never inferred from data files |
 | observe() counts   | snapshot summary metrics (added-records, total-records) from the commit, same zero-extra-pass property |
 
 Bookkeeping columns (the reference's _store_metadata, resource.py:34):
@@ -63,6 +67,7 @@ import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from nexus_forge_spark.operators.search import apply_filters
@@ -72,6 +77,61 @@ META_COLS = ["_rev", "_deprecated"]
 
 class StoreError(Exception):
     pass
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, array element and map value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _merge_type(a: T.DataType, b: T.DataType, case_sensitive: bool) -> T.DataType:
+    """Spark's ``StructType.merge``: struct fields unite by name, ``a``'s
+    first and in its order, then ``b``'s new ones; a field in both keeps
+    ``a``'s name and metadata and merges its type; array elements and map
+    keys/values merge; any other pair must be equal."""
+
+    def key(name: str) -> str:
+        return name if case_sensitive else name.lower()
+
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        theirs = {key(f.name): f for f in b.fields}
+        fields = [
+            T.StructField(
+                f.name,
+                _merge_type(f.dataType, theirs[key(f.name)].dataType, case_sensitive),
+                f.nullable or theirs[key(f.name)].nullable,
+                f.metadata,
+            )
+            if key(f.name) in theirs
+            else f
+            for f in a.fields
+        ]
+        ours = {key(f.name) for f in a.fields}
+        return T.StructType(fields + [f for f in b.fields if key(f.name) not in ours])
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(
+            _merge_type(a.elementType, b.elementType, case_sensitive),
+            a.containsNull or b.containsNull,
+        )
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(
+            _merge_type(a.keyType, b.keyType, case_sensitive),
+            _merge_type(a.valueType, b.valueType, case_sensitive),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    if a != b:
+        raise StoreError(
+            f"cannot merge delta schemas: {a.simpleString()} vs {b.simpleString()}"
+        )
+    return a
 
 
 class ParquetStore:
@@ -151,7 +211,9 @@ class ParquetStore:
             shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
             return 0, metrics
         meta["current"] = seq
-        meta["deltas"].append({"seq": seq, "full": full, "append": append})
+        meta["deltas"].append(
+            {"seq": seq, "full": full, "append": append, "schema": out.schema.jsonValue()}
+        )
         self._save_meta(meta)
         if not full and self.auto_compact_deltas is not None:
             since_base = 0
@@ -170,7 +232,11 @@ class ParquetStore:
         <= version.  Latest _seq per id wins, resolved by a window only if
         a delta after the first can replace an earlier row (it is not an
         append); an append-only snapshot is the plain union.  Log entries
-        without ``append`` count as replacing, so they always resolve."""
+        without ``append`` count as replacing, so they always resolve.
+
+        The scan's schema is the merge of the deltas' logged schemas, so no
+        footer-inference job runs; a log entry without one (written before
+        the log carried schemas) makes the scan infer with ``mergeSchema``."""
         meta = self._meta()
         v = meta["current"] if version is None else version
         if v == 0:
@@ -185,7 +251,11 @@ class ParquetStore:
         if base_idx is not None:
             live = live[base_idx:]
         paths = [self._delta_dir(d["seq"]) for d in live]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if all("schema" in d for d in live):
+            reader = self.spark.read.schema(self._merged_schema(live))
+        else:
+            reader = self.spark.read.option("mergeSchema", "true")
+        df = reader.parquet(*paths)
         if all(d.get("append", False) for d in live[1:]):
             return df.drop("_seq")
         w = Window.partitionBy(self.id_col).orderBy(F.desc("_seq"))
@@ -194,6 +264,22 @@ class ParquetStore:
             .where(F.col("__rn") == 1)
             .drop("__rn", "_seq")
         )
+
+    def _merged_schema(self, live: list[dict]) -> T.StructType:
+        """The schema ``mergeSchema`` infers from these deltas' footers:
+        their logged schemas folded in the order Spark lists the files (by
+        path, so ``d10/`` comes before ``d2/``), names matched under
+        ``spark.sql.caseSensitive``, then made nullable as parquet stores
+        them."""
+        case_sensitive = self.spark.conf.get("spark.sql.caseSensitive") == "true"
+        schemas = [
+            T.StructType.fromJson(d["schema"])
+            for d in sorted(live, key=lambda d: f"d{d['seq']}/")
+        ]
+        merged = schemas[0]
+        for s in schemas[1:]:
+            merged = _merge_type(merged, s, case_sensitive)
+        return _nullable(merged)
 
     def compact(self) -> int:
         """Materialize the resolved view as a full base delta (Iceberg

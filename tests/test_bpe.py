@@ -318,3 +318,54 @@ def test_unigram_fertility_rejects_a_word_the_vocab_cannot_segment(spark):
     docs = spark.createDataFrame([("s1", "a ab")], "source string, text string")
     with pytest.raises(PythonException, match="cannot segment word 'ab'"):
         unigram_fertility(docs, vocab).collect()
+
+
+def test_unigram_fertility_twin_names_words_it_cannot_segment(spark):
+    """A 17-letter corpus word: Spark segments it and counts it in
+    n_words; the DuckDB twin, whose DP is unrolled to max_word_len (16)
+    positions, raises a named error instead of dropping it.  A word the
+    vocab cannot segment raises in both engines."""
+    import duckdb
+    from pyspark.errors import PythonException
+
+    from nexus_forge_spark.operators.bpe import (
+        sql_unigram_fertility,
+        unigram_fertility,
+        unigram_lm_train,
+    )
+
+    train = [("abc", 5), ("cab", 3), ("ba", 2)]
+    long_word = "abcabcabcabcabcab"
+    assert len(long_word) == 17
+    vocab = unigram_lm_train(
+        spark.createDataFrame(train, "word string, freq long"),
+        rounds=1, max_piece_len=3, vocab_size=8,
+    )
+    words_sql = "SELECT * FROM (VALUES ('abc', 5), ('cab', 3), ('ba', 2)) t(word, freq)"
+
+    def both(text: str):
+        docs = spark.createDataFrame([("s1", text)], "source string, text string")
+        corpus = ", ".join(f"('s1', '{w}', 1)" for w in text.split())
+        sql = sql_unigram_fertility(
+            words_sql,
+            f"SELECT * FROM (VALUES {corpus}) t(grp, word, n)",
+            rounds=1, max_piece_len=3, vocab_size=8,
+        )
+        return (
+            lambda: [tuple(r) for r in unigram_fertility(docs, vocab, max_piece_len=3).collect()],
+            lambda: [tuple(r) for r in duckdb.connect().execute(sql).fetchall()],
+        )
+
+    spark_rows, twin_rows = both("abc cab ba")
+    assert spark_rows() == twin_rows() and spark_rows()[0][1] == 3
+
+    spark_rows, twin_rows = both(f"abc {long_word} cab")
+    assert [r[:2] for r in spark_rows()] == [("s1", 3)]
+    with pytest.raises(duckdb.Error, match=f'word "{long_word}" is longer than max_word_len 16'):
+        twin_rows()
+
+    spark_rows, twin_rows = both("abc abd")
+    with pytest.raises(PythonException, match="cannot segment word 'abd'"):
+        spark_rows()
+    with pytest.raises(duckdb.Error, match='cannot segment word "abd"'):
+        twin_rows()

@@ -959,6 +959,7 @@ def test_iterative_round_metrics(spark):
     default."""
     from nexus_forge_spark.functions.itermetrics import recording
     from nexus_forge_spark.operators.graph import (
+        betweenness_sampled,
         coreness,
         harmonic_centrality,
         hyperball_closeness,
@@ -1039,6 +1040,18 @@ def test_iterative_round_metrics(spark):
         for op in ("hyperball_nf", "hyperball_closeness"):
             assert [r["round"] for r in m.for_op(op)] == [0, 1]
         assert not m.for_op("_bfs") and not m.for_op("_hyperball_rounds")
+
+        # betweenness: the forward BFS and the backward accumulation are
+        # two loops, each under its own label and with its own counts
+        chain5 = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
+        )
+        betweenness_sampled(chain5, seeds, max_hops=4)
+        fwd = m.for_op("betweenness_sampled")
+        back = m.for_op("betweenness_sampled.backward")
+        assert [r["new"] for r in fwd] == [1, 1, 1, 1]
+        assert [r["round"] for r in back] == [0, 1, 2, 3]
+        assert [r["rows"] for r in back] == [1, 1, 1, 1]
 
         mdf = m.df(spark)
         assert mdf.columns == ["op", "round", "metric", "value"]

@@ -1160,6 +1160,110 @@ def test_construct_kg_scans_no_python_rdd(spark, sf_dir):
     assert "LocalTableScan" in plan
 
 
+def _under_broadcasts(plan: str) -> list[str]:
+    """The operators below any BroadcastExchange of a plan string (the
+    final plan, when AQE ran)."""
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    under, top = [], None
+    for line in lines:
+        op = line.lstrip(" :+-")
+        depth = len(line) - len(op)
+        if top is not None and depth > top:
+            under.append(op)
+        else:
+            top = depth if op.startswith("BroadcastExchange") else None
+    return under
+
+
+def _shuffles(ops: list[str]) -> list[str]:
+    return [op for op in ops if op.startswith(("Exchange", "ShuffleQueryStage"))]
+
+
+def _triples_hash(df) -> tuple:
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def test_frozen_ladder_index_broadcasts_without_shuffle(spark, sf_dir):
+    """An in-memory dictionary's ladder index is built once per session:
+    a repeated construct_kg broadcasts it from LocalRelations, with no
+    shuffle under any broadcast, and yields the same triples."""
+    from nexus_forge_spark.plans.pipeline import construct_kg
+    from nexus_forge_spark.sources import flat_to_interleaved, load_table
+
+    docs = flat_to_interleaved(load_table(spark, "documents", sf_dir).limit(50))
+    first = _triples_hash(construct_kg(docs))
+    again = construct_kg(docs)
+    under = _under_broadcasts(plan_of(again, execute=True))
+    assert under and _shuffles(under) == []
+    assert any(op.startswith("LocalTableScan") for op in under)
+    assert _triples_hash(again) == first and first[0] > 0
+
+
+def _ladder(alias_table, mentions):
+    from nexus_forge_spark.operators.resolve import resolve_ladder_inline
+
+    out = resolve_ladder_inline(mentions, alias_table, keys=["doc_id", "mention"])
+    return sorted((r.mention, r.entity_id, r.score, r.strategy) for r in out.collect())
+
+
+def test_frozen_ladder_index_is_keyed_by_dictionary_content(spark, tmp_path):
+    """A dictionary differing in one alias builds its own index (no stale
+    memo hit), and each frozen result equals the lazy plan's over the same
+    dictionary read from parquet."""
+    from nexus_forge_spark import dims, schemas
+    from nexus_forge_spark.operators.resolve import build_alias_table
+
+    schema = dims._with_idx_schema(schemas.ONTOLOGY_TERMS)
+    base = [(i, *r) for i, r in enumerate(dims.ONTOLOGY_ROWS)]
+    # "spark" -> "sparkle": the mention "spark" loses its exact match
+    edited = [r[:3] + ("sparkle",) + r[4:] if r[3] == "spark" else r for r in base]
+    mentions = spark.createDataFrame(
+        [(1, "spark"), (2, "hash join"), (3, "sparkl")], "doc_id long, mention string"
+    )
+    got = {}
+    for name, rows in (("base", base), ("edited", edited)):
+        dim = dims.local_frame(spark, rows, schema)
+        path = str(tmp_path / name)
+        dim.write.parquet(path)
+        frozen = _ladder(build_alias_table(dim, dims.ONTOLOGY_MATCH_PROPS), mentions)
+        lazy = _ladder(
+            build_alias_table(spark.read.parquet(path), dims.ONTOLOGY_MATCH_PROPS), mentions
+        )
+        assert frozen == lazy
+        got[name] = {m: (score, strategy) for m, _e, score, strategy in frozen}
+    assert got["base"]["spark"] == (0.0, "EXACT_MATCH")
+    assert got["edited"]["spark"] == (2.0, "BEST_MATCH")
+    assert "sparkl" not in got["base"] and got["edited"]["sparkl"] == (1.0, "BEST_MATCH")
+    assert got["base"]["hash join"] == got["edited"]["hash join"]
+
+
+def test_file_and_cache_backed_dictionaries_keep_the_lazy_index(spark, tmp_path):
+    from nexus_forge_spark import dims
+    from nexus_forge_spark.operators.resolve import build_alias_table, resolve_ladder_inline
+
+    path = str(tmp_path / "dim")
+    dims.ontology_terms_idx(spark).write.parquet(path)
+    mentions = spark.createDataFrame([(1, "spark")], "doc_id long, mention string")
+    cached = build_alias_table(
+        dims.ontology_terms_idx(spark), dims.ONTOLOGY_MATCH_PROPS
+    ).cache()
+    memo = vars(spark).setdefault("_frozen_ladder_indexes", {})
+    entries = sum(len(b) for b in memo.values())
+    for alias_table, leaf in (
+        (build_alias_table(spark.read.parquet(path), dims.ONTOLOGY_MATCH_PROPS), "FileScan parquet"),
+        (cached, "InMemoryTableScan"),
+    ):
+        out = resolve_ladder_inline(mentions, alias_table, keys=["doc_id", "mention"])
+        under = _under_broadcasts(plan_of(out, execute=True))
+        assert _shuffles(under) and any(op.startswith(leaf) for op in under)
+    assert sum(len(b) for b in memo.values()) == entries
+    cached.unpersist()
+
+
 def test_same_shape_ingest_batch_compiles_no_new_classes(spark, sf_dir, tmp_path):
     """Generated code stays compiled across same-shape calls: the session's
     codegen cache holds an ingest batch's classes, so a second batch over

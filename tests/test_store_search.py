@@ -144,6 +144,99 @@ def test_failed_meta_commit_keeps_previous_snapshot(spark, store, monkeypatch):
     assert [tuple(r) for r in store.retrieve().collect()] == [("p1", "Jane", 40, 1, False)]
 
 
+def _jobs_launched(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_reads_launch_no_job(spark, store):
+    """The log carries each delta's schema, so building a read runs no
+    footer-inference job, on the append-only and on the merge-on-read
+    shape."""
+    store.register(_people(spark, [("p1", "Jane", 40)]))
+    store.register(_people(spark, [("p2", "John", 30)]))
+    for _ in range(2):
+        assert _jobs_launched(spark, lambda: store.retrieve(["p1"])) == 0
+        assert _jobs_launched(spark, lambda: store.search(paths().age > 35)) == 0
+        # register's read of the existing ids
+        assert _jobs_launched(spark, lambda: store._read().select(store.id_col)) == 0
+        store.update(_people(spark, [("p1", "Jane", 41)]))
+
+
+def _evolve(spark, store):
+    """Eleven register deltas: d2 adds a top-level column ``age``, d10
+    (without ``age``) a nested struct field and a top-level ``score``.
+    Spark lists d10/ before d2/, which puts ``score`` before ``age`` in
+    the merged schema."""
+    for i in range(1, 12):
+        cols = ["id string", "name string"]
+        row = [f"p{i}", f"n{i}"]
+        if i >= 2 and i != 10:
+            cols.append("age long")
+            row.append(i)
+        if i == 10:
+            cols += ["info struct<a:long,b:string>", "score double"]
+            row += [(i, "b"), 0.5]
+        else:
+            cols.append("info struct<a:long>")
+            row.append((i,))
+        store.register(spark.createDataFrame([tuple(row)], ", ".join(cols)))
+
+
+def _inferred(spark, store):
+    meta = store._meta()
+    paths = [store._delta_dir(d["seq"]) for d in meta["deltas"]]
+    return spark.read.option("mergeSchema", "true").parquet(*paths).drop("_seq")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_logged_schemas_merge_like_merge_schema(spark, store):
+    _evolve(spark, store)
+    want = _inferred(spark, store)
+    got = store._read()
+    assert got.schema == want.schema
+    assert got.columns.index("score") < got.columns.index("age")
+    assert got.schema["info"].dataType.names == ["a", "b"]
+    assert _rows(got) == _rows(want)
+    assert [tuple(r.info) for r in store.retrieve(["p10", "p3"]).orderBy("id").collect()] == [
+        (10, "b"), (3, None)
+    ]
+
+
+def test_logged_schema_conflict_raises(spark, store):
+    store.register(spark.createDataFrame([("p1", 1)], "id string, n int"))
+    store.register(spark.createDataFrame([("p2", "x")], "id string, n string"))
+    with pytest.raises(parquet_store.StoreError, match="cannot merge delta schemas"):
+        store.retrieve()
+
+
+def test_legacy_meta_without_schemas_reads(spark, store):
+    """A log written before entries carried schemas reads by inference."""
+    _evolve(spark, store)
+    want = _rows(store._read())
+    path = os.path.join(store.base_dir, "meta.json")
+    with open(path, encoding="utf-8") as f:
+        meta = json.load(f)
+    for d in meta["deltas"]:
+        del d["schema"]
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    got = store._read()
+    assert got.schema == _inferred(spark, store).schema
+    assert _rows(got) == want
+
+
 def test_filter_dsl(spark):
     df = spark.createDataFrame(
         [("b1", "Building", 40.5, 3.2), ("b2", "Building", 39.0, 5.5), ("p1", "Person", 0.0, 0.0)],
