@@ -18,8 +18,17 @@ the rounds its unrolled SQL oracle replays.
 
 Inside a :func:`recording` block (per thread or task) each :func:`iterate`
 round appends one ``RoundMetrics`` row labelled with its operator; outside
-one no aggregate is evaluated for metrics.  On a cluster the rows feed the
-deployment's metrics sink; here they are a list plus a DataFrame view.
+one no aggregate is evaluated for metrics, and inside one a checkpoint
+that names no aggregate observes its ``rows``.  On a cluster the rows feed
+the deployment's metrics sink; here they are a list plus a DataFrame view.
+
+A round over a small state pays for Spark jobs, not for data.  A
+checkpoint reports no partitioning, so every aggregation or join over it
+would plan its own shuffle, which AQE then coalesces back to one task.
+:func:`one_partition` reads such a state as one partition when its
+observed payload (:func:`row_bytes`) fits the session's advisory partition
+size and broadcast threshold: the round's aggregations and the stream side
+of its broadcast join then need no ``Exchange``.
 """
 
 from __future__ import annotations
@@ -31,6 +40,7 @@ from numbers import Number
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -83,6 +93,34 @@ def checkpoint_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]
     return cp.localCheckpoint(eager=True), obs.get
 
 
+def row_bytes(df: DataFrame) -> Column:
+    """A row's payload bytes: ``octet_length`` of each string or binary
+    column, the type's fixed width for the others."""
+    fixed, var = 0, []
+    for f in df._jdf.schema().fields():
+        t = f.dataType()
+        if t.typeName().startswith("string") or t.typeName() == "binary":
+            var.append(F.coalesce(F.octet_length(F.col(f.name())), F.lit(0)))
+        else:
+            fixed += t.defaultSize()
+    return sum(var, F.lit(fixed))
+
+
+def one_partition(df: DataFrame, nbytes: int | None) -> DataFrame:
+    """``df.coalesce(1)`` when ``nbytes``, its observed payload bytes, fit
+    both ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and
+    ``spark.sql.autoBroadcastJoinThreshold`` (read now; ``-1`` means never),
+    else ``df``.  The coalesced frame is a ``SinglePartition``: the stream
+    side of a broadcast join and any aggregation over it plan no shuffle."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    advisory = conf.getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    fits = (nbytes or 0) <= min(advisory, conf.autoBroadcastJoinThreshold())
+    return df.coalesce(1) if fits else df
+
+
 @dataclass
 class Round:
     """One round of :func:`iterate`: its 0-based ``index``, the previous
@@ -96,7 +134,10 @@ class Round:
     seen: dict = field(default_factory=dict)
 
     def checkpoint(self, df: DataFrame, **aggs: Column) -> DataFrame:
-        """Eagerly checkpoint ``df``; that job also observes ``aggs``."""
+        """Eagerly checkpoint ``df``; that job also observes ``aggs``, or
+        ``rows`` when none is named and a :func:`recording` block is active."""
+        if not aggs and _recorder.get() is not None:
+            aggs = {"rows": F.count(F.lit(1))}
         if not (aggs and self.observe):
             return df.localCheckpoint(eager=True)
         cp, obs = checkpoint_observed(df, **aggs)

@@ -20,6 +20,8 @@ from nexus_forge_spark.functions.itermetrics import (
     checkpoint_observed,
     emptied,
     iterate,
+    one_partition,
+    row_bytes,
     unchanged,
 )
 
@@ -1438,6 +1440,8 @@ def betweenness_sampled(
             .agg(F.sum("sigma").alias("sigma")),
             new=F.count(F.lit(1)),
         )
+        if rnd.seen["new"] == 0:  # the stopping round: no level to sweep back
+            return state
         return [*levels, nxt], rnd.checkpoint(
             visited.unionByName(nxt.select("seed", "node"))
         )
@@ -3159,13 +3163,23 @@ def coreness(
     fan-in to its distinct-value table before any single reducer sees
     it, and H falls out of one whole-stage-codegen ``aggregate()`` fold
     over that (value-range-bounded) histogram — see
-    :func:`_hindex_round`.  Coreness ranks nodes by embeddedness — the
-    dedup-cluster-core vs straggler score kcore thresholds coarsely.
+    :func:`_hindex_round`.  That holds for an adjacency above one
+    partition.  One whose observed payload fits one advisory partition and
+    the broadcast threshold is read as one partition
+    (:func:`one_partition`), as AQE would have coalesced its shuffles
+    anyway, and each round's values are broadcast to it: the round's join
+    and both aggregations then run in one task with no shuffle, a
+    broadcast job plus the checkpoint job.  Coreness ranks nodes by
+    embeddedness — the dedup-cluster-core vs straggler score kcore
+    thresholds coarsely.
 
     Output: (node, coreness BIGINT).
     """
-    und = _undirected(edges, a, b)
-    sym = _symmetric(und).localCheckpoint(eager=True)
+    sym = _symmetric(_undirected(edges, a, b))
+    full, seen = checkpoint_observed(sym, bytes=F.sum(row_bytes(sym)))
+    sym = one_partition(full, seen["bytes"])
+    # a one-partition adjacency takes each round's values as a broadcast
+    values = F.broadcast if sym is not full else (lambda c: c)
 
     sum_c = F.coalesce(F.sum("c"), F.lit(0))
     c, seen = checkpoint_observed(
@@ -3175,7 +3189,7 @@ def coreness(
         sum_c=sum_c,
     )
     c = iterate(
-        lambda c, rnd: rnd.checkpoint(_hindex_round(sym, c), sum_c=sum_c),
+        lambda c, rnd: rnd.checkpoint(_hindex_round(sym, values(c)), sum_c=sum_c),
         c, rounds, prev=seen, until=unchanged("sum_c"),
         error=lambda last: RuntimeError(
             f"coreness: still changing after {rounds} rounds (sum of core "

@@ -24,7 +24,9 @@ trailing round that adds nothing unless d is a power of two.  The
 checkpoint job itself observes that bound, the pair count and the
 state's bytes, so no round pays a separate count job, and a state that
 fits the broadcast threshold is broadcast as the next round's hop side
-instead of shuffling both join sides.
+instead of shuffling both join sides.  A state that also fits one
+advisory partition is read as one partition on the stream side, so such a
+round plans no shuffle at all.
 Ontology class universes are 10^2..10^6 rows (always broadcastable
 against a 10^12-instance fact side), and rdf lists cost O(L log L) rows
 via Wyllie list ranking — never an O(L^2) pair closure.
@@ -38,25 +40,14 @@ from pyspark.sql import functions as F
 from nexus_forge_spark.functions.itermetrics import (
     checkpoint_observed,
     iterate,
+    one_partition,
+    row_bytes,
     unchanged,
 )
 
 
 class ClosureError(RuntimeError):
     """Transitive closure did not converge within max_rounds."""
-
-
-def _row_bytes(df: DataFrame) -> Column:
-    """A row's payload bytes: ``octet_length`` of each string or binary
-    column, the type's fixed width for the others."""
-    fixed, var = 0, []
-    for f in df._jdf.schema().fields():
-        t = f.dataType()
-        if t.typeName().startswith("string") or t.typeName() == "binary":
-            var.append(F.coalesce(F.octet_length(F.col(f.name())), F.lit(0)))
-        else:
-            fixed += t.defaultSize()
-    return sum(var, F.lit(fixed))
 
 
 def _close_by_doubling(
@@ -85,7 +76,11 @@ def _close_by_doubling(
     round broadcasts its hop side when those bytes fit the session's
     ``spark.sql.autoBroadcastJoinThreshold`` (a checkpoint's size
     estimate is that of its lazy plan, a self-join's product, so the
-    planner alone would shuffle both sides).  Raises ClosureError past
+    planner alone would shuffle both sides).  When they also fit one
+    advisory partition, the round reads its stream side and its union
+    input as one partition (:func:`one_partition`), so the join, the
+    union and the ``min(_d)`` aggregate run in one task with no shuffle:
+    a broadcast job plus the checkpoint job.  Raises ClosureError past
     max_rounds."""
     limit = seed.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     cols = [src, *keys, dst]
@@ -98,13 +93,14 @@ def _close_by_doubling(
     seen_aggs = {
         "pairs": F.count(F.lit(1)),
         "longest": F.max("_d"),
-        "bytes": F.sum(_row_bytes(start)),
+        "bytes": F.sum(row_bytes(start)),
     }
 
     def double(reach: DataFrame, rnd) -> DataFrame:
         hop = reach.select(*keys, F.col(src).alias("_j"), dst, F.col("_d").alias("_h"))
         if (rnd.prev["bytes"] or 0) <= limit:  # -1: never
             hop = F.broadcast(hop)
+        reach = one_partition(reach, rnd.prev["bytes"])
         step = reach.select(*keys, src, F.col(dst).alias("_j"), "_d").join(
             hop, [*keys, "_j"]
         )

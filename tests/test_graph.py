@@ -967,6 +967,7 @@ def test_iterative_round_metrics(spark):
         khop_distances,
         kcore,
         pagerank,
+        random_walks,
         sssp,
     )
     from nexus_forge_spark.operators.ontology import (
@@ -1046,12 +1047,26 @@ def test_iterative_round_metrics(spark):
         chain5 = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
         )
-        betweenness_sampled(chain5, seeds, max_hops=4)
+        want = sorted(betweenness_sampled(chain5, seeds, max_hops=4).collect())
         fwd = m.for_op("betweenness_sampled")
         back = m.for_op("betweenness_sampled.backward")
         assert [r["new"] for r in fwd] == [1, 1, 1, 1]
         assert [r["round"] for r in back] == [0, 1, 2, 3]
         assert [r["rows"] for r in back] == [1, 1, 1, 1]
+        # a BFS that empties before max_hops appends no empty level, so
+        # the backward sweep runs no round over one
+        assert sorted(betweenness_sampled(chain5, seeds, max_hops=6).collect()) == want
+        assert [r["new"] for r in m.for_op("betweenness_sampled")[4:]] == [1, 1, 1, 1, 0]
+        back = m.for_op("betweenness_sampled.backward")[4:]
+        assert [r["round"] for r in back] == [0, 1, 2, 3]
+        assert all(r["rows"] > 0 for r in back)
+        assert [tuple(r) for r in want] == [(2, 3_000_000, 1), (3, 2_000_000, 1), (4, 1_000_000, 1)]
+
+        # a checkpoint that names no aggregate records its row count
+        random_walks(edges, num_walks=2, walk_length=3)
+        walks = m.for_op("random_walks")
+        assert [r["round"] for r in walks] == [0, 1, 2]
+        assert walks[0]["rows"] == 8 and all(r["rows"] > 0 for r in walks)
 
         mdf = m.df(spark)
         assert mdf.columns == ["op", "round", "metric", "value"]

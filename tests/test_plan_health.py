@@ -1332,3 +1332,69 @@ def test_same_shape_ingest_batch_compiles_no_new_classes(spark, sf_dir, tmp_path
     before = compiled.getCount()
     assert batch(1) == first and first[0] > 0 and first[1] > 0
     assert compiled.getCount() - before <= 2
+
+
+def _round_runs(spark, monkeypatch, make):
+    """``make()``'s sorted rows plus the executed plan of every frame an
+    iterate() round checkpointed while it ran."""
+    from nexus_forge_spark.functions import itermetrics
+
+    frames, checkpoint = [], itermetrics.Round.checkpoint
+
+    def capture(self, df, **aggs):
+        frames.append(df)
+        return checkpoint(self, df, **aggs)
+
+    monkeypatch.setattr(itermetrics.Round, "checkpoint", capture)
+    try:
+        rows = sorted(tuple(r) for r in make().collect())
+    finally:
+        monkeypatch.undo()
+    return rows, [plan_of(df, execute=True) for df in frames]
+
+
+def _plan_shuffles(plan: str) -> list[str]:
+    return _shuffles([line.lstrip(" :+-") for line in plan.splitlines()])
+
+
+def _closure_and_coreness(spark):
+    from nexus_forge_spark.operators.graph import coreness
+    from nexus_forge_spark.operators.ontology import transitive_closure
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "child long, parent long")
+    und = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)], "a long, b long")
+    return lambda: transitive_closure(chain), lambda: coreness(und)
+
+
+def test_small_state_rounds_plan_no_exchange(spark, monkeypatch):
+    """A doubling round over a state that fits one partition reads it as
+    one partition and broadcasts the hop side, and a coreness round over
+    such an adjacency broadcasts the round's values: neither round plans
+    a shuffle, only the broadcast exchange."""
+    for make in _closure_and_coreness(spark):
+        _, plans = _round_runs(spark, monkeypatch, make)
+        assert plans
+        for plan in plans:
+            assert _plan_shuffles(plan) == [], plan
+            assert "BroadcastHashJoin" in plan
+
+
+def test_state_above_one_partition_keeps_exchanges(spark, monkeypatch):
+    """With the advisory partition size at 1 byte no state fits one
+    partition: the rounds keep their shuffles and give the same rows."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    makes = _closure_and_coreness(spark)
+    narrow = [sorted(tuple(r) for r in make().collect()) for make in makes]
+    was = spark.conf.get(key, None)
+    spark.conf.set(key, "1b")
+    try:
+        wide = [_round_runs(spark, monkeypatch, make) for make in makes]
+    finally:
+        if was is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, was)
+    assert [rows for rows, _ in wide] == narrow
+    for _, plans in wide:
+        assert plans and all(_plan_shuffles(plan) for plan in plans)
+    assert narrow[0] == [(a, b) for a in range(9) for b in range(a + 1, 9)]
