@@ -25,10 +25,13 @@ the deployment's metrics sink; here they are a list plus a DataFrame view.
 A round over a small state pays for Spark jobs, not for data.  A
 checkpoint reports no partitioning, so every aggregation or join over it
 would plan its own shuffle, which AQE then coalesces back to one task.
-:func:`one_partition` reads such a state as one partition when its
-observed payload (:func:`row_bytes`) fits the session's advisory partition
-size and broadcast threshold: the round's aggregations and the stream side
-of its broadcast join then need no ``Exchange``.
+:func:`fits_one_task` says when AQE would do so, or did, from a state's
+observed payload (:func:`row_bytes`) and partition count, and
+:func:`broadcastable` when the payload fits the broadcast threshold: a
+round may then read the state as one partition (``coalesce(1)``) and
+broadcast the other side, and its aggregations and the stream side of
+its join need no ``Exchange``.  A round so runs in one task only where
+AQE had put, or would put, its input in one.
 """
 
 from __future__ import annotations
@@ -106,19 +109,44 @@ def row_bytes(df: DataFrame) -> Column:
     return sum(var, F.lit(fixed))
 
 
-def one_partition(df: DataFrame, nbytes: int | None) -> DataFrame:
-    """``df.coalesce(1)`` when ``nbytes``, its observed payload bytes, fit
-    both ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and
-    ``spark.sql.autoBroadcastJoinThreshold`` (read now; ``-1`` means never),
-    else ``df``.  The coalesced frame is a ``SinglePartition``: the stream
-    side of a broadcast join and any aggregation over it plan no shuffle."""
+def broadcastable(spark, nbytes: int | None) -> bool:
+    """Whether ``nbytes`` observed payload bytes fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, read now (``-1``: never)."""
+    return (nbytes or 0) <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def fits_one_task(df: DataFrame, nbytes: int | None, *, shuffled: bool) -> bool:
+    """Whether a round may read the checkpointed state ``df``, of ``nbytes``
+    observed payload bytes, as one partition because AQE would put it in
+    one task anyway, or did: the state is broadcastable and either fits
+    what AQE coalesces into a single task, or a shuffle built it
+    (``shuffled``: its partitions are the ones AQE coalesced that shuffle
+    into) and AQE made it one partition.
+
+    The size AQE coalesces into one task is at most
+    ``advisoryPartitionSizeInBytes`` and, while AQE coalesces to no fewer
+    partitions than there are cores (``parallelismFirst``, the default,
+    or a ``minPartitionNum`` above 1), at most
+    ``coalescePartitions.minPartitionSize`` (1 MB by default).  AQE
+    weighs compressed shuffle bytes, which for these rows run smaller
+    than the payload, so AQE's own partition count is the sharper test.
+    A state a one-partition round built, or a union of shuffled halves,
+    is not ``shuffled``: only the size test holds for it.  All confs are
+    read now."""
     spark = df.sparkSession
+    if not broadcastable(spark, nbytes):
+        return False
+    if shuffled and df._jdf.rdd().getNumPartitions() == 1:
+        return True
     conf = spark._jsparkSession.sessionState().conf()
-    advisory = conf.getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-    )
-    fits = (nbytes or 0) <= min(advisory, conf.autoBroadcastJoinThreshold())
-    return df.coalesce(1) if fits else df
+    sql = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    size = conf.getConf(sql.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    num = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
+    if num is None and conf.getConf(sql.COALESCE_PARTITIONS_PARALLELISM_FIRST()):
+        num = spark.sparkContext.defaultParallelism
+    if int(num or 1) > 1:
+        size = min(size, conf.getConf(sql.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()))
+    return (nbytes or 0) <= size
 
 
 @dataclass
@@ -135,13 +163,19 @@ class Round:
 
     def checkpoint(self, df: DataFrame, **aggs: Column) -> DataFrame:
         """Eagerly checkpoint ``df``; that job also observes ``aggs``, or
-        ``rows`` when none is named and a :func:`recording` block is active."""
-        if not aggs and _recorder.get() is not None:
+        ``rows`` when none is named and a :func:`recording` block is active.
+        That metrics-only count never replaces a ``rows`` the step names, so
+        a stop test reads the same value inside a block as outside one."""
+        named = bool(aggs)
+        if not named and _recorder.get() is not None:
             aggs = {"rows": F.count(F.lit(1))}
         if not (aggs and self.observe):
             return df.localCheckpoint(eager=True)
         cp, obs = checkpoint_observed(df, **aggs)
-        self.seen.update(obs)
+        if named:
+            self.seen.update(obs)
+        else:
+            self.seen.setdefault("rows", obs["rows"])
         return cp
 
 

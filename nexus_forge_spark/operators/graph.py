@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from nexus_forge_spark.functions.itermetrics import (
     checkpoint_observed,
     emptied,
+    fits_one_task,
     iterate,
-    one_partition,
     row_bytes,
     unchanged,
 )
@@ -3163,23 +3163,24 @@ def coreness(
     fan-in to its distinct-value table before any single reducer sees
     it, and H falls out of one whole-stage-codegen ``aggregate()`` fold
     over that (value-range-bounded) histogram — see
-    :func:`_hindex_round`.  That holds for an adjacency above one
-    partition.  One whose observed payload fits one advisory partition and
-    the broadcast threshold is read as one partition
-    (:func:`one_partition`), as AQE would have coalesced its shuffles
-    anyway, and each round's values are broadcast to it: the round's join
-    and both aggregations then run in one task with no shuffle, a
-    broadcast job plus the checkpoint job.  Coreness ranks nodes by
-    embeddedness — the dedup-cluster-core vs straggler score kcore
-    thresholds coarsely.
+    :func:`_hindex_round`.  That holds for an adjacency AQE spreads over
+    more than one task.  One whose observed payload AQE would coalesce
+    into a single task anyway (:func:`fits_one_task`: 1 MB under the
+    default confs on more than one core) is read as one partition, and
+    each round's values are broadcast to it: the round's join and both
+    aggregations then run in that one task with no shuffle, a broadcast
+    job plus the checkpoint job.  Coreness ranks nodes by embeddedness —
+    the dedup-cluster-core vs straggler score kcore thresholds coarsely.
 
     Output: (node, coreness BIGINT).
     """
     sym = _symmetric(_undirected(edges, a, b))
-    full, seen = checkpoint_observed(sym, bytes=F.sum(row_bytes(sym)))
-    sym = one_partition(full, seen["bytes"])
-    # a one-partition adjacency takes each round's values as a broadcast
-    values = F.broadcast if sym is not full else (lambda c: c)
+    sym, seen = checkpoint_observed(sym, bytes=F.sum(row_bytes(sym)))
+    values = lambda c: c  # noqa: E731
+    # a union of two shuffled halves: its partitions are not AQE's choice
+    if fits_one_task(sym, seen["bytes"], shuffled=False):
+        # each round's values (at most sym's rows) are broadcast to it
+        sym, values = sym.coalesce(1), F.broadcast
 
     sum_c = F.coalesce(F.sum("c"), F.lit(0))
     c, seen = checkpoint_observed(

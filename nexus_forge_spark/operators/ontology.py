@@ -24,9 +24,9 @@ trailing round that adds nothing unless d is a power of two.  The
 checkpoint job itself observes that bound, the pair count and the
 state's bytes, so no round pays a separate count job, and a state that
 fits the broadcast threshold is broadcast as the next round's hop side
-instead of shuffling both join sides.  A state that also fits one
-advisory partition is read as one partition on the stream side, so such a
-round plans no shuffle at all.
+instead of shuffling both join sides.  A state AQE would coalesce into
+one task anyway, or did, is read as one partition on the stream side, so
+such a round plans no shuffle at all.
 Ontology class universes are 10^2..10^6 rows (always broadcastable
 against a 10^12-instance fact side), and rdf lists cost O(L log L) rows
 via Wyllie list ranking — never an O(L^2) pair closure.
@@ -38,9 +38,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexus_forge_spark.functions.itermetrics import (
+    broadcastable,
     checkpoint_observed,
+    fits_one_task,
     iterate,
-    one_partition,
     row_bytes,
     unchanged,
 )
@@ -76,13 +77,20 @@ def _close_by_doubling(
     round broadcasts its hop side when those bytes fit the session's
     ``spark.sql.autoBroadcastJoinThreshold`` (a checkpoint's size
     estimate is that of its lazy plan, a self-join's product, so the
-    planner alone would shuffle both sides).  When they also fit one
-    advisory partition, the round reads its stream side and its union
-    input as one partition (:func:`one_partition`), so the join, the
-    union and the ``min(_d)`` aggregate run in one task with no shuffle:
-    a broadcast job plus the checkpoint job.  Raises ClosureError past
-    max_rounds."""
-    limit = seed.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    planner alone would shuffle both sides).  When the state is also one
+    AQE would coalesce into one task, or did (:func:`fits_one_task`: its
+    payload fits 1 MB under the default confs on more than one core, or
+    the shuffled round that built it came out as one partition), the
+    round reads its stream side and its union input as one partition, so
+    the join, the union and the ``min(_d)`` aggregate run in one task
+    with no shuffle: a broadcast job plus the checkpoint job.  Such a
+    round's output is one partition whatever its size, so the next round
+    takes the size test alone.  Any other state keeps the shuffled
+    aggregate, which AQE spreads over the cores: reading 1.7-9.4 MB
+    states as one partition regardless cost 25 % more wall time per
+    closure and 46 % per incremental closure on local[4].  Raises
+    ClosureError past max_rounds."""
+    spark = seed.sparkSession
     cols = [src, *keys, dst]
 
     def shortest(df: DataFrame) -> DataFrame:
@@ -98,18 +106,22 @@ def _close_by_doubling(
 
     def double(reach: DataFrame, rnd) -> DataFrame:
         hop = reach.select(*keys, F.col(src).alias("_j"), dst, F.col("_d").alias("_h"))
-        if (rnd.prev["bytes"] or 0) <= limit:  # -1: never
+        if broadcastable(spark, rnd.prev["bytes"]):
             hop = F.broadcast(hop)
-        reach = one_partition(reach, rnd.prev["bytes"])
+        one = fits_one_task(reach, rnd.prev["bytes"], shuffled=rnd.prev["shuffled"])
+        if one:
+            reach = reach.coalesce(1)
         step = reach.select(*keys, src, F.col(dst).alias("_j"), "_d").join(
             hop, [*keys, "_j"]
         )
         step = step.select(*cols, (F.col("_d") + F.col("_h")).alias("_d"))
-        return rnd.checkpoint(shortest(reach.unionByName(step)), **seen_aggs)
+        out = rnd.checkpoint(shortest(reach.unionByName(step)), **seen_aggs)
+        rnd.seen["shuffled"] = not one
+        return out
 
     reach, seen = checkpoint_observed(start, **seen_aggs)
     return iterate(
-        double, reach, max_rounds, prev=seen,
+        double, reach, max_rounds, prev={**seen, "shuffled": True},
         until=lambda prev, cur: cur["pairs"] == prev["pairs"]
         or cur["longest"] < 2 * prev["longest"],
         error=lambda _: ClosureError(f"{op}: not converged in {max_rounds} rounds"),

@@ -1118,6 +1118,30 @@ def test_recording_nests_and_labels_by_enclosing_function():
     ]
 
 
+def test_recorded_rows_never_replace_a_named_rows(spark):
+    """A step that names ``rows`` and then checkpoints an unnamed frame
+    keeps its own ``rows`` inside a recording() block, so its stop test
+    reads what it reads outside one; a step that names nothing records
+    the unnamed frame's count."""
+    from nexus_forge_spark.functions.itermetrics import iterate, recording
+
+    one = spark.range(1)
+
+    def step(n, rnd):
+        rnd.checkpoint(spark.range(3), rows=F.count(F.lit(1)))
+        rnd.checkpoint(one)
+        return n + 1
+
+    seen = []
+    until = lambda _prev, cur: seen.append(cur["rows"]) or True  # noqa: E731
+    iterate(step, 0, 1, until=until)
+    with recording() as m:
+        iterate(step, 0, 1, until=until)
+        iterate(lambda n, rnd: [rnd.checkpoint(one), n][1], 0, 1, op="unnamed")
+    assert seen == [3, 3]
+    assert [r["rows"] for r in m.rows] == [3, 1]
+
+
 def test_round_metrics_df_skips_non_numeric_observations(spark):
     """Every loop records inside a block, so df() must take the
     observations that are no integer: kcenter_select's `far` row (kept in

@@ -6,6 +6,8 @@ dim sides, no accidental cartesian products, whole-stage codegen present.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -1379,22 +1381,71 @@ def test_small_state_rounds_plan_no_exchange(spark, monkeypatch):
             assert "BroadcastHashJoin" in plan
 
 
-def test_state_above_one_partition_keeps_exchanges(spark, monkeypatch):
-    """With the advisory partition size at 1 byte no state fits one
-    partition: the rounds keep their shuffles and give the same rows."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    makes = _closure_and_coreness(spark)
-    narrow = [sorted(tuple(r) for r in make().collect()) for make in makes]
+@contextmanager
+def _conf_set(spark, key: str, value: str):
+    """``key`` set to ``value`` inside the block, restored after it."""
     was = spark.conf.get(key, None)
-    spark.conf.set(key, "1b")
+    spark.conf.set(key, value)
     try:
-        wide = [_round_runs(spark, monkeypatch, make) for make in makes]
+        yield
     finally:
         if was is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, was)
+
+
+def test_state_above_one_partition_keeps_exchanges(spark, monkeypatch):
+    """With the smallest partition AQE coalesces to at 1 byte, AQE spreads
+    every shuffle over the cores, so no state is one partition or fits
+    one task: the rounds keep their shuffles and give the same rows."""
+    makes = _closure_and_coreness(spark)
+    narrow = [sorted(tuple(r) for r in make().collect()) for make in makes]
+    with _conf_set(spark, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b"):
+        wide = [_round_runs(spark, monkeypatch, make) for make in makes]
     assert [rows for rows, _ in wide] == narrow
     for _, plans in wide:
         assert plans and all(_plan_shuffles(plan) for plan in plans)
     assert narrow[0] == [(a, b) for a in range(9) for b in range(a + 1, 9)]
+
+
+def test_fits_one_task_follows_aqe_coalescing(spark):
+    """A broadcastable state fits one task when a shuffle built it and AQE
+    coalesced that shuffle into one partition, or when its payload fits
+    what AQE coalesces into one task: ``minPartitionSize`` while AQE keeps
+    a partition per core, the advisory size once it does not."""
+    from nexus_forge_spark.functions.itermetrics import broadcastable, fits_one_task
+
+    def fits(df, nbytes):
+        return fits_one_task(df, nbytes, shuffled=True)
+
+    mb = 1 << 20
+    one = spark.range(40).groupBy((F.col("id") % 3).alias("k")).count().localCheckpoint()
+    four = spark.range(0, 40, numPartitions=4).localCheckpoint()
+    assert one.rdd.getNumPartitions() == 1 and spark.sparkContext.defaultParallelism > 1
+    assert fits(one, 2 * mb) and not fits_one_task(one, 2 * mb, shuffled=False)
+    assert fits(four, mb) and fits(four, None)
+    assert not fits(four, mb + 1)
+    assert broadcastable(spark, 64 * mb) and not broadcastable(spark, 64 * mb + 1)
+    assert not fits(one, 64 * mb + 1)
+    with _conf_set(spark, "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"):
+        assert fits(four, 64 * mb) and not fits(four, 64 * mb + 1)
+        with _conf_set(spark, "spark.sql.adaptive.coalescePartitions.minPartitionNum", "2"):
+            assert not fits(four, mb + 1)
+    with _conf_set(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        assert not fits(one, 0) and not broadcastable(spark, 0)
+
+
+def test_round_after_a_one_task_round_takes_the_size_test(spark, monkeypatch):
+    """A one-task doubling round leaves a one-partition state whatever its
+    size, so the next round reads it as one partition only when its
+    payload fits: over a 64-node chain with the smallest AQE partition
+    at 2000 bytes, round 0 reads the 63 seed pairs (1260 payload bytes)
+    as one partition and round 1, over 125 pairs (2500 bytes), shuffles."""
+    from nexus_forge_spark.operators.ontology import transitive_closure
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(63)], "child long, parent long")
+    with _conf_set(spark, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "2000b"):
+        rows, plans = _round_runs(spark, monkeypatch, lambda: transitive_closure(chain))
+    assert rows == [(a, b) for a in range(64) for b in range(a + 1, 64)]
+    assert _plan_shuffles(plans[0]) == [] and _plan_shuffles(plans[1])

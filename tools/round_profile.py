@@ -3,14 +3,15 @@ CPU goes when the data is small.
 
     python3 tools/round_profile.py [--seed 903] [--passes 3]
 
-Builds the ``closure`` workload's inputs with perfbench's ``Closure`` at
-its default size, runs one warm-up pass, then ``--passes`` measured passes.
-Each call forces its output with a ``noop`` write under its own job group.
-Prints one line per operator and pass: the CPU seconds of this process
-tree, the JVM's JIT compile seconds (``CompilationMXBean``), the Janino
-compiles (``CodegenMetrics``) and the jobs and tasks the call ran (the
-status tracker of its job group; tasks are completed ones).  Inputs and
-temporary files go under ``.bench_run/`` and are removed at exit.
+Builds the ``closure`` workload's inputs at their default size and runs
+the workload's own traced pass (``Closure.trace``, one span per operator
+call) once to warm the JVM, then ``--passes`` times.  Prints one line per
+operator and measured pass: the CPU seconds of this process tree, the
+JVM's JIT compile seconds (``CompilationMXBean``), the Janino compiles
+(``CodegenMetrics``) and the jobs and completed tasks of the span's job
+group.  ``perfbench/run.py --trace 1`` reports each call's jobs and
+seconds from the event log; this adds the CPU, JIT and Janino figures.
+Inputs and temporary files go under ``.bench_run/`` and are removed at exit.
 """
 
 from __future__ import annotations
@@ -19,43 +20,36 @@ import argparse
 import os
 import shutil
 import sys
-import uuid
+from contextlib import contextmanager
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
 
 import run as bench  # noqa: E402  perfbench/run.py
-from workloads import Closure, noop  # noqa: E402
-
-from nexus_forge_spark.operators.graph import coreness  # noqa: E402
-from nexus_forge_spark.operators.ontology import (  # noqa: E402
-    transitive_closure,
-    transitive_closure_incremental,
-)
+from workloads import Closure, Tracer  # noqa: E402
 
 
-def profile(spark, name: str, call) -> dict:
-    """Run ``noop(call())`` under a fresh job group and return its costs."""
-    sc, jvm = spark.sparkContext, spark._jvm
-    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    group = f"round-profile:{name}:{uuid.uuid4().hex}"
-    cpu0, jit0, jan0 = bench.tree_cpu_s(), jit.getTotalCompilationTime(), janino.getCount()
-    sc.setJobGroup(group, name)
-    try:
-        noop(call())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    cpu, jit_s = bench.tree_cpu_s() - cpu0, (jit.getTotalCompilationTime() - jit0) / 1e3
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
-    tasks = sum(
-        info.numCompletedTasks
-        for info in map(sc.statusTracker().getStageInfo, set(stages))
-        if info is not None
-    )
-    return {"cpu_s": cpu, "jit_s": jit_s, "janino": janino.getCount() - jan0,
-            "jobs": len(jobs), "tasks": tasks}
+class CostTracer(Tracer):
+    """A perfbench ``Tracer`` whose spans also record the call's CPU and
+    JIT seconds, Janino compiles, jobs and tasks."""
+
+    @contextmanager
+    def span(self, name: str):
+        jvm, st = self.sc._jvm, self.sc.statusTracker()
+        jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        cpu0, jit0, jan0 = bench.tree_cpu_s(), jit.getTotalCompilationTime(), janino.getCount()
+        with super().span(name):
+            yield
+        jobs = st.getJobIdsForGroup(self.spans[-1]["group"])
+        stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+        self.spans[-1].update(
+            cpu_s=bench.tree_cpu_s() - cpu0,
+            jit_s=(jit.getTotalCompilationTime() - jit0) / 1e3,
+            janino=janino.getCount() - jan0,
+            jobs=len(jobs),
+            tasks=sum(i.numCompletedTasks for i in map(st.getStageInfo, stages) if i),
+        )
 
 
 def main() -> int:
@@ -69,21 +63,13 @@ def main() -> int:
         spark = bench.start_session(work)
         wl = Closure(args.seed, 1.0, work)
         wl.setup(spark)
-        chains, bip = wl._chains(spark), wl._bip(spark)
-        calls = {
-            "transitive_closure": lambda: transitive_closure(chains),
-            "transitive_closure_incremental": lambda: transitive_closure_incremental(
-                wl.closure_old, chains.where("delta")
-            ),
-            "coreness": lambda: coreness(bip),
-        }
         for p in range(args.passes + 1):
-            for name, call in calls.items():
-                got = profile(spark, name, call)
-                if p:  # pass 0 warms the JVM
-                    print(f"seed={args.seed} pass={p} op={name} cpu_s={got['cpu_s']:.2f}"
-                          f" jit_s={got['jit_s']:.2f} janino={got['janino']}"
-                          f" jobs={got['jobs']} tasks={got['tasks']}", flush=True)
+            tr = CostTracer(spark, f"round-profile-{p}")  # a job group per pass
+            wl.trace(spark, tr, {})
+            for s in tr.spans if p else []:  # pass 0 warms the JVM
+                print(f"seed={args.seed} pass={p} op={s['name']} cpu_s={s['cpu_s']:.2f}"
+                      f" jit_s={s['jit_s']:.2f} janino={s['janino']}"
+                      f" jobs={s['jobs']} tasks={s['tasks']}", flush=True)
     finally:
         bench.stop_processes()
         shutil.rmtree(work, ignore_errors=True)
