@@ -137,20 +137,19 @@ def _sql_lit(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def sql_values(rows: list[tuple], cols: list[str], alias: str, with_idx: bool = True) -> str:
-    """Render rows as a DuckDB `(VALUES ...) AS alias(cols)` relation so the
-    oracle SQL uses the exact same dictionary as the Spark side.  with_idx
-    prepends dict_idx = row order (the fuzzy-score tiebreak)."""
-    if with_idx:
-        rows = [(i, *r) for i, r in enumerate(rows)]
-        cols = ["dict_idx"] + cols
+def sql_values(rows: list[tuple], cols: list[str], alias: str) -> str:
+    """Render rows as a DuckDB `(VALUES ...) AS alias(dict_idx, cols)`
+    relation so the oracle SQL uses the exact same dictionary as the Spark
+    side; dict_idx = row order (the fuzzy-score tiebreak)."""
+    rows = [(i, *r) for i, r in enumerate(rows)]
+    cols = ["dict_idx"] + cols
     vals = ",\n    ".join("(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows)
     return f"(VALUES\n    {vals}\n  ) AS {alias}({', '.join(cols)})"
 
 
-def ontology_sql_values(alias: str = "dim", with_idx: bool = True) -> str:
-    return sql_values(ONTOLOGY_ROWS, ONTOLOGY_COLS, alias, with_idx)
+def ontology_sql_values(alias: str = "dim") -> str:
+    return sql_values(ONTOLOGY_ROWS, ONTOLOGY_COLS, alias)
 
 
-def agents_sql_values(alias: str = "agents", with_idx: bool = True) -> str:
-    return sql_values(AGENT_ROWS, AGENT_COLS, alias, with_idx)
+def agents_sql_values(alias: str = "agents") -> str:
+    return sql_values(AGENT_ROWS, AGENT_COLS, alias)

@@ -223,6 +223,16 @@ class _BitReader:
             v = (v << 1) | self.bit()
         return v
 
+    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
+        """Next Huffman symbol under ``table`` ((length, code) -> symbol)."""
+        code = 0
+        for ln in range(1, 17):
+            code = (code << 1) | self.bit()
+            sym = table.get((ln, code))
+            if sym is not None:
+                return sym
+        raise JpegDecodeError("invalid Huffman code")
+
     def restart(self) -> None:
         """Consume the RSTn marker and byte-align (T.81 E.2.4)."""
         self.acc = 0
@@ -474,15 +484,6 @@ def decode_baseline_jpeg(buf: bytes) -> np.ndarray:
     rd = _BitReader(b, pos)
     pred = [0] * nc
 
-    def read_symbol(table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | rd.bit()
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise JpegDecodeError("invalid Huffman code")
-
     m = 0
     while m < n_mcu:
         if restart_interval and m and m % restart_interval == 0:
@@ -494,13 +495,13 @@ def decode_baseline_jpeg(buf: bytes) -> np.ndarray:
                 ac_tab = huff.get((1, ta))
                 if dc_tab is None or ac_tab is None:
                     raise JpegDecodeError("missing Huffman table")
-                cat = read_symbol(dc_tab)
+                cat = rd.read_symbol(dc_tab)
                 diff = _extend(rd.receive(cat), cat)
                 pred[ci] += diff
                 coefs[ci, m, 0] = pred[ci]
                 k = 1
                 while k < 64:
-                    rs = read_symbol(ac_tab)
+                    rs = rd.read_symbol(ac_tab)
                     run, size = rs >> 4, rs & 0xF
                     if size == 0:
                         if run == 15:  # ZRL
@@ -852,15 +853,6 @@ def decode_progressive_jpeg(buf: bytes) -> np.ndarray:
 def _decode_prog_scan(
     rd, coefs, scan_comps, ss, se, ah, al, huff, n_blocks
 ) -> None:
-    def read_symbol(table):
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | rd.bit()
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise JpegDecodeError("invalid Huffman code")
-
     if ss == 0:  # DC scan (interleaved over all scan components)
         if se != 0:
             raise JpegDecodeError("DC scan with Se != 0")
@@ -871,7 +863,7 @@ def _decode_prog_scan(
                     tab = huff.get((0, td))
                     if tab is None:
                         raise JpegDecodeError("missing DC Huffman table")
-                    cat = read_symbol(tab)
+                    cat = rd.read_symbol(tab)
                     diff = _extend(rd.receive(cat), cat)
                     pred[si] += diff
                     coefs[ci, m, 0] = pred[si] << al
@@ -898,7 +890,7 @@ def _decode_prog_scan(
                 continue
             k = ss
             while k <= se:
-                rs = read_symbol(tab)
+                rs = rd.read_symbol(tab)
                 run, size = rs >> 4, rs & 0xF
                 if size == 0:
                     if run == 15:
@@ -920,7 +912,7 @@ def _decode_prog_scan(
         k = ss
         if eobrun == 0:
             while k <= se:
-                rs = read_symbol(tab)
+                rs = rd.read_symbol(tab)
                 run, size = rs >> 4, rs & 0xF
                 newval = 0
                 if size == 0:

@@ -68,15 +68,13 @@ def _words(docs: DataFrame, text_col: str, *keys: str) -> DataFrame:
     ).where(F.col("word") != "")
 
 
-def _per_word(
-    docs: DataFrame, text_col: str, key_col: str, n: Column, broadcast: bool = True
-) -> DataFrame:
+def _per_word(docs: DataFrame, text_col: str, key_col: str, n: Column) -> DataFrame:
     """(key, word, n) per word occurrence: the expression ``n`` over the
-    ``word`` column runs once per DISTINCT word, then a (broadcast) join
+    ``word`` column runs once per DISTINCT word, then a broadcast join
     fans it back out to the occurrences."""
     words = _words(docs, text_col, key_col)
     vocab = words.select("word").distinct().select("word", n.alias("n"))
-    return words.join(F.broadcast(vocab) if broadcast else vocab, "word")
+    return words.join(F.broadcast(vocab), "word")
 
 
 def spaced_symbols(word: Column) -> Column:
@@ -211,13 +209,12 @@ def bpe_token_counts(
     merges: list[tuple[str, str, int]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-document BPE token counts via distinct-word factoring: the merge
     chain runs once per *distinct* word, never per occurrence, then a
-    (broadcast by default) join fans counts back out to occurrences."""
+    broadcast join fans counts back out to occurrences."""
     n = F.size(bpe_tokens(F.col("word"), merges))
-    toks = _per_word(docs, text_col, id_col, n, broadcast_vocab)
+    toks = _per_word(docs, text_col, id_col, n)
     return toks.groupBy(id_col).agg(F.sum("n").cast("long").alias("n_bpe_tokens"))
 
 
@@ -226,7 +223,6 @@ def bpe_fertility(
     merges: list[tuple[str, str, int]],
     group_col: str = "lang",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Tokenizer fertility audit: BPE tokens per word, per corpus slice
     (language, domain, source) — the multilingual-fairness metric.  A
@@ -240,7 +236,7 @@ def bpe_fertility(
     """
     n = F.size(bpe_tokens(F.col("word"), merges))
     return (
-        _per_word(docs, text_col, group_col, n, broadcast_vocab)
+        _per_word(docs, text_col, group_col, n)
         .groupBy(group_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),

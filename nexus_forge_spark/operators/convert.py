@@ -187,7 +187,6 @@ def struct_to_triples(
     id_col: str = "id",
     type_col: str = "type",
     context: dict | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """Generic Resource-tree -> (subj, pred, obj, obj_is_literal, obj_datatype).
 
@@ -204,7 +203,7 @@ def struct_to_triples(
         F.col("t.obj_is_literal").alias("obj_is_literal"),
         F.col("t.obj_datatype").alias("obj_datatype"),
     )
-    return out.dropDuplicates(["subj", "pred", "obj"]) if dedup else out
+    return out.dropDuplicates(["subj", "pred", "obj"])
 
 
 def triples_to_resources(triples: DataFrame) -> DataFrame:

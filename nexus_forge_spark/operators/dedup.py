@@ -306,7 +306,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 2,
     threshold: float = 0.8,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup with PPJoin-style prefix filtering.
 
@@ -402,12 +401,9 @@ def ngram_jaccard_pairs(
         return l.join(r, cond).select(*pair)
 
     cand = _half(False).unionAll(_half(True)).distinct()
-    # verify against the full shingle sets; broadcast_verify=False at 10^9
-    # docs (the lookup table no longer fits an executor -> shuffle join on id)
-    a_sh = with_sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
-    b_sh = with_sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
-    if broadcast_verify:
-        a_sh, b_sh = F.broadcast(a_sh), F.broadcast(b_sh)
+    # verify against the full shingle sets, broadcast to the candidate pairs
+    a_sh = F.broadcast(with_sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")))
+    b_sh = F.broadcast(with_sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")))
     # |A ∪ B| = |A| + |B| - |A ∩ B|: one set-build per pair instead of two
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     denom = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
@@ -727,7 +723,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 2,
     threshold: float = 0.8,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Exact shingle-CONTAINMENT join: (contained, container) pairs with
     C(A in B) = |S_A ∩ S_B| / |S_A| >= t — the asymmetric companion to
@@ -790,10 +785,8 @@ def containment_pairs(
         .select("a", "b")
         .distinct()
     )
-    a_sh = with_sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
-    b_sh = with_sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
-    if broadcast_verify:
-        a_sh, b_sh = F.broadcast(a_sh), F.broadcast(b_sh)
+    a_sh = F.broadcast(with_sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")))
+    b_sh = F.broadcast(with_sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     containment = (
         F.when(F.size("sh_a") > 0, inter / F.size("sh_a"))

@@ -260,7 +260,6 @@ def label_propagation(
     iterations: int = 4,
     a: str = "a",
     b: str = "b",
-    materialize: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007) over an undirected edge set, made fully deterministic so a
@@ -287,13 +286,9 @@ def label_propagation(
     the local sort for an extra shuffle; not worth it per round here.)  Labels stay
     (node, long); the per-round state is 16 bytes/node.  On a real
     cluster, bucket the edge table by node so every round reuses the
-    layout; localCheckpoint truncates the growing lineage here
-    (``materialize=False`` keeps the plan declarative, e.g. for plan
-    inspection or when a caller manages its own stage boundaries).
+    layout; localCheckpoint truncates the growing lineage here.
     """
-    und = _undirected(edges, a, b)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = _undirected(edges, a, b).localCheckpoint(eager=True)
     sym = _symmetric(und).select(F.col("p").alias("node"), F.col("q").alias("nbr"))
     labels = (
         sym.select("node")
@@ -319,10 +314,8 @@ def label_propagation(
         )
 
     return iterate(
-        lambda labels, rnd: (
-            rnd.checkpoint(vote(labels)) if materialize else vote(labels)
-        ),
-        labels.localCheckpoint(eager=True) if materialize else labels,
+        lambda labels, rnd: rnd.checkpoint(vote(labels)),
+        labels.localCheckpoint(eager=True),
         iterations,
     )
 

@@ -78,16 +78,14 @@ def _gram_strings(tokens: Column, max_n: int = 2) -> Column:
     return F.concat(*parts)
 
 
-def extract_mention_occurrences(
-    documents: DataFrame, max_n: int = 2, per_span_distinct: bool = True
-) -> DataFrame:
+def extract_mention_occurrences(documents: DataFrame, max_n: int = 2) -> DataFrame:
     """Interleaved documents -> narrow (doc_id, mention) occurrence stream.
 
     For plans that only need doc-level mention presence — construct_kg
     dedups annotations on (doc_id, entity_id), so span/token positions are
     dead columns there.  Same candidate set as extract_mentions projected to
-    (doc_id, mention); per_span_distinct collapses repeated mentions within
-    a span map-side (array_distinct before the explode) so duplicates never
+    (doc_id, mention), with repeated mentions within a span collapsed
+    map-side (array_distinct before the explode) so duplicates never
     become rows at all.  Still zero-shuffle."""
     spans = documents.select(
         "doc_id", F.explode("spans").alias("span")
@@ -95,9 +93,7 @@ def extract_mention_occurrences(
     toks = spans.select(
         "doc_id", F.split(F.col("span.text"), " ").alias("tokens")
     )
-    grams = _gram_strings(F.col("tokens"), max_n)
-    if per_span_distinct:
-        grams = F.array_distinct(grams)
+    grams = F.array_distinct(_gram_strings(F.col("tokens"), max_n))
     return toks.select("doc_id", F.explode(grams).alias("mention"))
 
 

@@ -641,12 +641,7 @@ def _refine_colors(
     return iterate(refine, color, rounds, op=op)
 
 
-def wl_colors(
-    triples: DataFrame,
-    rounds: int = 3,
-    bnode_prefix: str = "_:",
-    freeze_named: bool = True,
-) -> DataFrame:
+def wl_colors(triples: DataFrame, rounds: int = 3, bnode_prefix: str = "_:") -> DataFrame:
     """Weisfeiler-Leman color refinement over the triple graph -> one
     structural signature per node: the deterministic skolemization /
     graph-canonicalization primitive (URDNA2015's hash-first-degree-quads
@@ -662,14 +657,11 @@ def wl_colors(
     negligible for non-adversarial graphs and engine-exact on both
     sides).
 
-    ``freeze_named`` (the default, URDNA2015's ground-term semantics):
-    named nodes keep their CONSTANT IRI-hash color across rounds —
-    identity flows from ground terms INTO blank nodes, never the other
-    way, so an edit in one bnode island can never relabel a different
-    island through a shared named hub (degree changes at nat:FR don't
-    echo back into every customer).  freeze_named=False is pure WL over
-    the whole graph (named nodes refine too) — the canonical-form /
-    isomorphism-signature mode.
+    Named nodes keep their CONSTANT IRI-hash color across rounds
+    (URDNA2015's ground-term semantics): identity flows from ground terms
+    INTO blank nodes, never the other way, so an edit in one bnode island
+    can never relabel a different island through a shared named hub
+    (degree changes at nat:FR don't echo back into every customer).
 
     Scale shape: one edge-table self-design — (node, dir, pred, nbr) both
     directions — then per round ONE join (neighbor color lookup, keyed on
@@ -697,12 +689,11 @@ def wl_colors(
             F.col("subj").alias("nbr"),
         )
     )
-    if freeze_named:
-        # frozen nodes never consume their multiset — drop their
-        # contributions up front: the 10^5-degree named hub (st:F,
-        # part:4711) costs ZERO aggregate work per round instead of
-        # re-summing its whole neighborhood for a color that can't change
-        edges = edges.where(bnode)
+    # frozen nodes never consume their multiset — drop their
+    # contributions up front: the 10^5-degree named hub (st:F,
+    # part:4711) costs ZERO aggregate work per round instead of
+    # re-summing its whole neighborhood for a color that can't change
+    edges = edges.where(bnode)
     return _refine_colors(
         t,
         F.when(bnode, F.md5(F.lit(""))).otherwise(F.md5(F.col("node"))),
@@ -710,7 +701,7 @@ def wl_colors(
         rounds,
         "wl",
         "wl_colors",
-        bnode if freeze_named else None,
+        bnode,
     )
 
 
@@ -767,12 +758,7 @@ def _sql_refine_colors(
     return ",\n".join(ctes)
 
 
-def sql_wl_colors(
-    triples_sql: str,
-    rounds: int = 3,
-    bnode_prefix: str = "_:",
-    freeze_named: bool = True,
-) -> str:
+def sql_wl_colors(triples_sql: str, rounds: int = 3, bnode_prefix: str = "_:") -> str:
     """DuckDB oracle: the identical refinement unrolled to ``rounds``
     chained CTEs ((count, hash-sum) multiset combine)."""
     bnode = f"starts_with(node, '{bnode_prefix}')"
@@ -782,14 +768,14 @@ edges AS MATERIALIZED (
     SELECT subj AS node, 'o|' || pred AS label, obj AS nbr FROM t
     UNION ALL
     SELECT obj, 'i|' || pred, subj FROM t
-  ) {"WHERE " + bnode if freeze_named else ""}
+  ) WHERE {bnode}
 ),
 {_sql_refine_colors(
     f"CASE WHEN {bnode} THEN md5('') ELSE md5(node) END",
     "edges",
     rounds,
     "wl",
-    "starts_with(p.node, '" + bnode_prefix + "')" if freeze_named else None,
+    f"starts_with(p.node, '{bnode_prefix}')",
 )}
 SELECT node, color FROM c{rounds}"""
 

@@ -35,11 +35,11 @@ def construct_kg(
         )
 
     # NOTE on two measured non-wins (BENCH.md "Round-2 pipeline probes"):
-    # (a) mention_prefilter in-line: lossless and correct, but this
+    # (a) a lossless alias-trigram prefilter on the mention stream: this
     #     synthetic corpus draws its text FROM the dictionary vocabulary,
-    #     so the trigram filter only drops 33% and measures wall-neutral —
-    #     it stays an opt-in operator for realistic corpora where garbage
-    #     n-grams dominate (selectivity 1-10%);
+    #     so it dropped only 33% and measured wall-neutral — and the inline
+    #     ladder's broadcast inner join on the substring index already drops
+    #     every n-gram that matches no alias in the same map-side stage;
     # (b) checkpointing the mention stream to avoid the double explode
     #     (vocab branch + join-back branch): materializing 42M rows costs
     #     MORE than re-running the map-side explode (25.4s -> 32.0s at

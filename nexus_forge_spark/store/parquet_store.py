@@ -21,8 +21,7 @@ O(table); this one is Iceberg-honest):
   mutation cost is O(batch), independent of table size;
 * the log (``meta.json``) records each delta's schema, so a snapshot
   read scans with their merge (the schema ``mergeSchema`` would infer)
-  and runs no footer-inference job; an entry without one, from a store
-  written before the log carried schemas, is read by inference;
+  and runs no footer-inference job;
 * snapshot N reads the deltas with seq<=N since the last compaction.
   While every one of them after the first is a ``register`` append (the
   log records ``append`` per delta), their ids are disjoint by
@@ -231,12 +230,11 @@ class ParquetStore:
         """Snapshot `version`: scan the deltas since the last full base
         <= version.  Latest _seq per id wins, resolved by a window only if
         a delta after the first can replace an earlier row (it is not an
-        append); an append-only snapshot is the plain union.  Log entries
-        without ``append`` count as replacing, so they always resolve.
+        append); an append-only snapshot is the plain union.
 
         The scan's schema is the merge of the deltas' logged schemas, so no
-        footer-inference job runs; a log entry without one (written before
-        the log carried schemas) makes the scan infer with ``mergeSchema``."""
+        footer-inference job runs.  A log entry missing ``append`` or
+        ``schema`` raises StoreError."""
         meta = self._meta()
         v = meta["current"] if version is None else version
         if v == 0:
@@ -250,13 +248,13 @@ class ParquetStore:
         )
         if base_idx is not None:
             live = live[base_idx:]
+        for d in live:
+            for key in ("append", "schema"):
+                if key not in d:
+                    raise StoreError(f"delta d{d['seq']} has no {key!r} in its log entry")
         paths = [self._delta_dir(d["seq"]) for d in live]
-        if all("schema" in d for d in live):
-            reader = self.spark.read.schema(self._merged_schema(live))
-        else:
-            reader = self.spark.read.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
-        if all(d.get("append", False) for d in live[1:]):
+        df = self.spark.read.schema(self._merged_schema(live)).parquet(*paths)
+        if all(d["append"] for d in live[1:]):
             return df.drop("_seq")
         w = Window.partitionBy(self.id_col).orderBy(F.desc("_seq"))
         return (

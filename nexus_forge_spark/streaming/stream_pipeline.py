@@ -85,10 +85,6 @@ def _run_file_stream(
     )
 
 
-def stream_documents(spark: SparkSession, path: str) -> DataFrame:
-    return spark.readStream.schema(schemas.DOCUMENTS).parquet(path)
-
-
 def stream_construct_kg(
     spark: SparkSession,
     in_path: str,

@@ -393,13 +393,26 @@ def test_hamming_pairs_equi_join_no_cartesian(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_label_propagation_no_window_partial_aggs(spark):
+def test_label_propagation_no_window_partial_aggs(spark, monkeypatch):
     from nexus_forge_spark.operators.graph import label_propagation
 
     e = spark.range(300).select(
         (F.col("id") % 40).alias("a"), (F.col("id") % 97).alias("b")
     )
-    plan = plan_of(label_propagation(e, iterations=1, materialize=False))
+    # every round is checkpointed: capture each checkpointed plan; the last
+    # one is the vote round
+    plans = []
+    cls = type(e)
+    original = cls.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        plans.append(plan_of(self))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", capture)
+    label_propagation(e, iterations=1)
+    monkeypatch.undo()
+    plan = plans[-1]
     # ballot argmax is a min_by hash aggregate (map-side combine), not a
     # per-node window sort — a hub's ballot never funnels one task
     assert "Window" not in plan

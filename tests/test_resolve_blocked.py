@@ -63,51 +63,6 @@ def test_ci_regex_predicate(spark):
     assert [r.hit for r in out] == [True, True, False]
 
 
-def test_mention_prefilter_lossless(spark, sf_dir):
-    """The alias-derived trigram/length prefilter must never drop a mention
-    that any ladder strategy would resolve (lossless pruning)."""
-    from nexus_forge_spark import dims
-    from nexus_forge_spark.operators import resolve as R
-    from nexus_forge_spark.sources import flat_to_interleaved, load_table
-    from nexus_forge_spark.operators.mentions import extract_mentions
-
-    docs = flat_to_interleaved(load_table(spark, "documents", sf_dir))
-    alias = R.build_alias_table(dims.ontology_terms_idx(spark), dims.ONTOLOGY_MATCH_PROPS)
-    mentions = extract_mentions(docs)
-    plain = R.resolve_ladder_distinct(mentions, alias, prefilter=False)
-    pre = R.resolve_ladder_distinct(mentions, alias, prefilter=True)
-    assert sorted(map(str, plain.collect())) == sorted(map(str, pre.collect()))
-    # and it actually prunes something on this corpus
-    n_all = mentions.count()
-    n_kept = R.mention_prefilter(mentions, alias).count()
-    assert 0 < n_kept < n_all
-
-
-def test_mention_prefilter_branches_identical(spark, sf_dir):
-    """The driver-collected InSet branch (small dims) and the distributed
-    semi-join branch (big dims, nothing collected) must keep EXACTLY the
-    same mention rows — the operator picks the branch from the dim size,
-    so both must be the same function."""
-    from nexus_forge_spark import dims
-    from nexus_forge_spark.operators import resolve as R
-    from nexus_forge_spark.operators.mentions import extract_mentions
-    from nexus_forge_spark.sources import flat_to_interleaved, load_table
-
-    docs = flat_to_interleaved(load_table(spark, "documents", sf_dir))
-    alias = R.build_alias_table(
-        dims.ontology_terms_idx(spark), dims.ONTOLOGY_MATCH_PROPS
-    )
-    mentions = extract_mentions(docs).select("doc_id", "mention")
-    inset = R.mention_prefilter(mentions, alias, max_inset_terms=10**9)
-    semi = R.mention_prefilter(mentions, alias, max_inset_terms=0)
-    a = sorted((r.doc_id, r.mention) for r in inset.collect())
-    b = sorted((r.doc_id, r.mention) for r in semi.collect())
-    assert a == b and len(a) > 0
-    # the semi-join branch's plan really is a semi join (no InSet collect)
-    plan = semi._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan
-
-
 def test_coherence_disambiguation_beats_lexicographic_fallback(spark):
     from nexus_forge_spark.operators import resolve as R
 

@@ -1,5 +1,5 @@
 """resolve_ladder_inline: the one-scan substring-index ladder must be
-result-identical to the two-scan distinct-vocabulary ladder, and the slim
+result-identical to the reference nested-loop ladder, and the slim
 occurrence extractor must agree with the struct extractor's candidate set.
 
 Reference semantics under test: demo_resolver.py strategy ladder (exact
@@ -48,7 +48,7 @@ def test_inline_ladder_equals_distinct_ladder(docs, alias_table):
         .distinct()
     )
     old = (
-        R.resolve_ladder_distinct(M.extract_mentions(docs), alias_table)
+        R.resolve_ladder(M.extract_mentions(docs), alias_table)
         .select("doc_id", "mention", "entity_id", "score", "strategy")
         .distinct()
     )

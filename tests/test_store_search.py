@@ -105,17 +105,20 @@ def test_append_only_snapshots_read_without_window(spark, store):
     assert _read_shape(store.retrieve())[0]
 
 
-def test_legacy_meta_without_append_keeps_window(spark, store):
+@pytest.mark.parametrize("key", ["schema", "append"])
+def test_log_entry_missing_a_key_raises(spark, store, key):
+    """A hand-written log entry without ``schema`` or ``append`` is refused
+    with a StoreError naming the delta and the key, not read some other way."""
     store.register(_people(spark, [("p1", "Jane", 40)]))
     store.register(_people(spark, [("p2", "John", 30)]))
-    with open(os.path.join(store.base_dir, "meta.json"), "w", encoding="utf-8") as f:
-        json.dump(
-            {"current": 2, "tags": {}, "deltas": [{"seq": 1, "full": False}, {"seq": 2, "full": False}]},
-            f,
-        )
-    df = store.retrieve()
-    assert _read_shape(df)[0]
-    assert sorted(r.id for r in df.collect()) == ["p1", "p2"]
+    path = os.path.join(store.base_dir, "meta.json")
+    with open(path, encoding="utf-8") as f:
+        meta = json.load(f)
+    del meta["deltas"][1][key]
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    with pytest.raises(parquet_store.StoreError, match=f"delta d2 has no '{key}'"):
+        store.retrieve()
 
 
 def test_duplicate_ids_in_one_batch_stay_while_append_only(spark, store):
@@ -219,22 +222,6 @@ def test_logged_schema_conflict_raises(spark, store):
     store.register(spark.createDataFrame([("p2", "x")], "id string, n string"))
     with pytest.raises(parquet_store.StoreError, match="cannot merge delta schemas"):
         store.retrieve()
-
-
-def test_legacy_meta_without_schemas_reads(spark, store):
-    """A log written before entries carried schemas reads by inference."""
-    _evolve(spark, store)
-    want = _rows(store._read())
-    path = os.path.join(store.base_dir, "meta.json")
-    with open(path, encoding="utf-8") as f:
-        meta = json.load(f)
-    for d in meta["deltas"]:
-        del d["schema"]
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-    got = store._read()
-    assert got.schema == _inferred(spark, store).schema
-    assert _rows(got) == want
 
 
 def test_filter_dsl(spark):
