@@ -1,10 +1,25 @@
-"""Event-stream analytics over the events table: gap sessionization and
-as-of (most-recent-match) joins.
+"""Event-stream analytics over the events table: sessions, as-of and
+interval joins, funnels, retention, journeys, attribution and survival.
 
-Neither exists as a single Spark SQL operator; both are re-expressed as
-compositions the optimizer handles well (one hash shuffle on the entity
-key, window functions inside the partition — never a global sort, never
-a range cross-join).
+Frame layouts.  The per-user operators read the ``schemas.EVENTS``
+layout — ``user_id``, ``ts`` (a timestamp), ``event_id`` (the tiebreak
+of equal ``ts``), ``event_type`` and ``value`` (money, rounded to
+integer cents) — and a caller with other names renames first.  The
+interval operators read ``start_us``/``end_us`` epoch-microsecond bounds
+beside the key they are given, and the column-generic operators
+(``asof_join``, ``decayed_sum``, ``forward_fill``, ``allen_relations``,
+``cusum_changepoints``, ``km_survival``'s subject) take their column
+names as arguments.  Output prefixes are fixed: ``prior_`` (as-of
+payload), ``l_``/``r_`` (interval-join sides) and ``filled_``
+(forward fill).
+
+Each DuckDB twin ``sql_X`` reads the same layout and shares its windows,
+floors and round budget with ``X`` through the module constants below.
+
+Neither sessionization nor the as-of join exists as a single Spark SQL
+operator; both are re-expressed as compositions the optimizer handles
+well (one hash shuffle on the entity key, window functions inside the
+partition — never a global sort, never a range cross-join).
 
 Engine-exactness: timestamps travel as unix MICROSECOND longs
 (``F.unix_micros`` == DuckDB ``epoch_us``) and money as integer cents,
@@ -16,17 +31,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from nexus_forge_spark.dims import local_frame
 from nexus_forge_spark.functions.itermetrics import emptied, iterate
 
+JOURNEY_MAX_GAP_US = 1_800_000_000
+ATTRIBUTION_WINDOW_US = 7 * 86_400_000_000
+MIN_SUPPORT = 2
+CONVERSION_TYPE = "purchase"
+MARKOV_ROUNDS = 20
+CENSOR_WINDOW_DAYS = 7
+DECAY_SCALE_BITS = 20
 
-def sessionize(
-    df: DataFrame,
-    gap_seconds: int = 600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+
+def sessionize(df: DataFrame, gap_seconds: int = 600) -> DataFrame:
     """Assign gap-based session ids: a new session starts when the user's
     inter-event gap exceeds ``gap_seconds`` (strictly).  Returns the input
     plus ``session_idx`` (0-based per user, in (ts, event_id) order).
@@ -39,8 +58,8 @@ def sessionize(
     organic web-scale key cardinality (users >> cores) this is the plan
     you want at any corpus size.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap_us = int(gap_seconds) * 1_000_000
     new_sess = (
         F.when(
@@ -56,23 +75,16 @@ def sessionize(
     )
 
 
-def session_stats(
-    df: DataFrame,
-    gap_seconds: int = 600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def session_stats(df: DataFrame, gap_seconds: int = 600) -> DataFrame:
     """Per-session rollup: event count, span in microseconds, and value
     total in integer cents.  Reuses sessionize's user-key shuffle — the
     groupBy keys are a superset of the window partition key, so AQE/EXCHANGE
     reuse keeps this at one shuffle total."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    cents = F.round(F.col("value") * 100).cast("long")
     return (
-        sessionize(df, gap_seconds, user_col, ts_col, id_col)
-        .groupBy(user_col, "session_idx")
+        sessionize(df, gap_seconds)
+        .groupBy("user_id", "session_idx")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.min(us).alias("start_us"),
@@ -89,11 +101,11 @@ def asof_join(
     key_col: str,
     ts_col: str,
     right_cols: list[str],
-    prefix: str = "prior_",
 ) -> DataFrame:
     """As-of LEFT join: for each left row, attach the right row with the
     greatest ``ts <= left.ts`` for the same key (ties: the right row wins —
-    DuckDB ``ASOF JOIN`` semantics, ``>=`` comparison).
+    DuckDB ``ASOF JOIN`` semantics, ``>=`` comparison), its
+    ``right_cols`` renamed ``prior_<col>``.
 
     Spark has no ASOF operator; a range-condition join would reject the
     equi-hash path and explode at scale.  This is the union-tag plan: tag
@@ -131,7 +143,7 @@ def asof_join(
         *lcols,
         F.col("__tag"),
         *[
-            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"{prefix}{c}")
+            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"prior_{c}")
             for c in right_cols
         ],
     )
@@ -142,14 +154,11 @@ def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
     key_col: str,
-    start_col: str = "start_us",
-    end_col: str = "end_us",
     bucket_us: int = 3_600_000_000,
-    lprefix: str = "l_",
-    rprefix: str = "r_",
 ) -> DataFrame:
     """Interval overlap (range) join: all (left, right) pairs with the same
-    key whose closed integer intervals [start, end] overlap.
+    key whose closed integer intervals [start_us, end_us] overlap; every
+    other column is renamed ``l_<col>`` / ``r_<col>`` by side.
 
     A raw range-predicate join rejects Spark's equi-hash path and degrades
     to a per-key cross product.  This is the bucketed-interval plan: each
@@ -174,16 +183,16 @@ def interval_overlap_join(
             *payload,
             F.explode(
                 F.sequence(
-                    F.expr(f"{start_col} div {bucket_us}"),
-                    F.expr(f"{end_col} div {bucket_us}"),
+                    F.expr(f"start_us div {bucket_us}"),
+                    F.expr(f"end_us div {bucket_us}"),
                 )
             ).alias("__bucket"),
         )
 
-    l = bucketed(left, lprefix)
-    r = bucketed(right, rprefix)
-    ls, le = f"{lprefix}{start_col}", f"{lprefix}{end_col}"
-    rs, re_ = f"{rprefix}{start_col}", f"{rprefix}{end_col}"
+    l = bucketed(left, "l_")
+    r = bucketed(right, "r_")
+    ls, le = "l_start_us", "l_end_us"
+    rs, re_ = "r_start_us", "r_end_us"
     overlap = (F.col(ls) <= F.col(re_)) & (F.col(rs) <= F.col(le))
     first_common = F.expr(f"greatest({ls}, {rs}) div {bucket_us}") == F.col("__bucket")
     return (
@@ -285,19 +294,23 @@ SELECT a.k AS {key}, a.i AS id_a, b.i AS id_b,
 FROM iv a JOIN iv b ON a.k = b.k AND a.i < b.i"""
 
 
-def funnel(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+_FUNNEL_SCHEMA = T.StructType(
+    [
+        T.StructField("step_idx", T.IntegerType()),
+        T.StructField("step", T.StringType()),
+        T.StructField("n_users", T.LongType()),
+        T.StructField("conv_from_first_ppm", T.LongType()),
+        T.StructField("conv_from_prev_ppm", T.LongType()),
+    ]
+)
+
+
+def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered-funnel analysis: for each step k, how many users performed
     step k STRICTLY AFTER their chosen step-(k-1) event — the classic
     view -> click -> purchase conversion question, with the standard
     greedy semantics (each step anchors on the EARLIEST qualifying
-    event; earliest is (ts, order_col) lexicographic so simultaneous
+    event; earliest is (ts, event_id) lexicographic so simultaneous
     events break deterministically).
 
     Output: one row per step — (step_idx, step, n_users,
@@ -307,18 +320,18 @@ def funnel(
     Scale posture: per step, two chained HASH aggregates (no struct
     buffers, so no SortAggregate fallback — verified in plan tests) and
     one equi-join back on the user key — every shuffle in the plan
-    hashes on ``user_col`` or its (user, ts) refinement, no windows, no
+    hashes on ``user_id`` or its (user, ts) refinement, no windows, no
     sorts over the event stream, no driver loop over users.  The per-user
     state is one (ts, id) pair per step.  Each step's user count is
     observed by that step's checkpoint job, so counting costs no job; a
     step nobody reaches ends the steps, and every later count is 0.
     """
     base = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t"),
-        F.col(ts_col).alias("ts"),
-        F.col(order_col).alias("oid"),
-    ).where(F.col(type_col).isin(steps))
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t"),
+        "ts",
+        F.col("event_id").alias("oid"),
+    ).where(F.col("event_type").isin(steps))
     counts: list[int] = []
 
     def reach(prev: DataFrame | None, rnd) -> DataFrame:
@@ -349,7 +362,6 @@ def funnel(
     # nobody reaches a step after one that nobody reached
     iterate(reach, None, len(steps), until=emptied("n"))
     counts += [0] * (len(steps) - len(counts))
-    spark = events.sparkSession
     rows = []
     for i, (step, n) in enumerate(zip(steps, counts)):
         first = counts[0]
@@ -363,18 +375,10 @@ def funnel(
                 (n * 1_000_000) // prev_n if prev_n else 0,
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "step_idx int, step string, n_users long, "
-        "conv_from_first_ppm long, conv_from_prev_ppm long",
-    )
+    return local_frame(events.sparkSession, rows, _FUNNEL_SCHEMA)
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users are cohorted by the Monday-start
     week of their FIRST event; retention at offset k = how many of that
     cohort were active (any event) in cohort-week + k, as a
@@ -390,13 +394,13 @@ def cohort_retention(
     arithmetic stays exact: both weeks are date_trunc'd so the day
     difference is always divisible by 7.
     """
-    week = F.to_date(F.date_trunc("week", F.col(ts_col)))
+    week = F.to_date(F.date_trunc("week", F.col("ts")))
     firsts = (
-        events.groupBy(F.col(user_col).alias("u"))
+        events.groupBy(F.col("user_id").alias("u"))
         .agg(F.min(week).alias("cohort_week"))
     )
     active = (
-        events.select(F.col(user_col).alias("u"), week.alias("w")).distinct()
+        events.select(F.col("user_id").alias("u"), week.alias("w")).distinct()
     )
     per_cell = (
         active.join(firsts, "u")
@@ -427,13 +431,7 @@ def cohort_retention(
     )
 
 
-def event_transition_matrix(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def event_transition_matrix(df: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-user event streams:
     for every ordered (prev_type -> next_type) adjacency in a user's
     (ts, event_id)-ordered history, the transition count and its
@@ -452,11 +450,11 @@ def event_transition_matrix(
     are a map-side-combined groupBy whose output is |types|^2 rows, and
     the row-total window runs over that tiny aggregate, not the events.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         df.select(
-            F.col(type_col).alias("prev_type"),
-            F.lead(type_col).over(w).alias("next_type"),
+            F.col("event_type").alias("prev_type"),
+            F.lead("event_type").over(w).alias("next_type"),
         )
         .where(F.col("next_type").isNotNull())
     )
@@ -479,10 +477,9 @@ def decayed_sum(
     qty_col: str,
     ref_date: str,
     half_life_days: int,
-    scale_bits: int = 20,
 ) -> DataFrame:
     """Recency-weighted aggregation with ENGINE-EXACT exponential decay:
-    weight = 2^scale_bits >> (age_days div half_life_days) — the decay
+    weight = 2^DECAY_SCALE_BITS >> (age_days div half_life_days) — the decay
     ladder is integer bit-shifts of an integer scale, so Spark and DuckDB
     agree bit-for-bit where float pow(0.5, age/hl) never would.  This is
     the feature-store / recsys "decayed popularity" primitive: recent
@@ -494,7 +491,7 @@ def decayed_sum(
     hash aggregate on the key — the decay needs no window, no state, no
     per-key history."""
     w = F.expr(
-        f"shiftright(CAST({1 << scale_bits} AS BIGINT), "
+        f"shiftright(CAST({1 << DECAY_SCALE_BITS} AS BIGINT), "
         f"CAST(greatest(0, least(datediff(DATE'{ref_date}', "
         f"CAST({ts_col} AS DATE)) div {half_life_days}, 62)) AS INT))"
     )
@@ -515,12 +512,11 @@ def forward_fill(
     key_col: str,
     order_by: list[str],
     value_cols: list[str],
-    prefix: str = "filled_",
 ) -> DataFrame:
     """Forward-fill (last-observation-carried-forward) imputation: for each
     NULL in `value_cols`, carry the most recent non-NULL value of the same
-    key under the `order_by` total order; leading NULLs (no prior
-    observation) stay NULL.
+    key under the `order_by` total order into ``filled_<col>``; leading
+    NULLs (no prior observation) stay NULL.
 
     The sensor-dropout / sparse-telemetry gap-repair pass.  Plan: ONE key
     shuffle; every fill is `last(col, ignorenulls) OVER (key, order)` —
@@ -535,7 +531,7 @@ def forward_fill(
     )
     out = df
     for c in value_cols:
-        out = out.withColumn(prefix + c, F.last(c, ignorenulls=True).over(w))
+        out = out.withColumn("filled_" + c, F.last(c, ignorenulls=True).over(w))
     return out
 
 
@@ -543,10 +539,6 @@ def match_event_pattern(
     df: DataFrame,
     pattern: str,
     symbols: dict[str, str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """MATCH_RECOGNIZE-lite complex-event-processing: encode each user's
     (ts, id)-ordered event history as a one-char-per-event symbol string
@@ -575,11 +567,11 @@ def match_event_pattern(
     for etype, s in sorted(symbols.items()):
         if len(s) != 1:
             raise ValueError(f"symbol for {etype!r} must be one char")
-        sym = F.when(F.col(type_col) == etype, F.lit(s)).otherwise(sym)
+        sym = F.when(F.col("event_type") == etype, F.lit(s)).otherwise(sym)
     base = df.select(
-        F.col(user_col).alias("user_id"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts_us"),
-        F.col(id_col).alias("__id"),
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts_us"),
+        F.col("event_id").alias("__id"),
         sym.alias("__sym"),
     ).where(F.col("__sym").isNotNull())
     per_sym = [
@@ -682,16 +674,9 @@ def cusum_changepoints(
     )
 
 
-def journey_trigrams(
-    df: DataFrame,
-    max_gap_us: int = 1_800_000_000,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def journey_trigrams(df: DataFrame) -> DataFrame:
     """Top user-journey paths: contiguous length-3 event-type
-    sequences per user (consecutive steps at most ``max_gap_us``
+    sequences per user (consecutive steps at most ``JOURNEY_MAX_GAP_US``
     apart) with occurrence and distinct-user counts — the
     Sankey/flow table product analytics reads, and the length-3
     upgrade of the Markov pair matrix (event_transition_matrix above)
@@ -705,13 +690,11 @@ def journey_trigrams(
 
     Output: (step1, step2, step3, n_paths, n_users).
     """
-    from pyspark.sql import Window
-
     base = df.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t1"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("us"),
-        F.col(id_col).alias("eid"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t1"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.col("event_id").alias("eid"),
     )
     w = Window.partitionBy("u").orderBy("us", "eid")
     paths = (
@@ -721,8 +704,8 @@ def journey_trigrams(
         .withColumn("us3", F.lead("us", 2).over(w))
         .where(
             F.col("t3").isNotNull()
-            & ((F.col("us2") - F.col("us")) <= max_gap_us)
-            & ((F.col("us3") - F.col("us2")) <= max_gap_us)
+            & ((F.col("us2") - F.col("us")) <= JOURNEY_MAX_GAP_US)
+            & ((F.col("us3") - F.col("us2")) <= JOURNEY_MAX_GAP_US)
         )
     )
     return paths.groupBy(
@@ -735,18 +718,11 @@ def journey_trigrams(
     )
 
 
-def sql_journey_trigrams(
-    source_sql: str,
-    max_gap_us: int = 1_800_000_000,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_journey_trigrams(source_sql: str) -> str:
     """DuckDB oracle for :func:`journey_trigrams`."""
     return f"""WITH base AS (
-  SELECT {user_col} AS u, {type_col} AS t1,
-         epoch_us(CAST({ts_col} AS TIMESTAMP)) AS us, {id_col} AS eid
+  SELECT user_id AS u, event_type AS t1,
+         epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS eid
   FROM ({source_sql})
 ),
 led AS (
@@ -760,16 +736,12 @@ SELECT t1 AS step1, t2 AS step2, t3 AS step3,
        CAST(count(*) AS BIGINT) AS n_paths,
        CAST(count(DISTINCT u) AS BIGINT) AS n_users
 FROM led
-WHERE t3 IS NOT NULL AND us2 - us <= {max_gap_us}
-  AND us3 - us2 <= {max_gap_us}
+WHERE t3 IS NOT NULL AND us2 - us <= {JOURNEY_MAX_GAP_US}
+  AND us3 - us2 <= {JOURNEY_MAX_GAP_US}
 GROUP BY t1, t2, t3"""
 
 
-def active_user_metrics(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def active_user_metrics(df: DataFrame) -> DataFrame:
     """DAU / WAU / MAU / stickiness per day — the product-analytics
     headline metrics, calendar-free: day = epoch_micros DIV 86400e6
     (pure integer, so no session-timezone hazard can move a midnight
@@ -787,10 +759,10 @@ def active_user_metrics(
     du = (
         df.select(
             F.expr(
-                f"CAST(unix_micros(CAST({ts_col} AS TIMESTAMP))"
+                "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
                 " DIV 86400000000 AS BIGINT)"
             ).alias("day"),
-            F.col(user_col).alias("u"),
+            F.col("user_id").alias("u"),
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -820,14 +792,12 @@ def active_user_metrics(
     )
 
 
-def sql_active_user_metrics(
-    source_sql: str, user_col: str = "user_id", ts_col: str = "ts"
-) -> str:
+def sql_active_user_metrics(source_sql: str) -> str:
     """DuckDB oracle for :func:`active_user_metrics`."""
     return f"""WITH du AS MATERIALIZED (
   SELECT DISTINCT
-    CAST(epoch_us(CAST({ts_col} AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day,
-    {user_col} AS u
+    CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day,
+    user_id AS u
   FROM ({source_sql})
 ),
 days AS (SELECT DISTINCT day FROM du),
@@ -847,12 +817,7 @@ SELECT dau.day, dau.dau, wau.wau, mau.mau,
 FROM dau JOIN wau ON wau.day = dau.day JOIN mau ON mau.day = dau.day"""
 
 
-def rfm_segments(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def rfm_segments(df: DataFrame) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation —
     the classic marketing triage, engine-exact: per user one
     aggregate gives last-active epoch-day (integer, no calendar
@@ -872,22 +837,7 @@ def rfm_segments(
     """
     from nexus_forge_spark.operators.ranking import exact_percentiles
 
-    per_user = (
-        df.groupBy(F.col(user_col).alias("user"))
-        .agg(
-            F.max(
-                F.expr(
-                    f"CAST(unix_micros(CAST({ts_col} AS TIMESTAMP))"
-                    " DIV 86400000000 AS BIGINT)"
-                )
-            ).alias("r_day"),
-            F.count(F.lit(1)).cast("long").alias("f_events"),
-            F.sum(
-                F.expr(f"CAST(round({value_col} * 100) AS BIGINT)")
-            ).alias("m_cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    per_user = rfm_state(df).localCheckpoint(eager=True)
 
     def cuts(col: str) -> tuple[int, int]:
         rows = {
@@ -915,12 +865,7 @@ def rfm_segments(
     )
 
 
-def sql_rfm_segments(
-    source_sql: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_rfm_segments(source_sql: str) -> str:
     """DuckDB oracle for :func:`rfm_segments` (same integer rank
     arithmetic: cut value at rank (p*n+99)//100 ascending)."""
     def cut(col: str, p: int) -> str:
@@ -937,13 +882,13 @@ def sql_rfm_segments(
         )
     bsql = ",\n       ".join(buckets)
     return f"""WITH per_user AS MATERIALIZED (
-  SELECT {user_col} AS user,
-         CAST(max(epoch_us(CAST({ts_col} AS TIMESTAMP)) // 86400000000)
+  SELECT user_id AS user,
+         CAST(max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)
               AS BIGINT) AS r_day,
          CAST(count(*) AS BIGINT) AS f_events,
-         CAST(sum(CAST(round({value_col} * 100) AS BIGINT)) AS BIGINT)
+         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
            AS m_cents
-  FROM ({source_sql}) GROUP BY {user_col}
+  FROM ({source_sql}) GROUP BY user_id
 ),
 bucketed AS (
   SELECT user, r_day, f_events, m_cents,
@@ -957,19 +902,12 @@ SELECT user, r_day, f_events, m_cents,
 FROM bucketed"""
 
 
-def position_attribution(
-    df: DataFrame,
-    conversion_type: str,
-    window_us: int = 7 * 86_400_000_000,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def position_attribution(df: DataFrame, conversion_type: str) -> DataFrame:
     """Position-based (U-shaped) multi-touch attribution — the
     standard 40/20/40 marketing credit model, made engine-exact: for
     each conversion event, the user's preceding touches inside the
-    lookback window form the path; one touch takes the full credit,
+    ``ATTRIBUTION_WINDOW_US`` lookback window form the path; one touch
+    takes the full credit,
     two take half each, and with n >= 3 the first and last take
     400000 ppm each while the middles split 200000 ppm by
     LARGEST-REMAINDER integer seats (earliest middles get the
@@ -983,13 +921,11 @@ def position_attribution(
     Output: (user, conv_id, touch_id, position, n_touches,
     credit_ppm).
     """
-    from pyspark.sql import Window
-
     base = df.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("k"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("us"),
-        F.col(id_col).alias("eid"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("k"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.col("event_id").alias("eid"),
     )
     convs = base.where(F.col("k") == conversion_type).select(
         "u", F.col("us").alias("cus"), F.col("eid").alias("conv_id")
@@ -999,7 +935,7 @@ def position_attribution(
     )
     joined = convs.join(touches, "u").where(
         (F.col("tus") < F.col("cus"))
-        & (F.col("tus") >= F.col("cus") - F.lit(window_us))
+        & (F.col("tus") >= F.col("cus") - F.lit(ATTRIBUTION_WINDOW_US))
     )
     w = Window.partitionBy("u", "conv_id").orderBy("tus", "touch_id")
     ranked = (
@@ -1036,19 +972,11 @@ def position_attribution(
     )
 
 
-def sql_position_attribution(
-    source_sql: str,
-    conversion_type: str,
-    window_us: int = 7 * 86_400_000_000,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_position_attribution(source_sql: str, conversion_type: str) -> str:
     """DuckDB oracle for :func:`position_attribution`."""
     return f"""WITH base AS (
-  SELECT {user_col} AS u, {type_col} AS k,
-         epoch_us(CAST({ts_col} AS TIMESTAMP)) AS us, {id_col} AS eid
+  SELECT user_id AS u, event_type AS k,
+         epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS eid
   FROM ({source_sql})
 ),
 convs AS (SELECT u, us AS cus, eid AS conv_id FROM base
@@ -1058,7 +986,7 @@ touches AS (SELECT u, us AS tus, eid AS touch_id FROM base
 joined AS (
   SELECT c.u, c.conv_id, c.cus, t.tus, t.touch_id
   FROM convs c JOIN touches t ON t.u = c.u
-  WHERE t.tus < c.cus AND t.tus >= c.cus - {window_us}
+  WHERE t.tus < c.cus AND t.tus >= c.cus - {ATTRIBUTION_WINDOW_US}
 ),
 ranked AS (
   SELECT u, conv_id, touch_id,
@@ -1082,22 +1010,19 @@ SELECT u AS user, conv_id, touch_id, CAST(position AS INT) AS position,
 FROM ranked"""
 
 
-def rfm_state(df: DataFrame, user_col: str = "user_id", ts_col: str = "ts",
-              value_col: str = "value") -> DataFrame:
+def rfm_state(df: DataFrame) -> DataFrame:
     """Per-user RFM state: (user, r_day, f_events, m_cents) — every
     component is an associative+commutative aggregate (max, count-as-
     sum, sum), so states FOLD across batches in any arrival order."""
-    return df.groupBy(F.col(user_col).alias("user")).agg(
+    return df.groupBy(F.col("user_id").alias("user")).agg(
         F.max(
             F.expr(
-                f"CAST(unix_micros(CAST({ts_col} AS TIMESTAMP))"
+                "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
                 " DIV 86400000000 AS BIGINT)"
             )
         ).alias("r_day"),
         F.count(F.lit(1)).cast("long").alias("f_events"),
-        F.sum(F.expr(f"CAST(round({value_col} * 100) AS BIGINT)")).alias(
-            "m_cents"
-        ),
+        F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).alias("m_cents"),
     )
 
 
@@ -1117,14 +1042,28 @@ def fold_rfm_state(state: DataFrame, batch_state: DataFrame) -> DataFrame:
     )
 
 
-def sequential_patterns(
-    df: DataFrame,
-    min_support: int = 2,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def _ordered_events(df: DataFrame) -> DataFrame:
+    """(u, t, k) per event: user, type and the total-order key — the
+    zero-padded string micros||event_id, whose plain string comparisons
+    tie identically on both engines (``_SQL_ORDER_KEY`` is the twin)."""
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    return df.select(
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t"),
+        F.concat(
+            F.lpad(us.cast("string"), 20, "0"),
+            F.lpad(F.col("event_id").cast("string"), 12, "0"),
+        ).alias("k"),
+    )
+
+
+_SQL_ORDER_KEY = (
+    "lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR), 20, '0') || "
+    "lpad(CAST(event_id AS VARCHAR), 12, '0')"
+)
+
+
+def sequential_patterns(df: DataFrame) -> DataFrame:
     """Frequent sequential patterns of length 2 and 3 (round-4; the
     PrefixSpan/GSP family, Pei 2001) — "users who VIEW then CLICK then
     ERROR" — counted as SUBSEQUENCE existence per user (gaps allowed,
@@ -1147,18 +1086,9 @@ def sequential_patterns(
     lexicographic VARCHAR ops with identical tie semantics everywhere
     (min_by tie rules differ between engines; padded-string min does
     not).  Output: (pattern 'a>b' or 'a>b>c', length, support,
-    support_ppm of users) for patterns with support >= min_support.
+    support_ppm of users) for patterns with support >= ``MIN_SUPPORT``.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    key = F.concat(
-        F.lpad(us.cast("string"), 20, "0"),
-        F.lpad(F.col(id_col).cast("string"), 12, "0"),
-    )
-    occ = df.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t"),
-        key.alias("k"),
-    ).localCheckpoint(eager=True)
+    occ = _ordered_events(df).localCheckpoint(eager=True)
     first = occ.groupBy("u", F.col("t").alias("a")).agg(
         F.min("k").alias("ka")
     )
@@ -1190,7 +1120,7 @@ def sequential_patterns(
     )
     return (
         s2.unionByName(s3)
-        .where(F.col("support") >= min_support)
+        .where(F.col("support") >= MIN_SUPPORT)
         .select(
             "pattern",
             "length",
@@ -1202,15 +1132,11 @@ def sequential_patterns(
     )
 
 
-def sql_sequential_patterns(source_sql: str, min_support: int = 2) -> str:
+def sql_sequential_patterns(source_sql: str) -> str:
     """DuckDB oracle for :func:`sequential_patterns` (source ->
     (user_id, event_type, ts, event_id))."""
-    key = (
-        "lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR), 20, '0') || "
-        "lpad(CAST(event_id AS VARCHAR), 12, '0')"
-    )
     return f"""WITH occ AS MATERIALIZED (
-  SELECT user_id AS u, event_type AS t, {key} AS k
+  SELECT user_id AS u, event_type AS t, {_SQL_ORDER_KEY} AS k
   FROM ({source_sql})
 ),
 nu AS (SELECT count(DISTINCT u) AS n_users FROM occ),
@@ -1237,31 +1163,26 @@ uni AS (SELECT * FROM s2 UNION ALL SELECT * FROM s3)
 SELECT pattern, length, CAST(support AS BIGINT) AS support,
   CAST(support * 1000000 // n_users AS BIGINT) AS support_ppm
 FROM uni CROSS JOIN nu
-WHERE support >= {min_support}"""
+WHERE support >= {MIN_SUPPORT}"""
 
 
-MARKOV_ROUNDS = 20
+_VFRAME_SCHEMA = T.StructType(
+    [T.StructField("variant", T.StringType()), T.StructField("state", T.StringType())]
+)
 
 
-def markov_attribution(
-    df: DataFrame,
-    conversion_type: str = "purchase",
-    rounds: int = MARKOV_ROUNDS,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def markov_attribution(df: DataFrame) -> DataFrame:
     """Markov-chain removal-effect attribution (round-4; Anderl et al.
     2016 — the data-driven alternative to the positional U-shape in
     position_attribution): journeys become a first-order chain
-    START -> channels -> {CONV, NULL}; a channel's value is how much the
+    START -> channels -> {CONV, NULL}, where CONV is a user's first
+    ``CONVERSION_TYPE`` event; a channel's value is how much the
     chain's conversion probability DROPS when that channel is removed
     (its state forced non-converting), normalized to credits.
 
     Engine-exact integer algebra throughout: transition probabilities
     are Q30 ratios of BIGINT counts, absorption probabilities come from
-    ``rounds`` synchronous value-iteration steps (v <- T v with CONV
+    ``MARKOV_ROUNDS`` synchronous value-iteration steps (v <- T v with CONV
     pinned at Q30, NULL and the removed channel at 0 — each step is one
     join + partial aggregate over the tiny (variant x state) frame, and
     the fixed round count makes an unrolled SQL oracle match
@@ -1274,21 +1195,11 @@ def markov_attribution(
     at any corpus size.  Output: (channel, p_full_q30, p_removed_q30,
     removal_ppm, credit_ppm).
     """
-    from pyspark.sql.window import Window
-
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     w = Window.partitionBy("u").orderBy("k")
-    ev = df.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t"),
-        F.concat(
-            F.lpad(us.cast("string"), 20, "0"),
-            F.lpad(F.col(id_col).cast("string"), 12, "0"),
-        ).alias("k"),
-    )
+    ev = _ordered_events(df)
     # cut each journey at its FIRST conversion event
     first_conv = (
-        ev.where(F.col("t") == conversion_type)
+        ev.where(F.col("t") == CONVERSION_TYPE)
         .groupBy("u")
         .agg(F.min("k").alias("kconv"))
     )
@@ -1297,7 +1208,7 @@ def markov_attribution(
         .where(F.col("kconv").isNull() | (F.col("k") <= F.col("kconv")))
         .withColumn(
             "t",
-            F.when(F.col("t") == conversion_type, F.lit("CONV")).otherwise(
+            F.when(F.col("t") == CONVERSION_TYPE, F.lit("CONV")).otherwise(
                 F.col("t")
             ),
         )
@@ -1334,10 +1245,10 @@ def markov_attribution(
     ]
     variants = ["__FULL__"] + sorted(channels)
     states = sorted(set(channels) | {"START"})
-    spark = df.sparkSession
-    vframe = spark.createDataFrame(
+    vframe = local_frame(
+        df.sparkSession,
         [(va, st) for va in variants for st in states],
-        "variant string, state string",
+        _VFRAME_SCHEMA,
     )
     # v_0 = 0 everywhere; absorbing values enter through the step's
     # CONV term, so iterate: v <- sum_d T(s,d) * val(d); per-round
@@ -1387,7 +1298,7 @@ def markov_attribution(
             )
         )
 
-    v = iterate(value_round, v, rounds)
+    v = iterate(value_round, v, MARKOV_ROUNDS)
     start_v = v.where(F.col("state") == "START").select(
         "variant", F.col("v").alias("p_conv")
     )
@@ -1426,10 +1337,8 @@ def markov_attribution(
             "tot_re",
         )
     )
-    from pyspark.sql.window import Window as W2
-
-    wr = W2.orderBy(F.desc("rem"), F.asc("channel"))
-    wall = W2.rowsBetween(W2.unboundedPreceding, W2.unboundedFollowing)
+    wr = Window.orderBy(F.desc("rem"), F.asc("channel"))
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
         seats.withColumn("leftover", F.lit(1000000) - F.sum("base").over(wall))
         .withColumn("rk", F.row_number().over(wr))
@@ -1448,23 +1357,16 @@ def markov_attribution(
     )
 
 
-def sql_markov_attribution(
-    source_sql: str,
-    conversion_type: str = "purchase",
-    rounds: int = MARKOV_ROUNDS,
-) -> str:
+def sql_markov_attribution(source_sql: str) -> str:
     """DuckDB oracle for :func:`markov_attribution`: the identical
-    integer algebra with the value iteration unrolled to ``rounds``
-    MATERIALIZED CTEs (single-reference, the repo's anti-inlining
-    discipline)."""
+    integer algebra with the value iteration unrolled to
+    ``MARKOV_ROUNDS`` MATERIALIZED CTEs (single-reference, the repo's
+    anti-inlining discipline)."""
     q30 = 1 << 30
-    key = (
-        "lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR), 20, '0') || "
-        "lpad(CAST(event_id AS VARCHAR), 12, '0')"
-    )
+    conv = CONVERSION_TYPE
     round_ctes = []
     prev = "v0"
-    for i in range(1, rounds + 1):
+    for i in range(1, MARKOV_ROUNDS + 1):
         name = f"v{i}"
         round_ctes.append(f"""{name} AS MATERIALIZED (
   SELECT vf.variant, vf.state,
@@ -1483,19 +1385,19 @@ def sql_markov_attribution(
         prev = name
     rounds_sql = ",\n".join(round_ctes)
     return f"""WITH ev AS MATERIALIZED (
-  SELECT user_id AS u, event_type AS t, {key} AS k
+  SELECT user_id AS u, event_type AS t, {_SQL_ORDER_KEY} AS k
   FROM ({source_sql})
 ),
 first_conv AS (
-  SELECT u, min(k) AS kconv FROM ev WHERE t = '{conversion_type}' GROUP BY u
+  SELECT u, min(k) AS kconv FROM ev WHERE t = '{conv}' GROUP BY u
 ),
 walked AS MATERIALIZED (
   SELECT e.u,
-         CASE WHEN e.t = '{conversion_type}' THEN 'CONV' ELSE e.t END AS t,
+         CASE WHEN e.t = '{conv}' THEN 'CONV' ELSE e.t END AS t,
          e.k,
-         lead(CASE WHEN e.t = '{conversion_type}' THEN 'CONV' ELSE e.t END)
+         lead(CASE WHEN e.t = '{conv}' THEN 'CONV' ELSE e.t END)
            OVER (PARTITION BY e.u ORDER BY e.k) AS nxt,
-         lag(CASE WHEN e.t = '{conversion_type}' THEN 'CONV' ELSE e.t END)
+         lag(CASE WHEN e.t = '{conv}' THEN 'CONV' ELSE e.t END)
            OVER (PARTITION BY e.u ORDER BY e.k) AS prv
   FROM ev e LEFT JOIN first_conv f ON e.u = f.u
   WHERE f.kconv IS NULL OR e.k <= f.kconv
@@ -1553,9 +1455,7 @@ FROM seats"""
 def km_survival(
     df: DataFrame,
     user_col: str = "user_id",
-    ts_col: str = "ts",
     cohort_col: str | None = None,
-    censor_window_days: int = 7,
 ) -> DataFrame:
     """Kaplan-Meier survival curve of user ACTIVITY LIFETIMES with right
     censoring (Kaplan & Meier 1958) — the churn readout every event
@@ -1564,8 +1464,8 @@ def km_survival(
       * the "user" is any subject key (a user, a user x surface pair, a
         subscription); ``cohort_col`` must be functionally dependent on
         it (taken as max over the subject's rows; None = one cohort 0);
-      * lifetime T_u = days between a user's first and last event;
-      * a user whose last event falls within ``censor_window_days`` of
+      * lifetime T_u = days between a user's first and last ``ts``;
+      * a user whose last event falls within ``CENSOR_WINDOW_DAYS`` of
         the corpus horizon is CENSORED (may still be active): they leave
         the risk set at T_u without counting as churn;
       * per cohort, at each distinct churn time t (ascending):
@@ -1584,7 +1484,7 @@ def km_survival(
     as long as the per-cohort risk set stays below 2^33 (~8.6e9 users)
     — beyond that, pre-bucket cohorts.
     """
-    horizon = df.agg(F.max(F.col(ts_col)).alias("h"))
+    horizon = df.agg(F.max(F.col("ts")).alias("h"))
     cohort = (
         F.max(F.col(cohort_col)).alias("cohort")
         if cohort_col
@@ -1594,8 +1494,8 @@ def km_survival(
         df.groupBy(F.col(user_col).alias("u"))
         .agg(
             cohort,
-            F.min(F.col(ts_col)).alias("first_ts"),
-            F.max(F.col(ts_col)).alias("last_ts"),
+            F.min(F.col("ts")).alias("first_ts"),
+            F.max(F.col("ts")).alias("last_ts"),
         )
         .crossJoin(F.broadcast(horizon))
         .select(
@@ -1604,7 +1504,7 @@ def km_survival(
             F.datediff(F.col("last_ts"), F.col("first_ts")).alias("t"),
             (
                 F.datediff(F.col("h"), F.col("last_ts"))
-                < F.lit(censor_window_days)
+                < F.lit(CENSOR_WINDOW_DAYS)
             ).alias("censored"),
         )
     )
@@ -1654,10 +1554,7 @@ def km_survival(
     )
 
 
-def sql_km_survival(
-    events_sql: str,
-    censor_window_days: int = 7,
-) -> str:
+def sql_km_survival(events_sql: str) -> str:
     """DuckDB oracle for :func:`km_survival` — identical histogram and
     Q30 truncating product, rendered as a sequential recursive-CTE fold
     over per-cohort row numbers.  events_sql -> (u, cohort, ts) with
@@ -1668,7 +1565,7 @@ hz AS (SELECT max(ts) AS h FROM ev),
 users AS (
   SELECT u, max(cohort) AS cohort,
     date_diff('day', min(ts), max(ts)) AS t,
-    date_diff('day', max(ts), (SELECT h FROM hz)) < {censor_window_days}
+    date_diff('day', max(ts), (SELECT h FROM hz)) < {CENSOR_WINDOW_DAYS}
       AS censored
   FROM ev GROUP BY u
 ),

@@ -1,9 +1,33 @@
-"""Graph analytics over materialized KG edge sets: PageRank and triangle
-counting.
+"""Graph analytics over materialized KG edge sets: ranking, paths,
+communities, cores, sketches and embeddings.
 
 Complements canonicalize.py's connected components: once triples are
 materialized, these are the standard "which entities matter / how dense
 is this neighborhood" queries a KG serving layer runs.
+
+Frame layouts.  Every operator reads one fixed column layout; a caller
+with other names renames before the call:
+
+* directed edges ``(src, dst)`` — pagerank, personalized_pagerank,
+  khop_distances, harmonic_centrality, betweenness_sampled, hits_scores,
+  random_walks, hyperball_nf, hyperball_closeness; sssp reads
+  ``(src, dst, w)`` and earliest_arrival ``(src, dst, ts_micros)``;
+* undirected edges ``(a, b)`` — label_propagation, kcore, ktruss,
+  coreness, louvain_moves, scan_clusters, jp_coloring, densest_subgraph,
+  clustering_coefficients, degree_assortativity, community_quality;
+  boruvka_msf and disparity_backbone read ``(a, b, w)``;
+* seed / source sets ``(node)``; a community assignment
+  ``(node, community)``;
+* link_prediction reads ``(item, via)``, fastrp_embeddings
+  ``(node, nbr)`` and butterfly_counts the bipartite ``(l, r)``.
+
+oriented_edges, triangle_counts and cooccurrence_edges take their
+column names as arguments, since callers pass other ones.
+
+Each DuckDB twin ``sql_X`` reads the same layout from its SQL source,
+and shares its hash salts (``WALK_SALT``, ``HB_SALT``, ``JP_SALT``),
+fixed-point scale (``PPM``), damping and round budget with ``X``
+through the module constants below.
 
 Engine-exactness: PageRank runs entirely in BIGINT micro-probability
 arithmetic (rank sums to ~1e6) with truncating integer division, so a
@@ -26,20 +50,21 @@ from nexus_forge_spark.functions.itermetrics import (
 )
 
 PPM = 1_000_000
+DAMPING_PCT = 85
+WALK_SALT = "walk"
+HB_SALT = "hb"
+JP_SALT = "jp"
+CORENESS_ROUNDS = 24
+MSF_ROUNDS = 20
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Fixed-iteration PageRank in integer micro-probabilities.
+def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
+    """Fixed-iteration PageRank in integer micro-probabilities over
+    ``(src, dst)`` edges, with d = ``DAMPING_PCT``:
 
     rank_0(v)   = PPM div n
-    rank_i+1(v) = (PPM * (100 - damping_pct)) div (100 * n)
-                  + damping_pct * sum_{u->v}(rank_i(u) div outdeg(u)) div 100
+    rank_i+1(v) = (PPM * (100 - d)) div (100 * n)
+                  + d * sum_{u->v}(rank_i(u) div outdeg(u)) div 100
 
     Dangling mass (nodes with no out-edges) is dropped, not redistributed
     — the simple public formulation; document, don't hide.  All terms are
@@ -55,9 +80,7 @@ def pagerank(
     # materialize the loop-invariant frames once: every iteration reads the
     # edge set and out-degrees, and without a barrier Catalyst re-derives
     # them (including whatever join/distinct produced the edges) per round
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -65,7 +88,7 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    base = (PPM * (100 - damping_pct)) // (100 * n)
+    base = (PPM * (100 - DAMPING_PCT)) // (100 * n)
     deg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("outdeg"))
@@ -85,7 +108,7 @@ def pagerank(
                 "node",
                 (
                     F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(s, 0) div 100")
+                    + F.expr(f"{DAMPING_PCT} * coalesce(s, 0) div 100")
                 ).cast("long").alias("rank_micro"),
                 *prev,
             ),
@@ -201,12 +224,10 @@ def khop_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
 ) -> DataFrame:
-    """Minimum-hop BFS distances from a seed set, capped at ``max_hops``:
-    returns (node, dist) with dist = min #edges from any seed (seeds at 0).
+    """Minimum-hop BFS distances over ``(src, dst)`` edges from a
+    ``(node)`` seed set, capped at ``max_hops``: returns (node, dist) with
+    dist = min #edges from any seed (seeds at 0).
 
     Level-synchronous frontier expansion: each hop is one equi-join of the
     frontier onto the edge table (shuffle on the node key — bucket the
@@ -219,10 +240,10 @@ def khop_distances(
     frontier: the loop returns at the first empty one, since every later
     hop would add nothing.
     """
-    frontier = seeds.select(F.col(node).alias("node")).distinct().withColumn(
+    frontier = seeds.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("int")
     )
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     return _bfs(frontier.localCheckpoint(eager=True), e, max_hops, "khop_distances")
 
 
@@ -255,14 +276,9 @@ def _bfs(
     return iterate(hop, (start, start), max_hops, until=emptied("new"), op=op)[1]
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 4,
-    a: str = "a",
-    b: str = "b",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
-    2007) over an undirected edge set, made fully deterministic so a
+    2007) over undirected ``(a, b)`` edges, made fully deterministic so a
     fixed-iteration run is engine-exact:
 
     label_0(v)   = v
@@ -288,7 +304,7 @@ def label_propagation(
     cluster, bucket the edge table by node so every round reuses the
     layout; localCheckpoint truncates the growing lineage here.
     """
-    und = _undirected(edges, a, b).localCheckpoint(eager=True)
+    und = _undirected(edges, "a", "b").localCheckpoint(eager=True)
     sym = _symmetric(und).select(F.col("p").alias("node"), F.col("q").alias("nbr"))
     labels = (
         sym.select("node")
@@ -324,7 +340,6 @@ def cooccurrence_edges(
     memberships: DataFrame,
     group_col: str = "doc_id",
     item_col: str = "entity_id",
-    min_pair_groups: int = 1,
 ) -> DataFrame:
     """Relation-candidate generation: co-occurrence edges between resolved
     entities that appear in the same document, with exact association
@@ -379,7 +394,6 @@ def cooccurrence_edges(
         .select(F.col("p.a").alias("entity_a"), F.col("p.b").alias("entity_b"))
         .groupBy("entity_a", "entity_b")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_groups"))
-        .where(F.col("pair_groups") >= min_pair_groups)
     )
     ca = item_counts.select(
         F.col("item").alias("entity_a"), F.col("groups").alias("groups_a")
@@ -406,15 +420,10 @@ def cooccurrence_edges(
     )
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    a: str = "a",
-    b: str = "b",
-    max_iter: int = 16,
-) -> DataFrame:
-    """The k-core of an undirected graph: iteratively peel nodes of degree
-    < k until every surviving node has >= k surviving neighbours.  The
+def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
+    """The k-core of an undirected ``(a, b)`` graph: iteratively peel
+    nodes of degree < k until every surviving node has >= k surviving
+    neighbours.  The
     standard KG / dedup-cluster density filter — "keep entities embedded
     in a dense neighborhood, discard stragglers" — and the classic
     preprocessing step before community detection or triangle counting.
@@ -436,7 +445,7 @@ def kcore(
     Returns (node, degree) for nodes in the k-core, with their in-core
     degree.
     """
-    und, seen = checkpoint_observed(_undirected(edges, a, b), edges=F.count(F.lit(1)))
+    und, seen = checkpoint_observed(_undirected(edges, "a", "b"), edges=F.count(F.lit(1)))
 
     def peel(und: DataFrame, rnd) -> DataFrame:
         deg = _symmetric(und).groupBy("p").agg(F.count(F.lit(1)).alias("deg"))
@@ -470,13 +479,10 @@ def sssp(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    node: str = "node",
 ) -> DataFrame:
     """Multi-seed single-source shortest paths over positively-weighted
-    edges by synchronous Bellman-Ford relaxation — hop-weighted
+    ``(src, dst, w)`` edges from a ``(node)`` seed set, by synchronous
+    Bellman-Ford relaxation — hop-weighted
     reachability for KG neighborhoods where edge cost matters (khop is
     the unit-weight special case, but its visited-set pruning cannot
     carry weights: a later path with MORE hops can be CHEAPER).
@@ -501,12 +507,8 @@ def sssp(
 
     Returns (node, dist) for every node reachable within ``rounds`` edges.
     """
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    )
-    dist = seeds.select(F.col(node).alias("node")).distinct().withColumn(
+    e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
+    dist = seeds.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
 
@@ -556,19 +558,17 @@ def sql_sssp(edges_sql: str, seeds_sql: str, rounds: int) -> str:
 
 def link_prediction(
     edges: DataFrame,
-    item_col: str = "item",
-    via_col: str = "via",
     max_via_degree: int | None = None,
-    scale: int = 1_000_000,
 ) -> DataFrame:
-    """Neighborhood-overlap link prediction: score unlinked item pairs by
+    """Neighborhood-overlap link prediction over ``(item, via)`` edges:
+    score unlinked item pairs by
     their shared neighbors — common-neighbor count plus the
     resource-allocation index (Zhou/Lu/Zhang 2009), each shared neighbor
     contributing 1/degree so promiscuous neighbors say little.  In a KG
     this proposes missing sameAs/relatedTo edges from co-reference
     structure; in a recommender, co-purchase affinity.
 
-    Engine-exactness: RA is carried as ``sum(scale div degree)`` —
+    Engine-exactness: RA is carried as ``sum(PPM div degree)`` —
     truncating INTEGER division per shared neighbor, then a BIGINT sum,
     so no float ordering can diverge (the 1e-6 truncation error is far
     below any ranking granularity that matters).
@@ -579,22 +579,22 @@ def link_prediction(
     neighbor key), and one partial-combined hash aggregate sums both
     scores.  ``max_via_degree`` drops hub neighbors BEFORE expansion:
     the standard guard (a neighbor shared by 10^6 items would emit
-    ~10^12 pairs while contributing scale/10^6 ~ 1 each — cost without
+    ~10^12 pairs while contributing PPM/10^6 ~ 1 each — cost without
     signal).  The filter is part of the operator's contract, applied
     identically by the SQL oracle.
 
     Returns (a, b, common_via, ra_scaled) for unordered pairs a < b.
     """
     g = (
-        edges.select(F.col(item_col).alias("item"), F.col(via_col).alias("via"))
-        .where(F.col(item_col).isNotNull() & F.col(via_col).isNotNull())
+        edges.select("item", "via")
+        .where(F.col("item").isNotNull() & F.col("via").isNotNull())
         .distinct()
     )
     deg = g.groupBy("via").agg(F.count(F.lit(1)).alias("deg"))
     if max_via_degree is not None:
         deg = deg.where(F.col("deg") <= max_via_degree)
     contrib = g.join(F.broadcast(deg), "via").select(
-        "via", "item", F.expr(f"{scale} div deg").cast("long").alias("contrib")
+        "via", "item", F.expr(f"{PPM} div deg").cast("long").alias("contrib")
     )
     sets = contrib.groupBy("via", "contrib").agg(
         F.sort_array(F.collect_set("item")).alias("items")
@@ -619,7 +619,6 @@ def link_prediction(
 def sql_link_prediction(
     edges_sql: str,
     max_via_degree: int | None = None,
-    scale: int = 1_000_000,
 ) -> str:
     """DuckDB oracle for link_prediction (join-based pair generation —
     an independent computation path from the array expansion)."""
@@ -632,7 +631,7 @@ def sql_link_prediction(
 ),
 deg AS (SELECT via, count(*) AS deg FROM g GROUP BY via {deg_filter}),
 contrib AS (
-  SELECT g.via, g.item, {scale} // d.deg AS contrib
+  SELECT g.via, g.item, {PPM} // d.deg AS contrib
   FROM g JOIN deg d ON g.via = d.via
 )
 SELECT x.item AS a, y.item AS b,
@@ -647,20 +646,19 @@ def random_walks(
     edges: DataFrame,
     num_walks: int,
     walk_length: int,
-    salt: str = "walk",
-    src: str = "src",
-    dst: str = "dst",
     starts: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic random-walk corpus generation (the DeepWalk /
-    node2vec p=q=1 sampling stage): ``num_walks`` walks of up to
-    ``walk_length`` steps from every start node, emitted long-format as
+    node2vec p=q=1 sampling stage) over ``(src, dst)`` edges:
+    ``num_walks`` walks of up to ``walk_length`` steps from every start
+    node (the ``(node)`` rows of ``starts``, by default every source),
+    emitted long-format as
     (start, rep, step, node) with step 0 = the start itself — ready to
     window into skip-gram pairs for embedding training (the corpus that
     feeds the same KGE loop kge.negative_samples serves).
 
     Determinism instead of RNG state: the step draw is the portable
-    60-bit content hash of (start, rep, step, salt) modulo the current
+    60-bit content hash of (start, rep, step, WALK_SALT) modulo the current
     node's degree, indexing its SORTED neighbor list — every engine (and
     every retry of a failed stage: Spark task re-execution included)
     reproduces the identical corpus, which is what makes the walks
@@ -679,14 +677,14 @@ def random_walks(
     from nexus_forge_spark.operators.sketches import hash60
 
     adj = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
         .distinct()
         .groupBy("node")
         .agg(F.sort_array(F.collect_set("nbr")).alias("nbrs"))
         .localCheckpoint(eager=True)
     )
     base = starts if starts is not None else edges.select(
-        F.col(src).alias("node")
+        F.col("src").alias("node")
     ).distinct()
     cur = base.select(F.col("node").alias("start")).distinct().select(
         "start",
@@ -702,7 +700,7 @@ def random_walks(
         step = rnd.index + 1
         draw = hash60(
             F.concat_ws("\x1f", F.col("start"), F.col("rep"), F.lit(step)),
-            salt,
+            WALK_SALT,
         )
         stepped = rnd.checkpoint(
             cur.join(adj, "node").select(
@@ -726,7 +724,6 @@ def sql_random_walks(
     edges_sql: str,
     num_walks: int,
     walk_length: int,
-    salt: str = "walk",
     starts_sql: str | None = None,
 ) -> str:
     """DuckDB oracle rendering of the identical hash-seeded walk
@@ -751,7 +748,7 @@ def sql_random_walks(
         h = sql_hash60(
             f"CAST(w.start AS VARCHAR) || chr(31) || CAST(w.rep AS VARCHAR) "
             f"|| chr(31) || '{step}'",
-            salt,
+            WALK_SALT,
         )
         ctes.append(
             f"""w{step} AS MATERIALIZED (
@@ -770,12 +767,9 @@ def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
     iterations: int = 5,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
 ) -> DataFrame:
-    """Personalized PageRank in integer micro-probabilities: the teleport
+    """Personalized PageRank in integer micro-probabilities over
+    ``(src, dst)`` edges from a ``(node)`` seed set S: the teleport
     mass returns to the SEED set instead of spreading uniformly, so the
     stationary scores measure relevance *to the seeds* — the standard KG
     neighborhood-relevance / recommendation primitive (seed = a user's
@@ -784,6 +778,8 @@ def personalized_pagerank(
         rank_0(v)   = [v in S] * (PPM div |S|)
         rank_i+1(v) = [v in S] * (PPM * (100-d)) div (100 * |S|)
                       + d * sum_{u->v}(rank_i(u) div outdeg(u)) div 100
+
+    with d = ``DAMPING_PCT``.
 
     Same engine-exactness discipline as pagerank: BIGINT state,
     truncating division, dangling mass dropped (documented, not hidden)
@@ -795,16 +791,12 @@ def personalized_pagerank(
     base term is a broadcast left join (seed sets are small by
     definition).  localCheckpoint truncates per-iteration lineage.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
-    s = seeds.select(F.col(node).alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    s = seeds.select("node").distinct().localCheckpoint(eager=True)
     n_seeds = s.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    base = (PPM * (100 - damping_pct)) // (100 * n_seeds)
+    base = (PPM * (100 - DAMPING_PCT)) // (100 * n_seeds)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -840,7 +832,7 @@ def personalized_pagerank(
                     F.when(F.col("_is_seed").isNotNull(), F.lit(base)).otherwise(
                         F.lit(0)
                     )
-                    + F.expr(f"{damping_pct} * coalesce(s, 0) div 100")
+                    + F.expr(f"{DAMPING_PCT} * coalesce(s, 0) div 100")
                 ).cast("long").alias("rank_micro"),
             )
         )
@@ -852,19 +844,16 @@ def harmonic_centrality(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    scale: int = 1_000_000,
 ) -> DataFrame:
-    """Sampled-source harmonic centrality: H(v) = sum over sampled
+    """Sampled-source harmonic centrality over ``(src, dst)`` edges from
+    ``(node)`` sources: H(v) = sum over sampled
     sources s of 1/d(s,v), distances truncated at ``max_hops`` — the
     standard scalable centrality estimate (exact closeness needs
     all-pairs distances; sampling sources + bounding the radius is how
     Eppstein-Wang-style estimators make it tractable at graph scale, and
     harmonic handles disconnected graphs where closeness breaks).
 
-    Contributions are INTEGER ``scale div dist`` (per-source unit-hop
+    Contributions are INTEGER ``PPM div dist`` (per-source unit-hop
     distances), summed as BIGINTs — engine-exact, no float harmonic sums
     whose order could diverge.  Returns (node, harmonic_micro,
     n_sources_reached); the source set is part of the contract (pass a
@@ -878,9 +867,9 @@ def harmonic_centrality(
     returns at the first hop that reaches no new pair.  Seeds scale the
     cost linearly — that is the sampling dial.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     frontier = (
-        sources.select(F.col(node).alias("seed"))
+        sources.select(F.col("node").alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("dist"))
         .localCheckpoint(eager=True)
@@ -890,15 +879,13 @@ def harmonic_centrality(
         visited.where(F.col("dist") > 0)
         .groupBy("node")
         .agg(
-            F.sum(F.expr(f"{scale} div dist")).cast("long").alias("harmonic_micro"),
+            F.sum(F.expr(f"{PPM} div dist")).cast("long").alias("harmonic_micro"),
             F.count(F.lit(1)).cast("long").alias("n_sources_reached"),
         )
     )
 
 
-def sql_harmonic_centrality(
-    edges_sql: str, sources_sql: str, max_hops: int, scale: int = 1_000_000
-) -> str:
+def sql_harmonic_centrality(edges_sql: str, sources_sql: str, max_hops: int) -> str:
     """DuckDB oracle: unit-weight Bellman-Ford per (seed, node) — min
     distance within k hops equals BFS first-reach depth, an independent
     computation path from the frontier/anti-join formulation."""
@@ -924,21 +911,15 @@ def sql_harmonic_centrality(
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT node, CAST(sum({scale} // dist) AS BIGINT) AS harmonic_micro,
+SELECT node, CAST(sum({PPM} // dist) AS BIGINT) AS harmonic_micro,
        CAST(count(*) AS BIGINT) AS n_sources_reached
 FROM d{max_hops} WHERE dist > 0
 GROUP BY node"""
     )
 
 
-def ktruss(
-    edges: DataFrame,
-    k: int,
-    a: str = "a",
-    b: str = "b",
-    max_iter: int = 16,
-) -> DataFrame:
-    """The k-truss of an undirected graph: iteratively drop edges in
+def ktruss(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
+    """The k-truss of an undirected ``(a, b)`` graph: iteratively drop edges in
     fewer than k-2 triangles until every surviving edge has >= k-2
     surviving triangles — the edge-level density filter (strictly
     stronger than k-core's node degrees) that keeps cohesive duplicate/
@@ -975,8 +956,8 @@ def ktruss(
             "whole graph — use the edge set directly"
         )
     und = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .where(F.col(a) != F.col(b))
+        edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        .where(F.col("a") != F.col("b"))
         .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
         .distinct()
     )
@@ -1007,14 +988,9 @@ def ktruss(
     )
 
 
-def boruvka_msf(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    w_col: str = "w",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Minimum spanning forest by Borůvka's algorithm — the backbone of
+def boruvka_msf(edges: DataFrame) -> DataFrame:
+    """Minimum spanning forest of weighted ``(a, b, w)`` edges by
+    Borůvka's algorithm — the backbone of
     single-linkage clustering at scale (cut the MSF at a distance
     threshold and the components ARE the single-linkage clusters, no
     sequential dendrogram needed).
@@ -1035,17 +1011,17 @@ def boruvka_msf(
     joins + one component-keyed min aggregate (SortAggregate from the
     struct min — mapper-local sort, partial-combined) + CC on the
     shrinking component graph; every round's state is
-    localCheckpoint-pinned.  Raises on max_iter exhaustion (the
+    localCheckpoint-pinned.  Raises after ``MSF_ROUNDS`` rounds (the
     kcore/ktruss honesty contract).
     """
     from nexus_forge_spark.operators.canonicalize import connected_components
 
     e = (
-        edges.where(F.col(a) != F.col(b))
+        edges.where(F.col("a") != F.col("b"))
         .select(
-            F.least(a, b).alias("lo"),
-            F.greatest(a, b).alias("hi"),
-            F.col(w_col).cast("long").alias("w"),
+            F.least("a", "b").alias("lo"),
+            F.greatest("a", "b").alias("hi"),
+            F.col("w").cast("long").alias("w"),
         )
         .groupBy("lo", "hi")
         .agg(F.min("w").alias("w"))
@@ -1099,11 +1075,11 @@ def boruvka_msf(
         return comp, sel, msf
 
     _, _, msf = iterate(
-        merge_and_elect, (comp, None, None), max_iter,
+        merge_and_elect, (comp, None, None), MSF_ROUNDS,
         until=emptied("elected"),
         error=lambda _: RuntimeError(
-            f"boruvka_msf did not converge in {max_iter} rounds; "
-            "raise max_iter (components at least halve per round)"
+            f"boruvka_msf did not converge in {MSF_ROUNDS} rounds "
+            "(components at least halve per round)"
         ),
     )
     if msf is None:
@@ -1115,16 +1091,12 @@ def fastrp_embeddings(
     edges: DataFrame,
     dims: int = 8,
     rounds: int = 2,
-    scale: int = 1000000,
-    weights: list[int] | None = None,
-    node_col: str = "node",
-    nbr_col: str = "nbr",
 ) -> DataFrame:
-    """FastRP node embeddings (Chen et al. 2019) in exact signed
-    fixed-point: very sparse random projection init (density 1/3,
-    signs from the portable 60-bit md5 hash) iterated through the
-    mean-aggregation operator x_t(v) = sum_{u in N(v)} x_{t-1}(u) DIV
-    deg(v), output = sum_t weights[t] * x_t per (node, dim).
+    """FastRP node embeddings (Chen et al. 2019) over ``(node, nbr)``
+    edges in exact signed fixed-point: very sparse random projection
+    init (+-PPM at density 1/3, signs from the portable 60-bit md5 hash)
+    iterated through the mean-aggregation operator x_t(v) = sum_{u in
+    N(v)} x_{t-1}(u) DIV deg(v), output = sum_t x_t per (node, dim).
 
     Engine-exactness: every value is BIGINT; Spark ``DIV`` and DuckDB
     ``//`` BOTH truncate toward zero on negatives (verified), so the
@@ -1140,11 +1112,9 @@ def fastrp_embeddings(
     """
     from nexus_forge_spark.operators.sketches import hash60
 
-    if weights is None:
-        weights = [1] * rounds
-    if len(weights) != rounds or rounds < 1:
-        raise ValueError("weights must have one integer per round, rounds >= 1")
-    e = edges.select(F.col(node_col).alias("node"), F.col(nbr_col).alias("nbr"))
+    if rounds < 1:
+        raise ValueError("fastrp_embeddings needs rounds >= 1")
+    e = edges.select("node", "nbr")
     nodes = (
         e.select("node")
         .unionByName(e.select(F.col("nbr").alias("node")))
@@ -1166,8 +1136,8 @@ def fastrp_embeddings(
     x = init.select(
         "node",
         "dim",
-        F.when(h == 0, F.lit(scale))
-        .when(h == 1, F.lit(-scale))
+        F.when(h == 0, F.lit(PPM))
+        .when(h == 1, F.lit(-PPM))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("v"),
@@ -1187,9 +1157,7 @@ def fastrp_embeddings(
             init.join(nbsum, ["node", "dim"], "left")
             .select("node", "dim", F.coalesce("v", F.lit(0)).cast("long").alias("v"))
         )
-        contrib = x.select(
-            "node", "dim", (F.col("v") * F.lit(weights[rnd.index])).alias("c")
-        )
+        contrib = x.select("node", "dim", F.col("v").alias("c"))
         return x, contrib if acc is None else acc.unionByName(contrib)
 
     _, acc = iterate(mean_step, (x, None), rounds)
@@ -1200,21 +1168,13 @@ def fastrp_embeddings(
     )
 
 
-def sql_fastrp_embeddings(
-    edges_sql: str,
-    dims: int = 8,
-    rounds: int = 2,
-    scale: int = 1000000,
-    weights: list[int] | None = None,
-) -> str:
+def sql_fastrp_embeddings(edges_sql: str, dims: int = 8, rounds: int = 2) -> str:
     """DuckDB oracle: the same signed fixed-point iteration unrolled.
     edges_sql -> (node, nbr)."""
-    if weights is None:
-        weights = [1] * rounds
     sign = (
         "CASE (('0x' || substr(md5(CAST(n.node AS VARCHAR) || '|' || "
         "CAST(d.dim AS VARCHAR) || ':fastrp'), 1, 15))::BIGINT % 6) "
-        f"WHEN 0 THEN {scale} WHEN 1 THEN -{scale} ELSE 0 END"
+        f"WHEN 0 THEN {PPM} WHEN 1 THEN -{PPM} ELSE 0 END"
     )
     parts = [
         f"e AS MATERIALIZED ({edges_sql})",
@@ -1240,8 +1200,7 @@ def sql_fastrp_embeddings(
   LEFT JOIN deg g ON i.node = g.node)"""
         )
     combo = " UNION ALL ".join(
-        f"SELECT node, dim, v * {weights[t - 1]} AS c FROM x{t}"
-        for t in range(1, rounds + 1)
+        f"SELECT node, dim, v AS c FROM x{t}" for t in range(1, rounds + 1)
     )
     return (
         "WITH "
@@ -1252,15 +1211,10 @@ FROM ({combo}) GROUP BY node, dim"""
     )
 
 
-def hits_scores(
-    edges: DataFrame,
-    rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    scale: int = 1000000,
-) -> DataFrame:
-    """HITS hubs & authorities (Kleinberg 1999) in exact integer
-    arithmetic: a(v) = sum of incoming hubs, h(u) = sum of outgoing
+def hits_scores(edges: DataFrame, rounds: int = 3) -> DataFrame:
+    """HITS hubs & authorities (Kleinberg 1999) over ``(src, dst)`` edges
+    in exact integer arithmetic: a(v) = sum of incoming hubs, h(u) = sum
+    of outgoing
     authorities, each vector renormalized by its MAX (not the L2 norm —
     max-normalization keeps every step a BIGINT multiply + truncating
     DIV, and converges to the same principal direction).
@@ -1275,16 +1229,14 @@ def hits_scores(
     # rounds plus twice in the epilogue — pin it, or Catalyst re-derives
     # the upstream edge producer (e.g. a distinct co-purchase join) on
     # every single join
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    h = nodes.select("node", F.lit(scale).cast("long").alias("v"))
+    h = nodes.select("node", F.lit(PPM).cast("long").alias("v"))
 
     def hub_auth(state: tuple, rnd) -> tuple:
         h, _ = state
@@ -1293,13 +1245,13 @@ def hits_scores(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("v").alias("raw"))
         )
-        a = rnd.checkpoint(_max_normalize(a_raw, scale))
+        a = rnd.checkpoint(_max_normalize(a_raw))
         h_raw = (
             e.join(a.withColumnRenamed("node", "dst").withColumnRenamed("v", "av"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("av").alias("raw"))
         )
-        return rnd.checkpoint(_max_normalize(h_raw, scale)), a
+        return rnd.checkpoint(_max_normalize(h_raw)), a
 
     h, a = iterate(hub_auth, (h, None), rounds)
     return (
@@ -1313,8 +1265,8 @@ def hits_scores(
     )
 
 
-def _max_normalize(raw: DataFrame, scale: int) -> DataFrame:
-    """(node, raw) -> (node, v) with v = raw*scale DIV max(raw).  max is a
+def _max_normalize(raw: DataFrame) -> DataFrame:
+    """(node, raw) -> (node, v) with v = raw*PPM DIV max(raw).  max is a
     1-row aggregate broadcast back.  The vector stays SPARSE between
     rounds — zero/absent entries contribute nothing to the next round's
     sums, so padding the node universe per round would be 6 wasted
@@ -1323,19 +1275,19 @@ def _max_normalize(raw: DataFrame, scale: int) -> DataFrame:
     return raw.crossJoin(F.broadcast(mx)).select(
         "node",
         F.when(F.col("mx") == 0, F.lit(0))
-        .otherwise(F.expr(f"(raw * {scale}) DIV mx"))
+        .otherwise(F.expr(f"(raw * {PPM}) DIV mx"))
         .cast("long")
         .alias("v"),
     )
 
 
-def sql_hits_scores(edges_sql: str, rounds: int = 3, scale: int = 1000000) -> str:
+def sql_hits_scores(edges_sql: str, rounds: int = 3) -> str:
     """DuckDB oracle: the identical max-normalized recurrence unrolled."""
     parts = [
         f"e AS MATERIALIZED ({edges_sql})",
         "nodes AS (SELECT DISTINCT node FROM "
         "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e))",
-        f"h0 AS (SELECT node, CAST({scale} AS BIGINT) AS v FROM nodes)",
+        f"h0 AS (SELECT node, CAST({PPM} AS BIGINT) AS v FROM nodes)",
     ]
     for r in range(1, rounds + 1):
         parts.append(
@@ -1347,7 +1299,7 @@ def sql_hits_scores(edges_sql: str, rounds: int = 3, scale: int = 1000000) -> st
             f"""a{r} AS (
   SELECT n.node,
          CAST(CASE WHEN m.mx IS NULL OR m.mx = 0 THEN 0
-              ELSE (coalesce(r.raw, 0) * {scale}) // m.mx END AS BIGINT) AS v
+              ELSE (coalesce(r.raw, 0) * {PPM}) // m.mx END AS BIGINT) AS v
   FROM nodes n
   LEFT JOIN ar{r} r ON n.node = r.node
   CROSS JOIN (SELECT max(raw) AS mx FROM ar{r}) m)"""
@@ -1361,7 +1313,7 @@ def sql_hits_scores(edges_sql: str, rounds: int = 3, scale: int = 1000000) -> st
             f"""h{r} AS (
   SELECT n.node,
          CAST(CASE WHEN m.mx IS NULL OR m.mx = 0 THEN 0
-              ELSE (coalesce(r.raw, 0) * {scale}) // m.mx END AS BIGINT) AS v
+              ELSE (coalesce(r.raw, 0) * {PPM}) // m.mx END AS BIGINT) AS v
   FROM nodes n
   LEFT JOIN hr{r} r ON n.node = r.node
   CROSS JOIN (SELECT max(raw) AS mx FROM hr{r}) m)"""
@@ -1381,13 +1333,10 @@ def betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Sampled-source betweenness centrality (Brandes 2001, the
-    level-synchronous distributed rendering): forward BFS from each
+    level-synchronous distributed rendering) over ``(src, dst)`` edges
+    from ``(node)`` sources: forward BFS from each
     sampled seed accumulates shortest-path COUNTS sigma per (seed,
     node, level); the backward sweep then folds dependencies level by
     level — delta(v) = sum over successors w of (sigma_v/sigma_w) *
@@ -1398,9 +1347,9 @@ def betweenness_sampled(
 
     Engine exactness: sigma values are exact BIGINT path counts; the
     dependency ratio is fixed-point ppm with truncating division at
-    the TWO documented points (sigma_v*scale DIV sigma_w, then
-    *(scale+delta_w) DIV scale) — sigma_v <= sigma_w by construction so
-    the ratio never exceeds scale, and both engines truncate toward
+    the TWO documented points (sigma_v*PPM DIV sigma_w, then
+    *(PPM+delta_w) DIV PPM) — sigma_v <= sigma_w by construction so
+    the ratio never exceeds PPM, and both engines truncate toward
     zero.  Ordering effects cannot exist: every step is a sum.
 
     Scale: forward = one frontier-edges shuffle + one (seed, node)
@@ -1410,9 +1359,9 @@ def betweenness_sampled(
     touching only that level's pairs.  Seeds dial cost
     linearly.  Output: (node, betweenness_ppm, n_seed_paths).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     frontier = (
-        sources.select(F.col(node).alias("seed"))
+        sources.select(F.col("node").alias("seed"))
         .distinct()
         .select(
             "seed",
@@ -1468,7 +1417,7 @@ def betweenness_sampled(
                 "seed",
                 "node",
                 F.expr(
-                    f"((sigma * {scale}) DIV sigma_w) * ({scale} + dw) DIV {scale}"
+                    f"((sigma * {PPM}) DIV sigma_w) * ({PPM} + dw) DIV {PPM}"
                 ).alias("c"),
             )
         )
@@ -1496,9 +1445,7 @@ def betweenness_sampled(
     )
 
 
-def sql_betweenness_sampled(
-    edges_sql: str, sources_sql: str, max_hops: int, scale: int = 1_000_000
-) -> str:
+def sql_betweenness_sampled(edges_sql: str, sources_sql: str, max_hops: int) -> str:
     """DuckDB oracle: forward levels f0..fH then backward deltas, same
     fixed-point algebra unrolled."""
     parts = [
@@ -1524,7 +1471,7 @@ def sql_betweenness_sampled(
     parts.append(
         f"""d{max_hops} AS (
   SELECT u.seed, u.node,
-         CAST(sum(((u.sigma * {scale}) // w.sigma) * {scale} // {scale}) AS BIGINT)
+         CAST(sum(((u.sigma * {PPM}) // w.sigma) * {PPM} // {PPM}) AS BIGINT)
          AS delta_ppm
   FROM f{max_hops - 1} u
   JOIN e ON u.node = e.src
@@ -1535,7 +1482,7 @@ def sql_betweenness_sampled(
         parts.append(
             f"""d{lvl} AS (
   SELECT u.seed, u.node,
-         CAST(sum(((u.sigma * {scale}) // w.sigma) * ({scale} + coalesce(d.delta_ppm, 0)) // {scale}) AS BIGINT)
+         CAST(sum(((u.sigma * {PPM}) // w.sigma) * ({PPM} + coalesce(d.delta_ppm, 0)) // {PPM}) AS BIGINT)
          AS delta_ppm
   FROM f{lvl - 1} u
   JOIN e ON u.node = e.src
@@ -1560,23 +1507,16 @@ GROUP BY node"""
     )
 
 
-def community_quality(
-    edges: DataFrame,
-    assignment: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    node_col: str = "node",
-    community_col: str = "community",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Partition-quality metrics for a community assignment: per
+def community_quality(edges: DataFrame, assignment: DataFrame) -> DataFrame:
+    """Partition-quality metrics for a ``(node, community)`` assignment
+    of the nodes of undirected ``(a, b)`` edges: per
     community — size, volume (degree sum), internal-edge count, cut
     size, CONDUCTANCE (cut / min(vol, 2m - vol)) and the community's
     Newman MODULARITY contribution (e_c/m - (vol_c/2m)^2), both in
     integer ppm.  The evaluation every community detector (LPA, CC,
     Louvain-style) needs before its output is trusted downstream.
 
-    Exact integer algebra: conductance_ppm = (cut * scale) DIV
+    Exact integer algebra: conductance_ppm = (cut * PPM) DIV
     min(vol, 2m - vol); the modularity contribution quantizes in a
     DOCUMENTED order that keeps every operand in BIGINT at 10^12
     edges: part1_ppm = (e_c * 1e6) DIV m, r_milli = (vol_c * 1e3) DIV
@@ -1591,14 +1531,14 @@ def community_quality(
     """
     e = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
     )
     asg = assignment.select(
-        F.col(node_col).alias("n"), F.col(community_col).alias("c")
+        F.col("node").alias("n"), F.col("community").alias("c")
     ).distinct()
     m_df = e.agg(F.count(F.lit(1)).alias("m"))
     deg = (
@@ -1628,25 +1568,23 @@ def community_quality(
     )
     cut = F.col("vol") - 2 * F.col("e_in")
     denom = F.least(F.col("vol"), 2 * F.col("m") - F.col("vol"))
-    part1 = F.expr(f"(e_in * {scale}) DIV m")
+    part1 = F.expr(f"(e_in * {PPM}) DIV m")
     r_milli = F.expr("(vol * 1000) DIV (2 * m)")
     return j.select(
-        F.col("c").alias(community_col),
+        F.col("c").alias("community"),
         F.col("n_nodes").cast("long").alias("n_nodes"),
         F.col("vol").cast("long").alias("vol"),
         F.col("e_in").cast("long").alias("e_in"),
         cut.cast("long").alias("cut"),
         F.when(denom == 0, F.lit(0))
-        .otherwise(F.expr(f"(({'vol'} - 2 * e_in) * {scale}) DIV least(vol, 2 * m - vol)"))
+        .otherwise(F.expr(f"((vol - 2 * e_in) * {PPM}) DIV least(vol, 2 * m - vol)"))
         .cast("long")
         .alias("conductance_ppm"),
         (part1 - r_milli * r_milli).cast("long").alias("modularity_contrib_ppm"),
     )
 
 
-def sql_community_quality(
-    edges_sql: str, assignment_sql: str, scale: int = 1_000_000
-) -> str:
+def sql_community_quality(edges_sql: str, assignment_sql: str) -> str:
     """DuckDB oracle for :func:`community_quality`.  edges_sql -> (a, b);
     assignment_sql -> (node, community)."""
     return f"""WITH e AS MATERIALIZED (
@@ -1682,9 +1620,9 @@ SELECT p.c AS community, p.n_nodes, p.vol,
        coalesce(i.e_in, 0) AS e_in,
        p.vol - 2 * coalesce(i.e_in, 0) AS cut,
        CAST(CASE WHEN least(p.vol, 2 * t.m - p.vol) = 0 THEN 0
-            ELSE ((p.vol - 2 * coalesce(i.e_in, 0)) * {scale})
+            ELSE ((p.vol - 2 * coalesce(i.e_in, 0)) * {PPM})
                  // least(p.vol, 2 * t.m - p.vol) END AS BIGINT) AS conductance_ppm,
-       CAST((coalesce(i.e_in, 0) * {scale}) // t.m
+       CAST((coalesce(i.e_in, 0) * {PPM}) // t.m
             - ((p.vol * 1000) // (2 * t.m)) * ((p.vol * 1000) // (2 * t.m))
             AS BIGINT) AS modularity_contrib_ppm
 FROM per_c p LEFT JOIN internal i ON p.c = i.c, m_t t"""
@@ -1694,13 +1632,10 @@ def earliest_arrival(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    ts_col: str = "ts_micros",
-    node_col: str = "node",
 ) -> DataFrame:
     """Time-respecting earliest-arrival reachability (Wu et al., VLDB
-    2014): from each seed, the earliest time every node can be reached
+    2014) over timestamped ``(src, dst, ts_micros)`` edges: from each
+    ``(node)`` source, the earliest time every node can be reached
     along paths whose edge timestamps are NON-DECREASING — the temporal
     analogue of BFS, and what static reachability gets WRONG on
     temporal graphs (a late edge cannot feed an earlier one).  Seeds
@@ -1719,13 +1654,9 @@ def earliest_arrival(
     Output: (seed, node, arrival_micros, hops) — hops = round that
     first achieved the arrival; seeds themselves are omitted.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(ts_col).cast("long").alias("ts"),
-    )
+    e = edges.select("src", "dst", F.col("ts_micros").cast("long").alias("ts"))
     best = (
-        sources.select(F.col(node_col).alias("seed"))
+        sources.select(F.col("node").alias("seed"))
         .distinct()
         .select(
             "seed",
@@ -1805,13 +1736,10 @@ FROM b{max_hops} WHERE hops > 0"""
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity (Newman 2002): the Pearson correlation of
-    endpoint degrees over undirected edges — positive = hubs attach to
+    endpoint degrees over undirected ``(a, b)`` edges — positive = hubs
+    attach to
     hubs (social nets), negative = hubs attach to leaves (the typical
     KG/co-purchase shape).  The one-number structure diagnostic that
     decides whether hub-mitigation (salting, star replacement) is the
@@ -1828,8 +1756,8 @@ def degree_assortativity(
     """
     e = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
@@ -1905,13 +1833,9 @@ SELECT CAST(m2 // 2 AS BIGINT) AS n_edges,
 FROM agg"""
 
 
-def louvain_moves(
-    edges: DataFrame,
-    rounds: int = 3,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
-    """One-level Louvain-style community refinement, SYNCHRONOUS and
+def louvain_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
+    """One-level Louvain-style community refinement over undirected
+    ``(a, b)`` edges, SYNCHRONOUS and
     deterministic: every round each node evaluates moving to the
     community of a neighbor by exact integer modularity gain — score
     S(v, c) = 2m * e_{v,c} - deg_v * vol'_c, where vol'_c excludes v
@@ -1935,8 +1859,8 @@ def louvain_moves(
     """
     e = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
@@ -2083,12 +2007,10 @@ def hyperball_nf(
     edges: DataFrame,
     rounds: int = 3,
     precision: int = 6,
-    salt: str = "hb",
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """HyperBall neighborhood function (Boldi & Vigna, "In-Core
-    Computation of Geometric Centralities with HyperBall", 2013): each
+    Computation of Geometric Centralities with HyperBall", 2013) over
+    ``(src, dst)`` edges: each
     node carries an HLL counter of the nodes within t hops; round t
     unions every node's counter with its out-neighbors' counters, so
     after t rounds counter(v) estimates |ball(v, t)|.  The per-round
@@ -2117,7 +2039,7 @@ def hyperball_nf(
     (kgforge/core/archetypes/read_only_store.py:212-245).
     """
     out = _hyperball_rounds(
-        edges, rounds, precision, salt, src_col, dst_col, "hyperball_nf",
+        edges, rounds, precision, "hyperball_nf",
         lambda sketch, est, t: sketch.select(
             F.round(est).cast("long").alias("est")
         ).agg(
@@ -2137,9 +2059,6 @@ def _hyperball_rounds(
     edges: DataFrame,
     rounds: int,
     precision: int,
-    salt: str,
-    src_col: str,
-    dst_col: str,
     op: str,
     per_round,
 ) -> DataFrame:
@@ -2154,7 +2073,7 @@ def _hyperball_rounds(
     rho_max = HASH_BITS - precision + 1
     alpha = 0.7213 / (1.0 + 1.079 / m)
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -2171,7 +2090,7 @@ def _hyperball_rounds(
     # per-round merge join moves |E| array rows instead of |E| x m
     # register rows (measured 39s -> 20s at sf0.1, m=64), and the merge
     # itself is m map-side-combining max() aggregates.
-    h = hash60(F.col("node"), salt)
+    h = hash60(F.col("node"), HB_SALT)
     wq = F.shiftright(h, precision)
     tz = F.round(F.log2(wq.bitwiseAND(-wq))).cast("int")
     rho = F.when(wq == 0, F.lit(rho_max)).otherwise(tz + F.lit(1))
@@ -2215,9 +2134,7 @@ def _hyperball_rounds(
     return iterate(merge, (sk, per_round(sk, est, 0)), rounds, op=op)[1]
 
 
-def sql_hyperball_nf(
-    edges_sql: str, rounds: int = 3, precision: int = 6, salt: str = "hb"
-) -> str:
+def sql_hyperball_nf(edges_sql: str, rounds: int = 3, precision: int = 6) -> str:
     """DuckDB oracle for :func:`hyperball_nf`: identical rounds unrolled."""
     from nexus_forge_spark.operators.sketches import HASH_BITS, sql_hash60
 
@@ -2232,7 +2149,7 @@ def sql_hyperball_nf(
   SELECT node, CAST(h % {m} AS INT) AS register,
     CASE WHEN h // {m} = 0 THEN {rho_max}
          ELSE CAST(round(log2((h // {m}) & -(h // {m}))) AS INT) + 1 END AS rho
-  FROM (SELECT node, {sql_hash60('node', salt)} AS h FROM nodes))""",
+  FROM (SELECT node, {sql_hash60('node', HB_SALT)} AS h FROM nodes))""",
     ]
     for t in range(1, rounds + 1):
         parts.append(
@@ -2273,11 +2190,10 @@ def scan_clusters(
     eps_num: int = 6,
     eps_den: int = 10,
     mu: int = 3,
-    a_col: str = "a",
-    b_col: str = "b",
 ) -> DataFrame:
     """SCAN structural graph clustering (Xu, Yuruk, Feng, Schweiger,
-    KDD 2007): an edge is an epsilon-link when the structural
+    KDD 2007) over undirected ``(a, b)`` edges: an edge is an
+    epsilon-link when the structural
     similarity of its endpoints' CLOSED neighborhoods,
     sigma(x,y) = |N[x] ∩ N[y]| / sqrt(|N[x]| |N[y]|), is at least
     eps; a node with >= mu epsilon-neighbors (self included) is a
@@ -2316,8 +2232,8 @@ def scan_clusters(
 
     e = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
@@ -2484,15 +2400,14 @@ WHERE node NOT IN (SELECT node FROM hubs)"""
 
 def butterfly_counts(
     edges: DataFrame,
-    left_col: str = "l",
-    right_col: str = "r",
     max_expand_degree: int | None = None,
 ) -> DataFrame:
     """Bipartite butterfly (2x2-biclique) census (Sanei-Mehri,
     Sariyüce, Tirthapura, KDD 2018) — the bipartite analogue of the
     triangle count: butterflies measure co-clustering in
     incidence-shaped data (order x part, doc x shingle, user x item)
-    where triangles cannot exist by construction.
+    where triangles cannot exist by construction.  Edges are ``(l, r)``
+    left-right incidences.
 
     Counting identity: expand each LEFT node's sorted distinct
     right-neighbor set into i<j pairs (map-side, bounded by the
@@ -2505,7 +2420,7 @@ def butterfly_counts(
     n_expand_dropped).
     """
     e = (
-        edges.select(F.col(left_col).alias("l"), F.col(right_col).alias("r"))
+        edges.select("l", "r")
         .distinct()
     )
     grouped = e.groupBy("l").agg(F.sort_array(F.collect_set("r")).alias("rs"))
@@ -2571,15 +2486,10 @@ class ColoringError(RuntimeError):
     """jp_coloring failed to color every node within max_iter rounds."""
 
 
-def jp_coloring(
-    edges: DataFrame,
-    max_iter: int = 20,
-    salt: str = "jp",
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def jp_coloring(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Jones-Plassmann distributed greedy coloring (Jones & Plassmann
-    1993, the Luby-style symmetry-breaking workhorse): every node gets
+    1993, the Luby-style symmetry-breaking workhorse) of undirected
+    ``(a, b)`` edges: every node gets
     a random-but-deterministic priority (the portable 60-bit hash,
     ties on node id); each round, nodes that beat all their UNCOLORED
     neighbors' priorities color themselves with the minimum excludant
@@ -2603,8 +2513,8 @@ def jp_coloring(
 
     e = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
@@ -2614,7 +2524,7 @@ def jp_coloring(
     ).localCheckpoint(eager=True)
     nodes = sym.select(F.col("x").alias("node")).distinct()
     pri, seen = checkpoint_observed(
-        nodes.select("node", hash60(F.col("node"), salt).alias("h")),
+        nodes.select("node", hash60(F.col("node"), JP_SALT).alias("h")),
         uncolored=F.count(F.lit(1)),
     )
     if seen["uncolored"] == 0:
@@ -2680,13 +2590,13 @@ def jp_coloring(
     return colored
 
 
-def sql_jp_coloring(edges_sql: str, rounds: int = 20, salt: str = "jp") -> str:
+def sql_jp_coloring(edges_sql: str, rounds: int = 20) -> str:
     """DuckDB oracle for :func:`jp_coloring`: identical rounds
     unrolled (choose ``rounds`` >= the converged round count — extra
     rounds are no-ops on an empty uncolored set)."""
     from nexus_forge_spark.operators.sketches import sql_hash60
 
-    h = sql_hash60("node", salt)
+    h = sql_hash60("node", JP_SALT)
     parts = [
         f"""e AS MATERIALIZED (
   SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y
@@ -2738,12 +2648,10 @@ def hyperball_closeness(
     edges: DataFrame,
     rounds: int = 3,
     precision: int = 6,
-    salt: str = "hb",
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Per-node distance-sum / closeness estimates from the HyperBall
-    counters — the paper's headline application (Boldi & Vigna 2013
+    counters over ``(src, dst)`` edges — the paper's headline
+    application (Boldi & Vigna 2013
     compute closeness/harmonic centrality on billion-node graphs this
     way): with e_t(v) the HLL estimate of |ball(v, t)|, the estimated
     sum of distances to nodes within ``rounds`` hops telescopes to
@@ -2762,7 +2670,7 @@ def hyperball_closeness(
     closeness denominator; 0 for isolated-in-R nodes).
     """
     ests = _hyperball_rounds(
-        edges, rounds, precision, salt, src_col, dst_col, "hyperball_closeness",
+        edges, rounds, precision, "hyperball_closeness",
         lambda sketch, est, t: sketch.select(
             "node",
             F.lit(t).cast("int").alias("t"),
@@ -2779,9 +2687,7 @@ def hyperball_closeness(
     )
 
 
-def sql_hyperball_closeness(
-    edges_sql: str, rounds: int = 3, precision: int = 6, salt: str = "hb"
-) -> str:
+def sql_hyperball_closeness(edges_sql: str, rounds: int = 3, precision: int = 6) -> str:
     """DuckDB oracle for :func:`hyperball_closeness`: identical rounds
     unrolled on the row-per-register representation (absent register
     == rho 0 prices identically, so values match the packed form)."""
@@ -2798,7 +2704,7 @@ def sql_hyperball_closeness(
   SELECT node, CAST(h % {m} AS INT) AS register,
     CASE WHEN h // {m} = 0 THEN {rho_max}
          ELSE CAST(round(log2((h // {m}) & -(h // {m}))) AS INT) + 1 END AS rho
-  FROM (SELECT node, {sql_hash60('node', salt)} AS h FROM nodes))""",
+  FROM (SELECT node, {sql_hash60('node', HB_SALT)} AS h FROM nodes))""",
     ]
     for t in range(1, rounds + 1):
         parts.append(
@@ -2848,10 +2754,9 @@ def densest_subgraph(
     eps_num: int = 3,
     eps_den: int = 2,
     max_iter: int = 30,
-    a_col: str = "a",
-    b_col: str = "b",
 ) -> DataFrame:
-    """Parallel densest-subgraph 2(1+eps)-approximation (Bahmani,
+    """Parallel densest-subgraph 2(1+eps)-approximation of undirected
+    ``(a, b)`` edges (Bahmani,
     Kumar, Vassilvitskii, VLDB 2012 — the MapReduce version of
     Charikar's peeling): each round removes EVERY node whose degree is
     at most (eps_num/eps_den) times the current average degree
@@ -2882,8 +2787,8 @@ def densest_subgraph(
     # between alive nodes, so m is also half the alive degree sum)
     e, seen = checkpoint_observed(
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct(),
@@ -3026,10 +2931,9 @@ FROM labeled l, best b"""
     )
 
 
-def clustering_coefficients(
-    edges: DataFrame, a_col: str = "a", b_col: str = "b"
-) -> DataFrame:
-    """Local clustering coefficient per node (Watts & Strogatz 1998):
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
+    """Local clustering coefficient per node of undirected ``(a, b)``
+    edges (Watts & Strogatz 1998):
     C(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1)) in integer ppm —
     the per-node cohesion score (high C = inside a dense duplicate/
     community cluster, low C at hubs = star-shaped linkage worth
@@ -3042,8 +2946,8 @@ def clustering_coefficients(
     """
     und = (
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .where(F.col("x") != F.col("y"))
         .distinct()
@@ -3123,13 +3027,9 @@ def _hindex_round(sym: DataFrame, c: DataFrame) -> DataFrame:
     )
 
 
-def coreness(
-    edges: DataFrame,
-    rounds: int = 24,
-    a: str = "a",
-    b: str = "b",
-) -> DataFrame:
-    """Full core decomposition — EVERY node's core number, not just
+def coreness(edges: DataFrame, rounds: int = CORENESS_ROUNDS) -> DataFrame:
+    """Full core decomposition of undirected ``(a, b)`` edges — EVERY
+    node's core number, not just
     membership at one k (the kcore operator's upgrade) — via the h-index
     iteration (Lü, Zhou, Zhang & Stanley, Nature Comms 2016):
 
@@ -3167,7 +3067,7 @@ def coreness(
 
     Output: (node, coreness BIGINT).
     """
-    sym = _symmetric(_undirected(edges, a, b))
+    sym = _symmetric(_undirected(edges, "a", "b"))
     sym, seen = checkpoint_observed(sym, bytes=F.sum(row_bytes(sym)))
     values = lambda c: c  # noqa: E731
     # a union of two shuffled halves: its partitions are not AQE's choice
@@ -3193,14 +3093,15 @@ def coreness(
     return c.select("node", F.col("c").alias("coreness"))
 
 
-def sql_coreness(edges_sql: str, rounds: int = 24) -> str:
+def sql_coreness(edges_sql: str) -> str:
     """DuckDB oracle for :func:`coreness` — the same h-index fixpoint
     via rank algebra (max(least(rank, value)) is the textbook H and fine
     single-node; the Spark side computes H from the value histogram to
-    avoid the per-hub sort), rounds unrolled as MATERIALIZED CTEs."""
+    avoid the per-hub sort), ``CORENESS_ROUNDS`` rounds unrolled as
+    MATERIALIZED CTEs."""
     ctes = []
     prev = "c0"
-    for i in range(1, rounds + 1):
+    for i in range(1, CORENESS_ROUNDS + 1):
         name = f"c{i}"
         ctes.append(f"""{name} AS MATERIALIZED (
   SELECT p AS node, CAST(max(least(rk, cn)) AS BIGINT) AS c
@@ -3226,14 +3127,9 @@ c0 AS MATERIALIZED (
 SELECT node, c AS coreness FROM {prev}"""
 
 
-def disparity_backbone(
-    edges: DataFrame,
-    alpha_milli: int = 50,
-    a: str = "a",
-    b: str = "b",
-    w: str = "w",
-) -> DataFrame:
-    """Multiscale backbone of a weighted graph by the disparity filter
+def disparity_backbone(edges: DataFrame, alpha_milli: int = 50) -> DataFrame:
+    """Multiscale backbone of a weighted ``(a, b, w)`` graph by the
+    disparity filter
     (Serrano, Boguñá & Vespignani, PNAS 2009): an edge survives if its
     weight is statistically surprising against at least one endpoint's
     null model — p-value alpha_ij = (1 - w_ij / s_i)^(k_i - 1) < alpha —
@@ -3258,11 +3154,11 @@ def disparity_backbone(
 
     und = (
         edges.select(
-            F.greatest(F.col(a), F.col(b)).alias("p"),
-            F.least(F.col(a), F.col(b)).alias("q"),
-            F.col(w).cast("long").alias("w"),
+            F.greatest(F.col("a"), F.col("b")).alias("p"),
+            F.least(F.col("a"), F.col("b")).alias("q"),
+            F.col("w").cast("long").alias("w"),
         )
-        .where(F.col(a) != F.col(b))
+        .where(F.col("a") != F.col("b"))
         .groupBy("p", "q")
         .agg(F.sum("w").alias("w"))
     )

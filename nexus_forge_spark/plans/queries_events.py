@@ -784,9 +784,11 @@ def q_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_decayed_popularity() -> str:
+    from nexus_forge_spark.operators.events import DECAY_SCALE_BITS
+
     return f"""SELECT CAST(l_partkey AS BIGINT) AS l_partkey,
   CAST(sum(CAST(round(l_quantity) AS BIGINT) *
-    (1048576 >> greatest(0, least(
+    ({1 << DECAY_SCALE_BITS} >> greatest(0, least(
        datediff('day', CAST(o_orderdate AS DATE), DATE '{_DECAY_REF}')
        // {_DECAY_HL}, 62)))) AS BIGINT) AS decayed_score,
   CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS raw_qty,

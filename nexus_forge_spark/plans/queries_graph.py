@@ -33,6 +33,8 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_pagerank_copurchase() -> str:
+    from nexus_forge_spark.operators.graph import DAMPING_PCT, PPM
+
     parts = [
         rf"""WITH edges AS (
   SELECT DISTINCT o.o_custkey AS src, {PART_NODE_OFFSET} + l.l_partkey AS dst
@@ -41,8 +43,8 @@ def sql_pagerank_copurchase() -> str:
 nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
 meta AS (
   SELECT count(*) AS n,
-         (1000000 * 15) // (100 * count(*)) AS base,
-         1000000 // count(*) AS r_init
+         ({PPM} * {100 - DAMPING_PCT}) // (100 * count(*)) AS base,
+         {PPM} // count(*) AS r_init
   FROM nodes
 ),
 deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
@@ -53,7 +55,7 @@ r0 AS (SELECT node, r_init AS r FROM nodes, meta)"""
             rf""",
 r{i + 1} AS (
   SELECT nodes.node,
-    base + (85 * coalesce(s.s, 0)) // 100 AS r
+    base + ({DAMPING_PCT} * coalesce(s.s, 0)) // 100 AS r
   FROM nodes CROSS JOIN meta
   LEFT JOIN (
     SELECT e.dst AS node, sum(r.r // d.outdeg) AS s
@@ -637,9 +639,11 @@ def q_ppr_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_ppr_copurchase() -> str:
+    from nexus_forge_spark.operators.graph import DAMPING_PCT, PPM
+
     n_seeds = len(_PPR_SEEDS)
-    base = (1_000_000 * 15) // (100 * n_seeds)
-    init = 1_000_000 // n_seeds
+    base = (PPM * (100 - DAMPING_PCT)) // (100 * n_seeds)
+    init = PPM // n_seeds
     seed_vals = ", ".join(f"({s})" for s in _PPR_SEEDS)
     parts = [
         rf"""WITH half AS (
@@ -665,7 +669,7 @@ r0 AS (
 r{i + 1} AS (
   SELECT n.node,
     CASE WHEN sd.node IS NOT NULL THEN {base} ELSE 0 END
-      + (85 * coalesce(c.s, 0)) // 100 AS r
+      + ({DAMPING_PCT} * coalesce(c.s, 0)) // 100 AS r
   FROM nodes n
   LEFT JOIN seeds sd ON n.node = sd.node
   LEFT JOIN (

@@ -2441,6 +2441,8 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_textrank_keywords() -> str:
+    from nexus_forge_spark.operators.graph import DAMPING_PCT, PPM
+
     parts = [
         rf"""WITH base AS (
   SELECT list_filter(string_split_regex(trim(lower(text)), '\s+'),
@@ -2460,8 +2462,8 @@ edges AS (SELECT a AS src, b AS dst FROM und UNION ALL SELECT b, a FROM und),
 nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
 meta AS (
   SELECT count(*) AS n,
-         (1000000 * 15) // (100 * count(*)) AS base,
-         1000000 // count(*) AS r_init
+         ({PPM} * {100 - DAMPING_PCT}) // (100 * count(*)) AS base,
+         {PPM} // count(*) AS r_init
   FROM nodes
 ),
 deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
@@ -2472,7 +2474,7 @@ r0 AS (SELECT node, r_init AS r FROM nodes, meta)"""
             rf""",
 r{i + 1} AS (
   SELECT nodes.node,
-    base + (85 * coalesce(s.s, 0)) // 100 AS r
+    base + ({DAMPING_PCT} * coalesce(s.s, 0)) // 100 AS r
   FROM nodes CROSS JOIN meta
   LEFT JOIN (
     SELECT e.dst AS node, sum(r.r // d.outdeg) AS s

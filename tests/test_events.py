@@ -555,9 +555,13 @@ def test_cusum_value_col_not_named_x(spark):
 def test_journey_trigrams_gap_and_counts(spark):
     from pyspark.sql import functions as F
 
-    from nexus_forge_spark.operators.events import journey_trigrams
+    from nexus_forge_spark.operators.events import (
+        JOURNEY_MAX_GAP_US,
+        journey_trigrams,
+    )
 
     us = 1_000_000
+    assert JOURNEY_MAX_GAP_US == 30 * 60 * us  # the 12:00 view is past it
     rows = [
         # user 1: view->cart->buy contiguous, then a gap breaks the chain
         (1, "2024-01-01 10:00:00", 10, "view"),
@@ -573,7 +577,7 @@ def test_journey_trigrams_gap_and_counts(spark):
         rows, "event_id long, ts string, user_id long, event_type string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     out = {(r.step1, r.step2, r.step3): (r.n_paths, r.n_users)
-           for r in journey_trigrams(df, max_gap_us=30 * 60 * us).collect()}
+           for r in journey_trigrams(df).collect()}
     assert out == {("view", "cart", "buy"): (2, 2)}
 
 
@@ -828,23 +832,30 @@ def test_sequential_patterns_greedy_witness(spark):
     would miss it)."""
     from datetime import datetime
 
-    from nexus_forge_spark.operators.events import sequential_patterns
+    from nexus_forge_spark.operators.events import (
+        MIN_SUPPORT,
+        sequential_patterns,
+    )
 
     t0 = datetime(2024, 1, 1)
     seq = ["b", "a", "b", "c"]  # a -> (second) b -> c exists
+    # MIN_SUPPORT users walk the sequence, so each of its patterns sits
+    # exactly at the floor; one more user's d -> a sits one below it
+    walks = [(u, seq) for u in range(MIN_SUPPORT)] + [(MIN_SUPPORT, ["d", "a"])]
     rows = [
-        (i, t0.replace(minute=i), 7, t, 0.0, "") for i, t in enumerate(seq)
+        (u * 10 + i, t0.replace(minute=i), u, t, 0.0, "")
+        for u, walk in walks
+        for i, t in enumerate(walk)
     ]
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string"
     )
-    pats = {
-        r.pattern for r in sequential_patterns(df, min_support=1).collect()
-    }
-    assert "a>b>c" in pats
-    assert "b>a>b" in pats  # repeated types allowed
+    pats = {r.pattern: r.support for r in sequential_patterns(df).collect()}
+    assert pats["a>b>c"] == MIN_SUPPORT
+    assert pats["b>a>b"] == MIN_SUPPORT  # repeated types allowed
     assert "c>a" not in pats
+    assert "d>a" not in pats  # support MIN_SUPPORT - 1
 
 
 def test_allen_relations_all_thirteen(spark):
@@ -904,8 +915,9 @@ def test_km_survival_hand_curve(spark):
     product checked against hand arithmetic."""
     import datetime as dt
 
-    from nexus_forge_spark.operators.events import km_survival
+    from nexus_forge_spark.operators.events import CENSOR_WINDOW_DAYS, km_survival
 
+    assert CENSOR_WINDOW_DAYS == 7
     d0 = dt.datetime(2024, 1, 1)
     horizon = d0 + dt.timedelta(days=30)
 
@@ -925,8 +937,7 @@ def test_km_survival_hand_curve(spark):
     out = {
         r.t_days: r
         for r in km_survival(
-            df, user_col="subject", cohort_col="cohort",
-            censor_window_days=7,
+            df, user_col="subject", cohort_col="cohort"
         ).collect()
     }
     # u2 at t=3 is NOT censored (ends 27d before horizon) -> 3 churn
@@ -947,7 +958,7 @@ def test_km_survival_matches_naive_python_randomized(spark):
     import datetime as dt
     import random
 
-    from nexus_forge_spark.operators.events import km_survival
+    from nexus_forge_spark.operators.events import CENSOR_WINDOW_DAYS, km_survival
 
     rng = random.Random(11)
     d0 = dt.datetime(2024, 1, 1)
@@ -966,13 +977,17 @@ def test_km_survival_matches_naive_python_randomized(spark):
     # pin the horizon with one sentinel subject ending exactly at day 40
     rows += [(f"uH", "k", d0 + dt.timedelta(days=horizon_days))]
     subjects.append((0, horizon_days))
-    W = 5
+    W = CENSOR_WINDOW_DAYS
+    # pin both sides of the censoring boundary: a last event W days
+    # before the horizon is a churn, one W - 1 days before is censored
+    for i, end in enumerate((horizon_days - W, horizon_days - W + 1)):
+        rows += [(f"uB{i}", "k", d0 + dt.timedelta(days=end - 3 - i)),
+                 (f"uB{i}", "k", d0 + dt.timedelta(days=end))]
+        subjects.append((3 + i, end))
     df = spark.createDataFrame(rows, "s string, c string, ts timestamp")
     got = {
         (r.t_days): (r.n_at_risk, r.n_churns, r.surv_ppm)
-        for r in km_survival(
-            df, user_col="s", cohort_col="c", censor_window_days=W
-        ).collect()
+        for r in km_survival(df, user_col="s", cohort_col="c").collect()
     }
     # naive python
     from collections import Counter

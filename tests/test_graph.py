@@ -392,8 +392,8 @@ def test_msf_sparsification_incremental(spark):
 
 def test_fastrp_mean_propagation_exact(spark):
     """On a 2-node mutual pair, each round swaps the two nodes' vectors
-    exactly (deg 1, mean = the other's value); weights [1, 1] then sum
-    the two iterates."""
+    exactly (deg 1, mean = the other's value); the output sums the two
+    iterates."""
     from nexus_forge_spark.operators.graph import fastrp_embeddings
     from nexus_forge_spark.operators.sketches import hash60
 
@@ -429,14 +429,11 @@ def test_fastrp_matches_duckdb(spark):
     e = spark.createDataFrame(rows, "node string, nbr string")
     got = sorted(
         (r.node, r.dim, r.val)
-        for r in fastrp_embeddings(e, dims=6, rounds=3, weights=[2, 1, 1]).collect()
+        for r in fastrp_embeddings(e, dims=6, rounds=3).collect()
     )
     vals = ", ".join(f"('{a}', '{b}')" for a, b in rows)
     sql = sql_fastrp_embeddings(
-        f"SELECT * FROM (VALUES {vals}) AS t(node, nbr)",
-        dims=6,
-        rounds=3,
-        weights=[2, 1, 1],
+        f"SELECT * FROM (VALUES {vals}) AS t(node, nbr)", dims=6, rounds=3
     )
     want = sorted(tuple(r) for r in duckdb.connect().execute(sql).fetchall())
     assert got == want

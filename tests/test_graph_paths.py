@@ -114,20 +114,21 @@ def test_personalized_pagerank_rejects_empty_seeds(spark):
 
 
 def test_harmonic_centrality_hand_computed(spark):
-    from nexus_forge_spark.operators.graph import harmonic_centrality
+    from nexus_forge_spark.operators.graph import PPM, harmonic_centrality
 
-    # path graph 1-2-3-4 (symmetric), seeds {1, 4}, scale 100
+    # path graph 1-2-3-4 (symmetric), seeds {1, 4}, contributions PPM div d
     rows = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 4), (4, 3)]
     edges = spark.createDataFrame(rows, "src long, dst long")
     seeds = spark.createDataFrame([(1,), (4,)], "node long")
     got = {r.node: (r.harmonic_micro, r.n_sources_reached)
-           for r in harmonic_centrality(edges, seeds, max_hops=3, scale=100).collect()}
+           for r in harmonic_centrality(edges, seeds, max_hops=3).collect()}
     # d from 1: 2->1, 3->2, 4->3 ; from 4: 3->1, 2->2, 1->3
+    assert PPM == 1_000_000
     assert got == {
-        1: (33, 1),           # only seed 4 contributes (100 div 3)
-        2: (100 + 50, 2),
-        3: (50 + 100, 2),
-        4: (33, 1),
+        1: (333_333, 1),          # only seed 4 contributes (1e6 div 3)
+        2: (1_000_000 + 500_000, 2),
+        3: (500_000 + 1_000_000, 2),
+        4: (333_333, 1),
     }
 
 

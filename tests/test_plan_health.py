@@ -439,7 +439,7 @@ def test_funnel_all_shuffles_on_user_key(spark, sf01):
 
     ev = load_table(spark, "events", sf01)
     funnel(ev, ["view", "click", "purchase"])  # runs the checkpointed steps
-    # the output frame itself is a tiny createDataFrame; the heavy work
+    # the output frame itself is a tiny local relation; the heavy work
     # ran in the per-step localCheckpointed aggregations — assert the
     # step shape inline: a struct aggregate would force SortAggregate
     # (per-partition sorts), the chained scalar form must stay hash
@@ -1173,6 +1173,54 @@ def test_construct_kg_scans_no_python_rdd(spark, sf_dir):
     plan = plan_of(construct_kg(docs), execute=True)
     assert "ExistingRDD" not in plan
     assert "LocalTableScan" in plan
+
+
+def _python_row_scans(df) -> int:
+    """RDD scans in ``df``'s plan whose rows were built in Python (the
+    ``ExistingRDD`` of ``createDataFrame(list)``, whose tasks start Python
+    workers).  A localCheckpoint scans an ``ExistingRDD`` too, but its
+    lineage ends at the checkpointed blocks."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        and "PythonRDD" in leaves.apply(i).rdd().toDebugString()
+        for i in range(leaves.size())
+    )
+
+
+def test_events_operators_build_no_python_rdd(spark, monkeypatch):
+    from nexus_forge_spark.operators.events import funnel, markov_attribution
+
+    types = F.array(*[F.lit(t) for t in ("view", "click", "purchase", "view")])
+    ev = spark.range(40).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 5).alias("user_id"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 60).alias("ts"),
+        F.element_at(types, (F.col("id") % 4 + 1).cast("int")).alias("event_type"),
+    )
+    # funnel's result rows are a local relation, not a Python RDD scan
+    out = funnel(ev, ["view", "click", "purchase"])
+    plan = plan_of(out, execute=True)
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert [r.n_users for r in out.orderBy("step_idx").collect()] == [5, 5, 5]
+
+    # every markov round joins the (variant, state) frame: capture each
+    # checkpointed plan, and the result's
+    frames = []
+    cls = type(ev)
+    original = cls.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        frames.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", capture)
+    out = markov_attribution(ev)
+    monkeypatch.undo()
+    frames.append(out)
+    assert any("LocalTableScan" in plan_of(f) for f in frames)
+    assert [_python_row_scans(f) for f in frames] == [0] * len(frames)
 
 
 def _under_broadcasts(plan: str) -> list[str]:

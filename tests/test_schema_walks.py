@@ -99,16 +99,20 @@ def test_random_walks_truncate_at_dangling(spark):
     assert steps == [(0, 1), (1, 2)]  # walk stops, no padding
 
 
-def test_random_walks_salt_changes_draws(spark):
+def test_random_walks_salt_changes_draws(spark, monkeypatch):
+    from nexus_forge_spark.operators import graph
+
     # a node with 2+ neighbors must see different draws under some salt
     rows = [(1, n) for n in range(2, 12)] + [(n, 1) for n in range(2, 12)]
     edges = spark.createDataFrame(rows, E_SCHEMA)
     starts = spark.createDataFrame([(1,)], "node long")
-    a = {(r.rep, r.step): r.node
-         for r in random_walks(edges, 4, 1, salt="s1", starts=starts).collect()}
-    b = {(r.rep, r.step): r.node
-         for r in random_walks(edges, 4, 1, salt="s2", starts=starts).collect()}
-    assert a != b
+
+    def draws(salt):
+        monkeypatch.setattr(graph, "WALK_SALT", salt)
+        return {(r.rep, r.step): r.node
+                for r in random_walks(edges, 4, 1, starts=starts).collect()}
+
+    assert draws("s1") != draws("s2")
 
 
 def test_rank_entity_facts_rarity_order(spark):
